@@ -1,0 +1,34 @@
+package graft.perfbench
+
+/** Minimal JSON writer for the raw result file the Python harness reads.
+  * Doubles are written with all their digits (`Double.toString`). */
+object Json {
+  def render(v: Any): String = v match {
+    case null | scala.None => "null"
+    case Some(x) => render(x)
+    case s: String => quote(s)
+    case b: Boolean => b.toString
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: scala.collection.Map[_, _] =>
+      m.iterator.map { case (k, x) => quote(k.toString) + ":" + render(x) }.mkString("{", ",", "}")
+    case xs: Iterable[_] => xs.iterator.map(render).mkString("[", ",", "]")
+    case other => quote(other.toString)
+  }
+
+  def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case '\n' => sb ++= "\\n"
+      case '\r' => sb ++= "\\r"
+      case '\t' => sb ++= "\\t"
+      case c if c < 0x20 => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    sb += '"'
+    sb.toString
+  }
+}
