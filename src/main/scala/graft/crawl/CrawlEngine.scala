@@ -49,10 +49,16 @@ object CrawlEngine {
   private[graft] def effectiveBroadcastCap(configured: Long,
                                            spark: SparkSession): Long = {
     val driverHeap = Runtime.getRuntime.maxMemory()
-    val execHeap = spark.sparkContext.getConf
-      .getSizeAsBytes("spark.executor.memory", s"${driverHeap}b")
+    val execHeap = executorHeapBytes(spark.sparkContext.getConf, driverHeap)
     math.min(configured, math.min(driverHeap, execHeap) / 5000L)
   }
+
+  /** `spark.executor.memory` in bytes, read as Spark reads it: a unitless
+    * value is MiB (`4096` = 4 GiB, not 4 KB). `unset` when absent. */
+  private[graft] def executorHeapBytes(conf: org.apache.spark.SparkConf, unset: Long): Long =
+    if (conf.contains("spark.executor.memory"))
+      conf.getSizeAsMb("spark.executor.memory") * 1024L * 1024L
+    else unset
 
   /** xxhash64 with Spark SQL's default seed 42 — byte-compatible with the
     * built-in `xxhash64()` function so Scala-side and Column-side keys agree. */
@@ -92,8 +98,10 @@ object CrawlEngine {
   }
 
   private[graft] def entryFor(canonical: String, rawUrl: String, depth: Int, parent: String): FrontierEntry = {
-    val host = UrlKernel.extractDomain(canonical).getOrElse("")
-    val pd = UrlKernel.pathDepth(canonical)
+    // one parse for both fields (= extractDomain / pathDepth of `canonical`)
+    val p = UrlKernel.parse(canonical)
+    val host = p.filter(_.hasHost).fold("")(_.host)
+    val pd = p.fold(0)(UrlKernel.pathDepth)
     FrontierEntry(canonical, rawUrl, depth, parent, host, pd, urlHash(canonical))
   }
 
@@ -208,18 +216,39 @@ object CrawlEngine {
     * → include/exclude patterns → internal-only → query-param cap →
     * canonicalize), one place for both the batch wave loop and the streaming
     * crawl twin — the streams stay in lock-step by construction.
-    * (url_validator.rs:75-80, url_filter.rs:84-133, batch_processor.rs:69-76.) */
+    * (url_validator.rs:75-80, url_filter.rs:84-133, batch_processor.rs:69-76.)
+    * Each link is parsed ONCE and every step reads the parsed form; the
+    * internal-only test looks the link's host and its dot-suffixes up in
+    * `seedHosts` ([[isSeedInternal]]), so its cost does not grow with the
+    * seed count. */
   private[graft] def linkCandidates(
       links: Iterator[String], parentUrl: String, childDepth: Int,
       includes: Seq[String], excludes: Seq[String],
       internalOnly: Boolean, seedHosts: Set[String], maxQueryParams: Int): Iterator[FrontierEntry] =
-    links
-      .filter(l => UrlKernel.parse(l).exists(p => p.scheme == "http" || p.scheme == "https"))
-      .filter(l => !l.endsWith("/robots.txt") && !l.endsWith("/sitemap.xml"))
-      .filter(l => UrlKernel.isAllowed(l, includes, excludes))
-      .filter(l => !internalOnly || seedHosts.exists(h => UrlKernel.isInternal(l, h)))
-      .filter(l => UrlKernel.paramCount(l) <= maxQueryParams)
-      .flatMap(l => UrlKernel.canonicalize(l).map(c => entryFor(c, l, childDepth, parentUrl)))
+    links.flatMap { l =>
+      UrlKernel.parse(l)
+        .filter(p => p.scheme == "http" || p.scheme == "https")
+        .filter(_ => !l.endsWith("/robots.txt") && !l.endsWith("/sitemap.xml"))
+        // an http(s) parse always has a host, so host matching is exactly
+        // UrlKernel.isAllowed's / isInternal's on the raw link
+        .filter(p => UrlKernel.isAllowedHost(p.host, includes, excludes))
+        .filter(p => !internalOnly || isSeedInternal(p.host, seedHosts))
+        .filter(p => UrlKernel.paramCount(p) <= maxQueryParams)
+        .map(p => entryFor(UrlKernel.canonicalize(p), l, childDepth, parentUrl))
+    }
+
+  /** `seedHosts.exists(h => host == h || host.endsWith("." + h))` (the
+    * [[UrlKernel.isInternal]] rule against every seed) as |dots(host)| + 1
+    * set lookups: `host` itself, then each suffix after one of its dots. */
+  private[graft] def isSeedInternal(host: String, seedHosts: Set[String]): Boolean = {
+    if (seedHosts.contains(host)) return true
+    var i = host.indexOf('.')
+    while (i >= 0) {
+      if (seedHosts.contains(host.substring(i + 1))) return true
+      i = host.indexOf('.', i + 1)
+    }
+    false
+  }
 
   /** Seed-list canonicalization (depth-0 entries) + the seed host set. */
   private[graft] def seedEntry(seed: String): Option[FrontierEntry] =

@@ -247,8 +247,9 @@ object Frontier extends Serializable {
   }
 
   /** The dedup MERGE rule: which representative survives when two
-    * discoveries share a canonical URL — min depth, then lexicographically
-    * smallest url, then smallest parentUrl. A total, order-independent
+    * discoveries share a canonical URL — min depth, then smallest url, then
+    * smallest parentUrl, strings compared as UTF-8 bytes ([[utf8Order]], the
+    * order [[dedupeWave]]'s `min(struct)` uses). A total, order-independent
     * choice (the reference's nondeterministic HashSet first-wins is replaced
     * by this spec, SURVEY.md §7.5). Generic over [[graft.model.LinkMergeKey]]
     * so the batch engine and the streaming twins (StreamingScheduler,
@@ -256,8 +257,26 @@ object Frontier extends Serializable {
     * construction, not by copy. */
   def merge[T <: graft.model.LinkMergeKey](a: T, b: T): T =
     if (a.depth != b.depth) { if (a.depth < b.depth) a else b }
-    else if (a.url != b.url) { if (a.url < b.url) a else b }
-    else if (a.parentUrl <= b.parentUrl) a else b
+    else if (a.url != b.url) { if (utf8Order.lt(a.url, b.url)) a else b }
+    else if (utf8Order.lteq(a.parentUrl, b.parentUrl)) a else b
+
+  /** Unsigned UTF-8 byte order on strings — Spark's `UTF8String` order, so
+    * the order of SQL `min`/`max`/sorts ([[dedupeWave]], [[priorityCols]]).
+    * It equals code-point order, which differs from `String.compareTo`'s
+    * UTF-16 order only when a supplementary-plane character (a surrogate
+    * pair, 0xD800–0xDFFF) meets a BMP character at or above 0xE000: at the
+    * first differing UTF-16 unit, surrogates are moved above that range. */
+  val utf8Order: Ordering[String] = new Ordering[String] {
+    private def rank(c: Char): Int =
+      if (c >= '\uE000') c - 0x800 else if (c >= '\uD800') c + 0x2000 else c
+    def compare(a: String, b: String): Int = {
+      val n = math.min(a.length, b.length)
+      var i = 0
+      while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+      if (i == n) Integer.compare(a.length, b.length)
+      else Integer.compare(rank(a.charAt(i)), rank(b.charAt(i)))
+    }
+  }
 
   /** Deterministic within-wave dedup: one entry per canonical URL under
     * [[merge]], computed as a codegen struct-argmin: [[merge]]'s total
@@ -283,10 +302,12 @@ object Frontier extends Serializable {
   /** The documented deterministic priority: (depth asc, pathDepth desc,
     * urlHash asc, canonicalUrl asc) — total order (SURVEY.md §2.6;
     * reference's sorted path is batch_processor.rs:56-65, depth-first by
-    * path specificity; hash+canonical tie-breaks are our spec). Generic for
-    * the same single-source-of-truth reason as [[merge]]. */
+    * path specificity; hash+canonical tie-breaks are our spec; canonicalUrl
+    * compares as UTF-8 bytes, as in [[priorityCols]]). Generic for the same
+    * single-source-of-truth reason as [[merge]]. */
   def priorityOrder[T <: graft.model.LinkPriorityKey]: Ordering[T] =
-    Ordering.by(e => (e.depth, -e.pathDepth, e.urlHash, e.canonicalUrl))
+    Ordering.by((e: T) => (e.depth, -e.pathDepth, e.urlHash, e.canonicalUrl))(
+      Ordering.Tuple4(Ordering.Int, Ordering.Int, Ordering.Long, utf8Order))
 
   val priorityOrdering: Ordering[FrontierEntry] = priorityOrder[FrontierEntry]
 

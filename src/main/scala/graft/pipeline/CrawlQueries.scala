@@ -235,14 +235,8 @@ object CrawlQueries {
     val inDeg = edges.groupBy("dst").agg(count(lit(1)).as("in_deg"))
     val nodes = edges.select(col("src").as("url"))
       .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
-    // loop-invariant: edges ⋈ out-degree is identical every round —
-    // checkpoint it once instead of re-shuffling the aggregation 10×
-    val weighted = edges.join(outDeg, "src").localCheckpoint()
-    var ranks = nodes.select(col("url"), lit(PageRankUnitMicro).as("rank_micro"))
-    for (_ <- 1 to PageRankIters) {
-      ranks = pageRankRound(weighted, nodes, ranks).localCheckpoint()
-    }
-    ranks
+    pageRankRounds(edges, nodes,
+        nodes.select(col("url"), lit(PageRankUnitMicro).as("rank_micro")))
       .join(inDeg.withColumnRenamed("dst", "url"), Seq("url"), "left")
       .join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
       .na.fill(0L, Seq("in_deg", "out_deg"))
@@ -250,23 +244,53 @@ object CrawlQueries {
       .orderBy(desc("rank_micro"), asc(keyName))
   }
 
+  /** The uniform teleport floor of plain PageRank, as [[pageRankRound]]'s
+    * one-column `floors` argument. */
+  private[graft] val UniformFloor: Seq[(String, String)] =
+    Seq("rank_micro" -> PageRankFloorMicro.toString)
+
+  /** [[PageRankIters]] lineage-cut rounds of [[pageRankRound]] from `init`
+    * (`url` plus one rank column per entry of `floors`) — K independent
+    * recurrences over the same edges cost one round each, not K. */
+  private[pipeline] def pageRankRounds(
+      edges: DataFrame, nodes: DataFrame, init: DataFrame,
+      floors: Seq[(String, String)] = UniformFloor): DataFrame = {
+    // loop-invariant: edges ⋈ out-degree is identical every round —
+    // checkpoint it once instead of re-shuffling the aggregation 10×
+    val weighted = edges.join(edges.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
+      .localCheckpoint()
+    var ranks = init
+    for (_ <- 1 to PageRankIters) {
+      ranks = pageRankRound(weighted, nodes, ranks, floors).localCheckpoint()
+    }
+    ranks
+  }
+
   /** One power-iteration round (the loop body, factored so PlanCheck can
-    * audit the per-round physical plan the kernel actually runs): the
-    * contribution join + keyed sum with map-side combine, then the
-    * floor+damp rejoin against the node universe. */
+    * audit the per-round physical plan the kernel actually runs) over K
+    * rank columns at once: ONE contribution join + ONE keyed sum with
+    * map-side combine (a `sum` per column), then ONE floor+damp rejoin
+    * against the node universe. `floors` maps each rank column of `ranks`
+    * to its teleport floor, a SQL expression over `nodes`' columns — a
+    * constant for PageRank, a per-node column for seeded TrustRank. Each
+    * column's integer arithmetic is exactly the one-column round's, so
+    * fusing recurrences changes no value. */
   private[graft] def pageRankRound(
-      weighted: DataFrame, nodes: DataFrame, ranks: DataFrame): DataFrame = {
+      weighted: DataFrame, nodes: DataFrame, ranks: DataFrame,
+      floors: Seq[(String, String)] = UniformFloor): DataFrame = {
+    val rankCols = floors.map(_._1)
+    val sums = rankCols.map(r => sum(r).as(s"s_$r"))
     val contribs = weighted
       .join(ranks.withColumnRenamed("url", "src"), "src")
-      .select(col("dst").as("url"), expr("rank_micro div out_deg").as("c"))
-      .groupBy("url").agg(sum("c").as("s"))
+      .select(col("dst").as("url") +: rankCols.map(r => expr(s"$r div out_deg").as(r)): _*)
+      .groupBy("url").agg(sums.head, sums.tail: _*)
     // shuffle_hash: at scale contribs is node-sized, and the default
     // sort-merge would pay two sorts PER ROUND on co-partitioned sides;
     // at toy scale AQE still upgrades the hinted join to broadcast
     nodes.join(contribs.hint("shuffle_hash"), Seq("url"), "left")
-      .select(col("url"),
-        expr(s"$PageRankFloorMicro + ($PageRankDampPct * coalesce(s, cast(0 as bigint))) div 100")
-          .as("rank_micro"))
+      .select(col("url") +: floors.map { case (r, floor) =>
+        expr(s"$floor + ($PageRankDampPct * coalesce(s_$r, cast(0 as bigint))) div 100").as(r)
+      }: _*)
   }
 
   /** DuckDB twin of [[pageRank]]: the SAME integer recurrence, unrolled as

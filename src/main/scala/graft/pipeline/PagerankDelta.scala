@@ -90,32 +90,32 @@ object PagerankDelta {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
-    val (base8, fullSnaps) =
-      try Await.result(
+    // ONE try/finally from the pool's creation on: a throw anywhere below
+    // (either recurrence, the warm-start derivation, a ledger) releases it
+    val rows = try {
+      val (base8, fullSnaps) = Await.result(
         Future(iterate(base, nodesBase, uniform(nodesBase),
           RefRounds, Set(RefRounds))(RefRounds))
           .zip(Future(iterate(all, nodesFull, uniform(nodesFull),
             RefRounds, Budgets.toSet + RefRounds))),
         Duration.Inf)
-      catch { case e: Throwable => pool.shutdown(); throw e }
-    val ref = fullSnaps(RefRounds)
-    val warmInit = nodesFull.join(base8, Seq("url"), "left")
-      .select(col("url"),
-        coalesce(col("rank_micro"), lit(PageRankUnitMicro)).as("rank_micro"))
-    val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.max, Budgets.toSet)
+      val ref = fullSnaps(RefRounds)
+      val warmInit = nodesFull.join(base8, Seq("url"), "left")
+        .select(col("url"),
+          coalesce(col("rank_micro"), lit(PageRankUnitMicro)).as("rank_micro"))
+      val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.max, Budgets.toSet)
 
-    def l1(variant: String, r: Int, snap: DataFrame): (String, Long, Long, Long) = {
-      val row = snap.withColumnRenamed("rank_micro", "v")
-        .join(ref.withColumnRenamed("rank_micro", "ref"), "url")
-        .agg(sum(abs(col("v") - col("ref"))).as("l1"), count(lit(1)).as("n"))
-        .head
-      (variant, r.toLong, row.getLong(0), row.getLong(1))
-    }
-    val rows =
-      try Await.result(Future.sequence(
+      def l1(variant: String, r: Int, snap: DataFrame): (String, Long, Long, Long) = {
+        val row = snap.withColumnRenamed("rank_micro", "v")
+          .join(ref.withColumnRenamed("rank_micro", "ref"), "url")
+          .agg(sum(abs(col("v") - col("ref"))).as("l1"), count(lit(1)).as("n"))
+          .head
+        (variant, r.toLong, row.getLong(0), row.getLong(1))
+      }
+      Await.result(Future.sequence(
         Budgets.map(r => Future(l1("cold", r, fullSnaps(r)))) ++
           Budgets.map(r => Future(l1("warm", r, warmSnaps(r))))), Duration.Inf)
-      finally pool.shutdown()
+    } finally pool.shutdown()
     rows.toDF("variant", "rounds", "l1_micro", "n_nodes")
       .orderBy("variant", "rounds")
   }

@@ -246,25 +246,35 @@ object Similarity {
       }
       sums.iterator.map { case (label, (s, n)) => (label, pid, s, n(0)) }
     }
-    partials.groupByKey(_._1)
-      .mapGroups { (label, it) =>
-        val parts = it.toArray.sortBy(_._2) // partition-id order
-        val s = parts.head._3.clone()
-        var n = parts.head._4
-        parts.tail.foreach { p =>
-          var i = 0
-          while (i < dims) { s(i) += p._3(i); i += 1 }
-          n += p._4
-        }
-        (label, s.map(v => v / n))
-      }
-      .flatMap { case (label, c) =>
-        c.iterator.zipWithIndex.map { case (v, d) =>
-          (label, d, math.round(v * 1000000.0))
+    mergeInPartitionOrder(spark, partials)
+      .flatMap { case (label, s, n) =>
+        s.iterator.zipWithIndex.map { case (v, d) =>
+          (label, d, math.round(v / n * 1000000.0))
         }
       }
       .toDF("label", "dim", "centroid_micro")
       .orderBy("label", "dim")
+  }
+
+  /** Merges per-partition partial sums `(key, partitionId, sums, count)`
+    * per key in partition-id order: the same input layout gives the same FP
+    * addition order, so repeated runs are bit-identical (reduceGroups would
+    * merge in scheduling order). */
+  private def mergeInPartitionOrder(
+      spark: SparkSession, partials: Dataset[(Int, Int, Array[Double], Long)]
+  ): Dataset[(Int, Array[Double], Long)] = {
+    import spark.implicits._
+    partials.groupByKey(_._1).mapGroups { (key, it) =>
+      val parts = it.toArray.sortBy(_._2)
+      val s = parts.head._3.clone()
+      var n = parts.head._4
+      parts.tail.foreach { p =>
+        var d = 0
+        while (d < s.length) { s(d) += p._3(d); d += 1 }
+        n += p._4
+      }
+      (key, s, n)
+    }
   }
 
   // ------------------------------------------------------------ IVF ANN ----
@@ -296,65 +306,123 @@ object Similarity {
     * pass over the corpus producing at most `nlist` partial-sum rows per
     * partition (map-side combine); only `nlist` merged rows ever reach the
     * driver, so training a 10^10-row corpus moves nlist × dims doubles per
-    * iteration, not data. Empty clusters keep their previous centroid. */
+    * iteration, not data. Empty clusters keep their previous centroid. The
+    * pass is [[trainLloyd]]'s with one spherical codebook. */
   def trainCentroids(
       spark: SparkSession,
       corpus: Dataset[Embedded],
       nlist: Int,
       iters: Int = 5
   ): Array[Array[Float]] = {
+    val seeds = seedOrder(spark, corpus, nlist)
+    trainLloyd(spark, corpus, Array(ivfBook(seeds, nlist)), iters).head.centroids(0)
+  }
+
+  /** One codebook [[trainLloyd]] trains: `centroids(s)(j)` is centroid j
+    * of subspace s, which covers dims [s·dsub, (s+1)·dsub). A spherical
+    * book (the IVF coarse quantizer: one subspace over all dims) assigns
+    * by cosine ([[nearestCentroid]]); the others (PQ's subspaces) by
+    * squared L2 ([[nearestL2]]). */
+  private final case class LloydBook(
+      spherical: Boolean, dsub: Int, centroids: Array[Array[Array[Float]]]) {
+    def assign(v: Array[Float], s: Int): Int =
+      if (spherical) nearestCentroid(v, centroids(s))
+      else nearestL2(v, s * dsub, centroids(s), dsub)
+  }
+
+  /** Seed candidates: the first `n` corpus rows in (xxhash64(vec_id),
+    * vec_id) order — a reproducible pseudo-random spread. A codebook of k
+    * centroids seeds from the first k of them ([[seedsOf]]), so codebooks
+    * trained together share ONE collect. */
+  private def seedOrder(spark: SparkSession, corpus: Dataset[Embedded], n: Int): Array[Embedded] = {
     import spark.implicits._
-    var centroids: Array[Array[Float]] = corpus.toDF()
+    corpus.toDF()
       .withColumn("h", xxhash64(col("vec_id")))
       .orderBy(col("h"), col("vec_id"))
-      .limit(nlist)
+      .limit(n)
       .select(col("vec_id"), col("embedding")).as[Embedded]
-      .collect().sortBy(_.vec_id).map(_.embedding)
+      .collect()
+  }
+
+  private def seedsOf(order: Array[Embedded], k: Int): Array[Array[Float]] =
+    order.take(k).sortBy(_.vec_id).map(_.embedding)
+
+  private def ivfBook(order: Array[Embedded], nlist: Int): LloydBook = {
+    val seeds = seedsOf(order, nlist)
+    LloydBook(spherical = true, seeds.headOption.fold(0)(_.length), Array(seeds))
+  }
+
+  private def pqBook(order: Array[Embedded], dims: Int, m: Int, ksub: Int): LloydBook = {
+    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
+    val dsub = dims / m
+    val seeds = seedsOf(order, ksub)
+    LloydBook(spherical = false, dsub,
+      Array.tabulate(m, seeds.length)((s, j) => seeds(j).slice(s * dsub, (s + 1) * dsub)))
+  }
+
+  /** Lloyd's iterations for several codebooks over ONE corpus pass each:
+    * every codebook's assignment is independent of the others', so one
+    * mapPartitions accumulates the partial sums of every (codebook,
+    * subspace, centroid) cell at once, and the partials merge per cell in
+    * partition-id order — the same FP addition order per cell as training
+    * each codebook alone, so the result is bit-identical to separate runs
+    * for a given input layout at 1/B of the corpus passes. Assignment ties
+    * break to the lowest index; empty cells keep their previous centroid.
+    * Scale shape: ≤ (total cells) rows reach the driver per iteration. */
+  private def trainLloyd(
+      spark: SparkSession,
+      corpus: Dataset[Embedded],
+      init: Array[LloydBook],
+      iters: Int
+  ): Array[LloydBook] = {
+    import spark.implicits._
+    // flat cell index: book b's cell (s, j) is base(b) + s·k(b) + j
+    // (shapes are fixed: iterations replace centroids, never add them)
+    val k = init.map(_.centroids.headOption.fold(0)(_.length))
+    val base = init.indices.scanLeft(0)((acc, b) => acc + init(b).centroids.length * k(b)).toArray
+    var books = init
     var iter = 0
     while (iter < iters) {
-      val bc = spark.sparkContext.broadcast(centroids)
+      val bc = spark.sparkContext.broadcast(books)
       val partials = corpus.mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val cs = bc.value
-        val dims = if (cs.nonEmpty) cs(0).length else 0
-        val sums = Array.fill(cs.length)(new Array[Double](dims))
-        val counts = new Array[Long](cs.length)
+        val bs = bc.value
+        val sums = new Array[Array[Double]](base(bs.length))
+        for (b <- bs.indices; cell <- base(b) until base(b + 1))
+          sums(cell) = new Array[Double](bs(b).dsub)
+        val counts = new Array[Long](sums.length)
         it.foreach { e =>
-          val a = nearestCentroid(e.embedding, cs)
-          val s = sums(a)
-          var d = 0
-          while (d < dims) { s(d) += e.embedding(d); d += 1 }
-          counts(a) += 1L
+          var b = 0
+          while (b < bs.length) {
+            val book = bs(b)
+            var s = 0
+            while (s < book.centroids.length) {
+              val cell = base(b) + s * k(b) + book.assign(e.embedding, s)
+              val acc = sums(cell)
+              val off = s * book.dsub
+              var i = 0
+              while (i < book.dsub) { acc(i) += e.embedding(off + i); i += 1 }
+              counts(cell) += 1L
+              s += 1
+            }
+            b += 1
+          }
         }
-        Iterator.range(0, cs.length).filter(counts(_) > 0L)
+        Iterator.range(0, sums.length).filter(counts(_) > 0L)
           .map(i => (i, pid, sums(i), counts(i)))
       }
-      // merge partials in (cluster, partitionId) order: same input layout →
-      // same FP addition order → bit-identical centroids across runs
-      // (reduceGroups would merge in scheduling order)
-      val totals = partials
-        .groupByKey(_._1)
-        .mapGroups { (cluster, it) =>
-          val parts = it.toArray.sortBy(_._2)
-          val s = parts.head._3.clone()
-          var n = parts.head._4
-          parts.tail.foreach { p =>
-            var d = 0
-            while (d < s.length) { s(d) += p._3(d); d += 1 }
-            n += p._4
-          }
-          (cluster, s, n)
-        }
-        .collect() // ≤ nlist rows
-      val next = centroids.map(identity)
-      totals.foreach { case (i, sum, n) =>
-        next(i) = sum.map(v => (v / n).toFloat)
+      val totals = mergeInPartitionOrder(spark, partials).collect() // ≤ total cells rows
+      val next = books.map(b => b.copy(centroids = b.centroids.map(_.map(identity))))
+      totals.foreach { case (cell, sum, n) =>
+        val b = base.lastIndexWhere(_ <= cell, books.length - 1)
+        val local = cell - base(b)
+        next(b).centroids(local / k(b))(local % k(b)) = sum.map(v => (v / n).toFloat)
       }
-      centroids = next
+      books = next
       bc.destroy()
       iter += 1
     }
-    centroids
+    books
   }
 
   /** IVF index build: assign every corpus vector to its coarse-quantizer
@@ -595,6 +663,23 @@ object Similarity {
 
   // ----------------------------------------------- product quantization ----
 
+  /** Nearest of `cs` to v[off ..< off + dsub] by squared L2; ties break to
+    * the lowest index (the [[nearestCentroid]] rule). */
+  private def nearestL2(v: Array[Float], off: Int, cs: Array[Array[Float]], dsub: Int): Int = {
+    var best = 0
+    var bestD = Double.MaxValue
+    var j = 0
+    while (j < cs.length) {
+      val c = cs(j)
+      var d = 0.0
+      var i = 0
+      while (i < dsub) { val t = v(off + i) - c(i); d += t * t; i += 1 }
+      if (d < bestD) { bestD = d; best = j }
+      j += 1
+    }
+    best
+  }
+
   /** PQ codebook: the embedding is split into `m` contiguous subspaces of
     * `dsub` dims each; every subspace has its own `ksub`-centroid k-means
     * codebook (the classic Jégou/Douze/Schmid PQ layout — public knowledge).
@@ -604,22 +689,7 @@ object Similarity {
   final case class PqCodebook(m: Int, dsub: Int, centroids: Array[Array[Array[Float]]]) {
     /** Nearest centroid of subspace `s` for v[s*dsub ..< (s+1)*dsub] by
       * squared L2 (ties → lowest index, the [[nearestCentroid]] rule). */
-    def assign(v: Array[Float], s: Int): Int = {
-      val cs = centroids(s)
-      val off = s * dsub
-      var best = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < cs.length) {
-        val c = cs(j)
-        var d = 0.0
-        var i = 0
-        while (i < dsub) { val t = v(off + i) - c(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = j }
-        j += 1
-      }
-      best
-    }
+    def assign(v: Array[Float], s: Int): Int = nearestL2(v, s * dsub, centroids(s), dsub)
     def encode(v: Array[Float]): Array[Byte] = {
       val out = new Array[Byte](m)
       var s = 0
@@ -631,7 +701,8 @@ object Similarity {
   /** Train all `m` subspace codebooks with Lloyd's in ONE corpus pass per
     * iteration (every subspace's assignment is independent, so one
     * mapPartitions accumulates all m×ksub partial sums at once — m× fewer
-    * jobs than training each subspace separately). Determinism contract is
+    * jobs than training each subspace separately; it is [[trainLloyd]]'s
+    * pass with one L2 codebook). Determinism contract is
     * [[trainCentroids]]'s: seeds are the `ksub` vectors with the smallest
     * xxhash64(vec_id) (each contributes its slice to every subspace),
     * assignment ties break to the lowest index, partials merge in
@@ -646,66 +717,30 @@ object Similarity {
       ksub: Int = 256,
       iters: Int = 5
   ): PqCodebook = {
-    import spark.implicits._
-    require(dims % m == 0, s"dims=$dims not divisible by m=$m")
-    val dsub = dims / m
-    val seeds = corpus.toDF()
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy(col("h"), col("vec_id"))
-      .limit(ksub)
-      .select(col("vec_id"), col("embedding")).as[Embedded]
-      .collect().sortBy(_.vec_id).map(_.embedding)
-    var cb = PqCodebook(m, dsub,
-      Array.tabulate(m, seeds.length)((s, j) => seeds(j).slice(s * dsub, (s + 1) * dsub)))
-    var iter = 0
-    while (iter < iters) {
-      val bc = spark.sparkContext.broadcast(cb)
-      val partials = corpus.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val c = bc.value
-        val k = c.centroids(0).length
-        val sums = Array.fill(c.m * k)(new Array[Double](c.dsub))
-        val counts = new Array[Long](c.m * k)
-        it.foreach { e =>
-          var s = 0
-          while (s < c.m) {
-            val j = c.assign(e.embedding, s)
-            val acc = sums(s * k + j)
-            val off = s * c.dsub
-            var i = 0
-            while (i < c.dsub) { acc(i) += e.embedding(off + i); i += 1 }
-            counts(s * k + j) += 1L
-            s += 1
-          }
-        }
-        Iterator.range(0, c.m * k).filter(counts(_) > 0L)
-          .map(i => (i, pid, sums(i), counts(i)))
-      }
-      val totals = partials
-        .groupByKey(_._1)
-        .mapGroups { (cell, it) =>
-          // partition-id order: same layout → same FP addition order
-          val parts = it.toArray.sortBy(_._2)
-          val s = parts.head._3.clone()
-          var n = parts.head._4
-          parts.tail.foreach { p =>
-            var d = 0
-            while (d < s.length) { s(d) += p._3(d); d += 1 }
-            n += p._4
-          }
-          (cell, s, n)
-        }
-        .collect() // ≤ m×ksub rows
-      val k = cb.centroids(0).length
-      val next = cb.centroids.map(_.map(identity))
-      totals.foreach { case (cell, sum, n) =>
-        next(cell / k)(cell % k) = sum.map(v => (v / n).toFloat)
-      }
-      cb = PqCodebook(m, dsub, next)
-      bc.destroy()
-      iter += 1
-    }
-    cb
+    val book = pqBook(seedOrder(spark, corpus, ksub), dims, m, ksub)
+    val trained = trainLloyd(spark, corpus, Array(book), iters).head
+    PqCodebook(m, trained.dsub, trained.centroids)
+  }
+
+  /** The IVF coarse quantizer and the PQ codebook trained TOGETHER:
+    * bit-identical to [[trainCentroids]] + [[trainPq]] for a given input
+    * layout, but `iters` corpus passes instead of 2×`iters` and one seed
+    * collect (the first max(nlist, ksub) rows of the seed order) instead
+    * of two — the two Lloyd's runs are independent, so they share each
+    * pass ([[trainLloyd]]). */
+  def trainIvfPq(
+      spark: SparkSession,
+      corpus: Dataset[Embedded],
+      nlist: Int,
+      dims: Int,
+      m: Int = 8,
+      ksub: Int = 256,
+      iters: Int = 5
+  ): (Array[Array[Float]], PqCodebook) = {
+    val order = seedOrder(spark, corpus, math.max(nlist, ksub))
+    val Array(ivf, pq) = trainLloyd(spark, corpus,
+      Array(ivfBook(order, nlist), pqBook(order, dims, m, ksub)), iters)
+    (ivf.centroids(0), PqCodebook(m, pq.dsub, pq.centroids))
   }
 
   /** PQ-compressed ANN with exact re-rank: asymmetric distance computation
@@ -797,7 +832,8 @@ object Similarity {
     * deterministic Lloyd's recipes of the components ([[trainCentroids]] +
     * [[trainPq]] on raw vectors — non-residual PQ, the simpler public
     * variant; residual encoding is a recall refinement, not a structural
-    * change). The persisted index a deployment would write is the
+    * change), trained together by [[trainIvfPq]]: `trainIters` corpus
+    * passes for both codebooks, bit-identical to training each alone. The persisted index a deployment would write is the
     * (list, vec_id, code) table partitioned by list — the scan then reads
     * nprobe/nlist of an already-32×-smaller table. `candidateCount`
     * counts (query, row) pairs ADC-scored — the honest scanned ledger. */
@@ -818,8 +854,7 @@ object Similarity {
       candidateCount: Option[org.apache.spark.util.LongAccumulator] = scala.None
   ): Dataset[Neighbor] = {
     import spark.implicits._
-    val centroids = trainCentroids(spark, corpus, nlist, trainIters)
-    val cb = trainPq(spark, corpus, dims, m, ksub, trainIters)
+    val (centroids, cb) = trainIvfPq(spark, corpus, nlist, dims, m, ksub, trainIters)
     val bc = spark.sparkContext.broadcast(centroids)
     val bcb = spark.sparkContext.broadcast(cb)
     val codes = corpus.map { e =>

@@ -32,10 +32,12 @@ import graft.pipeline.{CrawlQueries => CQ}
   * rank so the computation cannot overflow at any corpus size.
   *
   * Scale shape: the host graph (orders of magnitude smaller than the
-  * page graph) + 2×[[CQ.PageRankIters]] Pregel rounds of keyed
-  * join→map-side-combined sum, lineage-truncated per round — identical
-  * cost to running hostRank twice; the two global totals are scalar
-  * aggregates, not a shuffle of the rank vectors. */
+  * page graph) + [[CQ.PageRankIters]] Pregel rounds of keyed
+  * join→map-side-combined sum, lineage-truncated per round, each round
+  * carrying BOTH rank vectors as two columns of one row
+  * ([[CQ.pageRankRound]] at K = 2: one contribution join, one shuffle, one
+  * rejoin) — the cost of one hostRank run, not two; the two global totals
+  * are scalar aggregates, not a shuffle of the rank vectors. */
 object TrustRank {
 
   private[pipeline] val TrustSalt = ":graft-trust-v1"
@@ -43,30 +45,6 @@ object TrustRank {
   /** A host is a trusted seed iff its salted digit ≡ 0 (mod 3). */
   def seedCol(host: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     ascii(substring(md5(concat(host, lit(TrustSalt))), 1, 1)) % 3 === 0
-
-  /** The seeded damped power iteration: floor mass only at seeds. */
-  private def trustKernel(edges: DataFrame, nodes: DataFrame): DataFrame = {
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val weighted = edges.join(outDeg, "src").localCheckpoint()
-    val seeded = nodes.withColumn("floor_micro",
-      when(seedCol(col("url")), lit(CQ.PageRankFloorMicro)).otherwise(lit(0L)))
-      .localCheckpoint()
-    var trust = seeded.select(col("url"),
-      when(seedCol(col("url")), lit(CQ.PageRankUnitMicro)).otherwise(lit(0L))
-        .as("tr_micro"))
-    for (_ <- 1 to CQ.PageRankIters) {
-      val contribs = weighted
-        .join(trust.withColumnRenamed("url", "src"), "src")
-        .select(col("dst").as("url"), expr("tr_micro div out_deg").as("c"))
-        .groupBy("url").agg(sum("c").as("s"))
-      trust = seeded.join(contribs, Seq("url"), "left")
-        .select(col("url"),
-          expr(s"floor_micro + (${CQ.PageRankDampPct} * coalesce(s, cast(0 as bigint))) div 100")
-            .as("tr_micro"))
-        .localCheckpoint()
-    }
-    trust
-  }
 
   /** Contract query `q_trustrank`: per-host PageRank, trust rank, seed
     * flag, and relative spam mass (‰). */
@@ -77,24 +55,19 @@ object TrustRank {
         Cardinality.hostCol(col("dst")).as("dst"))
       .filter(col("src") =!= col("dst"))
       .localCheckpoint()
-    val nodes = edges.select(col("src").as("url"))
-      .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
-    // the PageRank and seeded-trust recurrences are INDEPENDENT over the
-    // same checkpointed edge frame — run them as concurrent driver-thread
-    // jobs (guide §2.6, the Percolation schedule)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      2, r => { val t = new Thread(r, "graft-trustrank"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val (pr, tr) =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future(CQ.pageRankKernel(edges, "host")
-            .select(col("host"), col("rank_micro").as("pr_micro")))
-          .zip(scala.concurrent.Future(
-            trustKernel(edges, nodes).withColumnRenamed("url", "host"))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-    val joined = pr.join(tr, "host").localCheckpoint()
+    val seeded = edges.select(col("src").as("url"))
+      .union(edges.select(col("dst").as("url"))).distinct()
+      .withColumn("tr_floor",
+        when(seedCol(col("url")), lit(CQ.PageRankFloorMicro)).otherwise(lit(0L)))
+      .localCheckpoint()
+    // PageRank (uniform floor) and trust (seeded floor) are the same
+    // recurrence over the same edges: carry both as columns of ONE round
+    val init = seeded.select(col("url"), lit(CQ.PageRankUnitMicro).as("pr_micro"),
+      when(seedCol(col("url")), lit(CQ.PageRankUnitMicro)).otherwise(lit(0L))
+        .as("tr_micro"))
+    val joined = CQ.pageRankRounds(edges, seeded, init,
+        Seq("pr_micro" -> CQ.PageRankFloorMicro.toString, "tr_micro" -> "tr_floor"))
+      .withColumnRenamed("url", "host")
     // two bounded scalar aggregates — the only driver-visible values
     val totals = joined.agg(sum("pr_micro"), sum("tr_micro")).head()
     val scale = math.max(1L, totals.getLong(0) / math.max(1L, totals.getLong(1)))

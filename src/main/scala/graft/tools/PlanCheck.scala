@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, count, explode, expr, length, lit, sequence, substring}
+import org.apache.spark.sql.functions.{col, count, explode, expr, length, lit, sequence, substring, when}
 import graft.pipeline.Relational
 
 /** Physical-plan inspection: asserts the plans we designed for are the plans
@@ -675,6 +675,33 @@ object PlanCheck {
       check("pagerank-round/constant-plan",
         prSizes.distinct.size == 1,
         s"per-round executed-plan size constant across checkpointed rounds: ${prSizes.reverse}")
+
+      // the same round at K = 2 (TrustRank.trustRank): PageRank with the
+      // uniform floor and trust with the seeded per-node floor share ONE
+      // contribution join, keyed sum and rejoin
+      val seeded = nodes.withColumn("tr_floor",
+        when(graft.pipeline.TrustRank.seedCol(col("url")), lit(150000L)).otherwise(lit(0L)))
+        .localCheckpoint()
+      val trFloors = Seq("pr_micro" -> "150000", "tr_micro" -> "tr_floor")
+      var tr = seeded.select(col("url"), lit(1000000L).as("pr_micro"),
+        when(col("tr_floor") > 0L, lit(1000000L)).otherwise(lit(0L)).as("tr_micro"))
+      var trSizes = List.empty[Int]
+      var trPlan = ""
+      for (r <- 1 to 4) {
+        val next = graft.pipeline.CrawlQueries.pageRankRound(weighted, seeded, tr, trFloors)
+        if (r >= 2) {
+          trSizes ::= next.queryExecution.executedPlan.toString.linesIterator.size
+          trPlan = next.queryExecution.executedPlan.toString
+        }
+        tr = next.localCheckpoint()
+      }
+      check("trustrank-round/map-side-hash-only",
+        "partial_sum".r.findAllIn(trPlan).size >= 2 && !trPlan.contains("SortMergeJoin") &&
+          !trPlan.contains("CartesianProduct"),
+        "both rank columns' sums combine map-side in one aggregate; joins stay hashed")
+      check("trustrank-round/constant-plan",
+        trSizes.distinct.size == 1,
+        s"per-round executed-plan size constant across checkpointed rounds: ${trSizes.reverse}")
 
       // components round (WebIndex.ccRound — q_host_components family)
       var cce = edges.select(col("src").as("u"), col("dst").as("v"))

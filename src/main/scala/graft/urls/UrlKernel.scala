@@ -286,10 +286,11 @@ object UrlKernel {
     *    → subdomains ONLY (root excluded)
     *  - otherwise exact host equality
     */
-  def matchesPattern(url: String, pattern: String): Boolean = {
-    val hostOpt = extractDomain(url)
-    if (hostOpt.isEmpty) return false
-    val host = hostOpt.get
+  def matchesPattern(url: String, pattern: String): Boolean =
+    extractDomain(url).exists(hostMatches(_, pattern))
+
+  /** [[matchesPattern]] on an already-extracted (non-empty) host. */
+  def hostMatches(host: String, pattern: String): Boolean = {
     if (pattern.isEmpty || pattern == "*") return true
     if (pattern.startsWith("*.")) {
       val dom0 = if (pattern.endsWith("*")) pattern.substring(2, pattern.length - 1) else pattern.substring(2)
@@ -300,20 +301,28 @@ object UrlKernel {
 
   /** Exclude wins, then include (empty include list allows all).
     * Reference: url_filter.rs:84-86, :125-133; site/config.rs:68-75. */
-  def isAllowed(url: String, includes: Seq[String], excludes: Seq[String]): Boolean = {
-    if (excludes.exists(p => matchesPattern(url, p))) false
-    else includes.isEmpty || includes.exists(p => matchesPattern(url, p))
-  }
+  def isAllowed(url: String, includes: Seq[String], excludes: Seq[String]): Boolean =
+    extractDomain(url) match {
+      case Some(host) => isAllowedHost(host, includes, excludes)
+      // no host matches no pattern: excluded by none, included only by none
+      case None => includes.isEmpty
+    }
+
+  /** [[isAllowed]] on an already-extracted (non-empty) host. */
+  def isAllowedHost(host: String, includes: Seq[String], excludes: Seq[String]): Boolean =
+    !excludes.exists(hostMatches(host, _)) && (includes.isEmpty || includes.exists(hostMatches(host, _)))
 
   /** Count of non-empty path segments — the crawl-budget priority proxy
     * (deeper = more specific = first). Reference: batch_processor.rs:56-65
     * uses `path_segments().count()`; our spec counts non-empty segments so
     * the value is stable across trailing-slash variants of the same page. */
-  def pathDepth(url: String): Int =
-    parse(url).map(_.path.split("/").count(_.nonEmpty)).getOrElse(0)
+  def pathDepth(url: String): Int = parse(url).fold(0)(pathDepth)
+
+  def pathDepth(u: ParsedUrl): Int = u.path.split("/").count(_.nonEmpty)
 
   /** Number of query parameters (crawl-budget filter ≤ 5).
     * Reference: batch_processor.rs:69-76 via `query_pairs().count()`. */
-  def paramCount(url: String): Int =
-    parse(url).flatMap(_.query).map(q => q.split("&").count(_.nonEmpty)).getOrElse(0)
+  def paramCount(url: String): Int = parse(url).fold(0)(paramCount)
+
+  def paramCount(u: ParsedUrl): Int = u.query.fold(0)(_.split("&").count(_.nonEmpty))
 }

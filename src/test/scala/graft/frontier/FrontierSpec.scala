@@ -169,6 +169,49 @@ class FrontierSpec extends AnyFunSuite {
     assert(out2.head.url == c + "?a")
   }
 
+  /** URL pieces that straddle the UTF-16 / UTF-8 order split: ASCII, BMP
+    * characters at or above U+E000 (private use, fullwidth, U+FFFD), and
+    * supplementary-plane characters (surrogate pairs in UTF-16). */
+  private val orderPieces = Seq("a", "b", "/", "\uE000", "\uFF21", "\uFFFD", "\u00E9",
+    "\uD83D\uDE00", "\uD835\uDD38", "\uD800\uDC00")
+  private def orderString(g: scala.util.Random, prefix: String): String =
+    prefix + Seq.fill(1 + g.nextInt(3))(orderPieces(g.nextInt(orderPieces.length))).mkString
+
+  test("utf8Order is unsigned UTF-8 byte order (and differs from UTF-16 order)") {
+    val g = new scala.util.Random(7)
+    var utf16Differs = 0
+    (1 to 5000).foreach { _ =>
+      val a = orderString(g, "https://h/")
+      val b = orderString(g, "https://h/")
+      val bytes = java.util.Arrays.compareUnsigned(
+        a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        b.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      assert(Integer.signum(Frontier.utf8Order.compare(a, b)) == Integer.signum(bytes), s"$a vs $b")
+      if (Integer.signum(a.compareTo(b)) != Integer.signum(bytes)) utf16Differs += 1
+    }
+    assert(utf16Differs > 0, "the sample must contain pairs the UTF-16 order gets wrong")
+  }
+
+  test("dedupeWave equals a fold of merge on supplementary-plane URLs") {
+    import spark.implicits._
+    Seq(1, 2, 3).foreach { seed =>
+      val g = new scala.util.Random(seed)
+      val entries = (0 until 300).flatMap { k =>
+        val c = s"https://site0.com/c$k"
+        Seq.fill(2 + g.nextInt(4)) {
+          FrontierEntry(c, orderString(g, c), 1 + g.nextInt(2), orderString(g, "https://p/"),
+            "site0.com", 1, CrawlEngine.urlHash(c))
+        }
+      }
+      val shuffled = g.shuffle(entries)
+      val folded = shuffled.groupBy(_.canonicalUrl).values
+        .map(_.reduce(Frontier.merge[FrontierEntry] _)).toSet
+      val waved = Frontier.dedupeWave(spark, spark.createDataset(shuffled).repartition(4))
+        .collect().toSet
+      assert(waved == folded, s"seed $seed: dedupeWave and fold(merge) pick different winners")
+    }
+  }
+
   test("politenessSelectBudgets: per-host overrides, default elsewhere, salting-invariant") {
     import spark.implicits._
     val entries = for {

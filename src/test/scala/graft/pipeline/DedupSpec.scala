@@ -344,6 +344,34 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("joint IVF+PQ training is bit-equal to trainCentroids + trainPq, at 1 and 4 partitions") {
+    import spark.implicits._
+    val raw = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(org.apache.spark.sql.functions.col("vec_id").cast("long"),
+        org.apache.spark.sql.functions.col("embedding"))
+      .as[Similarity.Embedded]
+    val bits = (a: Array[Array[Float]]) => a.flatMap(_.map(java.lang.Float.floatToRawIntBits))
+    Seq(1, 4).foreach { parts =>
+      // a fixed layout per case: the bit-identity contract is per layout
+      val corpus = raw.repartition(parts).localCheckpoint()
+      assert(corpus.rdd.getNumPartitions == parts)
+      // nlist < ksub and nlist > ksub: the shared seed collect serves both
+      Seq((16, 256), (24, 8)).foreach { case (nlist, ksub) =>
+        val (ivf, pq) = Similarity.trainIvfPq(spark, corpus, nlist, dims = 64, m = 8, ksub = ksub)
+        val ivf1 = Similarity.trainCentroids(spark, corpus, nlist)
+        val pq1 = Similarity.trainPq(spark, corpus, dims = 64, m = 8, ksub = ksub)
+        assert(ivf.length == math.min(nlist, corpus.count()))
+        assert(bits(ivf).sameElements(bits(ivf1)), s"IVF centroids differ at $parts partitions")
+        assert(pq.m == pq1.m && pq.dsub == pq1.dsub)
+        assert(pq.centroids.length == pq1.centroids.length)
+        pq.centroids.indices.foreach { s =>
+          assert(bits(pq.centroids(s)).sameElements(bits(pq1.centroids(s))),
+            s"PQ subspace $s differs at $parts partitions (nlist=$nlist, ksub=$ksub)")
+        }
+      }
+    }
+  }
+
   test("ivfPqTopK: planted clusters recovered exactly; scan = IVF's pruning at 32x smaller rows") {
     import spark.implicits._
     // same planted-cluster universe as the ivfTopK gate
