@@ -586,9 +586,8 @@ object CrawlEngine {
         Frontier.politenessSelect(
           spark, fr, config.perHostBudget, config.saltBuckets)
 
-    // Carried seen-set sketches (per-run; a resume rebuilds on first use)
+    // Carried seen-set sketch (per-run; a resume rebuilds on first use)
     val seenBloom = new Frontier.SeenBloom()
-    val seenCuckoo = new Frontier.SeenCuckoo()
 
     // (prefetch mechanics: the next frontier is materialized exactly once —
     // localCheckpoint on the driver thread, the lineage cut — and the
@@ -776,15 +775,11 @@ object CrawlEngine {
           val combined =
             if (linkGenActive) Frontier.dedupeWave(spark, leftovers.union(gatedLinkEntries))
             else leftovers
-          // bloom path: the carried sketch absorbs this wave's selected urls
-          // as a delta built from the wave-sized cache — O(wave) sketch
-          // maintenance instead of newOnly's per-wave full-seen rebuild
-          val nextFrontier =
-            if (config.seenSketch == "cuckoo")
-              Frontier.newOnlyCuckooWithSketch(combined, newSeen,
-                seenCuckoo.update(spark, selected.toDF(), selCount, seenCount, newSeen))
-            else Frontier.newOnlyWithSketch(combined, newSeen,
-              seenBloom.update(selected.toDF(), selCount, seenCount, newSeen))
+          // the carried sketch absorbs this wave's selected urls as a delta
+          // built from the wave-sized cache — O(wave) sketch maintenance
+          // instead of newOnly's per-wave full-seen rebuild
+          val nextFrontier = Frontier.newOnlyWithSketch(combined, newSeen,
+            seenBloom.update(selected.toDF(), selCount, seenCount, newSeen))
 
           // -- parallel wave writes ----------------------------------------
           // The output sinks (crawl_order / pages / chunks / metrics) and

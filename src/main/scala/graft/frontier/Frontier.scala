@@ -40,6 +40,8 @@ object Frontier extends Serializable {
     math.pow(1.0 - math.exp(-k.toDouble * n / m), k)
   }
 
+  /** One-shot seen filter: sizes a bloom over the full `seen` table (capped at
+    * `maxBloomBits`) and hands it to [[newOnlyWithSketch]]. */
   def newOnly(
       spark: SparkSession,
       candidates: Dataset[FrontierEntry],
@@ -47,25 +49,15 @@ object Frontier extends Serializable {
       seenCount: Long,
       maxBloomBits: Long = DefaultMaxBloomBits
   ): Dataset[FrontierEntry] = {
-    import spark.implicits._
     if (seenCount == 0) return candidates
-    if (seenCount < BloomThreshold) {
-      return candidates.join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-    }
-    val wantBits = BloomFilter.optimalNumOfBits(math.max(seenCount, 1000L), BloomFpp)
-    val bits = math.min(wantBits, maxBloomBits)
-    if (estimatedFpp(seenCount, bits) > BloomSkipFpp) {
-      // budget-capped bloom would pass >50% of candidates anyway — pure
-      // exact anti-join, no driver sketch at all
-      candidates.join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-    } else {
-      val bloom: BloomFilter = seen.stat.bloomFilter("canonicalUrl", math.max(seenCount, 1000L), bits)
-      val bcast = spark.sparkContext.broadcast(bloom)
-      val definitelyNew = candidates.filter(e => !bcast.value.mightContainString(e.canonicalUrl))
-      val maybeSeen = candidates.filter(e => bcast.value.mightContainString(e.canonicalUrl))
-        .join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-      definitelyNew.union(maybeSeen)
-    }
+    val capacity = math.max(seenCount, 1000L)
+    val bits = math.min(BloomFilter.optimalNumOfBits(capacity, BloomFpp), maxBloomBits)
+    // below the threshold, or when the budget-capped bloom would pass >50%
+    // of candidates anyway: pure exact anti-join, no driver sketch at all
+    val bloom =
+      if (seenCount < BloomThreshold || estimatedFpp(seenCount, bits) > BloomSkipFpp) scala.None
+      else Some(seen.stat.bloomFilter("canonicalUrl", capacity, bits))
+    newOnlyWithSketch(candidates, seen, bloom)
   }
 
   /** Incrementally-maintained seen-set bloom: the per-wave sketch cost a
@@ -83,9 +75,7 @@ object Frontier extends Serializable {
     * contract as [[newOnly]]'s per-wave sketch. Returns None (→ caller
     * takes the pure exact anti-join) below the threshold or when the
     * bit-capped sketch would pass > [[BloomSkipFpp]] anyway. */
-  final class SeenBloom(
-      fpp: Double = BloomFpp,
-      maxBits: Long = DefaultMaxBloomBits) extends Serializable {
+  final class SeenBloom extends Serializable {
     // (filter, bits, design capacity, items inserted)
     private var state: Option[(BloomFilter, Long, Long, Long)] = scala.None
 
@@ -107,7 +97,7 @@ object Frontier extends Serializable {
           Some(bf)
         case _ =>
           val cap = math.max(seenCount * 4, BloomThreshold * 4)
-          val bits = math.min(BloomFilter.optimalNumOfBits(cap, fpp), maxBits)
+          val bits = math.min(BloomFilter.optimalNumOfBits(cap, BloomFpp), DefaultMaxBloomBits)
           if (estimatedFpp(seenCount, bits) > BloomSkipFpp) { state = scala.None; scala.None }
           else {
             val bf = newSeen.stat.bloomFilter("canonicalUrl", cap, bits)
@@ -118,77 +108,10 @@ object Frontier extends Serializable {
     }
   }
 
-  /** [[SeenBloom]]'s cuckoo twin: carried filter sized with headroom at
-    * build time, per-wave delta built by treeAggregate over the SELECTED
-    * rows' precomputed urlHash column (O(wave)), merged slot-by-slot into
-    * the carried table (exact — see [[CuckooFilter.merge]]). A saturating
-    * merge or capacity overflow triggers a full rebuild from newSeen at a
-    * fresh 4× headroom size; an unbudgetable rebuild degrades to None
-    * (exact anti-join), the same fail-safe ladder as the one-shot path. */
-  final class SeenCuckoo(maxBytes: Long = CuckooFilter.DefaultMaxBytes) extends Serializable {
-    // (filter, design capacity in items, items inserted)
-    private var state: Option[(CuckooFilter, Long, Long)] = scala.None
-
-    private def aggregate(hashes: org.apache.spark.rdd.RDD[Long], log2: Int): CuckooFilter =
-      hashes.treeAggregate(new CuckooFilter(log2))(
-        (f, h) => { f.insert(h); f }, (a, b) => { a.merge(b); a })
-
-    private def rebuild(spark: SparkSession, newSeen: DataFrame, seenCount: Long): Option[CuckooFilter] = {
-      import spark.implicits._
-      val target = Seq(seenCount * 4, seenCount * 2, seenCount)
-        .find(t => CuckooFilter.log2For(t, maxBytes).isDefined)
-      target match {
-        case Some(t) =>
-          val log2 = CuckooFilter.log2For(t, maxBytes).get
-          val f = aggregate(
-            newSeen.select(xxhash64(col("canonicalUrl")).as("h")).as[Long].rdd, log2)
-          if (f.saturated) { state = scala.None; scala.None }
-          else { state = Some((f, t, seenCount)); Some(f) }
-        case scala.None => state = scala.None; scala.None
-      }
-    }
-
-    def update(
-        spark: SparkSession,
-        selected: DataFrame,
-        selCount: Long,
-        seenCount: Long,
-        newSeen: DataFrame): Option[CuckooFilter] = {
-      import spark.implicits._
-      if (seenCount < BloomThreshold) return scala.None
-      state match {
-        case Some((cf, cap, ins)) if ins + selCount <= cap && !cf.saturated =>
-          val delta = aggregate(selected.select(col("urlHash")).as[Long].rdd, cf.log2Buckets)
-          if (delta.saturated || !cf.merge(delta)) rebuild(spark, newSeen, seenCount)
-          else { state = Some((cf, cap, ins + selCount)); Some(cf) }
-        case _ => rebuild(spark, newSeen, seenCount)
-      }
-    }
-  }
-
-  /** [[newOnlyCuckoo]] with a caller-maintained sketch ([[SeenCuckoo]]):
-    * None → the pure exact anti-join; Some → the standard split. */
-  def newOnlyCuckooWithSketch(
-      candidates: Dataset[FrontierEntry],
-      seen: DataFrame,
-      sketch: Option[CuckooFilter]): Dataset[FrontierEntry] = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    sketch match {
-      case scala.None =>
-        candidates.join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-      case Some(filter) =>
-        val bc = spark.sparkContext.broadcast(filter)
-        val definitelyNew = candidates.filter(e => !bc.value.mightContain(e.urlHash))
-        val maybeSeen = candidates.filter(e => bc.value.mightContain(e.urlHash))
-          .join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-        definitelyNew.union(maybeSeen)
-    }
-  }
-
-  /** [[newOnly]] with a caller-maintained sketch ([[SeenBloom]]): None →
-    * the pure exact anti-join; Some → the standard split (sketch-negative
-    * rows skip the shuffle, sketch-positive rows verify exactly). */
+  /** The one seen-set split, shared by [[newOnly]]'s one-shot bloom and the
+    * engine's carried [[SeenBloom]]: None → the pure exact anti-join; Some →
+    * sketch-negative rows skip the shuffle, sketch-positive rows verify
+    * exactly, so false positives cost traffic, never correctness. */
   def newOnlyWithSketch(
       candidates: Dataset[FrontierEntry],
       seen: DataFrame,
@@ -205,45 +128,6 @@ object Frontier extends Serializable {
           .join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
         definitelyNew.union(maybeSeen)
     }
-  }
-
-  /** [[newOnly]]'s cuckoo-sketch twin — the north rule names "bloom/cuckoo
-    * URL-seen filter", and cuckoo is the one that supports DELETION (a
-    * recrawl policy evicts expired URLs without rebuilding the sketch over
-    * 10^10 rows — see [[CuckooFilter.delete]]). Same split discipline:
-    * definite-new rows (sketch negative) skip the shuffle; sketch-positive
-    * rows take the exact anti-join, so false positives cost traffic, never
-    * correctness. The sketch is built with a treeAggregate over the seen
-    * table's xxhash64 keys (cuckoo tables MERGE by re-inserting slots);
-    * a budget-capped or saturated build falls back to the pure exact
-    * anti-join — saturation also fails safe at probe time (a saturated
-    * filter answers mightContain = true for everything). */
-  def newOnlyCuckoo(
-      spark: SparkSession,
-      candidates: Dataset[FrontierEntry],
-      seen: DataFrame,
-      seenCount: Long,
-      maxSketchBytes: Long = CuckooFilter.DefaultMaxBytes
-  ): Dataset[FrontierEntry] = {
-    import spark.implicits._
-    if (seenCount == 0) return candidates
-    def exact = candidates.join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-    if (seenCount < BloomThreshold) return exact
-    // budget check BEFORE any allocation: a table capped below the b=4 load
-    // point would saturate during the build — go straight to the exact plan
-    val log2 = CuckooFilter.log2For(seenCount, maxSketchBytes) match {
-      case Some(l) => l
-      case scala.None => return exact
-    }
-    val zero = new CuckooFilter(log2)
-    val filter = seen.select(xxhash64(col("canonicalUrl")).as("h")).as[Long].rdd
-      .treeAggregate(zero)((f, h) => { f.insert(h); f }, (a, b) => { a.merge(b); a })
-    if (filter.saturated) return exact
-    val bc = spark.sparkContext.broadcast(filter)
-    val definitelyNew = candidates.filter(e => !bc.value.mightContain(e.urlHash))
-    val maybeSeen = candidates.filter(e => bc.value.mightContain(e.urlHash))
-      .join(seen, Seq("canonicalUrl"), "left_anti").as[FrontierEntry]
-    definitelyNew.union(maybeSeen)
   }
 
   /** The dedup MERGE rule: which representative survives when two

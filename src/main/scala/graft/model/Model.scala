@@ -164,12 +164,6 @@ final case class CrawlConfig(
     // scanning the frontier. Costs a sampling pass + shuffle per wave; leave
     // unset for small politeness-bound crawls.
     snapshotFileTarget: Option[Int] = None,
-    // Seen-set sketch for the per-wave frontier anti-join pre-filter:
-    // "bloom" (default — smallest broadcast) or "cuckoo" (supports
-    // DELETION: recrawl policies evict expired URLs without rebuilding the
-    // sketch; see frontier.CuckooFilter). Both are false-positive-safe —
-    // the exact anti-join always backs the sketch.
-    seenSketch: String = "bloom",
     // Fetch-join strategy: a wave (and the pages-prep winner table) at or
     // under this many rows is BROADCAST to the pages side, so the multi-KB
     // html payloads never enter an exchange at all — on a cluster a ~100 MB

@@ -237,15 +237,9 @@ object WebIndex {
     * one center) that makes silent non-convergence structurally
     * impossible. Site-cluster / mirror-farm grouping is the crawl-policy
     * read: budget and reputation should attach to the CLUSTER, not the
-    * host alias.
-    *
-    * `warmStart`: optional (host, label) assertions from a PREVIOUS run
-    * over an edge SUBSET (nested-level curves: [[Percolation]] /
-    * [[RandomPercolation]] iterate levels from fewest edges to most) —
-    * they are genuine connectivity facts there, so they merge for free
-    * here; nodes are still derived from the real edges only. */
-  def components(pairsIn: DataFrame, warmStart: Option[DataFrame] = None): DataFrame = {
-    val labels = componentLabels(pairsIn, warmStart)
+    * host alias. */
+  def components(pairsIn: DataFrame): DataFrame = {
+    val labels = componentLabels(pairsIn)
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("component_size"))
     labels.join(sizes, "label")
       .select(col("host"), col("label").as("component"), col("component_size"))
@@ -254,16 +248,15 @@ object WebIndex {
 
   /** Label assignment only — one (host, label) row per node, no sizes
     * join, no output sort: the form the nested percolation curves consume
-    * per level (they need the giant's size and the labels for the next
-    * level's warm start, not [[components]]' sorted sized report — the
-    * every-level global sort + sizes join was pure per-level overhead).
+    * per level (they need the giant's size, not [[components]]' sorted
+    * sized report — the every-level global sort + sizes join was pure
+    * per-level overhead).
     *
     * `prepared = true` asserts the caller's frame is ALREADY symmetric,
     * distinct and self-loop-free (the percolation curves filter a frame
     * this kernel built, and both filter predicates are symmetric in
     * (a, b)), so the symmetrize+distinct shuffle is skipped. */
   private[graft] def componentLabels(pairsIn: DataFrame,
-                                     warmStart: Option[DataFrame] = None,
                                      prepared: Boolean = false): DataFrame = {
     val und = if (prepared) pairsIn else {
       val dir0 = pairsIn.filter(col("a") =!= col("b"))
@@ -271,13 +264,7 @@ object WebIndex {
         .distinct().localCheckpoint()
     }
     val nodes = und.select(col("a").as("host")).distinct().localCheckpoint()
-    val seed = warmStart match {
-      case Some(w) => und.select(col("a").as("u"), col("b").as("v"))
-        .union(w.select(col("host").as("u"), col("label").as("v"))
-          .where(col("u") =!= col("v")))
-      case None => und.select(col("a").as("u"), col("b").as("v"))
-    }
-    var e = seed.distinct().localCheckpoint()
+    var e = und.select(col("a").as("u"), col("b").as("v")).distinct().localCheckpoint()
     var eCount = e.count()
     var converged = false
     var round = 0

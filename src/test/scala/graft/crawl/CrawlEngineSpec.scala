@@ -81,23 +81,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
   }
 
-  test("seenSketch = cuckoo reproduces the golden crawl") {
-    withSpark("local[4]") { spark =>
-      // sketch choice is a pure plan/pre-filter decision: the cuckoo path
-      // (false-positive-safe, deletion-capable) must give the exact golden
-      // order, parity, and seen set
-      val spec = CorpusGen.Spec(GoldenGen.Hosts, GoldenGen.PagesPerHost)
-      val pages = CorpusGen.dataset(spark, spec)
-      val dir = Files.createTempDirectory("graft-cuckoo-run").toString
-      val cfg = GoldenGen.config(GoldenGen.Hosts).copy(seenSketch = "cuckoo")
-      val summary = CrawlEngine.run(spark, pages, cfg, dir)
-      assert(summary.parityFailures == 0)
-      assert(orderLines(spark, dir).mkString("\n") == resource("crawl_order.txt").trim,
-        "cuckoo-sketch run must match the frozen golden order exactly")
-      assert(seenSet(spark, dir, summary.waves - 1).mkString("\n") == resource("seen.txt").trim)
-    }
-  }
-
   test("perHostBudget <= 0 (unlimited) equals a budget at/above every host's count") {
     withSpark("local[4]") { spark =>
       // saturated single wave: an explicit budget >= per-host page count and

@@ -108,32 +108,6 @@ class FrontierSpec extends AnyFunSuite {
     assert(got.toSeq == (next until next + 200L), "post-rebuild sketch must stay exact")
   }
 
-  test("SeenCuckoo: incrementally-merged filter is exact across waves") {
-    import spark.implicits._
-    val sc = new Frontier.SeenCuckoo()
-    val n0 = Frontier.BloomThreshold + 2000
-    var seenIds = (0L until n0).toVector
-    var seen = seenIds.map(i => s"https://site0.com/p$i").toDF("canonicalUrl")
-    val sel1 = spark.createDataset(seenIds.takeRight(500).map(entry(_))).toDF()
-    assert(sc.update(spark, sel1, 500, n0, seen).isDefined)
-    var next = n0
-    for (w <- 2 to 4) {
-      val delta = (next until next + 700L).toVector
-      val selected = spark.createDataset(delta.map(entry(_))).toDF()
-      seenIds = seenIds ++ delta
-      seen = seenIds.map(i => s"https://site0.com/p$i").toDF("canonicalUrl")
-      next += 700
-      val sk = sc.update(spark, selected, 700, seenIds.length, seen)
-      assert(sk.isDefined && !sk.get.saturated)
-      val cands = spark.createDataset(
-        (0L until next by 97L).map(entry(_)) ++ (next until next + 300L).map(entry(_)))
-      val got = Frontier.newOnlyCuckooWithSketch(cands, seen, sk).collect()
-        .map(_.canonicalUrl.drop("https://site0.com/p".length).toLong).sorted
-      assert(got.toSeq == (next until next + 300L),
-        s"wave $w: cuckoo split must not lose (false negative) or leak rows")
-    }
-  }
-
   test("newOnlyWithSketch(None) is the pure exact anti-join") {
     import spark.implicits._
     val candidates = spark.createDataset((0L until 100L).map(entry(_)))
@@ -254,35 +228,7 @@ class FrontierSpec extends AnyFunSuite {
     }
   }
 
-  test("cuckoo filter: no false negatives, deletion works, saturation fails safe") {
-    val f = CuckooFilter.forItems(100000)
-    val items = (0L until 100000L).map(i => CrawlEngine.urlHash(s"https://h${i % 997}.com/p$i"))
-    items.foreach(h => assert(f.insert(h), "sized-for-n filter must accept n items"))
-    assert(items.forall(f.mightContain), "no false negatives")
-    // false positives exist but are rare at 16-bit fingerprints
-    val probes = (0L until 100000L).map(i => CrawlEngine.urlHash(s"https://other$i.net/"))
-    val fpr = probes.count(f.mightContain).toDouble / probes.size
-    assert(fpr < 0.01, s"false-positive rate too high: $fpr")
-    // DELETION — the capability bloom lacks (recrawl eviction): delete half,
-    // the other half keeps membership, deleted ones mostly clear
-    val (del, keep) = items.splitAt(50000)
-    del.foreach(h => assert(f.delete(h), "inserted items must delete"))
-    assert(keep.forall(f.mightContain), "deletes must not disturb other members")
-    val residual = del.count(f.mightContain).toDouble / del.size
-    assert(residual < 0.01, s"deleted items must clear (residual collisions only): $residual")
-    // re-insert after delete round-trips
-    del.take(100).foreach(h => assert(f.insert(h)))
-    assert(del.take(100).forall(f.mightContain))
-    // saturation: overfill a tiny filter → it must answer true for
-    // EVERYTHING (fail-safe: a false negative would double-fetch)
-    val tiny = new CuckooFilter(2) // 4 buckets x 4 slots = 16 capacity
-    (0L until 200L).foreach(i => tiny.insert(CrawlEngine.urlHash(s"https://x$i.com/")))
-    assert(tiny.saturated)
-    assert((0L until 50L).forall(i => tiny.mightContain(CrawlEngine.urlHash(s"https://never$i.org/"))),
-      "a saturated filter must answer true unconditionally")
-  }
-
-  test("newOnlyCuckoo equals the exact anti-join (and the bloom path)") {
+  test("newOnly bloom split equals the exact anti-join (53 hosts)") {
     import spark.implicits._
     val n = 30000 // past BloomThreshold so the sketch path engages
     val entries = (0 until n).map { i =>
@@ -295,11 +241,8 @@ class FrontierSpec extends AnyFunSuite {
     val seenCount = seen.count()
     val exact = candidates.join(seen, Seq("canonicalUrl"), "left_anti")
       .collect().map(_.getAs[String]("canonicalUrl")).sorted
-    val viaCuckoo = Frontier.newOnlyCuckoo(spark, candidates, seen, seenCount)
-      .collect().map(_.canonicalUrl).sorted
     val viaBloom = Frontier.newOnly(spark, candidates, seen, seenCount)
       .collect().map(_.canonicalUrl).sorted
-    assert(viaCuckoo.toSeq == exact.toSeq, "cuckoo split must be exact")
     assert(viaBloom.toSeq == exact.toSeq)
   }
 

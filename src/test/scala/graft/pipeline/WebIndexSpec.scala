@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantic gates for the web-index operators: every output row must match
@@ -150,18 +149,6 @@ class WebIndexSpec extends AnyFunSuite {
       if (i == 14) "chain-15.example" else f"fork-${i + 1}%02d.example"))
     val got2 = WebIndex.components(fork.toDF("a", "b")).collect()
     assert(got2.length == 46 && got2.forall(_.getString(1) == "chain-00.example"))
-  }
-
-  test("components: warm-start labels from an edge subset change nothing") {
-    import spark.implicits._
-    val chain = (0 until 30).map(i => (f"chain-$i%02d.example", f"chain-${i + 1}%02d.example"))
-    val full = chain ++ Seq(("chain-31b.example", "chain-00.example"))
-    val cold = WebIndex.components(full.toDF("a", "b")).collect().toSeq
-    // warm labels computed on a SUBSET of the edges (drop the last link)
-    val sub = WebIndex.components(chain.dropRight(1).toDF("a", "b"))
-      .select(col("host"), col("component").as("label"))
-    val warm = WebIndex.components(full.toDF("a", "b"), Some(sub)).collect().toSeq
-    assert(warm == cold)
   }
 
   test("reciprocalLinks plan: hash joins only — no cartesian/nested-loop") {
