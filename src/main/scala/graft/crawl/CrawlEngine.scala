@@ -324,13 +324,8 @@ object CrawlEngine {
     val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     // Driver-side pool for the concurrent per-wave sink writes and the prep
-    // overlap below. Daemon threads: an engine failure must not pin the JVM.
-    val sinkPool = java.util.concurrent.Executors.newFixedThreadPool(6, r => {
-      val t = new Thread(r, "graft-wave-sink")
-      t.setDaemon(true)
-      t
-    })
-    val sinkEc = scala.concurrent.ExecutionContext.fromExecutorService(sinkPool)
+    // overlap below.
+    val sinkEc = graft.pipeline.Par.executor(6)
 
     // Next wave's (frontier, politeness selection, count), PREFETCHED during
     // the previous wave's write window (launched near the end of the wave

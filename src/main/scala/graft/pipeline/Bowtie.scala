@@ -105,20 +105,8 @@ object Bowtie {
     // query's wall time collapses to the slowest closure instead of the
     // sum of all three
     val und = dir.union(rev).distinct().localCheckpoint()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      3, r => { val t = new Thread(r, "graft-bowtie-closure"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val (fwd, bwd, weak) =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(Seq(
-          scala.concurrent.Future(closure(dir, pivot)),
-          scala.concurrent.Future(closure(rev, pivot)),
-          scala.concurrent.Future(closure(und, pivot)))),
-        scala.concurrent.duration.Duration.Inf) match {
-        case Seq(f, b, w) => (f, b, w)
-      }
-      finally pool.shutdown()
+    val Seq(fwd, bwd, weak) = Par.all(Seq(
+      () => closure(dir, pivot), () => closure(rev, pivot), () => closure(und, pivot)))
     def d(c: Column): Column = coalesce(c, lit(-1L))
     nodes
       .join(fwd.withColumnRenamed("dist", "df"), Seq("host"), "left")

@@ -255,16 +255,20 @@ object CrawlQueries {
   private[pipeline] def pageRankRounds(
       edges: DataFrame, nodes: DataFrame, init: DataFrame,
       floors: Seq[(String, String)] = UniformFloor): DataFrame = {
-    // loop-invariant: edges ⋈ out-degree is identical every round —
-    // checkpoint it once instead of re-shuffling the aggregation 10×
-    val weighted = edges.join(edges.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
-      .localCheckpoint()
+    val weighted = weightedEdges(edges)
     var ranks = init
     for (_ <- 1 to PageRankIters) {
       ranks = pageRankRound(weighted, nodes, ranks, floors).localCheckpoint()
     }
     ranks
   }
+
+  /** The (src, dst, out_deg) frame every [[pageRankRound]] reads. It is
+    * loop-invariant, so it is checkpointed once instead of re-shuffling the
+    * out-degree aggregation every round. */
+  private[graft] def weightedEdges(edges: DataFrame): DataFrame =
+    edges.join(edges.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
+      .localCheckpoint()
 
   /** One power-iteration round (the loop body, factored so PlanCheck can
     * audit the per-round physical plan the kernel actually runs) over K

@@ -15,19 +15,19 @@ import org.apache.spark.sql.functions._
   * the host links (the "new snapshot's" additions), converge the base
   * graph, then run the full graph from BOTH starts at matched round
   * budgets and ledger each variant's L1 distance to the full-graph
-  * reference (8 rounds — [[CrawlQueries.pageRankKernel]]'s recurrence
-  * VERBATIM: same floor, damping, integer divisions).
+  * reference (8 rounds of the shared [[CrawlQueries.pageRankRound]] —
+  * global PageRank's floor, damping and integer divisions).
   *
   * One row per (variant, budget): `variant` ('cold'/'warm'), `rounds`,
   * `l1_micro` (Σ|rank − ref| over all nodes), `n_nodes`. The spec pins
   * the headline: warm beats cold at EVERY budget, and warm@2 beats
   * cold@4 on this corpus — half the rounds for a closer answer.
   *
-  * Scale shape (100 TB): identical to the shared kernel — keyed
-  * contribution joins with per-round lineage cuts; the warm init is one
-  * left join of the new node set against the old rank table (the state
-  * a fleet already has checkpointed — [[graft.state.SnapshotStore]]);
-  * the ledger is one keyed join + ungrouped aggregate per variant.
+  * Scale shape (100 TB): the shared kernel's — keyed contribution joins
+  * with per-round lineage cuts; the warm init is one left join of the new
+  * node set against the old rank table (the state a fleet already has
+  * checkpointed — [[graft.state.SnapshotStore]]); the ledger is one keyed
+  * join + one grouped aggregate over all six snapshots.
   */
 object PagerankDelta {
 
@@ -37,24 +37,15 @@ object PagerankDelta {
 
   import CrawlQueries.{PageRankUnitMicro, PageRankFloorMicro, PageRankDampPct}
 
-  /** The kernel's recurrence, parameterized by init and rounds; returns
-    * the snapshots at the requested rounds. */
+  /** [[CrawlQueries.pageRankRound]] from `init` for `rounds` rounds;
+    * returns the snapshots at the requested rounds. */
   private def iterate(edges: DataFrame, nodes: DataFrame, init: DataFrame,
                       rounds: Int, keep: Set[Int]): Map[Int, DataFrame] = {
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val weighted = edges.join(outDeg, "src").localCheckpoint()
+    val weighted = CrawlQueries.weightedEdges(edges)
     var ranks = init
     var out = Map.empty[Int, DataFrame]
     for (r <- 1 to rounds) {
-      val contribs = weighted
-        .join(ranks.withColumnRenamed("url", "src"), "src")
-        .select(col("dst").as("url"), expr("rank_micro div out_deg").as("c"))
-        .groupBy("url").agg(sum("c").as("s"))
-      ranks = nodes.join(contribs, Seq("url"), "left")
-        .select(col("url"),
-          expr(s"$PageRankFloorMicro + ($PageRankDampPct * coalesce(s, cast(0 as bigint))) div 100")
-            .as("rank_micro"))
-        .localCheckpoint()
+      ranks = CrawlQueries.pageRankRound(weighted, nodes, ranks).localCheckpoint()
       if (keep(r)) out += r -> ranks
     }
     out
@@ -65,7 +56,6 @@ object PagerankDelta {
 
   /** Contract query `q_pagerank_delta` over the crawl corpus host graph. */
   def pagerankDelta(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val all = CrawlQueries.linkEdgesRaw(spark, dir).select("src", "dst")
       .filter(col("dst").startsWith("http"))
       .select(Cardinality.hostCol(col("src")).as("src"),
@@ -81,42 +71,23 @@ object PagerankDelta {
 
     // the base-graph and full-graph recurrences are INDEPENDENT — run them
     // as concurrent driver-thread jobs (guide §2.6, the Percolation
-    // schedule); only the warm restart needs base8, so it follows. The six
-    // per-budget L1 ledgers are independent 1-row reads of checkpointed
-    // snapshots and overlap the same way.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      3, r => { val t = new Thread(r, "graft-prdelta"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // ONE try/finally from the pool's creation on: a throw anywhere below
-    // (either recurrence, the warm-start derivation, a ledger) releases it
-    val rows = try {
-      val (base8, fullSnaps) = Await.result(
-        Future(iterate(base, nodesBase, uniform(nodesBase),
-          RefRounds, Set(RefRounds))(RefRounds))
-          .zip(Future(iterate(all, nodesFull, uniform(nodesFull),
-            RefRounds, Budgets.toSet + RefRounds))),
-        Duration.Inf)
-      val ref = fullSnaps(RefRounds)
-      val warmInit = nodesFull.join(base8, Seq("url"), "left")
-        .select(col("url"),
-          coalesce(col("rank_micro"), lit(PageRankUnitMicro)).as("rank_micro"))
-      val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.max, Budgets.toSet)
-
-      def l1(variant: String, r: Int, snap: DataFrame): (String, Long, Long, Long) = {
-        val row = snap.withColumnRenamed("rank_micro", "v")
-          .join(ref.withColumnRenamed("rank_micro", "ref"), "url")
-          .agg(sum(abs(col("v") - col("ref"))).as("l1"), count(lit(1)).as("n"))
-          .head
-        (variant, r.toLong, row.getLong(0), row.getLong(1))
-      }
-      Await.result(Future.sequence(
-        Budgets.map(r => Future(l1("cold", r, fullSnaps(r)))) ++
-          Budgets.map(r => Future(l1("warm", r, warmSnaps(r))))), Duration.Inf)
-    } finally pool.shutdown()
-    rows.toDF("variant", "rounds", "l1_micro", "n_nodes")
+    // schedule); only the warm restart needs base8, so it follows
+    val Seq(baseSnaps, fullSnaps) = Par.all(Seq(
+      () => iterate(base, nodesBase, uniform(nodesBase), RefRounds, Set(RefRounds)),
+      () => iterate(all, nodesFull, uniform(nodesFull), RefRounds, Budgets.toSet + RefRounds)))
+    val ref = fullSnaps(RefRounds)
+    val warmInit = nodesFull.join(baseSnaps(RefRounds), Seq("url"), "left")
+      .select(col("url"),
+        coalesce(col("rank_micro"), lit(PageRankUnitMicro)).as("rank_micro"))
+    val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.max, Budgets.toSet)
+    // every (variant, budget) ledger row in ONE job
+    def tagged(variant: String, snaps: Map[Int, DataFrame]): Seq[DataFrame] =
+      Budgets.map(r => snaps(r).select(lit(variant).as("variant"),
+        lit(r.toLong).as("rounds"), col("url"), col("rank_micro").as("v")))
+    (tagged("cold", fullSnaps) ++ tagged("warm", warmSnaps)).reduce(_ unionByName _)
+      .join(ref.withColumnRenamed("rank_micro", "ref"), "url")
+      .groupBy("variant", "rounds")
+      .agg(sum(abs(col("v") - col("ref"))).as("l1_micro"), count(lit(1)).as("n_nodes"))
       .orderBy("variant", "rounds")
   }
 

@@ -85,27 +85,17 @@ object Percolation {
     // Per level only the LABELS are computed ([[WebIndex.componentLabels]],
     // prepared = true): the giant is the max label-group count — the full
     // sized/sorted [[WebIndex.components]] report is never built per level.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      MaxK + 1, r => { val t = new Thread(r, "graft-perc-level"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futs = (0 to MaxK).map { k =>
-      scala.concurrent.Future {
-        val removed = ranking.take(k)
-        val kept =
-          if (k == 0) und
-          else und.filter(!col("a").isin(removed: _*) && !col("b").isin(removed: _*))
-        val labels = WebIndex.componentLabels(kept, prepared = true)
-        val giant = labels.groupBy("label").agg(count(lit(1)).as("n"))
-          .agg(max("n")).head().getLong(0)
-        (k.toLong, if (k == 0) "-" else ranking(k - 1), n0 - k, giant,
-          giant * 1000L / n0)
-      }
-    }
-    val rows =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+    val rows = Par.all((0 to MaxK).map { k => () =>
+      val removed = ranking.take(k)
+      val kept =
+        if (k == 0) und
+        else und.filter(!col("a").isin(removed: _*) && !col("b").isin(removed: _*))
+      val labels = WebIndex.componentLabels(kept, prepared = true)
+      val giant = labels.groupBy("label").agg(count(lit(1)).as("n"))
+        .agg(max("n")).head().getLong(0)
+      (k.toLong, if (k == 0) "-" else ranking(k - 1), n0 - k, giant,
+        giant * 1000L / n0)
+    })
     rows.toDF("k", "removed_host", "n_hosts", "giant", "giant_permille")
       .orderBy("k")
   }

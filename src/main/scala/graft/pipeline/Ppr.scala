@@ -15,20 +15,23 @@ import org.apache.spark.sql.functions._
   * by seed-relative authority, not global popularity (a globally-huge but
   * off-topic hub must NOT win the wave budget).
   *
-  * Same integer discipline as the shared [[CrawlQueries.pageRankKernel]]:
-  * micro-units, damped recurrence, [[CrawlQueries.PageRankIters]] pinned
-  * rounds — with ONE structural difference that defines PPR: the per-round
-  * floor `(100−d)%·unit` lands ONLY on seed nodes (split evenly across
-  * them in integer micro-units), everywhere else the rank is purely
-  * inherited mass. A zero row is therefore a THEOREM about the graph
-  * ("unreachable from the seeds in any number of steps"), which is why the
-  * output keeps them: `ppr_micro = 0` ⟺ not forward-reachable — the
-  * [[Bowtie]] `out∪scc` set of the seeds, cross-checkable.
+  * The recurrence IS global PageRank's: [[CrawlQueries.pageRankRounds]]
+  * runs [[CrawlQueries.PageRankIters]] of the shared
+  * [[CrawlQueries.pageRankRound]] (micro-units, damped integer
+  * recurrence) — with ONE structural difference that defines PPR: the
+  * per-round floor is a per-node column, `(100−d)%·unit` on seed nodes
+  * (split evenly across them in integer micro-units) and zero everywhere
+  * else, where the rank is purely inherited mass. A zero row is therefore
+  * a THEOREM about the graph ("unreachable from the seeds in any number of
+  * steps"), which is why the output keeps them: `ppr_micro = 0` ⟺ not
+  * forward-reachable — the [[Bowtie]] `out∪scc` set of the seeds,
+  * cross-checkable.
   *
-  * 100-TB shape: identical to the global kernel — the loop-invariant
-  * edges⋈out-degree join checkpointed once, per round one keyed join + one
-  * map-side-combined sum, per-round lineage cuts, no windows, no driver
-  * state beyond the fixed seed list (spec data, a handful of strings).
+  * 100-TB shape: the global kernel's, since it runs the same round — the
+  * loop-invariant edges⋈out-degree join checkpointed once, per round one
+  * keyed join + one map-side-combined sum, per-round lineage cuts, no
+  * windows, no driver state beyond the fixed seed list (spec data, a
+  * handful of strings).
   *
   * (Reference scope: rust-scraper's relevance_scorer.rs ranks pages by
   * CONTENT similarity to a query; PPR is the complementary LINK-side
@@ -62,7 +65,6 @@ object Ppr {
       .union(edges.select(col("dst").as("url")))
       .union(seeds.toDF("url")) // a seed with no edges still teleports
       .distinct().localCheckpoint()
-    val weighted = edges.join(outDeg, "src").localCheckpoint()
     // the teleport floor: (100−d)%·unit split evenly over the seeds in
     // integer micro-units — the ONLY mass injection in the whole recurrence
     val perSeedFloor = CrawlQueries.PageRankFloorMicro / seeds.size
@@ -74,21 +76,9 @@ object Ppr {
     // r0: the full unit split over the seeds, zero elsewhere — the whole
     // initial distribution IS the teleport vector
     val perSeedUnit = CrawlQueries.PageRankUnitMicro / seeds.size
-    var ranks = floored.select(col("url"),
+    val init = floored.select(col("url"),
       when(col("floor_micro") > 0L, lit(perSeedUnit)).otherwise(lit(0L)).as("rank_micro"))
-    for (_ <- 1 to CrawlQueries.PageRankIters) {
-      val contribs = weighted
-        .join(ranks.withColumnRenamed("url", "src"), "src")
-        .select(col("dst").as("url"), expr("rank_micro div out_deg").as("c"))
-        .groupBy("url").agg(sum("c").as("s"))
-      ranks = floored.join(contribs, Seq("url"), "left")
-        .select(col("url"),
-          (col("floor_micro") +
-            expr(s"(${CrawlQueries.PageRankDampPct} * coalesce(s, cast(0 as bigint))) div 100"))
-            .as("rank_micro"))
-        .localCheckpoint()
-    }
-    ranks
+    CrawlQueries.pageRankRounds(edges, floored, init, Seq("rank_micro" -> "floor_micro"))
       .join(inDeg.withColumnRenamed("dst", "url"), Seq("url"), "left")
       .join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
       .na.fill(0L, Seq("in_deg", "out_deg"))

@@ -68,26 +68,16 @@ object RandomPercolation {
     // slowest level instead of the sum. Per level only the LABELS are
     // computed ([[WebIndex.componentLabels]], prepared = true); giant =
     // max label-group count.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      Levels.size, r => { val t = new Thread(r, "graft-randperc-level"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val futs = Levels.map { p =>
-      scala.concurrent.Future {
-        val thr = threshold(p)
-        val kept =
-          if (p == 0) und
-          else und.filter(hash44(col("a")) >= thr && hash44(col("b")) >= thr)
-        val labels = WebIndex.componentLabels(kept, prepared = true)
-        val giant = labels.groupBy("label").agg(count(lit(1)).as("n"))
-          .agg(max("n")).head().getLong(0)
-        (p.toLong, removedAt(p), n0 - removedAt(p), giant, giant * 1000L / n0)
-      }
-    }
-    val rows =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+    val rows = Par.all(Levels.map { p => () =>
+      val thr = threshold(p)
+      val kept =
+        if (p == 0) und
+        else und.filter(hash44(col("a")) >= thr && hash44(col("b")) >= thr)
+      val labels = WebIndex.componentLabels(kept, prepared = true)
+      val giant = labels.groupBy("label").agg(count(lit(1)).as("n"))
+        .agg(max("n")).head().getLong(0)
+      (p.toLong, removedAt(p), n0 - removedAt(p), giant, giant * 1000L / n0)
+    })
     rows.toDF("p_permille", "n_removed", "n_hosts", "giant", "giant_permille")
       .orderBy("p_permille")
   }

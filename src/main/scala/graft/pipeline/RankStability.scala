@@ -50,7 +50,6 @@ object RankStability {
 
   /** Stability ledger over a page-level (src, dst) link frame. */
   def rankStability(pagesIn: DataFrame, thr: Long = NoiseThr): DataFrame = {
-    val spark = pagesIn.sparkSession
     val pages = pagesIn.filter(col("dst").startsWith("http")).localCheckpoint()
     val kept = pages.filter(
       hash44(concat(col("src"), lit(">"), col("dst"), lit(NoiseSalt))) >= thr)
@@ -59,21 +58,11 @@ object RankStability {
     // the intact and noise-dropped ranks are INDEPENDENT recurrences over
     // checkpointed edge frames — run them as concurrent driver-thread
     // jobs (guide §2.6, the Percolation schedule)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      2, r => { val t = new Thread(r, "graft-rankstab"); t.setDaemon(true); t })
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    val (ra, rb) =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(Seq(
-          scala.concurrent.Future(
-            CrawlQueries.pageRankKernel(hostEdges(pages), "host")
-              .select(col("host"), col("rank_micro").as("ra"))),
-          scala.concurrent.Future(
-            CrawlQueries.pageRankKernel(hostEdges(kept), "host")
-              .select(col("host"), col("rank_micro").as("rb"))))),
-        scala.concurrent.duration.Duration.Inf) match { case Seq(a, b) => (a, b) }
-      finally pool.shutdown()
+    val Seq(ra, rb) = Par.all(Seq(
+      () => CrawlQueries.pageRankKernel(hostEdges(pages), "host")
+        .select(col("host"), col("rank_micro").as("ra")),
+      () => CrawlQueries.pageRankKernel(hostEdges(kept), "host")
+        .select(col("host"), col("rank_micro").as("rb"))))
     val joined = ra.join(rb, Seq("host"), "full_outer")
       .select(col("host"), coalesce(col("ra"), lit(0L)).as("ra"),
         coalesce(col("rb"), lit(0L)).as("rb"))

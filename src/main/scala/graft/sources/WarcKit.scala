@@ -240,10 +240,10 @@ object WarcKit {
     *
     * Idempotence: segment names are deterministic in the partition id
     * (`part-00000.warc.gz`), and each task writes a temp file named by its
-    * task ATTEMPT then atomically renames over the final name — a retried
-    * or speculative task replaces its own output instead of duplicating
-    * records (the streaming sinks' deterministic-name discipline). Empty
-    * partitions emit no file; `.tmp` files never survive a successful job.
+    * task ATTEMPT, then commits it with [[commitSegment]] — a retried or
+    * speculative task never duplicates records (the streaming sinks'
+    * deterministic-name discipline). Empty partitions emit no file;
+    * `.tmp` files never survive a successful job.
     * Bytes per record come from the same [[archiveRecordBytes]] codec as
     * the driver-side writer, so the two paths are byte-identical per
     * record by construction. */
@@ -287,22 +287,27 @@ object WarcKit {
             case _ => out.write(bytes)
           }
         } finally out.close()
-        // first-attempt-wins flip: rename into place ONLY if absent.
-        // Attempts of one task produce byte-identical segments (records
-        // and codec are deterministic per partition), so 'destination
-        // exists' means a sibling attempt already committed this exact
-        // content — success, drop our temp. The old delete-then-rename
-        // pair was not atomic: a racing attempt could delete the winner's
-        // committed segment and die before its own rename, silently
-        // losing a segment while the job succeeded.
-        if (!fs.rename(tmpPath, finalPath)) {
-          if (fs.exists(finalPath)) { fs.delete(tmpPath, false); () }
-          else throw new java.io.IOException(
-            s"archive segment rename failed: $tmpPath -> $finalPath")
-        }
+        commitSegment(fs, tmpPath, finalPath)
       }
     }
   }
+
+  /** Commits one task attempt's segment: renames `tmp` to `dst`, and if
+    * the rename fails because `dst` exists, drops `tmp` and succeeds.
+    * Attempts of one task write byte-identical segments (records and codec
+    * are deterministic per partition), so an existing `dst` is a sibling
+    * attempt's commit of this exact content. Where `rename` refuses an
+    * existing destination (HDFS) the first attempt wins; on the local FS
+    * `rename` overwrites it, so the last attempt wins — harmless for the
+    * same reason. Nothing here ever deletes a committed segment, so a
+    * racing attempt that dies mid-commit cannot lose one. */
+  private[graft] def commitSegment(fs: org.apache.hadoop.fs.FileSystem,
+                                   tmp: org.apache.hadoop.fs.Path,
+                                   dst: org.apache.hadoop.fs.Path): Unit =
+    if (!fs.rename(tmp, dst)) {
+      if (fs.exists(dst)) fs.delete(tmp, false)
+      else throw new java.io.IOException(s"archive segment rename failed: $tmp -> $dst")
+    }
 
   /** Digest-dedup a new capture against the previous one: unchanged
     * payloads (same url, same digest) become revisit records pointing at

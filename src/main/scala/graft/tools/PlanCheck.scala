@@ -655,8 +655,7 @@ object PlanCheck {
         .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
 
       // pagerank round (CrawlQueries.pageRankRound — q_pagerank/q_hostrank)
-      val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-      val weighted = edges.join(outDeg, "src").localCheckpoint()
+      val weighted = graft.pipeline.CrawlQueries.weightedEdges(edges)
       var pr = nodes.select(col("url"), lit(1000000L).as("rank_micro"))
       var prSizes = List.empty[Int]
       var prPlan = ""

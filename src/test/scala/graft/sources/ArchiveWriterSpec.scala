@@ -15,7 +15,8 @@ import graft.gen.CorpusGen
   * levels (local[2] / local[8] — the north rule's two-cluster-size
   * discipline applied to the output path), byte parity vs the driver-side
   * fixture writer (shared codec), segment hygiene (no tmp files, empty
-  * partitions emit nothing), and both gzip and zstd member layouts. */
+  * partitions emit nothing), both gzip and zstd member layouts, and the
+  * per-attempt segment commit on the local FS. */
 class ArchiveWriterSpec extends AnyFunSuite {
 
   private def withSpark[T](master: String, partitions: Int = 4)(f: SparkSession => T): T = {
@@ -119,5 +120,41 @@ class ArchiveWriterSpec extends AnyFunSuite {
         assert(g.payloadDigest == r.payloadDigest)
       }
     }
+  }
+
+  /** One segment commit on the local FS: `tmp` written with `bytes`,
+    * `dst` pre-committed with `committed` when given. Returns the bytes at
+    * `dst` after [[WarcKit.commitSegment]] and every file name left. */
+  private def commitOnLocalFs(bytes: Array[Byte],
+                              committed: Option[Array[Byte]]): (Array[Byte], Seq[String]) = {
+    import org.apache.hadoop.fs.{FileSystem, Path}
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    val dir = new Path(Files.createTempDirectory("graft-aw-commit").toString)
+    def write(p: Path, b: Array[Byte]): Unit = {
+      val out = fs.create(p, true)
+      try out.write(b) finally out.close()
+    }
+    val dst = new Path(dir, "part-00000.warc.gz")
+    val tmp = new Path(dir, ".part-00000.warc.gz.attempt-7.tmp")
+    committed.foreach(write(dst, _))
+    write(tmp, bytes)
+    WarcKit.commitSegment(fs, tmp, dst)
+    val in = fs.open(dst)
+    val got = try in.readAllBytes() finally in.close()
+    (got, fs.listStatus(dir).map(_.getPath.getName).toSeq)
+  }
+
+  test("commitSegment: an absent destination receives the attempt's bytes") {
+    val bytes = "segment bytes".getBytes(UTF_8)
+    val (got, names) = commitOnLocalFs(bytes, None)
+    assert(got.sameElements(bytes))
+    assert(!names.exists(_.contains(".tmp")), s"no tmp file survives: ${names.mkString(",")}")
+  }
+
+  test("commitSegment: a destination already committed by a sibling attempt stays as it was") {
+    val bytes = "segment bytes".getBytes(UTF_8)
+    val (got, names) = commitOnLocalFs(bytes, Some(bytes.clone()))
+    assert(got.sameElements(bytes), "the committed segment is unchanged")
+    assert(!names.exists(_.contains(".tmp")), s"no tmp file survives: ${names.mkString(",")}")
   }
 }
