@@ -1,6 +1,8 @@
 package graft.crawl
 
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.concurrent.{Await, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -250,7 +252,7 @@ object CrawlEngine {
     false
   }
 
-  /** Seed-list canonicalization (depth-0 entries) + the seed host set. */
+  /** Seed-list canonicalization (depth-0 entries). */
   private[graft] def seedEntry(seed: String): Option[FrontierEntry] =
     UrlKernel.canonicalize(seed).map(c => entryFor(c, seed, 0, ""))
 
@@ -266,6 +268,149 @@ object CrawlEngine {
       // (TextKit.retryHintSeconds); populated only under breakerPoliteness,
       // engine-internal — never written to a sink
       retryHintSecs: Long = 0L)
+
+  /** Deferred releases of persisted or checkpointed frames, registered at
+    * creation so that every exit path can run them. Thread-safe: frames
+    * built on pool threads register too. */
+  private[graft] final class Releases {
+    private val fs = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def add(f: => Unit): Unit = synchronized { fs += (() => f) }
+    /** Runs every registered release once and forgets it; a failing
+      * release does not stop the rest. */
+    def releaseAll(): Unit =
+      synchronized { val all = fs.toList; fs.clear(); all }
+        .foreach(f => try f() catch { case _: Throwable => () })
+  }
+
+  /** A crawl's robots tables: `gate`, the hosts that Disallow something
+    * (the right side of [[Robots.gate]], broadcast while under 200k rows),
+    * and `delayBudgets`, the binding Crawl-delay caps. Each is absent when
+    * its feature is off; `delayBudgets` also when no cap binds. */
+  private[graft] final case class RobotsTables(
+      gate: Option[DataFrame], delayBudgets: Option[Dataset[HostBudget]])
+
+  /** Robots prep, shared by the batch wave loop and the streaming twin:
+    * ONE scan + parse of the raw input's robots.txt bodies
+    * ([[Robots.directivesTable]]) builds both tables. Rules are parsed on
+    * EXECUTORS and stay host-keyed tables — never collected to the driver:
+    * at Common-Crawl scale there are 10^7+ hosts and a driver map would
+    * OOM. Only hosts that Disallow something keep a gate row (most
+    * robots.txt files gate nothing for `*`), and only BINDING delay caps
+    * emit budget rows (both host spellings — the budget cogroup keys on
+    * the frontier's literal host), so both tables are small minorities of
+    * hosts. The directives frame is cached while both tables materialize,
+    * then released; the tables register their own release. */
+  private[graft] def robotsTables(pages: Dataset[PageRow], config: CrawlConfig,
+                                  registerRelease: (() => Unit) => Unit): RobotsTables = {
+    val gateOn = config.respectRobots && config.maxDepth > 0
+    val delayOn = config.respectCrawlDelay && config.perHostBudget > 0 && config.respectRobots
+    if (!gateOn && !delayOn) RobotsTables(scala.None, scala.None)
+    else {
+      val dirs = Robots.directivesTable(pages.sparkSession, pages.toDF())
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      def materialized[T](ds: Dataset[T]): (Dataset[T], Long) = {
+        val t = ds.persist(StorageLevel.MEMORY_AND_DISK)
+        registerRelease(() => t.unpersist())
+        (t, t.count())
+      }
+      try {
+        val gate = if (!gateOn) scala.None else {
+          val (t, n) = materialized(Robots.rulesFromDirectives(dirs))
+          Some(if (n < 200000L) broadcast(t) else t)
+        }
+        val delays = if (!delayOn) scala.None else {
+          val (t, n) = materialized(Robots.delayBudgetsFromDirectives(dirs,
+            config.waveModelSeconds, config.perHostBudget))
+          Some(t).filter(_ => n > 0L)
+        }
+        RobotsTables(gate, delays)
+      } finally dirs.unpersist()
+    }
+  }
+
+  /** The per-wave fetch: the wave's selected rows ⋈ the prepared pages
+    * table on canonical URL. The html side must never be sorted OR
+    * needlessly shuffled: a wave at or under the broadcast cap (its row
+    * count `waveRows` is already known) joins as a BROADCAST build — the
+    * pages side streams straight from its scan/cache with zero exchange; a
+    * wider wave falls back to SHUFFLE_HASH against the pre-partitioned
+    * table (html hashed, never sorted — sorting 100 TB of html to join a
+    * wave is wrong). */
+  private[graft] def fetchJoin(prepared: DataFrame, wave: DataFrame, waveRows: Long,
+                               broadcastWaveMaxRows: Long): Dataset[FetchedRow] = {
+    val spark = prepared.sparkSession
+    import spark.implicits._
+    val waveCols = wave.select("canonicalUrl", "url", "depth", "parentUrl", "host")
+    prepared.join(
+      if (waveRows <= effectiveBroadcastCap(broadcastWaveMaxRows, spark)) broadcast(waveCols)
+      else waveCols.hint("shuffle_hash"),
+      Seq("canonicalUrl"), "inner")
+      .select(col("canonicalUrl"), col("url"), col("depth"), col("parentUrl"), col("host"),
+        col("servedUrl"), col("warcTs"), col("html"), col("storedText"), col("storedLang"))
+      .as[FetchedRow]
+  }
+
+  /** The fused extract stage: clean → text → links → lang → WAF → chunks
+    * in ONE mapPartitions — one codegen-opaque stage, no row-format churn
+    * (SURVEY §4 design #4). The html is parsed once; text and links share
+    * the tree. Links are kept for every page that is not a WAF page (the
+    * depth limit applies at link-gen); `retryHints` reads the
+    * server-directed wait off WAF pages, which only breaker politeness
+    * consumes. */
+  private[graft] def fusedExtract(fetched: Dataset[FetchedRow], wave: Int,
+                                  retryHints: Boolean): Dataset[ExtractOut] = {
+    val spark = fetched.sparkSession
+    import spark.implicits._
+    fetched.mapPartitions { it =>
+      it.map { r =>
+        val html = new String(r.html, UTF_8)
+        val dom = HtmlKit.parse(html)
+        val ex = HtmlKit.extractText(dom, html)
+        val waf = TextKit.detectWafChallenge(html).getOrElse("")
+        val spa = HtmlKit.isSpa(html, ex.text)
+        val lang = TextKit.detectLanguage(ex.text).getOrElse("")
+        val links = if (waf.isEmpty) HtmlKit.extractLinks(dom, r.servedUrl) else Vector.empty[String]
+        val chunks =
+          if (waf.isEmpty && !ex.failed)
+            TextKit.chunkText(ex.text).zipWithIndex.map { case (c, i) =>
+              ChunkRow(sha256Hex(r.canonicalUrl + "#" + i), r.canonicalUrl, ex.title, c, i,
+                lang, TextKit.wordCount(c), r.warcTs)
+            }
+          else Vector.empty[ChunkRow]
+        val page = ExtractedPage(r.canonicalUrl, r.url, ex.title, ex.text, lang,
+          ex.usedFallback, ex.failed, spa, waf,
+          r.html.length.toLong, ex.text.getBytes(UTF_8).length.toLong, wave, r.depth)
+        val hint = if (retryHints && waf.nonEmpty) TextKit.retryHintSeconds(html) else 0L
+        ExtractOut(page, links, chunks, ex.text == r.storedText, hint)
+      }
+    }
+  }
+
+  /** A crawl's link generation: returns the per-wave function from a
+    * wave's extract to its next-wave candidates — the links of pages above
+    * `maxDepth`, through the admission chain ([[linkCandidates]]) and then
+    * the robots gate when one is given. The seed hosts and the
+    * include/exclude lists are broadcast once per crawl, here. */
+  private[graft] def linkGen(spark: SparkSession, config: CrawlConfig,
+                             robotsGate: Option[DataFrame]): Dataset[ExtractOut] => Dataset[FrontierEntry] = {
+    import spark.implicits._
+    val seedHosts = spark.sparkContext.broadcast(config.seeds
+      .flatMap(s => UrlKernel.canonicalize(s).flatMap(UrlKernel.extractDomain)).toSet)
+    val includes = spark.sparkContext.broadcast(config.includePatterns)
+    val excludes = spark.sparkContext.broadcast(config.excludePatterns)
+    val maxDepth = config.maxDepth
+    val internalOnly = config.internalOnly
+    val maxQueryParams = config.maxQueryParams
+    extracted => {
+      val links = extracted
+        .filter(e => e.page.depth < maxDepth)
+        .flatMap { e =>
+          linkCandidates(e.links.iterator, e.page.url, e.page.depth + 1,
+            includes.value, excludes.value, internalOnly, seedHosts.value, maxQueryParams)
+        }
+      robotsGate.fold(links)(Robots.gate(spark, links, _))
+    }
+  }
 
   /** Retry-After → breaker cooldown, in waves: a server-directed hint
     * clamps through the shared [[RetryAfter.waitSeconds]] policy and
@@ -321,95 +466,49 @@ object CrawlEngine {
     val store = new SnapshotStore(stateDir)
     store.init()
     val rid = runId(config)
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
 
     // Driver-side pool for the concurrent per-wave sink writes and the prep
     // overlap below.
     val sinkEc = graft.pipeline.Par.executor(6)
+    implicit val ec: scala.concurrent.ExecutionContext = sinkEc
 
+    // Every persisted or checkpointed frame registers its release when it
+    // is created: crawl-lifetime frames (prepared pages, winners, robots
+    // tables) in crawlCaches; the wave in progress's frames in waveCaches,
+    // released and cleared at every wave end; the frames built for the
+    // next wave (its frontier checkpoint and prefetched selection) in
+    // nextWaveCaches, which become the consuming wave's waveCaches.
+    val crawlCaches = new Releases
+    var waveCaches = new Releases
+    var nextWaveCaches = new Releases
     // Next wave's (frontier, politeness selection, count), PREFETCHED during
     // the previous wave's write window (launched near the end of the wave
-    // body below). Declared here so cleanupAll can drain an in-flight
-    // prefetch on exceptional exit — its Spark jobs must not race the
-    // store close, and its frames must release.
-    var prefetch: Option[scala.concurrent.Future[
-      Option[(Dataset[FrontierEntry], Dataset[FrontierEntry], Long)]]] = scala.None
+    // body below).
+    var prefetch: Option[Future[(Dataset[FrontierEntry], Dataset[FrontierEntry], Long)]] = scala.None
 
-    // Best-effort resource release on ANY exit: a failed concurrent sink
-    // write (Await rethrows) must not leak executor storage, the sink pool,
-    // or the store's FileSystem — crawls run many-per-JVM (CrawlQueries).
-    // Every persisted frame registers an idempotent unpersist here; the
-    // normal path's targeted unpersists still run eagerly per wave.
-    val liveCaches = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    // Resource release on ANY exit: a failed concurrent sink write (Await
+    // rethrows) must not leak executor storage, the sink pool, or the
+    // store's FileSystem — crawls run many-per-JVM (CrawlQueries). The
+    // in-flight prefetch drains FIRST (bounded): its Spark jobs must not
+    // race the release of the frames they read, nor the pool/store close.
     def cleanupAll(): Unit = {
-      // drain the in-flight prefetch FIRST: on a mid-wave exception its
-      // future may still be running Spark jobs — awaiting it (bounded)
-      // before closing the store/pool keeps the failure observable and its
-      // persisted selection + checkpointed frontier releasable below
       prefetch.foreach { f =>
-        try {
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration(120, "s"))
-            .foreach { case (fr, s, _) =>
-              if (!(s eq fr)) s.unpersist()
-              releaseBlocks(fr)
-            }
-        } catch { case _: Throwable => () }
+        try Await.ready(f, Duration(120, "s")) catch { case _: Throwable => () }
       }
       prefetch = scala.None
-      liveCaches.synchronized { liveCaches.toList }
-        .foreach(f => try f() catch { case _: Throwable => () })
+      nextWaveCaches.releaseAll()
+      waveCaches.releaseAll()
+      crawlCaches.releaseAll()
       try sinkEc.shutdown() catch { case _: Throwable => () }
       store.close()
     }
     try {
 
-    // ---- robots rules: host-keyed Dataset, joined against new links --------
-    // Rules are parsed on EXECUTORS and kept as a (host, disallow) table —
-    // never collected to the driver: at Common-Crawl scale there are 10^7+
-    // hosts and a driver map would OOM. Only hosts that actually Disallow
-    // something are kept (the overwhelming majority of robots.txt files gate
-    // nothing for `*`), so the table is a small minority of hosts; it is
-    // persisted once (the parse scans the raw input, not `prepared`) and the
-    // per-wave gate is a left-anti-style join — broadcast-hash when the table
-    // is small, plain shuffle join otherwise. (Scans the raw input so
-    // single-wave runs never force the prepared pipeline twice.)
-    // The parse+count runs CONCURRENTLY with the pages-prep winner
-    // materialization below — independent scans of the same input.
-    val robotsActive = config.respectRobots && config.maxDepth > 0
-    // robots Crawl-delay → per-wave budget caps: same discipline as the
-    // Disallow table — parsed on executors, sparse, never collected; only
-    // BINDING caps emit rows, merged most-restrictive-wins with adaptive
-    // budgets per wave (both host spellings ride along because the budget
-    // cogroup keys on the frontier's literal host).
-    val delayConfigured = config.respectCrawlDelay && config.perHostBudget > 0 &&
-      config.respectRobots
-    var robotsRulesBase: DataFrame = null // persisted base (unpersisted at end)
-    // ONE scan + parse serves both tables: the directives frame is cached
-    // for the duration of the future, both children materialize off it,
-    // then it is released. Runs concurrently with pages prep.
-    val robotsFuture: scala.concurrent.Future[(DataFrame, Long, Dataset[HostBudget], Long)] =
-      if (!robotsActive && !delayConfigured) null
-      else scala.concurrent.Future {
-        val dirs = Robots.directivesTable(spark, pages.toDF())
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val (r, nR) =
-            if (!robotsActive) (null: DataFrame, 0L)
-            else {
-              val t = Robots.rulesFromDirectives(dirs).persist(StorageLevel.MEMORY_AND_DISK)
-              (t, t.count())
-            }
-          val (d, nD) =
-            if (!delayConfigured) (spark.emptyDataset[HostBudget], 0L)
-            else {
-              val t = Robots.delayBudgetsFromDirectives(dirs,
-                config.waveModelSeconds, config.perHostBudget)
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              (t, t.count())
-            }
-          (r, nR, d, nD)
-        } finally dirs.unpersist()
-      }(sinkEc)
+    // ---- robots tables (robotsTables), CONCURRENT with the pages-prep
+    // winner materialization below — independent scans of the same input
+    // (the robots scan reads the raw input, so single-wave runs never force
+    // the prepared pipeline twice)
+    val robotsFuture = Future(robotsTables(pages, config, f => crawlCaches.add(f())))
 
     // ---- pages table prep: canonical key + explicit co-partitioning --------
     // (SURVEY §4.1: frontier⋈pages repeats every wave; pre-hash-partitioning
@@ -417,32 +516,20 @@ object CrawlEngine {
     // waves ≥ 1. For single-wave jobs — a saturated frontier — the
     // repartition+cache is pure overhead, so it's switchable: the join then
     // shuffles the pages side exactly once, inside the measured dataflow.)
-    val preparedBase = preparePages(pages,
-      if (config.spillIntermediates) Some(s"$stateDir/intermediates/pages-winners") else scala.None,
-      effectiveBroadcastCap(config.broadcastWaveMaxRows, spark),
-      registerRelease = f => liveCaches.synchronized { liveCaches += f })
-    val prepared =
-      if (prePartitionPages)
-        preparedBase.persist(StorageLevel.MEMORY_AND_DISK)
-      else preparedBase
-    liveCaches.synchronized { if (prePartitionPages) liveCaches += (() => prepared.unpersist()) }
-
-    val (robotsRules, delayBudgets, nDelayHosts): (DataFrame, Dataset[HostBudget], Long) =
-      if (robotsFuture == null) (null, spark.emptyDataset[HostBudget], 0L)
-      else {
-        val (r, nRules, d, nD) = scala.concurrent.Await.result(
-          robotsFuture, scala.concurrent.duration.Duration.Inf)
-        if (r != null) {
-          robotsRulesBase = r
-          liveCaches.synchronized { liveCaches += (() => r.unpersist()) }
-        }
-        liveCaches.synchronized { if (nD > 0L) liveCaches += (() => d.unpersist()) else d.unpersist() }
-        // broadcast the gate join while the disallowing-host table is small;
-        // a 10^7-host deployment falls back to a shuffle join automatically
-        val rOut = if (r == null) null else if (nRules < 200000L) broadcast(r) else r
-        (rOut, d, nD)
+    // The robots future is awaited on every exit of the prep, so a failed
+    // prep never leaves it registering tables after the release.
+    val prepared = try {
+      val base = preparePages(pages,
+        if (config.spillIntermediates) Some(s"$stateDir/intermediates/pages-winners") else scala.None,
+        effectiveBroadcastCap(config.broadcastWaveMaxRows, spark),
+        registerRelease = f => crawlCaches.add(f()))
+      if (prePartitionPages) {
+        base.persist(StorageLevel.MEMORY_AND_DISK)
+        crawlCaches.add(base.unpersist())
       }
-    val delayActive = nDelayHosts > 0L
+      base
+    } finally Await.ready(robotsFuture, Duration.Inf)
+    val robots = Await.result(robotsFuture, Duration.Inf)
     log(s"prep done (pages cached + robots rules table) $elapsed")
 
     // ---- seed frontier (canonicalized on executors — seed lists can be
@@ -461,11 +548,8 @@ object CrawlEngine {
         spark.createDataset(entries)
       } else Frontier.dedupeWave(spark,
         spark.createDataset(config.seeds).flatMap(s => seedEntry(s)))
-    val seedHosts = config.seeds
-      .flatMap(s => UrlKernel.canonicalize(s).flatMap(UrlKernel.extractDomain)).toSet
-    val bcSeedHosts = spark.sparkContext.broadcast(seedHosts)
-    val bcIncludes = spark.sparkContext.broadcast(config.includePatterns)
-    val bcExcludes = spark.sparkContext.broadcast(config.excludePatterns)
+    val linkGenActive = config.maxDepth > 0
+    val discover = linkGen(spark, config, robots.gate)
 
     def emptySeen: DataFrame =
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -487,6 +571,18 @@ object CrawlEngine {
     var errorsTotal = errorsTotal0
     var parityFailures = parityFailures0
 
+    // A per-wave state table (budgets/, breaker/) as the wave wrote it, if
+    // it did. Written per wave → resumable, and the read-back cuts the
+    // wave-over-wave lineage exactly like the frontier/seen snapshots.
+    // Hadoop FileSystem, not java.io.File: stateDir may live on
+    // hdfs://-style storage in a real deployment (file:// when schemeless).
+    def waveTable(kind: String, w: Int): Option[DataFrame] = {
+      val p = new org.apache.hadoop.fs.Path(s"$stateDir/$kind/wave=$w")
+      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+        Some(spark.read.parquet(p.toString))
+      else scala.None
+    }
+
     // ---- adaptive politeness state (sparse host→budget table) -------------
     // Adaptive politeness is meaningless under an unlimited budget
     // (perHostBudget <= 0 skips selection entirely): gate ALL of its
@@ -494,37 +590,20 @@ object CrawlEngine {
     // not just the selection.
     val breakerActive = config.breakerPoliteness && config.perHostBudget > 0
     val adaptiveActive = (config.adaptivePoliteness || breakerActive) && config.perHostBudget > 0
-    def loadBudgets(w: Int): Dataset[HostBudget] = {
-      val p = s"$stateDir/budgets/wave=$w"
-      // Hadoop FileSystem, not java.io.File: stateDir may live on
-      // hdfs://-style storage in a real deployment (file:// when schemeless)
-      val hp = new org.apache.hadoop.fs.Path(p)
-      lazy val fsExists = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-      if (adaptiveActive && fsExists)
-        spark.read.parquet(p).as[HostBudget]
-      else spark.emptyDataset[HostBudget]
-    }
+    def loadBudgets(w: Int): Dataset[HostBudget] =
+      (if (adaptiveActive) waveTable("budgets", w) else scala.None)
+        .fold(spark.emptyDataset[HostBudget])(_.as[HostBudget])
     var hostBudgets: Dataset[HostBudget] = loadBudgets(wave - 1)
 
     // ---- circuit-breaker politeness state (sparse host→state table) --------
     // The per-host breaker (closed → open → half_open) rides NEXT TO the
-    // budget table: stored per wave like budgets (resumable, lineage-cut by
-    // the read-back), kept sparse — closed-and-clean hosts leave the table.
-    // The state machine is pipeline.CircuitBreaker.step, the SAME kernel the
-    // q_circuit_breaker oracle and the streaming twin run — parity by
-    // construction.
-    def loadBreaker(w: Int): DataFrame = {
-      val p = s"$stateDir/breaker/wave=$w"
-      val hp = new org.apache.hadoop.fs.Path(p)
-      lazy val fsExists = hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-      if (breakerActive && fsExists) spark.read.parquet(p)
-      else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("host", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("state", org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("consec", org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("cooldownLeft", org.apache.spark.sql.types.IntegerType))))
-    }
+    // budget table: stored per wave like budgets, kept sparse —
+    // closed-and-clean hosts leave the table. The state machine is
+    // pipeline.CircuitBreaker.step, the SAME kernel the q_circuit_breaker
+    // oracle and the streaming twin run — parity by construction.
+    def loadBreaker(w: Int): DataFrame =
+      (if (breakerActive) waveTable("breaker", w) else scala.None).getOrElse(
+        spark.emptyDataset[(String, String, Int, Int)].toDF("host", "state", "consec", "cooldownLeft"))
     var breakerStates: DataFrame = loadBreaker(wave - 1)
     // open-state hosts project into budget overrides: cooling → 0 (the
     // whole host suppressed — a dying server must not absorb wave budget),
@@ -559,11 +638,12 @@ object CrawlEngine {
     // the budget cogroup reads ONE row per host, so the union must reduce
     // to the per-host minimum before selection.
     // (breaker overrides join the same most-restrictive merge: suppress=0
-    // beats everything, probe=1 beats any wider budget)
+    // beats everything, probe=1 beats any wider budget; no active source
+    // leaves the table empty — every host at the default budget)
     def effectiveBudgets: Dataset[HostBudget] = {
       val parts = Seq(
         if (adaptiveActive) Some(hostBudgets) else scala.None,
-        if (delayActive) Some(delayBudgets) else scala.None,
+        robots.delayBudgets,
         if (breakerActive) Some(breakerBudgets) else scala.None).flatten
       parts match {
         case Seq() => spark.emptyDataset[HostBudget]
@@ -574,12 +654,8 @@ object CrawlEngine {
     }
     def buildSelection(fr: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
       if (config.perHostBudget <= 0) fr
-      else if (adaptiveActive || delayActive)
-        Frontier.politenessSelectBudgets(
-          spark, fr, effectiveBudgets, config.perHostBudget, config.saltBuckets)
-      else
-        Frontier.politenessSelect(
-          spark, fr, config.perHostBudget, config.saltBuckets)
+      else Frontier.politenessSelectBudgets(
+        spark, fr, effectiveBudgets, config.perHostBudget, config.saltBuckets)
 
     // Carried seen-set sketch (per-run; a resume rebuilds on first use)
     val seenBloom = new Frontier.SeenBloom()
@@ -589,21 +665,21 @@ object CrawlEngine {
     // selection + count future reads those blocks while the output sinks,
     // the snapshot write, the commit, and the wave teardown proceed. Never
     // the raw lazy plan: racing the snapshot write into the un-materialized
-    // lineage would duplicate full-wave computes. Declared above cleanupAll
-    // so exceptional exits drain it.)
+    // lineage would duplicate full-wave computes.)
     var done = false
     while (!done && wave < waveLimit && fetchedTotal < config.maxPages) {
-      val (frontierPersisted, selectedAll, rawCount) = prefetch.flatMap(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)) match {
-        case Some((fr, s, c)) =>
+      val (frontierPersisted, selectedAll, rawCount) = prefetch match {
+        case Some(f) =>
+          // the prefetched frames belong to the wave that consumes them
           prefetch = scala.None
-          (fr, s, c)
-        case _ =>
-          prefetch = scala.None
+          waveCaches = nextWaveCaches
+          nextWaveCaches = new Releases
+          Await.result(f, Duration.Inf)
+        case scala.None =>
           val fp = frontier.persist(StorageLevel.MEMORY_AND_DISK)
-          liveCaches.synchronized { liveCaches += (() => fp.unpersist()) }
+          waveCaches.add(releaseBlocks(fp))
           val s = buildSelection(fp).persist(StorageLevel.MEMORY_AND_DISK)
-          liveCaches.synchronized { liveCaches += (() => s.unpersist()) }
+          waveCaches.add(s.unpersist())
           (fp, s, s.count())
       }
       log(s"wave=$wave politeness-select done ($rawCount rows) $elapsed")
@@ -617,76 +693,26 @@ object CrawlEngine {
             .orderBy(Frontier.priorityCols: _*)
             .limit(remaining)
             .persist(StorageLevel.MEMORY_AND_DISK)
-          liveCaches.synchronized { liveCaches += (() => s.unpersist()) }
+          waveCaches.add(s.unpersist())
           (s, s.count())
         } else (selectedAll, rawCount)
       if (selCount == 0) {
         done = true
         // the empty final wave must still release its cached frames — crawls
         // run many-per-JVM (CrawlQueries) and leaked caches accumulate
-        // (releaseBlocks: the frontier may be a checkpointed frame, whose
-        // plain unpersist is a no-op)
-        selected.unpersist()
-        selectedAll.unpersist()
-        releaseBlocks(frontierPersisted)
+        waveCaches.releaseAll()
       }
       else {
         {
-          // -- simulated fetch: equi-join against the prepared table. The
-          // html side must never be sorted OR needlessly shuffled: a wave at
-          // or under the broadcast cap (selCount is already known) joins as
-          // a BROADCAST build — the pages side streams straight from its
-          // scan/cache with zero exchange; a wider wave falls back to
-          // SHUFFLE_HASH against the pre-partitioned table (html hashed,
-          // never sorted — sorting 100 TB of html to join a wave is wrong).
-          val selCols = selected.select("canonicalUrl", "url", "depth", "parentUrl", "host")
-          val fetched = prepared.join(
-            if (selCount <= effectiveBroadcastCap(config.broadcastWaveMaxRows, spark)) broadcast(selCols)
-            else selCols.hint("shuffle_hash"),
-            Seq("canonicalUrl"), "inner")
-          val fetchedDs = fetched.select(
-            col("canonicalUrl"), col("url"), col("depth"), col("parentUrl"), col("host"),
-            col("servedUrl"), col("warcTs"), col("html"), col("storedText"), col("storedLang")
-          ).as[FetchedRow]
-
-          val maxDepth = config.maxDepth
-          val waveNum = wave
-          val wantRetryHints = breakerActive
-          // -- fused extract stage: clean→text→links→lang→waf→chunks --------
-          // One mapPartitions = one codegen-opaque stage, no row-format churn
-          // (SURVEY §4 design #4).
-          val extracted = fetchedDs.mapPartitions { it =>
-            it.map { r =>
-              val html = new String(r.html, UTF_8)
-              val dom = HtmlKit.parse(html) // parse ONCE; text + links share the tree
-              val ex = HtmlKit.extractText(dom, html)
-              val waf = TextKit.detectWafChallenge(html).getOrElse("")
-              val spa = HtmlKit.isSpa(html, ex.text)
-              val lang = TextKit.detectLanguage(ex.text).getOrElse("")
-              val links = if (waf.isEmpty) HtmlKit.extractLinks(dom, r.servedUrl) else Vector.empty[String]
-              val chunks =
-                if (waf.isEmpty && !ex.failed)
-                  TextKit.chunkText(ex.text).zipWithIndex.map { case (c, i) =>
-                    ChunkRow(sha256Hex(r.canonicalUrl + "#" + i), r.canonicalUrl, ex.title, c, i,
-                      lang, TextKit.wordCount(c), r.warcTs)
-                  }
-                else Vector.empty[ChunkRow]
-              val page = ExtractedPage(r.canonicalUrl, r.url, ex.title, ex.text, lang,
-                ex.usedFallback, ex.failed, spa, waf,
-                r.html.length.toLong, ex.text.getBytes(UTF_8).length.toLong, waveNum, r.depth)
-              // server-directed wait, read in-band from the blocking page
-              // (only when breaker politeness will consume it)
-              val hint = if (wantRetryHints && waf.nonEmpty) TextKit.retryHintSeconds(html) else 0L
-              ExtractOut(page, links, chunks, ex.text == r.storedText, hint)
-            }
-          }
+          // -- simulated fetch (fetchJoin) + fused extract (fusedExtract)
+          val fetchedDs = fetchJoin(prepared, selected.toDF(), selCount, config.broadcastWaveMaxRows)
+          val extracted = fusedExtract(fetchedDs, wave, retryHints = breakerActive)
           // cache only when a second consumer exists (output sinks, the
           // link-generation pass, or the adaptive-politeness health agg);
           // a single-consumer wave streams it once
-          val linkGenActive = config.maxDepth > 0
           if (writeOutputs || linkGenActive || adaptiveActive) {
             extracted.persist(StorageLevel.MEMORY_AND_DISK)
-            liveCaches.synchronized { liveCaches += (() => extracted.unpersist()) }
+            waveCaches.add(extracted.unpersist())
           }
 
           // one action for count + parity (avoids a second pass)
@@ -726,41 +752,19 @@ object CrawlEngine {
             if (twoConsumers) {
               miss.persist(StorageLevel.MEMORY_AND_DISK)
               agg.persist(StorageLevel.MEMORY_AND_DISK)
-              liveCaches.synchronized { liveCaches += (() => { miss.unpersist(); agg.unpersist() }) }
+              waveCaches.add { miss.unpersist(); agg.unpersist() }
             }
             (miss, agg)
           } else (null, null)
-
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          implicit val ec: scala.concurrent.ExecutionContext = sinkEc
 
           // -- seen += selected --------------------------------------------
           val newSeen = seen.union(selected.select("canonicalUrl"))
           fetchedTotal += selCount
           seenCount += selCount
 
-          // -- link generation → next frontier (lazy plan) ------------------
-          val newLinkEntries: Dataset[FrontierEntry] = if (!linkGenActive)
-            spark.emptyDataset[FrontierEntry]
-          else {
-            val internalOnly = config.internalOnly
-            val maxQueryParams = config.maxQueryParams
-            extracted
-              .filter(e => e.page.depth < maxDepth)
-              .flatMap { e =>
-                linkCandidates(e.links.iterator, e.page.url, e.page.depth + 1,
-                  bcIncludes.value, bcExcludes.value, internalOnly,
-                  bcSeedHosts.value, maxQueryParams)
-              }
-          }
-          // robots Disallow gate: host-keyed join against the rules table
-          // (no driver map — see prep above). Same predicate as
-          // Robots.isBlocked, expressed as a join so it scales past the
-          // broadcastable-host-count point.
+          // -- link generation + robots gate → next frontier (lazy plan) ----
           val gatedLinkEntries: Dataset[FrontierEntry] =
-            if (!robotsActive || !linkGenActive) newLinkEntries
-            else Robots.gate(spark, newLinkEntries, robotsRules)
+            if (linkGenActive) discover(extracted) else spark.emptyDataset[FrontierEntry]
 
           val leftovers = frontierPersisted
             .join(selected.select("canonicalUrl"), Seq("canonicalUrl"), "left_anti")
@@ -844,16 +848,20 @@ object CrawlEngine {
           // chain runs exactly one time, its blocks are the lineage cut
           // (the localCheckpoint discipline), and THREE consumers read the
           // materialized copy — the snapshot write, the next-wave politeness
-          // prefetch, and the next wave's leftover anti-join
+          // prefetch, and the next wave's leftover anti-join. Its release
+          // belongs to the next wave (releaseBlocks: the plain unpersist is
+          // a no-op on checkpoint blocks).
           val nextFrontierC = nextFrontier.localCheckpoint()
-          // register for exceptional-exit release at creation — checkpoint
-          // blocks otherwise outlive the crawl (releaseBlocks, not the
-          // no-op plain unpersist)
-          liveCaches.synchronized { liveCaches += (() => releaseBlocks(nextFrontierC)) }
+          nextWaveCaches.add(releaseBlocks(nextFrontierC))
           log(s"wave=$wave frontier-checkpoint done $elapsed")
           val fFrontier = Future {
             store.writeFrontier(spark, wave, nextFrontierC.toDF(), config.snapshotFileTarget)
           }
+
+          // the one per-host health frame both politeness updates read
+          val health = if (!adaptiveActive) null else missByHost
+            .join(hostAgg.select(col("host"), col("wafBlocked").as("waf")), Seq("host"), "full_outer")
+            .na.fill(0L)
 
           // -- adaptive politeness: next wave's per-host budgets -------------
           // (main thread, overlapping the write group above)
@@ -862,14 +870,9 @@ object CrawlEngine {
           // the budget evolves by the shared AIMD kernel instead (below).
           // Hosts back at the max leave the table, so it stays proportional
           // to the set of unhealthy hosts, not to all hosts ever crawled.
-          // Written per wave → resumable, and the read-back cuts the
-          // wave-over-wave lineage exactly like the frontier/seen snapshots.
           if (adaptiveActive) {
             val maxB = config.perHostBudget
             val minB = config.minHostBudget
-            val health = missByHost
-              .join(hostAgg.select(col("host"), col("wafBlocked").as("waf")), Seq("host"), "full_outer")
-              .na.fill(0L)
             val updated =
               if (breakerActive) {
                 // AIMD with the wave budget as the congestion window
@@ -927,12 +930,9 @@ object CrawlEngine {
               .map(e => (UrlKernel.extractDomain(e.page.canonicalUrl).getOrElse(""), e.retryHintSecs))
               .toDF("host", "hint")
               .groupBy("host").agg(max("hint").as("retryHintSecs"))
-            val health = missByHost
-              .join(hostAgg.select(col("host"), col("wafBlocked").as("waf")), Seq("host"), "full_outer")
-              .na.fill(0L)
-              .join(retryHints, Seq("host"), "left")
             val updatedBreaker = breakerStates
-              .join(health.withColumn("inWave", lit(true)), Seq("host"), "full_outer")
+              .join(health.join(retryHints, Seq("host"), "left").withColumn("inWave", lit(true)),
+                Seq("host"), "full_outer")
               .select(col("host"), col("state"), col("consec"), col("cooldownLeft"),
                 col("errors"), col("waf"), col("retryHintSecs"), col("inWave"))
               .as[(String, Option[String], Option[Int], Option[Int],
@@ -964,30 +964,26 @@ object CrawlEngine {
           // strictly AFTER the adaptive budget update above, so wave+1's
           // budgets are final. The kernel is the shared buildSelection —
           // rows identical to the inline path.
-          val fPrefetch = Future {
+          val carried = nextWaveCaches
+          prefetch = Some(Future {
             val s = buildSelection(nextFrontierC)
             if (!(s eq nextFrontierC)) {
               s.persist(StorageLevel.MEMORY_AND_DISK)
-              liveCaches.synchronized { liveCaches += (() => s.unpersist()) }
+              carried.add(s.unpersist())
             }
-            Some((nextFrontierC, s, s.count()))
-          }
-          prefetch = Some(fPrefetch)
+            (nextFrontierC, s, s.count())
+          })
 
           // -- barrier, then the commit point -------------------------------
           (sinkFutures :+ fSeenDelta).foreach(f => Await.result(f, Duration.Inf))
           log(s"wave=$wave sink barrier done $elapsed")
           val frontierRows = Await.result(fFrontier, Duration.Inf)
           log(s"wave=$wave frontier-write done ($frontierRows rows) $elapsed")
-          if (twoConsumers) { missByHost.unpersist(); hostAgg.unpersist() }
           store.finalizeCommit(wave, fetchedTotal, errorsTotal, parityFailures, rid)
           log(f"wave=$wave%-3d selected=$selCount%-6d fetched=$fetchCount%-6d errors=$errCount%-4d " +
             f"seen=$seenCount%-7d parityFail=$parityFailWave $elapsed")
 
-          extracted.unpersist()
-          selected.unpersist()
-          selectedAll.unpersist()
-          releaseBlocks(frontierPersisted)
+          waveCaches.releaseAll()
           // footer stats said the committed frontier is empty: the next
           // iteration's select over it could only yield zero rows — exit
           // without that job (identical summary: the empty-wave path never
@@ -1001,18 +997,6 @@ object CrawlEngine {
         }
       }
     }
-    // a prefetch launched by the final committed wave (empty next frontier,
-    // or the maxPages cap ending the loop) is discarded: drain it so its
-    // caches release now, not at JVM end
-    prefetch.foreach { f =>
-      try scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
-        .foreach { case (fr, s, _) =>
-          if (!(s eq fr)) s.unpersist()
-          releaseBlocks(fr)
-        }
-      catch { case _: Throwable => () }
-    }
-    prefetch = scala.None
     CrawlSummary(rid, wave, fetchedTotal, errorsTotal, parityFailures, stateDir)
     } finally cleanupAll()
   }

@@ -197,7 +197,7 @@ object CrawlQueries {
     * partial sums — the textbook Pregel shape; ranks are
     * localCheckpoint'ed each round so the plan stays constant-size over
     * any iteration count (the same lineage-truncation discipline as
-    * `Dedup.connectedComponents`; at deployment scale the
+    * `WebIndex.componentLabels`; at deployment scale the
     * spillIntermediates table path applies). */
   def pageRank(spark: SparkSession, dir: String): DataFrame = {
     // rank only fetchable targets: javascript:/mailto:/tel: links are real
@@ -231,17 +231,25 @@ object CrawlQueries {
     * and [[hostRank]] (host granularity). */
   def pageRankKernel(edgesIn: DataFrame, keyName: String): DataFrame = {
     val edges = edgesIn.localCheckpoint()
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val inDeg = edges.groupBy("dst").agg(count(lit(1)).as("in_deg"))
-    val nodes = edges.select(col("src").as("url"))
-      .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
-    pageRankRounds(edges, nodes,
+    val nodes = degreeNodes(edges).localCheckpoint()
+    pageRankRounds(weightedEdges(edges, nodes), nodes,
         nodes.select(col("url"), lit(PageRankUnitMicro).as("rank_micro")))
-      .join(inDeg.withColumnRenamed("dst", "url"), Seq("url"), "left")
-      .join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
-      .na.fill(0L, Seq("in_deg", "out_deg"))
+      .join(nodes, Seq("url"))
       .select(col("url").as(keyName), col("rank_micro"), col("in_deg"), col("out_deg"))
       .orderBy(desc("rank_micro"), asc(keyName))
+  }
+
+  /** Every endpoint of `edges`, plus `extraUrls` with zero degrees, as
+    * (url, in_deg, out_deg) from ONE aggregation: the node universe a
+    * PageRank kernel ranks, the out-degrees its rounds divide by and the
+    * degrees it reports. */
+  private[pipeline] def degreeNodes(edges: DataFrame, extraUrls: Seq[String] = Seq.empty): DataFrame = {
+    val spark = edges.sparkSession
+    import spark.implicits._
+    edges.select(col("src").as("url"), lit(0L).as("i"), lit(1L).as("o"))
+      .union(edges.select(col("dst").as("url"), lit(1L).as("i"), lit(0L).as("o")))
+      .union(extraUrls.toDF("url").select(col("url"), lit(0L).as("i"), lit(0L).as("o")))
+      .groupBy("url").agg(sum("i").as("in_deg"), sum("o").as("out_deg"))
   }
 
   /** The uniform teleport floor of plain PageRank, as [[pageRankRound]]'s
@@ -249,13 +257,13 @@ object CrawlQueries {
   private[graft] val UniformFloor: Seq[(String, String)] =
     Seq("rank_micro" -> PageRankFloorMicro.toString)
 
-  /** [[PageRankIters]] lineage-cut rounds of [[pageRankRound]] from `init`
-    * (`url` plus one rank column per entry of `floors`) — K independent
-    * recurrences over the same edges cost one round each, not K. */
+  /** [[PageRankIters]] lineage-cut rounds of [[pageRankRound]] over the
+    * [[weightedEdges]] frame from `init` (`url` plus one rank column per
+    * entry of `floors`) — K independent recurrences over the same edges
+    * cost one round each, not K. */
   private[pipeline] def pageRankRounds(
-      edges: DataFrame, nodes: DataFrame, init: DataFrame,
+      weighted: DataFrame, nodes: DataFrame, init: DataFrame,
       floors: Seq[(String, String)] = UniformFloor): DataFrame = {
-    val weighted = weightedEdges(edges)
     var ranks = init
     for (_ <- 1 to PageRankIters) {
       ranks = pageRankRound(weighted, nodes, ranks, floors).localCheckpoint()
@@ -268,6 +276,12 @@ object CrawlQueries {
     * out-degree aggregation every round. */
   private[graft] def weightedEdges(edges: DataFrame): DataFrame =
     edges.join(edges.groupBy("src").agg(count(lit(1)).as("out_deg")), "src")
+      .localCheckpoint()
+
+  /** [[weightedEdges]] with the out-degrees read from a [[degreeNodes]]
+    * frame the caller already aggregated. */
+  private[graft] def weightedEdges(edges: DataFrame, degreeNodes: DataFrame): DataFrame =
+    edges.join(degreeNodes.select(col("url").as("src"), col("out_deg")), "src")
       .localCheckpoint()
 
   /** One power-iteration round (the loop body, factored so PlanCheck can

@@ -485,37 +485,34 @@ object Dedup {
 
   // --------------------------------------------- components / keep-list ----
 
-  /** Connected components over near-dup pairs by iterative min-label
-    * propagation ("hash-to-min"): every doc starts labeled with its own id;
-    * each round a doc takes the minimum label among itself and its
-    * neighbors; convergence in O(component diameter) rounds — near-dup
-    * clusters are shallow, so a handful of shuffles. All joins are
-    * key-partitioned equi-joins (no driver-side graph), labels persist
-    * per round and the previous round unpersists, so state is 2×|V|.
-    * Deterministic: min over a set is order-free.
-    *
-    * Returns (doc_id, component) for every doc appearing in `pairs`;
-    * `component` = the smallest doc_id reachable through the pair graph. */
   /** Edge cap for the exact driver-side union-find fast path: 2^20 edges ≈
     * 16 MB of longs. Near-dup edge sets are tiny relative to the corpus
     * (dups are the minority and the edge set is star-compressed upstream);
     * paying 3+ Spark jobs of iterative-join overhead per round on a graph
     * that fits in one array is pure waste — the same hybrid split
-    * production CC implementations use. Above the cap the distributed
-    * min-label loop below takes over unchanged. */
+    * production CC implementations use. */
   val CcDriverEdgeCap = 1 << 20
 
-  def connectedComponents(spark: SparkSession, pairs: DataFrame, maxIter: Int = 50,
+  /** Connected components over near-dup pairs: (doc_id, component) for
+    * every doc paired with another doc, `component` = the smallest doc_id
+    * reachable through the pair graph (a self-pair carries no edge). A
+    * graph of at most `driverEdgeCap` edges runs exact union-find on the
+    * driver; a larger one runs [[WebIndex.componentLabels]], the
+    * large-star/small-star kernel — O(log n) rounds at any component
+    * diameter, so a long incremental-edit chain needs no round budget.
+    * Deterministic: the minimum over a component is order-free. */
+  def connectedComponents(spark: SparkSession, pairs: DataFrame,
                           driverEdgeCap: Int = CcDriverEdgeCap): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // persist the edge list FIRST: callers hand in unpersisted, expensive
     // pipelines (dedupKeepList's LSH+Jaccard verify), and this function
-    // consumes them up to three times — the fast-path probe below plus the
-    // two scans in the src/dst union. Without the cache the priciest stage
-    // of the whole dedup path re-executes per consumer, exactly on the
-    // large corpora the driver-edge cap exists for.
+    // consumes them twice — the fast-path probe below plus the
+    // distributed kernel's input. Without the cache the priciest stage of
+    // the whole dedup path re-executes per consumer, exactly on the large
+    // corpora the driver-edge cap exists for.
     val pairsEdges = pairs
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .filter(col("doc_a") =!= col("doc_b"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // fast path: ONE job pulls at most cap+1 edges; if the graph fits, run
     // exact union-find on the driver (same min-label result, deterministic)
@@ -543,57 +540,11 @@ object Dedup {
       import spark.implicits._
       return spark.createDataset(rows.toSeq).toDF("doc_id", "component")
     }
-    val edges = pairsEdges
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairsEdges.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize edges NOW and release the raw pair cache — it is dead
-    // weight for the whole min-label loop otherwise, squeezing the cache
-    // exactly on the large graphs this path exists for
-    edges.count()
-    pairsEdges.unpersist()
-    val labelSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("component", org.apache.spark.sql.types.LongType)))
-    var labels = edges.select(col("src").as("doc_id")).distinct()
-      .withColumn("component", col("doc_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var backing = labels // the persisted frame the current labels live on
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels.select(col("doc_id").as("dst"), col("component").as("nc")), Seq("dst"))
-        .groupBy(col("src").as("doc_id"))
-        .agg(min("nc").as("minNeighbor"))
-      val next = labels.join(neighborMin, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          least(col("component"), coalesce(col("minNeighbor"), col("component"))).as("component"),
-          (col("minNeighbor") < col("component")).as("changed"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val changes = next.filter(col("changed")).count() // materializes next
-      // TRUNCATE LINEAGE: rebuild the labels frame from the cached RDD
-      // (LogicalRDD). persist alone caches DATA but each round's logical
-      // plan still embeds the previous round's twice (join + projection) —
-      // plans double per iteration and AQE's explainString OOMs the driver
-      // near ~30 rounds. The RDD-backed frame keeps plan size constant at
-      // any component diameter while persist/unpersist pairing still
-      // releases each round's blocks deterministically (localCheckpoint
-      // would leak: its blocks are not cacheManager-registered, so
-      // Dataset.unpersist is a no-op on them).
-      labels = spark.createDataFrame(next.select("doc_id", "component").rdd, labelSchema)
-      backing.unpersist()
-      backing = next
-      converged = changes == 0L
-      iter += 1
-    }
-    edges.unpersist()
-    // explicit failure beats a silently-wrong keep-list: propagation needs
-    // component-diameter rounds, so raise maxIter for corpora with very long
-    // incremental-edit chains
-    require(converged, s"components did not converge in $maxIter rounds — raise maxIter (chain deeper than $maxIter hops)")
-    labels // NOTE: backed by the final round's cache; evicted LRU downstream
+    // the kernel checkpoints its inputs eagerly, so the pair cache can go
+    // as soon as it returns
+    try WebIndex.componentLabels(pairsEdges.select(col("doc_a").as("a"), col("doc_b").as("b")))
+      .select(col("host").as("doc_id"), col("label").as("component"))
+    finally pairsEdges.unpersist()
   }
 
   /** End-to-end dedup keep-list: exact duplicates (identical text) and
@@ -602,14 +553,13 @@ object Dedup {
     * each component is kept. Docs in no component keep themselves. Output:
     * (doc_id, keep_id, kept) for EVERY input doc — the projection a
     * training-data pipeline applies before tokenization. */
-  def dedupKeepList(spark: SparkSession, docs: DataFrame, threshold: Double = 0.5,
-                    maxIter: Int = 50): DataFrame = {
+  def dedupKeepList(spark: SparkSession, docs: DataFrame, threshold: Double = 0.5): DataFrame = {
     // verifiedNearDups already carries BOTH edge families: exact-duplicate
     // stars (md5 pre-pass) and rep-level verified near-dup pairs — an edge
     // set whose components equal the full near-dup graph's
     val pairs = verifiedNearDups(spark, docs, threshold).toDF()
       .select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-    val comps = connectedComponents(spark, pairs, maxIter)
+    val comps = connectedComponents(spark, pairs)
     docs.select(col("doc_id").cast("long"))
       .join(comps, Seq("doc_id"), "left")
       .select(col("doc_id"),

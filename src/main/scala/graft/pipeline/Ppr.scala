@@ -59,12 +59,8 @@ object Ppr {
     val spark = edgesIn.sparkSession
     import spark.implicits._
     val edges = edgesIn.localCheckpoint()
-    val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg"))
-    val inDeg = edges.groupBy("dst").agg(count(lit(1)).as("in_deg"))
-    val nodes = edges.select(col("src").as("url"))
-      .union(edges.select(col("dst").as("url")))
-      .union(seeds.toDF("url")) // a seed with no edges still teleports
-      .distinct().localCheckpoint()
+    // a seed with no edges still teleports
+    val nodes = CrawlQueries.degreeNodes(edges, seeds).localCheckpoint()
     // the teleport floor: (100−d)%·unit split evenly over the seeds in
     // integer micro-units — the ONLY mass injection in the whole recurrence
     val perSeedFloor = CrawlQueries.PageRankFloorMicro / seeds.size
@@ -78,10 +74,9 @@ object Ppr {
     val perSeedUnit = CrawlQueries.PageRankUnitMicro / seeds.size
     val init = floored.select(col("url"),
       when(col("floor_micro") > 0L, lit(perSeedUnit)).otherwise(lit(0L)).as("rank_micro"))
-    CrawlQueries.pageRankRounds(edges, floored, init, Seq("rank_micro" -> "floor_micro"))
-      .join(inDeg.withColumnRenamed("dst", "url"), Seq("url"), "left")
-      .join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
-      .na.fill(0L, Seq("in_deg", "out_deg"))
+    CrawlQueries.pageRankRounds(CrawlQueries.weightedEdges(edges, nodes), floored, init,
+        Seq("rank_micro" -> "floor_micro"))
+      .join(nodes, Seq("url"))
       .select(col("url"), col("rank_micro").as("ppr_micro"),
         col("in_deg"), col("out_deg"))
       .orderBy(desc("ppr_micro"), asc("url"))

@@ -179,42 +179,11 @@ object Similarity {
       .as[Neighbor]
   }
 
-  // ------------------------------------------------------- typed UDAF ------
-
-  /** Typed `Aggregator` for embedding centroids — the §2.11 optional UDAF
-    * (reference corpus-mean in relevance_scorer.rs). Buffer = (sum, count);
-    * map-side partial aggregation comes free from the Aggregator contract.
-    * Same FP caveat as any distributed mean: merge order can shift the
-    * result by ULPs; consumers quantize (see `labelCentroids`). */
-  final class CentroidAgg(dims: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Array[Float], (Array[Double], Long), Array[Float]] {
-    override def zero: (Array[Double], Long) = (new Array[Double](dims), 0L)
-    override def reduce(b: (Array[Double], Long), a: Array[Float]): (Array[Double], Long) = {
-      val s = b._1
-      val n = math.min(dims, a.length)
-      var i = 0
-      while (i < n) { s(i) += a(i); i += 1 }
-      (s, b._2 + 1L)
-    }
-    override def merge(x: (Array[Double], Long), y: (Array[Double], Long)): (Array[Double], Long) = {
-      val s = x._1
-      var i = 0
-      while (i < dims) { s(i) += y._1(i); i += 1 }
-      (s, x._2 + y._2)
-    }
-    override def finish(r: (Array[Double], Long)): Array[Float] =
-      if (r._2 == 0L) new Array[Float](dims)
-      else r._1.map(v => (v / r._2).toFloat)
-    override def bufferEncoder: org.apache.spark.sql.Encoder[(Array[Double], Long)] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Array[Double], Long)]()
-    override def outputEncoder: org.apache.spark.sql.Encoder[Array[Float]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Float]]()
-  }
-
   /** Per-label centroids of an embedding table, micro-quantized. Built on
     * partition-id-ordered partial sums (same pattern as [[trainCentroids]])
-    * rather than [[CentroidAgg]] so repeated runs merge the same doubles in
-    * the same order — bit-stable, not just quantization-probably-stable.
+    * rather than a typed `Aggregator`, so repeated runs merge the same
+    * doubles in the same order — bit-stable, not just
+    * quantization-probably-stable.
     * One exploded row per (label, dim). */
   /** DuckDB twin of [[labelCentroids]]: per-(label, dim) mean as an explicit
     * sum/count over the exploded dims (sequential double accumulation, like

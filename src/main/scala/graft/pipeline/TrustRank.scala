@@ -65,7 +65,7 @@ object TrustRank {
     val init = seeded.select(col("url"), lit(CQ.PageRankUnitMicro).as("pr_micro"),
       when(seedCol(col("url")), lit(CQ.PageRankUnitMicro)).otherwise(lit(0L))
         .as("tr_micro"))
-    val joined = CQ.pageRankRounds(edges, seeded, init,
+    val joined = CQ.pageRankRounds(CQ.weightedEdges(edges), seeded, init,
         Seq("pr_micro" -> CQ.PageRankFloorMicro.toString, "tr_micro" -> "tr_floor"))
       .withColumnRenamed("url", "host")
     // two bounded scalar aggregates — the only driver-visible values

@@ -219,15 +219,6 @@ object Robots {
   def stripWww(host: String): String =
     if (host.startsWith("www.")) host.substring(4) else host
 
-  /** Host-keyed Disallow table parsed on EXECUTORS from the raw pages input
-    * (crawler_service.rs:958-1054's robots fetch, kept distributed): one row
-    * per www-stripped host that disallows anything, columns
-    * (rhost, disallow). www/non-www (or re-captured) robots variants strip
-    * to the same key and their Disallow lists union — most-restrictive-wins
-    * — because a left join against duplicate keys would duplicate frontier
-    * entries AND let a URL blocked by one variant survive via the other.
-    * Shared by the batch wave loop and the streaming crawl twin; the caller
-    * decides persist/broadcast. */
   /** ONE scan + parse of every robots.txt body: (rhost, disallow,
     * delay_sec) per www-stripped host that declares ANYTHING — both
     * [[rulesTable]] and the Crawl-delay budgets derive from this, so a
@@ -262,6 +253,15 @@ object Robots {
       .filter(exists(col("disallow"), d => length(d) > 0))
       .select(col("rhost"), col("disallow"), col("allow"))
 
+  /** Host-keyed Disallow table parsed on EXECUTORS from the raw pages input
+    * (crawler_service.rs:958-1054's robots fetch, kept distributed): one row
+    * per www-stripped host that disallows anything, columns
+    * (rhost, disallow, allow). www/non-www (or re-captured) robots variants
+    * strip to the same key and their Disallow lists union —
+    * most-restrictive-wins — because a left join against duplicate keys
+    * would duplicate frontier entries AND let a URL blocked by one variant
+    * survive via the other. The crawls build it with the delay budgets
+    * from one scan (`CrawlEngine.robotsTables`). */
   def rulesTable(spark: SparkSession, pages: DataFrame): DataFrame =
     rulesFromDirectives(directivesTable(spark, pages))
 
@@ -292,18 +292,9 @@ object Robots {
       }
   }
 
-  /** Convenience over the raw pages input (tests; single-use callers). */
-  def delayBudgets(
-      spark: SparkSession,
-      pages: DataFrame,
-      waveModelSeconds: Int,
-      perHostBudget: Int
-  ): Dataset[graft.model.HostBudget] =
-    delayBudgetsFromDirectives(directivesTable(spark, pages), waveModelSeconds, perHostBudget)
-
   /** Distributed Disallow gate: drop every entry whose path is robots-blocked
     * for its host. `rules` is a (rhost, disallow array) table holding ONLY
-    * hosts with non-empty Disallow lines (see CrawlEngine prep) — the gate is
+    * hosts with non-empty Disallow lines (`CrawlEngine.robotsTables`) — the gate is
     * a left join on the www-stripped host plus the same RFC 9309 [[decision]]
     * as [[isBlocked]]. No driver-side map: at 10^7+ crawled hosts the rules stay
     * a table and the join planner picks broadcast vs shuffle. */

@@ -1,24 +1,21 @@
 package graft.streaming
 
-import java.nio.charset.StandardCharsets.UTF_8
-
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.crawl.CrawlEngine
-import graft.extract.{HtmlKit, TextKit}
 import graft.frontier.Frontier
 import graft.model.{CrawlConfig, FrontierEntry, PageRow}
-import graft.politeness.Robots
 
 /** The batch engine's BFS crawl re-expressed as a STREAMING frontier: the
   * wave loop's only mutable state — the priority backlog and the seen set —
   * lives in [[StreamingScheduler]]'s host-keyed, checkpointed
-  * `flatMapGroupsWithState`, while fetch (join vs the prepared pages table),
-  * extraction, link admission, and robots gating reuse the exact batch
-  * kernels (`CrawlEngine.preparePages` / `.linkCandidates`, `HtmlKit`,
-  * `Robots.rulesTable`/`.gate`).
+  * `flatMapGroupsWithState`, while pages prep, robots prep, fetch, fused
+  * extraction and link generation (admission chain + robots gate) ARE the
+  * batch engine's per-wave kernels (`CrawlEngine.preparePages`,
+  * `.robotsTables`, `.fetchJoin`, `.fusedExtract`, `.linkGen`) — one copy
+  * of each, so the extracted text and the gating cannot drift apart.
   *
   * Each loop iteration = one wave: the previous wave's gated link
   * discoveries (plus a tick row) land as one file on the scheduler's input,
@@ -70,51 +67,19 @@ object StreamingCrawl {
     val cpDir = s"$workDir/checkpoint"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(workDir))
 
-    // winners localCheckpoint blocks need the releaseBlocks discipline
-    // (plain unpersist is a no-op on checkpointed frames — the batch
-    // engine's round-5 fix, applied to the twin)
-    val deferredReleases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
-    val prepared = CrawlEngine.preparePages(pages,
-      registerRelease = f => deferredReleases += f).persist(StorageLevel.MEMORY_AND_DISK)
-
-    val robotsActive = config.respectRobots && config.maxDepth > 0
-    val delayConfigured = config.respectCrawlDelay && config.perHostBudget > 0 &&
-      config.respectRobots
-    var robotsRulesBase: org.apache.spark.sql.DataFrame = null
-    // ONE robots scan serves the Disallow gate AND the Crawl-delay caps
-    // (the batch engine's shared Robots.directivesTable discipline); the
-    // caps ride into the scheduler's keyed state via a stream-static
-    // broadcast join so the twins release identical tranches.
-    val (robotsRules, delayCaps): (org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame]) =
-      if (!robotsActive && !delayConfigured) (null, scala.None)
-      else {
-        val dirs = Robots.directivesTable(spark, pages.toDF())
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          val r =
-            if (!robotsActive) null
-            else {
-              val t = Robots.rulesFromDirectives(dirs).persist(StorageLevel.MEMORY_AND_DISK)
-              robotsRulesBase = t
-              if (t.count() < 200000L) broadcast(t) else t
-            }
-          val d =
-            if (!delayConfigured) scala.None
-            else {
-              val t = Robots.delayBudgetsFromDirectives(dirs,
-                config.waveModelSeconds, config.perHostBudget).toDF()
-                .persist(StorageLevel.MEMORY_AND_DISK)
-              if (t.count() > 0L) Some(t) else { t.unpersist(); scala.None }
-            }
-          (r, d)
-        } finally dirs.unpersist()
-      }
-
-    val seedHosts = config.seeds
-      .flatMap(s => graft.urls.UrlKernel.canonicalize(s).flatMap(graft.urls.UrlKernel.extractDomain)).toSet
-    val bcSeedHosts = spark.sparkContext.broadcast(seedHosts)
-    val bcIncludes = spark.sparkContext.broadcast(config.includePatterns)
-    val bcExcludes = spark.sparkContext.broadcast(config.excludePatterns)
+    // one release path for every exit: the crawl's prepared pages,
+    // winners and robots tables, and the wave in progress's frames
+    val crawlCaches = new CrawlEngine.Releases
+    val waveCaches = new CrawlEngine.Releases
+    try {
+    val prepared = CrawlEngine.preparePages(pages, registerRelease = f => crawlCaches.add(f()))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    crawlCaches.add(prepared.unpersist())
+    // the Crawl-delay caps ride into the scheduler's keyed state via a
+    // stream-static broadcast join so the twins release identical tranches
+    val robots = CrawlEngine.robotsTables(pages, config, f => crawlCaches.add(f()))
+    val delayCaps = robots.delayBudgets.map(_.toDF())
+    val discover = CrawlEngine.linkGen(spark, config, robots.gate)
 
     def toCandidates(entries: Dataset[FrontierEntry], atMs: Long): Dataset[StreamingScheduler.Candidate] =
       entries.map(e => StreamingScheduler.Candidate(e.canonicalUrl, e.url, e.depth,
@@ -180,42 +145,20 @@ object StreamingCrawl {
       val released = StreamingScheduler.readOutput(spark, schedDir)
         .filter(col("emittedAtMs") === waveClock(wave))
         .persist(StorageLevel.MEMORY_AND_DISK)
+      waveCaches.add(released.unpersist())
       val relCount = released.count()
 
       if (relCount == 0L) {
-        released.unpersist()
         done = true
       } else {
-        // -- fetch: equi-join vs the canonical-keyed pages table, the same
-        // strategy selection as the batch engine (relCount is known):
-        // small released waves broadcast so html never enters an exchange;
-        // wide waves fall back to SHUFFLE_HASH — html must never sort
-        val relCols = released.select("canonicalUrl", "url", "depth", "parentUrl", "host")
-        val fetched = prepared.join(
-          if (relCount <= graft.crawl.CrawlEngine.effectiveBroadcastCap(config.broadcastWaveMaxRows, released.sparkSession)) broadcast(relCols)
-          else relCols.hint("shuffle_hash"),
-          Seq("canonicalUrl"), "inner")
-          .select(col("canonicalUrl"), col("url"), col("depth"),
-            col("servedUrl"), col("warcTs"), col("html"), col("storedText"))
-          .as[(String, String, Int, String, java.sql.Timestamp, Array[Byte], String)]
+        // -- fetch + fused extract: the batch kernels, byte parity checked
+        // on every row
+        val fetched = CrawlEngine.fetchJoin(prepared, released, relCount, config.broadcastWaveMaxRows)
+        val extracted = CrawlEngine.fusedExtract(fetched, wave, retryHints = false)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        waveCaches.add(extracted.unpersist())
 
-        // -- fused extract (same kernels as the batch stage): links gated by
-        // WAF exactly like the engine; byte parity checked on every row
-        val maxDepth = config.maxDepth
-        val extractedLinks = fetched.mapPartitions { it =>
-          it.map { case (canonicalUrl, url, depth, servedUrl, _, html, storedText) =>
-            val h = new String(html, UTF_8)
-            val dom = HtmlKit.parse(h)
-            val ex = HtmlKit.extractText(dom, h)
-            val waf = TextKit.detectWafChallenge(h).getOrElse("")
-            val links =
-              if (waf.isEmpty && depth < maxDepth) HtmlKit.extractLinks(dom, servedUrl)
-              else Vector.empty[String]
-            (canonicalUrl, url, depth, links, ex.text == storedText)
-          }
-        }.persist(StorageLevel.MEMORY_AND_DISK)
-
-        val stats = extractedLinks.toDF("canonicalUrl", "url", "depth", "links", "parityOk")
+        val stats = extracted.toDF()
           .agg(count(lit(1)), sum(when(col("parityOk"), 0L).otherwise(1L))).head()
         val fetchCount = stats.getLong(0)
         parityFailures += (if (stats.isNullAt(1)) 0L else stats.getLong(1))
@@ -239,44 +182,31 @@ object StreamingCrawl {
             java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ad))
             val tmp = java.nio.file.Paths.get(ad, f".tmp-wave=$wave%05d")
             org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile) // stale partial from a kill
-            val records = fetched.map { case (canonicalUrl, _, _, _, warcTs, html, _) =>
-              graft.sources.WarcKit.ArchiveRecord("response", canonicalUrl, warcTs, 200,
-                "text/html", html, graft.sources.WarcKit.payloadDigest(html))
+            val records = fetched.map { r =>
+              graft.sources.WarcKit.ArchiveRecord("response", r.canonicalUrl, r.warcTs, 200,
+                "text/html", r.html, graft.sources.WarcKit.payloadDigest(r.html))
             }
             graft.sources.WarcKit.writeArchivePartitioned(records, tmp.toString, codec = "gz")
             java.nio.file.Files.move(tmp, waveDir, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
           }
         }
 
-        // -- admission chain + robots gate (the batch kernels), looped back
-        // as the NEXT wave's discovery file
-        val internalOnly = config.internalOnly
-        val maxQueryParams = config.maxQueryParams
-        val linkEntries: Dataset[FrontierEntry] = extractedLinks
-          .flatMap { case (_, url, depth, links, _) =>
-            CrawlEngine.linkCandidates(links.iterator, url, depth + 1,
-              bcIncludes.value, bcExcludes.value, internalOnly,
-              bcSeedHosts.value, maxQueryParams)
-          }
-        val gated =
-          if (robotsActive) Robots.gate(spark, linkEntries, robotsRules)
-          else linkEntries
-
         wave += 1
-        // pre-shrink the wave file with the batch dedup (state would converge
-        // anyway — this keeps the file one canonical per URL, like the batch
-        // wave's dedupeWave, and makes the loop-back write proportional to
-        // distinct discoveries)
-        writeWaveFileIfAbsent(toCandidates(Frontier.dedupeWave(spark, gated), waveClock(wave)), wave)
-        extractedLinks.unpersist()
-        released.unpersist()
+        // the admission chain + robots gate (linkGen), looped back as the
+        // NEXT wave's discovery file, pre-shrunk with the batch dedup (state
+        // would converge anyway — this keeps the file one canonical per
+        // URL, like the batch wave's dedupeWave, and makes the loop-back
+        // write proportional to distinct discoveries)
+        writeWaveFileIfAbsent(
+          toCandidates(Frontier.dedupeWave(spark, discover(extracted)), waveClock(wave)), wave)
       }
+      waveCaches.releaseAll()
     }
 
-    prepared.unpersist()
-    deferredReleases.foreach(f => try f() catch { case _: Throwable => () })
-    if (robotsRulesBase != null) robotsRulesBase.unpersist()
-    delayCaps.foreach(_.unpersist())
     StreamCrawlSummary(wave, fetchedTotal, errorsTotal, parityFailures, waveStats.toSeq)
+    } finally {
+      waveCaches.releaseAll()
+      crawlCaches.releaseAll()
+    }
   }
 }

@@ -426,4 +426,36 @@ class CrawlEngineSpec extends AnyFunSuite {
         s"leaked persisted/checkpointed RDDs after run: ${live.values.take(5).mkString("; ")}")
     }
   }
+
+  test("a failure mid-crawl releases every cache and stops the sink pool") {
+    withSpark("local[4]") { spark =>
+      // the log callback throws at a wave marker, after prep and the robots
+      // tables materialized: once while wave 1's selection prefetch is in
+      // flight, once after wave 1 consumed it
+      Seq("wave=0 sink barrier done", "wave=1 fetch+extract done").foreach { marker =>
+        val pages = CorpusGen.dataset(spark, CorpusGen.Spec(GoldenGen.Hosts, GoldenGen.PagesPerHost))
+        val dir = Files.createTempDirectory("graft-fail").toString
+        val e = intercept[IllegalStateException] {
+          CrawlEngine.run(spark, pages, GoldenGen.config(GoldenGen.Hosts), dir,
+            log = m => if (m.startsWith(marker)) throw new IllegalStateException(s"planted at $marker"))
+        }
+        assert(e.getMessage == s"planted at $marker")
+        val live = spark.sparkContext.getPersistentRDDs
+        assert(live.isEmpty,
+          s"$marker: leaked persisted/checkpointed RDDs: ${live.values.take(5).mkString("; ")}")
+        assertNoLiveThreads("graft-exec-")
+      }
+    }
+  }
+
+  /** Pool threads exit asynchronously after shutdown; a leaked pool keeps
+    * them forever, so a bounded wait tells the two apart. */
+  private def assertNoLiveThreads(prefix: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    def live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(prefix)).map(_.getName).toSet
+    val deadline = System.nanoTime() + 10000000000L
+    while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(live.isEmpty, s"leaked pool threads: $live")
+  }
 }

@@ -539,6 +539,16 @@ class DedupSpec extends AnyFunSuite {
     assert(fast == dist)
   }
 
+  test("connectedComponents: a 200-hop chain collapses to its minimum on the distributed path") {
+    import spark.implicits._
+    // deeper than any fixed round budget a min-label loop would carry: the
+    // distributed path must converge, not throw, and label all 201 docs 0
+    val pairs = (0L until 200L).map(i => (i + 1, i)).toDF("doc_a", "doc_b")
+    val dist = Dedup.connectedComponents(spark, pairs, driverEdgeCap = 0).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist == (0L to 200L).map(_ -> 0L).toMap)
+  }
+
   test("dedupKeepList: exact + near dups collapse transitively; uniques keep themselves") {
     import spark.implicits._
     val docs = Seq(
@@ -555,16 +565,7 @@ class DedupSpec extends AnyFunSuite {
       (4L, 4L, true), (5L, 1L, false)))
   }
 
-  test("CentroidAgg: exact mean on a hand-built group; labelCentroids deterministic") {
-    import spark.implicits._
-    val vecs = Seq(
-      (0, Array(1.0f, 2.0f, 3.0f)), (0, Array(3.0f, 4.0f, 5.0f)),
-      (1, Array(10.0f, 0.0f, -2.0f))
-    ).toDS().repartition(3)
-    val agg = new Similarity.CentroidAgg(3).toColumn
-    val got = vecs.groupByKey(_._1).mapValues(_._2).agg(agg).collect().toMap
-    assert(got(0).toSeq == Seq(2.0f, 3.0f, 4.0f))
-    assert(got(1).toSeq == Seq(10.0f, 0.0f, -2.0f))
+  test("labelCentroids: deterministic, 10 labels x 64 dims") {
     // micro-quantized per-label centroids over the real table: stable
     val a = Similarity.labelCentroids(spark, sfDir).collect().map(_.toString)
     val b = Similarity.labelCentroids(spark, sfDir).collect().map(_.toString)

@@ -73,10 +73,39 @@ class StreamingCrawlSpec extends AnyFunSuite {
       s"leaked persisted/checkpointed RDDs after both crawls: ${live.values.take(5).mkString("; ")}")
   }
 
+  test("a failure mid-crawl releases every cache on the way out") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    // one page's html raises when read: prep and the robots tables
+    // materialize without it, the first wave's fetch reads it and fails
+    val pages = corpus.withColumn("html",
+      when(col("url") === "https://site1.com/", raise_error(lit("planted page failure")))
+        .otherwise(col("html"))).as[graft.model.PageRow]
+    val sDir = Files.createTempDirectory("graft-scrawl-fail").toString
+    val e = intercept[Exception](StreamingCrawl.run(spark, pages, cfg, sDir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("planted page failure")), e.toString)
+    val live = spark.sparkContext.getPersistentRDDs
+    assert(live.isEmpty,
+      s"leaked persisted/checkpointed RDDs after the failed crawl: ${live.values.take(5).mkString("; ")}")
+    assertNoLiveThreads("graft-exec-")
+  }
+
+  /** Pool threads exit asynchronously after shutdown; a leaked pool keeps
+    * them forever, so a bounded wait tells the two apart. */
+  private def assertNoLiveThreads(prefix: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    def live = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith(prefix)).map(_.getName).toSet
+    val deadline = System.nanoTime() + 10000000000L
+    while (live.nonEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(live.isEmpty, s"leaked pool threads: $live")
+  }
+
   test("crawl-delay parity: a binding Crawl-delay caps both twins identically, wave for wave") {
     import spark.implicits._
     // site0 declares Crawl-delay: 15 → budget min(3, 30 div 15) = 2 in BOTH
-    // engines (the shared Robots.delayBudgets table)
+    // engines (the shared CrawlEngine.robotsTables delay budgets)
     val base = CorpusGen.localPages(CorpusGen.Spec(GoldenGen.Hosts, GoldenGen.PagesPerHost))
     val pages = spark.createDataset(base.map { p =>
       if (p.url == "https://site0.com/robots.txt")
