@@ -10,6 +10,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.extract.{HtmlKit, TextKit}
 import graft.frontier.Frontier
 import graft.model._
+import graft.pipeline.Rounds.releaseBlocks
 import graft.politeness.Robots
 import graft.state.SnapshotStore
 import graft.urls.UrlKernel
@@ -78,25 +79,6 @@ object CrawlEngine {
   def runId(config: CrawlConfig): String = {
     val h = sha256Hex(config.toString)
     s"00-${h.substring(0, 32)}-${h.substring(32, 48)}-01"
-  }
-
-  /** Release a materialized frame's executor blocks NOW. For plain
-    * persisted frames this is `Dataset.unpersist`; for `localCheckpoint`ed
-    * frames that call is a CacheManager no-op (the blocks belong to the
-    * checkpointed RDD, not to a cached query — verified against Spark
-    * 4.1's CacheManager.uncacheQuery), so the backing LogicalRDD's RDD is
-    * unpersisted directly. Without this, per-wave frontier checkpoint
-    * blocks accumulate until the periodic-GC ContextCleaner pass — the
-    * opposite of the eager per-wave release this engine documents, and a
-    * real leak for many-crawls-per-JVM callers. Only safe once NOTHING
-    * will read the frame again (a checkpointed RDD cannot recompute its
-    * freed blocks — its lineage is cut by construction). */
-  private[graft] def releaseBlocks(ds: Dataset[_]): Unit = {
-    ds.queryExecution.logical match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    ds.unpersist()
   }
 
   private[graft] def entryFor(canonical: String, rawUrl: String, depth: Int, parent: String): FrontierEntry = {

@@ -69,9 +69,7 @@ object Anf {
   def anf(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
     import spark.implicits._
-    val dir0 = pairsIn.filter(col("a") =!= col("b"))
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = Communities.undirected(pairsIn)
     val nodes = und.select(col("a").as("host")).distinct().localCheckpoint()
     val kmv = new Cardinality.KmvAgg(K)
     def ballSum(sk: DataFrame): Long =
@@ -79,24 +77,25 @@ object Anf {
         .map { case (_, mins) => Cardinality.estimate(mins, K) }
         .reduce(_ + _)
     // r = 0: every ball is exactly {v}
-    var sketch = nodes
+    val singletons = nodes
       .select(col("host"), Cardinality.urlHashCol(col("host")).as("h"))
       .as[(String, Long)]
       .groupByKey(_._1).mapValues(_._2).agg(kmv.toColumn.name("mins"))
       .toDF("host", "mins").localCheckpoint()
     val sums = Array.ofDim[Long](Rounds + 1)
-    sums(0) = ballSum(sketch)
-    for (r <- 1 to Rounds) {
+    // each round first sums the balls of the sketch it grows
+    val last = graft.pipeline.Rounds.iterate(singletons, Rounds) { (sketch, r) =>
+      sums(r - 1) = ballSum(sketch)
       val own = sketch.select(col("host"), explode(col("mins")).as("h"))
       val nbr = und
         .join(sketch.withColumnRenamed("host", "b"), "b")
         .select(col("a").as("host"), explode(col("mins")).as("h"))
-      sketch = own.union(nbr)
+      own.union(nbr)
         .as[(String, Long)]
         .groupByKey(_._1).mapValues(_._2).agg(kmv.toColumn.name("mins"))
-        .toDF("host", "mins").localCheckpoint()
-      sums(r) = ballSum(sketch)
+        .toDF("host", "mins")
     }
+    sums(Rounds) = ballSum(last)
     val total = sums(Rounds)
     val eff = (0 to Rounds).find(r => sums(r) * 1000L >= EffPermille * total).get.toLong
     (0 to Rounds).map { r =>

@@ -51,9 +51,7 @@ object Assortativity {
 
   /** Assortativity over any (a, b) host-pair frame (undirected). */
   def assortativity(pairsIn: DataFrame): DataFrame = {
-    val dir0 = pairsIn.filter(col("a") =!= col("b"))
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = Communities.undirected(pairsIn)
     val deg = und.groupBy(col("a").as("host")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // edge ends: (deg u, deg v) for every DIRECTED pair of the undirected

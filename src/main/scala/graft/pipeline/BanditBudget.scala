@@ -85,10 +85,10 @@ object BanditBudget {
     val hosts = (0 until NumHosts)
       .map(i => (hostName(i), trueYieldPermille(i)))
       .toDF("host", "true_yield")
-    var stats = hosts.select(col("host"), col("true_yield"),
+    val init = hosts.select(col("host"), col("true_yield"),
       lit(0L).as("pulls"), lit(0L).as("succ")).localCheckpoint()
-    var allocs: DataFrame = null
-    for (w <- 1 to Waves) {
+    val allocs = Vector.newBuilder[DataFrame]
+    Rounds.iterate(init, Waves) { (stats, w) =>
       val totalPulls = (w - 1).toLong * Slots // closed-form: no action needed
       val conf = confNumerator(totalPulls)
       val indexed = stats.withColumn("index",
@@ -99,16 +99,15 @@ object BanditBudget {
         lit(w.toLong).as("wave"), col("host"),
         col("pulls").as("pulls_before"), col("index"),
         outcomeCol(col("host"), col("pulls"), col("true_yield")).as("outcome"))
-        .localCheckpoint()
-      allocs = if (allocs == null) withOutcome else allocs.union(withOutcome)
-      stats = stats
+        .localCheckpoint() // a live input of the returned allocations
+      allocs += withOutcome
+      stats
         .join(withOutcome.select(col("host"), col("outcome")), Seq("host"), "left")
         .select(col("host"), col("true_yield"),
           (col("pulls") + when(col("outcome").isNotNull, 1L).otherwise(0L)).as("pulls"),
           (col("succ") + coalesce(col("outcome"), lit(0L))).as("succ"))
-        .localCheckpoint()
     }
-    allocs.orderBy("wave", "host")
+    allocs.result().reduce(_ union _).orderBy("wave", "host")
   }
 
   /** DuckDB twin: policy + environment re-executed wave by wave as

@@ -73,15 +73,11 @@ object Bowtie {
   private def closure(edges: DataFrame, pivot: String): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
-    var reach = Seq((pivot, 0L)).toDF("host", "dist")
-    for (r <- 1 to ReachRounds) {
+    Rounds.iterate(Seq((pivot, 0L)).toDF("host", "dist"), ReachRounds) { (reach, r) =>
       val step = edges.join(reach.withColumnRenamed("host", "a"), "a")
         .select(col("b").as("host"), lit(r.toLong).as("dist"))
-      reach = reach.union(step)
-        .groupBy("host").agg(min("dist").as("dist"))
-        .localCheckpoint()
+      reach.union(step).groupBy("host").agg(min("dist").as("dist"))
     }
-    reach
   }
 
   /** Decompose any (a, b) directed host-pair frame around its maximal-
@@ -90,8 +86,8 @@ object Bowtie {
   def bowtie(pairsIn: DataFrame): DataFrame = {
     val dir = pairsIn.filter(col("a") =!= col("b")).distinct().localCheckpoint()
     val rev = dir.select(col("b").as("a"), col("a").as("b"))
-    val nodes = dir.select(col("a").as("host"))
-      .union(dir.select(col("b").as("host"))).distinct().localCheckpoint()
+    val und = Communities.undirected(dir)
+    val nodes = und.select(col("a").as("host")).distinct().localCheckpoint()
     // deterministic pivot: max total degree over the distinct edge set,
     // ties to the smallest host — one bounded 1-row driver read
     val pivot = dir.select(col("a").as("host"))
@@ -104,7 +100,6 @@ object Bowtie {
     // driver-thread jobs (guide §2.6, the Percolation schedule): the
     // query's wall time collapses to the slowest closure instead of the
     // sum of all three
-    val und = dir.union(rev).distinct().localCheckpoint()
     val Seq(fwd, bwd, weak) = Par.all(Seq(
       () => closure(dir, pivot), () => closure(rev, pivot), () => closure(und, pivot)))
     def d(c: Column): Column = coalesce(c, lit(-1L))

@@ -83,14 +83,18 @@ object Centrality {
     var seen = init.localCheckpoint()     // bits with d(u,v) ≤ t (self at t=0)
     var frontier = seen                   // bits with d(u,v) = t exactly
     val counts = Vector.newBuilder[DataFrame]
+    // hand-written, not Rounds: the returned plan reads every round's
+    // frontier (through `counts`); only the superseded seen mask is released
     for (t <- 1 to MaxDist) {
       frontier = harmonicStep(edges, frontier, seen)
         .localCheckpoint() // lineage cut: constant executed-plan size per round
       counts += frontier.groupBy("url")
         .agg(sum(expr("bit_count(mask)")).cast("long").as("cnt"))
         .withColumn("d", lit(t))
+      val prev = seen
       seen = seen.union(frontier).groupBy("url", "grp")
         .agg(expr("bit_or(mask)").as("mask")).localCheckpoint()
+      Rounds.releaseBlocks(prev)
     }
     val reach = counts.result().reduce(_ union _)
       .groupBy("url")
@@ -219,7 +223,7 @@ object Centrality {
       .select("src", "dst").distinct().localCheckpoint()
     val agg = new RegMaxAgg().toColumn
     // state: url, regs, est of |ball(t)|, harmonic accumulator
-    var state = edges.select(col("src").as("url"))
+    val init = edges.select(col("src").as("url"))
       .union(edges.select(col("dst").as("url"))).distinct()
       .as[String]
       .map { u =>
@@ -228,7 +232,7 @@ object Centrality {
       }
       .toDF("url", "regs", "est", "h")
       .localCheckpoint()
-    for (t <- 1 to MaxDist) {
+    val last = Rounds.iterate(init, MaxDist) { (state, t) =>
       val prop = edges
         .join(state.select(col("url").as("src"), col("regs")), "src")
         .select(col("dst"), col("regs"))
@@ -237,7 +241,7 @@ object Centrality {
         .mapValues(_._2)
         .agg(agg.name("pregs"))
         .toDF("url", "pregs")
-      state = state.join(prop, Seq("url"), "left")
+      state.join(prop, Seq("url"), "left")
         .as[(String, Array[Byte], Double, Double, Array[Byte])]
         .map { case (u, regs, est, h, pregs) =>
           val merged = if (pregs == null) regs else regMax(regs, pregs)
@@ -246,9 +250,8 @@ object Centrality {
           (u, merged, e2, h + delta / t)
         }
         .toDF("url", "regs", "est", "h")
-        .localCheckpoint() // lineage cut per round
     }
-    state.select(col("url"),
+    last.select(col("url"),
         round(col("est") * 1000).cast("long").as("est_ball_milli"),
         round(col("h") * 1000).cast("long").as("harmonic_milli"))
       .orderBy("url")

@@ -56,7 +56,8 @@ object Communities {
       ") v(a, b)"
 
   /** Symmetrized, deduped, self-loop-free directed pair set of an (a, b)
-    * frame — the shared edge representation ([[Modularity]] reuses it). */
+    * frame — the one edge representation of every undirected host-graph
+    * kernel. */
   private[pipeline] def undirected(pairsIn: DataFrame): DataFrame = {
     val dir0 = pairsIn.filter(col("a") =!= col("b"))
     dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
@@ -67,17 +68,14 @@ object Communities {
     * (host, label) after [[LpaRounds]] rounds. */
   private[pipeline] def lpaLabels(und: DataFrame): DataFrame = {
     val nodes = und.select(col("a").as("host")).distinct().localCheckpoint()
-    var labels = nodes.select(col("host"), col("host").as("label"))
-    for (_ <- 1 to LpaRounds) {
+    Rounds.iterate(nodes.select(col("host"), col("host").as("label")), LpaRounds) { (labels, _) =>
       val counts = und.join(labels.withColumnRenamed("host", "b"), "b")
         .groupBy(col("a").as("host"), col("label")).agg(count(lit(1)).as("c"))
       val top = counts.groupBy("host").agg(max("c").as("mc"))
-      labels = counts.join(top, "host")
+      counts.join(top, "host")
         .filter(col("c") === col("mc"))
         .groupBy("host").agg(min("label").as("label"))
-        .localCheckpoint()
     }
-    labels
   }
 
   /** LPA over any (a, b) host-pair frame: symmetrize, [[LpaRounds]] rounds

@@ -257,19 +257,14 @@ object CrawlQueries {
   private[graft] val UniformFloor: Seq[(String, String)] =
     Seq("rank_micro" -> PageRankFloorMicro.toString)
 
-  /** [[PageRankIters]] lineage-cut rounds of [[pageRankRound]] over the
+  /** [[PageRankIters]] [[Rounds]] of [[pageRankRound]] over the
     * [[weightedEdges]] frame from `init` (`url` plus one rank column per
     * entry of `floors`) — K independent recurrences over the same edges
     * cost one round each, not K. */
   private[pipeline] def pageRankRounds(
       weighted: DataFrame, nodes: DataFrame, init: DataFrame,
-      floors: Seq[(String, String)] = UniformFloor): DataFrame = {
-    var ranks = init
-    for (_ <- 1 to PageRankIters) {
-      ranks = pageRankRound(weighted, nodes, ranks, floors).localCheckpoint()
-    }
-    ranks
-  }
+      floors: Seq[(String, String)] = UniformFloor): DataFrame =
+    Rounds.iterate(init, PageRankIters)((ranks, _) => pageRankRound(weighted, nodes, ranks, floors))
 
   /** The (src, dst, out_deg) frame every [[pageRankRound]] reads. It is
     * loop-invariant, so it is checkpointed once instead of re-shuffling the

@@ -44,10 +44,7 @@ object HIndex {
 
   /** The h-index ladder over any (a, b) host-pair frame. */
   def hindex(pairsIn: DataFrame): DataFrame = {
-    val dir0 = pairsIn.filter(col("a") =!= col("b") &&
-      col("a") =!= "" && col("b") =!= "")
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = Communities.undirected(pairsIn.filter(col("a") =!= "" && col("b") =!= ""))
     val deg = und.groupBy(col("a").as("host")).agg(count(lit(1)).as("v"))
       .localCheckpoint()
     val h1 = hirsch(und, deg).withColumnRenamed("h", "v").localCheckpoint()

@@ -32,8 +32,9 @@ object Hits {
   val HitsIters = 8
   val HitsUnitMicro = 1000000L
 
-  /** Normalize `raw` to [[HitsUnitMicro]] total mass via a broadcast
-    * one-row total (keyed lit join → BroadcastHashJoin, never a product). */
+  /** Normalize `raw` to [[HitsUnitMicro]] total mass (integer L1) via a
+    * broadcast one-row total (keyed lit join → BroadcastHashJoin, never a
+    * product). */
   private def normalized(raw: DataFrame, outName: String): DataFrame = {
     val tot = raw.agg(sum("raw").as("tot")).withColumn("k", lit(1))
     raw.withColumn("k", lit(1))
@@ -42,32 +43,43 @@ object Hits {
         expr(s"raw * $HitsUnitMicro div greatest(tot, 1)").as(outName))
   }
 
-  /** The integer HITS iteration over any (src, dst) edge frame. */
+  /** The Spark hub/authority loop of HITS and SALSA: `iters` rounds in
+    * Kleinberg order, each vector [[normalized]]. Authority sums `authC`
+    * (SQL over `toAuth`'s columns and `hub_micro`) into each `dst` of
+    * `toAuth`; hub sums `hubC` (over `toHub` and `auth_micro`) into each
+    * `src` of `toHub`. Each half-round is one [[Rounds]] round, the last
+    * carrying its authority: (url, auth_micro, hub_micro), so the caller's
+    * output plan reads checkpoints only. */
+  private[pipeline] def hubAuthority(nodes: DataFrame, iters: Int,
+                                     toAuth: DataFrame, authC: String,
+                                     toHub: DataFrame, hubC: String): DataFrame = {
+    def spread(x: DataFrame, edges: DataFrame, from: String, to: String,
+               c: String, outName: String): DataFrame =
+      normalized(nodes.join(
+        edges.join(x.withColumnRenamed("url", from), from)
+          .select(col(to).as("url"), expr(c).as("c"))
+          .groupBy("url").agg(sum("c").as("s")),
+        Seq("url"), "left")
+        .select(col("url"), coalesce(col("s"), lit(0L)).as("raw")), outName)
+    def hubOf(auth: DataFrame): DataFrame = spread(auth, toHub, "dst", "src", hubC, "hub_micro")
+    val hub0 = nodes.select(col("url"), lit(HitsUnitMicro).as("hub_micro"))
+    // odd half-rounds: authority from hub; even: hub from authority
+    Rounds.iterate(hub0, 2 * iters) { (x, i) =>
+      if (i % 2 == 1) spread(x, toAuth, "src", "dst", authC, "auth_micro")
+      else if (i < 2 * iters) hubOf(x)
+      else x.join(hubOf(x), "url")
+    }
+  }
+
+  /** The integer HITS iteration over any (src, dst) edge frame: every edge
+    * row (duplicates included) carries its endpoint's whole score. */
   def hitsKernel(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn.localCheckpoint()
     val nodes = edges.select(col("src").as("url"))
       .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
-    var hub = nodes.select(col("url"), lit(HitsUnitMicro).as("hub_micro"))
-    // placeholder only — Kleinberg order computes auth from the PREVIOUS
-    // hub first, so round 1 overwrites this before any read
-    var auth: DataFrame = hub
-    for (_ <- 1 to HitsIters) {
-      val aRaw = nodes.join(
-        edges.join(hub.withColumnRenamed("url", "src"), "src")
-          .groupBy(col("dst").as("url")).agg(sum("hub_micro").as("s")),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("s"), lit(0L)).as("raw"))
-      auth = normalized(aRaw, "auth_micro").localCheckpoint()
-      val hRaw = nodes.join(
-        edges.join(auth.withColumnRenamed("url", "dst"), "dst")
-          .groupBy(col("src").as("url")).agg(sum("auth_micro").as("s")),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("s"), lit(0L)).as("raw"))
-      hub = normalized(hRaw, "hub_micro").localCheckpoint()
-    }
     val inDeg = edges.groupBy(col("dst").as("url")).agg(count(lit(1)).as("in_deg"))
     val outDeg = edges.groupBy(col("src").as("url")).agg(count(lit(1)).as("out_deg"))
-    auth.join(hub, "url")
+    hubAuthority(nodes, HitsIters, edges, "hub_micro", edges, "auth_micro")
       .join(inDeg, Seq("url"), "left").join(outDeg, Seq("url"), "left")
       .na.fill(0L, Seq("in_deg", "out_deg"))
       .select("url", "auth_micro", "hub_micro", "in_deg", "out_deg")

@@ -56,9 +56,7 @@ object KCore {
   /** Peel any (a, b) host-pair frame to its 2-core: every input host with
     * its status — `0` = in core, `r` = peeled at round r. */
   def twoCore(pairsIn: DataFrame): DataFrame = {
-    val dir0 = pairsIn.filter(col("a") =!= col("b"))
-    val und0 = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und0 = Communities.undirected(pairsIn)
     val allNodes = und0.select(col("a").as("host")).distinct().localCheckpoint()
     var und = und0
     var alive = allNodes
@@ -76,11 +74,17 @@ object KCore {
       // copying the whole accumulated union)
       val drop = alive.join(keep, Seq("host"), "left_anti").localCheckpoint()
       peeled = peeled.union(drop.select(col("host"), lit(r.toLong).as("peel_round")))
+      val (prevAlive, prevUnd) = (alive, und)
       alive = alive.join(drop, Seq("host"), "left_anti").localCheckpoint()
       und = und
         .join(drop.withColumnRenamed("host", "a"), Seq("a"), "left_anti")
         .join(drop.withColumnRenamed("host", "b"), Seq("b"), "left_anti")
         .select("a", "b").localCheckpoint()
+      // hand-written, not Rounds: every round's drop is a live input of
+      // `peeled`; only the superseded alive and edge sets are released
+      // (round 0's alive set is allNodes, which the result reads)
+      Rounds.releaseBlocks(prevUnd)
+      if (r > 1) Rounds.releaseBlocks(prevAlive)
     }
     val core = alive.select(col("host"), lit(0L).as("peel_round"))
     allNodes.join(core.union(peeled), "host")

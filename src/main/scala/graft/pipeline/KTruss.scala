@@ -66,21 +66,22 @@ object KTruss {
   def ktruss(pairs: DataFrame): (DataFrame, DataFrame) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    var und = pairs.select(
+    val und0 = pairs.select(
         least(col("src_host"), col("dst_host")).as("a"),
         greatest(col("src_host"), col("dst_host")).as("b"))
       .filter(col("a") =!= col("b") && col("a") =!= "" && col("b") =!= "")
       .distinct().localCheckpoint()
-    var ledger = Vector.empty[(Long, Long, Long, Long, Int)]
-    for (r <- 1 to Rounds) {
-      val nIn = und.count()
-      val kept = und.join(support(und), Seq("a", "b"), "left")
+    // edge counts: n(r) after round r; each round first counts the set it peels
+    val n = Array.ofDim[Long](Rounds + 1)
+    val und = graft.pipeline.Rounds.iterate(und0, Rounds) { (und, r) =>
+      n(r - 1) = und.count()
+      und.join(support(und), Seq("a", "b"), "left")
         .filter(coalesce(col("sup"), lit(0L)) >= MinSupport)
-        .select("a", "b").localCheckpoint()
-      val nKept = kept.count()
-      ledger :+= ((r.toLong, nIn, nIn - nKept, nKept, if (nIn == nKept) 1 else 0))
-      und = kept
+        .select("a", "b")
     }
+    n(Rounds) = und.count()
+    val ledger = (1 to Rounds).map(r =>
+      (r.toLong, n(r - 1), n(r - 1) - n(r), n(r), if (n(r - 1) == n(r)) 1 else 0))
     val nTriFinal = support(und).agg(expr("coalesce(sum(sup), 0) div 3"))
       .head.getLong(0)
     val led = ledger.toDF("round", "n_edges_in", "n_removed", "n_surviving", "converged")

@@ -55,7 +55,6 @@ object KcenterCoreset {
         round(dot / (col("nrm") * lit(cNrm)) * 1000000).cast("long")).as("d")
     }
 
-    var state = vecs.withColumn("mind", lit(InitRadiusMicro))
     var chosen = Vector((1, firstId, InitRadiusMicro))
     // the argmax row CARRIES the next center's vector (round-6: the
     // separate filter-by-id center-fetch job per round was a third of the
@@ -65,16 +64,21 @@ object KcenterCoreset {
       .select(col("embedding"), col("nrm")).head
     var centerVec: Seq[Float] = c0.getSeq[Float](0)
     var centerNrm: Double = c0.getDouble(1)
-    for (r <- 2 to k) {
-      state = state
-        .withColumn("mind", least(col("mind"), distToCenter(centerVec, centerNrm)))
-        .localCheckpoint()
+    // round r's center is the farthest vector of the state its update made
+    def pickFarthest(state: DataFrame, r: Int): Unit = {
       val next = state.orderBy(desc("mind"), asc("vec_id"))
         .select(col("vec_id"), col("mind"), col("embedding"), col("nrm")).head
       chosen :+= ((r, next.getLong(0), next.getLong(1)))
       centerVec = next.getSeq[Float](2)
       centerNrm = next.getDouble(3)
     }
+    // step i makes round i+1's state from round i's, picking round i's
+    // center first (round 1's is the smallest id)
+    val state = Rounds.iterate(vecs.withColumn("mind", lit(InitRadiusMicro)), k - 1) { (st, i) =>
+      if (i > 1) pickFarthest(st, i)
+      st.withColumn("mind", least(col("mind"), distToCenter(centerVec, centerNrm)))
+    }
+    if (k > 1) pickFarthest(state, k)
     // one more update with the last center closes the cover ledger
     val finalRadius = state
       .withColumn("mind", least(col("mind"), distToCenter(centerVec, centerNrm)))

@@ -35,21 +35,21 @@ object Navigation {
   val DoublingRounds = 6
 
   /** Generic chain resolution: for every src in `edges` (src, dst — at
-    * most one out-edge per src, acyclic), its terminal and exact hop
-    * count, by pointer doubling with cumulative distance. */
-  def chainHops(edges: DataFrame): DataFrame = {
-    var r = edges.select(col("src"), col("dst").as("cur"), lit(1L).as("d"))
-    for (_ <- 1 to DoublingRounds) {
-      val b = r.select(col("src").as("b_src"), col("cur").as("b_cur"), col("d").as("b_d"))
-      // pointer doubling SELF-joins r each round — per-round lineage cut,
-      // else the plan tree doubles per round ([[Redirects.resolve]])
-      r = r.join(b, r("cur") === b("b_src"), "left")
-        .select(col("src"), coalesce(col("b_cur"), col("cur")).as("cur"),
-          (col("d") + coalesce(col("b_d"), lit(0L))).as("d"))
-        .localCheckpoint()
-    }
-    r.select(col("src"), col("cur").as("terminal"), col("d").as("hops"))
-  }
+    * most one out-edge per src), where it stands after `rounds` rounds of
+    * pointer doubling with cumulative distance: `terminal` and exact
+    * `hops` for a chain of at most 2^rounds hops; past that (or on a
+    * cycle) the node 2^rounds hops on, and that distance. The one
+    * doubling loop: [[Redirects.resolve]] runs it too. */
+  def chainHops(edges: DataFrame, rounds: Int = DoublingRounds): DataFrame =
+    Rounds.iterate(edges.select(col("src"), col("dst").as("cur"), lit(1L).as("d")), rounds) {
+      (r, _) =>
+        // a SELF-join each round: without the per-round cut the plan tree
+        // would double per round
+        val b = r.select(col("src").as("b_src"), col("cur").as("b_cur"), col("d").as("b_d"))
+        r.join(b, r("cur") === b("b_src"), "left")
+          .select(col("src"), coalesce(col("b_cur"), col("cur")).as("cur"),
+            (col("d") + coalesce(col("b_d"), lit(0L))).as("d"))
+    }.select(col("src"), col("cur").as("terminal"), col("d").as("hops"))
 
   // ------------------------------------------------------- meta refresh --
 

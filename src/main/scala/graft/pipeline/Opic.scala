@@ -45,10 +45,10 @@ object Opic {
       .localCheckpoint()
     val nodes = edges.select(col("src").as("url"))
       .union(edges.select(col("dst").as("url"))).distinct()
-    var state = nodes.select(col("url"),
+    val init = nodes.select(col("url"),
       lit(CashUnitMicro).as("cash"), lit(0L).as("hist"), lit(0L).as("n_crawled"))
       .localCheckpoint()
-    for (_ <- 1 to Waves) {
+    val last = Rounds.iterate(init, Waves) { (state, _) =>
       // bounded-heap top-k: TakeOrderedAndProject, never a global sort
       val sel = state.orderBy(desc("cash"), asc("url")).limit(WaveK)
         .select(col("url").as("src"), col("cash").as("sel_cash"))
@@ -57,7 +57,7 @@ object Opic {
         .join(outDeg, "src")
         .select(col("dst").as("url"), expr("sel_cash div out_deg").as("c"))
         .groupBy("url").agg(sum("c").as("recv"))
-      state = state
+      state
         .join(sel.withColumnRenamed("src", "url").select(col("url"), lit(true).as("s")),
           Seq("url"), "left")
         .join(recv, Seq("url"), "left")
@@ -66,9 +66,8 @@ object Opic {
             + coalesce(col("recv"), lit(0L))).as("cash"),
           (col("hist") + when(col("s"), col("cash")).otherwise(lit(0L))).as("hist"),
           (col("n_crawled") + when(col("s"), 1L).otherwise(0L)).as("n_crawled"))
-        .localCheckpoint() // constant executed-plan size per wave
     }
-    state.select("url", "hist", "cash", "n_crawled").orderBy("url")
+    last.select("url", "hist", "cash", "n_crawled").orderBy("url")
   }
 
   /** Contract query `q_opic`: the wave loop over the fetchable page link

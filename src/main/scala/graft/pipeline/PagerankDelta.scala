@@ -37,18 +37,19 @@ object PagerankDelta {
 
   import CrawlQueries.{PageRankUnitMicro, PageRankFloorMicro, PageRankDampPct}
 
-  /** [[CrawlQueries.pageRankRound]] from `init` for `rounds` rounds;
-    * returns the snapshots at the requested rounds. */
+  /** [[CrawlQueries.pageRankRound]] from `init` up to the last round in
+    * `keep`; returns the snapshots at the rounds in `keep`. Each kept
+    * round ends one [[Rounds.iterate]] segment and starts the next, so it
+    * is never released; every other round is. */
   private def iterate(edges: DataFrame, nodes: DataFrame, init: DataFrame,
-                      rounds: Int, keep: Set[Int]): Map[Int, DataFrame] = {
+                      keep: Set[Int]): Map[Int, DataFrame] = {
     val weighted = CrawlQueries.weightedEdges(edges)
-    var ranks = init
-    var out = Map.empty[Int, DataFrame]
-    for (r <- 1 to rounds) {
-      ranks = CrawlQueries.pageRankRound(weighted, nodes, ranks).localCheckpoint()
-      if (keep(r)) out += r -> ranks
-    }
-    out
+    var (at, ranks) = (0, init)
+    keep.toSeq.sorted.map { r =>
+      ranks = Rounds.iterate(ranks, r - at)((x, _) => CrawlQueries.pageRankRound(weighted, nodes, x))
+      at = r
+      r -> ranks
+    }.toMap
   }
 
   private def uniform(nodes: DataFrame): DataFrame =
@@ -73,13 +74,13 @@ object PagerankDelta {
     // as concurrent driver-thread jobs (guide §2.6, the Percolation
     // schedule); only the warm restart needs base8, so it follows
     val Seq(baseSnaps, fullSnaps) = Par.all(Seq(
-      () => iterate(base, nodesBase, uniform(nodesBase), RefRounds, Set(RefRounds)),
-      () => iterate(all, nodesFull, uniform(nodesFull), RefRounds, Budgets.toSet + RefRounds)))
+      () => iterate(base, nodesBase, uniform(nodesBase), Set(RefRounds)),
+      () => iterate(all, nodesFull, uniform(nodesFull), Budgets.toSet + RefRounds)))
     val ref = fullSnaps(RefRounds)
     val warmInit = nodesFull.join(baseSnaps(RefRounds), Seq("url"), "left")
       .select(col("url"),
         coalesce(col("rank_micro"), lit(PageRankUnitMicro)).as("rank_micro"))
-    val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.max, Budgets.toSet)
+    val warmSnaps = iterate(all, nodesFull, warmInit, Budgets.toSet)
     // every (variant, budget) ledger row in ONE job
     def tagged(variant: String, snaps: Map[Int, DataFrame]): Seq[DataFrame] =
       Budgets.map(r => snaps(r).select(lit(variant).as("variant"),

@@ -64,9 +64,7 @@ object Percolation {
   def percolation(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
     import spark.implicits._
-    val dir0 = pairsIn.filter(col("a") =!= col("b"))
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = Communities.undirected(pairsIn)
     val n0 = und.select(col("a")).distinct().count()
     // static original-degree attack ranking — ONE bounded K-row driver read
     val ranking = und.groupBy(col("a").as("host")).agg(count(lit(1)).as("d"))

@@ -49,11 +49,12 @@ object PriorityAging {
   /** Run one policy: returns (id, sched) with −1 for never-scheduled. */
   private def run(spark: SparkSession, aged: Boolean): DataFrame = {
     val all = universe(spark).localCheckpoint()
-    var sched = spark.createDataFrame(
+    val none = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       new org.apache.spark.sql.types.StructType()
         .add("id", "long").add("sched", "int"))
-    for (w <- 0 until Waves) {
+    Rounds.iterate(none, Waves) { (sched, r) =>
+      val w = r - 1
       val pending = all.filter(col("arrival") <= w)
         .join(sched, Seq("id"), "left_anti")
       // integer floor of waited/AgeEvery BEFORE the subtraction (matches
@@ -67,9 +68,8 @@ object PriorityAging {
         .orderBy(col("eff"), col("arrival"), col("id"))
         .limit(Capacity)
         .select(col("id"), lit(w).as("sched"))
-      sched = sched.union(picked).localCheckpoint()
+      sched.union(picked)
     }
-    sched
   }
 
   /** Contract query `q_priority_aging`. */

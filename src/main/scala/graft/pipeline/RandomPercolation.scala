@@ -48,9 +48,7 @@ object RandomPercolation {
   def randomPercolation(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
     import spark.implicits._
-    val dir0 = pairsIn.filter(col("a") =!= col("b"))
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = Communities.undirected(pairsIn)
     val hosts = und.select(col("a").as("host")).distinct()
       .withColumn("h", hash44(col("host"))).localCheckpoint()
     // one conditional aggregate yields n0 and every level's removal count

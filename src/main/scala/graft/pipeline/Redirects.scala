@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * Scale shape — pointer doubling, not chain walking: the redirect EDGES
   * (3xx rows only, a few percent of any real log) self-compose
   * [[DoublingRounds]] = ⌈log2 cap⌉ times (`f ∘ f`), so a 10-hop cap costs 4
-  * keyed equi self-joins over (src, cur, d) triples — keys only, no
-  * payloads — instead of 10 sequential joins over the full log. Each round
+  * keyed equi self-joins over (src, cur, d) triples ([[Navigation.chainHops]],
+  * the one doubling loop) — keys only, no payloads — instead of 10
+  * sequential joins over the full log. Each round
   * exactly doubles the followed distance until the chain settles on a
   * non-redirect node, so hop counts come out exact, not approximate.
   * Classification then needs two hash semi-joins (is the terminal itself a
@@ -124,32 +125,20 @@ object Redirects {
       .select(col("url").as("src"),
         when(col("location").startsWith("/"),
           concat(regexp_extract(col("url"), "^(https?://[^/]+)", 1), col("location")))
-          .otherwise(col("location")).as("cur"),
-        lit(1L).as("d"))
-    // pointer doubling SELF-joins r each round: without a per-round
-    // lineage cut the plan tree doubles per round (2^rounds copies of the
-    // edge derivation for the planner to chew) — cut eagerly, the
-    // iterative-kernel discipline (edges itself is a cheap filter over
-    // the checkpointed log)
-    var r = edges
-    for (_ <- 1 to DoublingRounds) {
-      val b = r.select(col("src").as("b_src"), col("cur").as("b_cur"), col("d").as("b_d"))
-      r = r.join(b, r("cur") === b("b_src"), "left")
-        .select(col("src"), coalesce(col("b_cur"), col("cur")).as("cur"),
-          (col("d") + coalesce(col("b_d"), lit(0L))).as("d"))
-        .localCheckpoint()
-    }
+          .otherwise(col("location")).as("dst"))
+    // edges is a cheap filter over the checkpointed log
+    val r = Navigation.chainHops(edges, DoublingRounds)
     val srcs = edges.select(col("src").as("m_src")).distinct()
     val known = log.select(col("url").as("m_url")).distinct()
-    val overCap = col("m_src").isNotNull || col("d") > HopCap
+    val overCap = col("m_src").isNotNull || col("hops") > HopCap
     val cls = r
-      .join(srcs, col("cur") === col("m_src"), "left")
-      .join(known, col("cur") === col("m_url"), "left")
+      .join(srcs, col("terminal") === col("m_src"), "left")
+      .join(known, col("terminal") === col("m_url"), "left")
       .select(col("src"),
         when(overCap, "too_many")
           .when(col("m_url").isNotNull, "resolved").otherwise("dangling").as("routcome"),
-        when(overCap, "").otherwise(col("cur")).as("rfinal"),
-        when(overCap, lit(HopCap + 1L)).otherwise(col("d")).cast("long").as("rhops"))
+        when(overCap, "").otherwise(col("terminal")).as("rfinal"),
+        when(overCap, lit(HopCap + 1L)).otherwise(col("hops")).cast("long").as("rhops"))
     val followed = col("status").isin(FollowedStatuses: _*) && col("location").isNotNull
     log.join(cls, log("url") === cls("src"), "left")
       .select(log("url"), col("status"),

@@ -23,45 +23,22 @@ import org.apache.spark.sql.functions._
 object Salsa {
 
   val SalsaIters = 8
-  val UnitMicro = 1000000L
+  val UnitMicro: Long = Hits.HitsUnitMicro
 
-  private def normalized(raw: DataFrame, outName: String): DataFrame = {
-    val tot = raw.agg(sum("raw").as("tot")).withColumn("k", lit(1))
-    raw.withColumn("k", lit(1))
-      .join(broadcast(tot), "k")
-      .select(col("url"), expr(s"raw * $UnitMicro div greatest(tot, 1)").as(outName))
-  }
-
-  /** The integer SALSA iteration over any (src, dst) edge frame. */
+  /** The integer SALSA iteration over any (src, dst) edge frame: distinct
+    * edges, each carrying its endpoint's score divided by the degree it
+    * traverses ([[Hits.hubAuthority]]'s loop). */
   def salsaKernel(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn.select("src", "dst").distinct().localCheckpoint()
     val outDeg = edges.groupBy("src").agg(count(lit(1)).as("out_deg")).localCheckpoint()
     val inDeg = edges.groupBy("dst").agg(count(lit(1)).as("in_deg")).localCheckpoint()
     val nodes = edges.select(col("src").as("url"))
       .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
-    var hub = nodes.select(col("url"), lit(UnitMicro).as("hub_micro"))
-    var auth: DataFrame = hub
-    for (_ <- 1 to SalsaIters) {
-      // authority: reverse walk — each hub i spreads hub(i)/out(i)
-      val aRaw = nodes.join(
-        edges.join(outDeg, "src")
-          .join(hub.withColumnRenamed("url", "src"), "src")
-          .select(col("dst").as("url"), expr("hub_micro div out_deg").as("c"))
-          .groupBy("url").agg(sum("c").as("s")),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("s"), lit(0L)).as("raw"))
-      auth = normalized(aRaw, "auth_micro").localCheckpoint()
-      // hub: forward walk — each authority j returns auth(j)/in(j)
-      val hRaw = nodes.join(
-        edges.join(inDeg, "dst")
-          .join(auth.withColumnRenamed("url", "dst"), "dst")
-          .select(col("src").as("url"), expr("auth_micro div in_deg").as("c"))
-          .groupBy("url").agg(sum("c").as("s")),
-        Seq("url"), "left")
-        .select(col("url"), coalesce(col("s"), lit(0L)).as("raw"))
-      hub = normalized(hRaw, "hub_micro").localCheckpoint()
-    }
-    auth.join(hub, "url")
+    // authority: reverse walk — each hub i spreads hub(i)/out(i);
+    // hub: forward walk — each authority j returns auth(j)/in(j)
+    Hits.hubAuthority(nodes, SalsaIters,
+        edges.join(outDeg, "src"), "hub_micro div out_deg",
+        edges.join(inDeg, "dst"), "auth_micro div in_deg")
       .join(inDeg.withColumnRenamed("dst", "url"), Seq("url"), "left")
       .join(outDeg.withColumnRenamed("src", "url"), Seq("url"), "left")
       .na.fill(0L, Seq("in_deg", "out_deg"))

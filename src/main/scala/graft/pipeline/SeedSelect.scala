@@ -70,24 +70,25 @@ object SeedSelect {
       .union(dir.select(col("a").as("s"), col("b").as("t")))
       .union(hop2)
       .distinct().localCheckpoint()
-    var covered = ball.select("t").limit(0).localCheckpoint()
     var coveredN = 0L
     val picks = Seq.newBuilder[(Long, String, Long, Long)]
-    var done = false
-    for (r <- 1 to SeedK if !done) {
+    // a ball already covered picks nothing: the round keeps its input and
+    // the loop stops
+    var exhausted = false
+    val (last, _) = Rounds.iterateUntil(ball.select("t").limit(0), SeedK) { (covered, r) =>
       val marginal = ball.join(covered, Seq("t"), "left_anti")
         .groupBy("s").agg(count(lit(1)).as("gain"))
         .orderBy(desc("gain"), asc("s")).limit(1).collect()
-      if (marginal.isEmpty) done = true
+      exhausted = marginal.isEmpty
+      if (exhausted) covered
       else {
         val (seed, gain) = (marginal(0).getString(0), marginal(0).getLong(1))
-        covered = covered
-          .union(ball.filter(col("s") === seed).select("t"))
-          .distinct().localCheckpoint()
         coveredN += gain
         picks += ((r.toLong, seed, gain, coveredN))
+        covered.union(ball.filter(col("s") === seed).select("t")).distinct()
       }
-    }
+    }((_, _) => exhausted)
+    Rounds.releaseBlocks(last)
     picks.result().toDF("round", "seed", "gain", "covered").orderBy("round")
   }
 

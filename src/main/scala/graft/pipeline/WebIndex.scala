@@ -258,34 +258,23 @@ object WebIndex {
     * (a, b)), so the symmetrize+distinct shuffle is skipped. */
   private[graft] def componentLabels(pairsIn: DataFrame,
                                      prepared: Boolean = false): DataFrame = {
-    val und = if (prepared) pairsIn else {
-      val dir0 = pairsIn.filter(col("a") =!= col("b"))
-      dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-        .distinct().localCheckpoint()
-    }
+    val und = if (prepared) pairsIn else Communities.undirected(pairsIn)
     val nodes = und.select(col("a").as("host")).distinct().localCheckpoint()
-    var e = und.select(col("a").as("u"), col("b").as("v")).distinct().localCheckpoint()
-    var eCount = e.count()
-    var converged = false
-    var round = 0
-    while (!converged && round < CcMaxRounds) {
-      round += 1
-      val prev = e
-      val next = ccRound(e).localCheckpoint()
-      // fixpoint test: the alternation's potential strictly decreases
-      // until the star state, so set-equality with the previous round is
-      // exactly convergence. Counts carry across rounds (one count job per
-      // round) and the keys-only anti-join runs only when counts agree.
+    val e0 = und.select(col("a").as("u"), col("b").as("v")).distinct().localCheckpoint()
+    var eCount = e0.count()
+    // fixpoint test: the alternation's potential strictly decreases until
+    // the star state, so set-equality with the previous round is exactly
+    // convergence. Counts carry across rounds (one count job per round)
+    // and the keys-only anti-join runs only when counts agree.
+    val (e, converged) = Rounds.iterateUntil(e0, CcMaxRounds)((x, _) => ccRound(x)) { (prev, next) =>
       val nextCount = next.count()
-      converged = nextCount == eCount && next.except(prev).isEmpty
-      e = next
+      val same = nextCount == eCount && next.except(prev).isEmpty
       eCount = nextCount
-      // prev's checkpoint blocks are dead the moment next materialized and
-      // the fixpoint test consumed them — release eagerly instead of
-      // waiting on ContextCleaner (many-levels callers: the percolation
-      // curves run this loop K+1 times per query)
-      graft.crawl.CrawlEngine.releaseBlocks(prev)
+      same
     }
+    // the seed edge set is this kernel's own (many-levels callers: the
+    // percolation curves run this loop K+1 times per query)
+    Rounds.releaseBlocks(e0)
     if (!converged) throw new IllegalStateException(
       s"components: star alternation did not converge in $CcMaxRounds rounds " +
         "— refusing to return possibly under-merged components")

@@ -42,36 +42,32 @@ object WlColors {
   def wlColors(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
     import spark.implicits._
-    val dir0 = pairsIn.filter(col("a") =!= col("b") &&
-      col("a") =!= "" && col("b") =!= "")
-    val und = dir0.union(dir0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    var colors = und.groupBy(col("a").as("host"))
-      .agg(count(lit(1)).cast("string").as("color")).localCheckpoint()
-    def census(): (Long, Long, Long, Long) = {
+    val und = Communities.undirected(pairsIn.filter(col("a") =!= "" && col("b") =!= ""))
+    val rows = Vector.newBuilder[(Long, Long, Long, Long, Long, Long)]
+    var prev = -1L
+    def census(colors: DataFrame, r: Int): Unit = {
       val c = colors.groupBy("color").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)), sum("n"), max("n"),
           sum(when(col("n") === 1, 1L).otherwise(0L))).head()
-      (c.getLong(1), c.getLong(0), c.getLong(2), c.getLong(3))
-    }
-    val rows = Vector.newBuilder[(Long, Long, Long, Long, Long, Long)]
-    var prev = -1L
-    for (r <- 0 to Rounds) {
-      if (r > 0) {
-        val nbr = und
-          .join(colors.select(col("host").as("b"), col("color").as("cb")), "b")
-          .groupBy(col("a").as("host"))
-          .agg(array_join(sort_array(collect_list(col("cb"))), ",").as("nbrs"))
-        colors = colors.join(nbr, "host")
-          .select(col("host"),
-            hash44(concat(col("color"), lit("|"), col("nbrs"))).cast("string").as("color"))
-          .localCheckpoint()
-      }
-      val (nHosts, nColors, maxClass, singles) = census()
-      rows += ((r.toLong, nHosts, nColors, maxClass, singles,
+      val nColors = c.getLong(0)
+      rows += ((r.toLong, c.getLong(1), nColors, c.getLong(2), c.getLong(3),
         if (nColors == prev) 1L else 0L))
       prev = nColors
     }
+    val degrees = und.groupBy(col("a").as("host"))
+      .agg(count(lit(1)).cast("string").as("color")).localCheckpoint()
+    // each round first takes the census of the coloring it refines
+    val last = graft.pipeline.Rounds.iterate(degrees, Rounds) { (colors, r) =>
+      census(colors, r - 1)
+      val nbr = und
+        .join(colors.select(col("host").as("b"), col("color").as("cb")), "b")
+        .groupBy(col("a").as("host"))
+        .agg(array_join(sort_array(collect_list(col("cb"))), ",").as("nbrs"))
+      colors.join(nbr, "host")
+        .select(col("host"),
+          hash44(concat(col("color"), lit("|"), col("nbrs"))).cast("string").as("color"))
+    }
+    census(last, Rounds)
     rows.result()
       .toDF("round", "n_hosts", "n_colors", "max_class", "singletons", "converged")
       .orderBy("round")

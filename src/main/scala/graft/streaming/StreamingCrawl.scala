@@ -7,6 +7,7 @@ import org.apache.spark.storage.StorageLevel
 import graft.crawl.CrawlEngine
 import graft.frontier.Frontier
 import graft.model.{CrawlConfig, FrontierEntry, PageRow}
+import graft.pipeline.Rounds.releaseBlocks
 
 /** The batch engine's BFS crawl re-expressed as a STREAMING frontier: the
   * wave loop's only mutable state — the priority backlog and the seen set —
@@ -74,7 +75,7 @@ object StreamingCrawl {
     try {
     val prepared = CrawlEngine.preparePages(pages, registerRelease = f => crawlCaches.add(f()))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    crawlCaches.add(prepared.unpersist())
+    crawlCaches.add(releaseBlocks(prepared))
     // the Crawl-delay caps ride into the scheduler's keyed state via a
     // stream-static broadcast join so the twins release identical tranches
     val robots = CrawlEngine.robotsTables(pages, config, f => crawlCaches.add(f()))
@@ -145,7 +146,7 @@ object StreamingCrawl {
       val released = StreamingScheduler.readOutput(spark, schedDir)
         .filter(col("emittedAtMs") === waveClock(wave))
         .persist(StorageLevel.MEMORY_AND_DISK)
-      waveCaches.add(released.unpersist())
+      waveCaches.add(releaseBlocks(released))
       val relCount = released.count()
 
       if (relCount == 0L) {
@@ -156,7 +157,7 @@ object StreamingCrawl {
         val fetched = CrawlEngine.fetchJoin(prepared, released, relCount, config.broadcastWaveMaxRows)
         val extracted = CrawlEngine.fusedExtract(fetched, wave, retryHints = false)
           .persist(StorageLevel.MEMORY_AND_DISK)
-        waveCaches.add(extracted.unpersist())
+        waveCaches.add(releaseBlocks(extracted))
 
         val stats = extracted.toDF()
           .agg(count(lit(1)), sum(when(col("parityOk"), 0L).otherwise(1L))).head()

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, explode, expr, length, lit, sequence, substring, when}
 import graft.pipeline.Relational
 
@@ -23,9 +23,10 @@ object PlanCheck {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    var failures = 0
+    var (checks, failures) = (0, 0)
     def check(name: String, cond: Boolean, detail: String): Unit = {
       println(s"${if (cond) "PASS" else "FAIL"}  $name — $detail")
+      checks += 1
       if (!cond) failures += 1
     }
 
@@ -654,26 +655,34 @@ object PlanCheck {
       val nodes = edges.select(col("src").as("url"))
         .union(edges.select(col("dst").as("url"))).distinct().localCheckpoint()
 
+      // rounds 2..4 of `round` driven by the kernels' Rounds loop: their
+      // executed-plan sizes and round 4's plan (round 1's input is the
+      // only non-checkpointed frame)
+      def roundPlans(init: DataFrame)(round: DataFrame => DataFrame): (List[Int], String) = {
+        var sizes = List.empty[Int]
+        var plan = ""
+        graft.pipeline.Rounds.iterate(init, 4) { (x, r) =>
+          val next = round(x)
+          if (r >= 2) {
+            plan = next.queryExecution.executedPlan.toString
+            sizes :+= plan.linesIterator.size
+          }
+          next
+        }
+        (sizes, plan)
+      }
+
       // pagerank round (CrawlQueries.pageRankRound — q_pagerank/q_hostrank)
       val weighted = graft.pipeline.CrawlQueries.weightedEdges(edges)
-      var pr = nodes.select(col("url"), lit(1000000L).as("rank_micro"))
-      var prSizes = List.empty[Int]
-      var prPlan = ""
-      for (r <- 1 to 4) {
-        val next = graft.pipeline.CrawlQueries.pageRankRound(weighted, nodes, pr)
-        if (r >= 2) { // round 1's input is the only non-checkpointed frame
-          prSizes ::= next.queryExecution.executedPlan.toString.linesIterator.size
-          prPlan = next.queryExecution.executedPlan.toString
-        }
-        pr = next.localCheckpoint()
-      }
+      val (prSizes, prPlan) = roundPlans(nodes.select(col("url"), lit(1000000L).as("rank_micro")))(
+        graft.pipeline.CrawlQueries.pageRankRound(weighted, nodes, _))
       check("pagerank-round/map-side-hash-only",
         prPlan.contains("partial_sum") && !prPlan.contains("SortMergeJoin") &&
           !prPlan.contains("CartesianProduct"),
         "contribution sum combines map-side; edges⋈ranks stays a hash join")
       check("pagerank-round/constant-plan",
         prSizes.distinct.size == 1,
-        s"per-round executed-plan size constant across checkpointed rounds: ${prSizes.reverse}")
+        s"per-round executed-plan size constant across checkpointed rounds: $prSizes")
 
       // the same round at K = 2 (TrustRank.trustRank): PageRank with the
       // uniform floor and trust with the seeded per-node floor share ONE
@@ -682,46 +691,27 @@ object PlanCheck {
         when(graft.pipeline.TrustRank.seedCol(col("url")), lit(150000L)).otherwise(lit(0L)))
         .localCheckpoint()
       val trFloors = Seq("pr_micro" -> "150000", "tr_micro" -> "tr_floor")
-      var tr = seeded.select(col("url"), lit(1000000L).as("pr_micro"),
-        when(col("tr_floor") > 0L, lit(1000000L)).otherwise(lit(0L)).as("tr_micro"))
-      var trSizes = List.empty[Int]
-      var trPlan = ""
-      for (r <- 1 to 4) {
-        val next = graft.pipeline.CrawlQueries.pageRankRound(weighted, seeded, tr, trFloors)
-        if (r >= 2) {
-          trSizes ::= next.queryExecution.executedPlan.toString.linesIterator.size
-          trPlan = next.queryExecution.executedPlan.toString
-        }
-        tr = next.localCheckpoint()
-      }
+      val (trSizes, trPlan) = roundPlans(seeded.select(col("url"), lit(1000000L).as("pr_micro"),
+          when(col("tr_floor") > 0L, lit(1000000L)).otherwise(lit(0L)).as("tr_micro")))(
+        graft.pipeline.CrawlQueries.pageRankRound(weighted, seeded, _, trFloors))
       check("trustrank-round/map-side-hash-only",
         "partial_sum".r.findAllIn(trPlan).size >= 2 && !trPlan.contains("SortMergeJoin") &&
           !trPlan.contains("CartesianProduct"),
         "both rank columns' sums combine map-side in one aggregate; joins stay hashed")
       check("trustrank-round/constant-plan",
         trSizes.distinct.size == 1,
-        s"per-round executed-plan size constant across checkpointed rounds: ${trSizes.reverse}")
+        s"per-round executed-plan size constant across checkpointed rounds: $trSizes")
 
       // components round (WebIndex.ccRound — q_host_components family)
-      var cce = edges.select(col("src").as("u"), col("dst").as("v"))
-        .where(col("u") =!= col("v")).distinct().localCheckpoint()
-      var ccSizes = List.empty[Int]
-      var ccPlan = ""
-      for (r <- 1 to 4) {
-        val next = graft.pipeline.WebIndex.ccRound(cce)
-        if (r >= 2) {
-          ccSizes ::= next.queryExecution.executedPlan.toString.linesIterator.size
-          ccPlan = next.queryExecution.executedPlan.toString
-        }
-        cce = next.localCheckpoint()
-      }
+      val (ccSizes, ccPlan) = roundPlans(edges.select(col("src").as("u"), col("dst").as("v"))
+        .where(col("u") =!= col("v")).distinct().localCheckpoint())(graft.pipeline.WebIndex.ccRound)
       check("cc-round/map-side-hash-only",
         ccPlan.contains("partial_min") && !ccPlan.contains("SortMergeJoin") &&
           !ccPlan.contains("CartesianProduct"),
         "star minima combine map-side; star joins stay hashed")
       check("cc-round/constant-plan",
         ccSizes.distinct.size == 1,
-        s"per-round executed-plan size constant across checkpointed rounds: ${ccSizes.reverse}")
+        s"per-round executed-plan size constant across checkpointed rounds: $ccSizes")
 
       // harmonic MS-BFS step (Centrality.harmonicStep — q_harmonic)
       val init = nodes.select(col("url"), lit(0).as("grp"), lit(1L).as("mask"))
@@ -838,7 +828,8 @@ object PlanCheck {
         "offset-exploded pairing joins keyed on (doc_id, pos); aggs combine map-side")
     }
 
-    println(if (failures == 0) "\nALL PLAN CHECKS PASS" else s"\n$failures PLAN CHECKS FAILED")
+    println(if (failures == 0) s"\nALL $checks PLAN CHECKS PASS"
+      else s"\n$failures of $checks PLAN CHECKS FAILED")
     // full plans for the record
     println("\n=== q_filter_pushdown plan ===")
     q6.explain("formatted")

@@ -15,6 +15,10 @@ import graft.tools.GoldenGen
 class CrawlEngineSpec extends AnyFunSuite {
 
   private def withSpark[T](master: String, partitions: Int = 4)(f: SparkSession => T): T = {
+    // a fresh SparkContext: the leak assertions below must see only this
+    // crawl's RDDs, not what an earlier suite's session left persisted
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getDefaultSession.foreach(_.stop())
     val spark = SparkSession.builder()
       .master(master)
       .appName("graft-test")

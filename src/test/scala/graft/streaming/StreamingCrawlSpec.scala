@@ -17,6 +17,10 @@ import graft.tools.GoldenGen
 class StreamingCrawlSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = {
+    // a fresh SparkContext: the leak assertions below must see only this
+    // suite's RDDs, not what an earlier suite's session left persisted
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.getDefaultSession.foreach(_.stop())
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-streaming-crawl-test")
