@@ -1,7 +1,6 @@
 package graft.pipeline
 
-import java.nio.charset.StandardCharsets.UTF_8
-
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,10 +35,6 @@ import graft.extract.HtmlKit
   * a codegen regexp; the digest collapse is one keyed window. Payloads
   * never shuffle. */
 object CanonicalCascade {
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString
 
   private[pipeline] def digit(s: String, salt: String): Int =
     md5Hex(s + salt).charAt(0).toInt

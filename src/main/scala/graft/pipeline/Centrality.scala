@@ -84,7 +84,8 @@ object Centrality {
     var frontier = seen                   // bits with d(u,v) = t exactly
     val counts = Vector.newBuilder[DataFrame]
     // hand-written, not Rounds: the returned plan reads every round's
-    // frontier (through `counts`); only the superseded seen mask is released
+    // frontier (through `counts`); only the superseded seen mask is
+    // released, and the last round's mask, which nothing reads, is never built
     for (t <- 1 to MaxDist) {
       frontier = harmonicStep(edges, frontier, seen)
         .localCheckpoint() // lineage cut: constant executed-plan size per round
@@ -92,7 +93,7 @@ object Centrality {
         .agg(sum(expr("bit_count(mask)")).cast("long").as("cnt"))
         .withColumn("d", lit(t))
       val prev = seen
-      seen = seen.union(frontier).groupBy("url", "grp")
+      if (t < MaxDist) seen = seen.union(frontier).groupBy("url", "grp")
         .agg(expr("bit_or(mask)").as("mask")).localCheckpoint()
       Rounds.releaseBlocks(prev)
     }

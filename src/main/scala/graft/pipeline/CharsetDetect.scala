@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.charset.{Charset, StandardCharsets}
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.extract.CharsetKit
@@ -24,10 +25,6 @@ import graft.extract.CharsetKit
 object CharsetDetect {
 
   private[pipeline] val Salt = ":graft-charset-v1"
-
-  private def md5Hex(b: Array[Byte]): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(b).map("%02x".format(_)).mkString
 
   private[pipeline] def variantOf(id: Long): Int =
     md5Hex(s"$id$Salt".getBytes(StandardCharsets.UTF_8)).charAt(0).toInt % 8

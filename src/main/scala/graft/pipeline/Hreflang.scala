@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,10 +36,6 @@ import graft.extract.HtmlKit
 object Hreflang {
 
   private[pipeline] val Salt = ":graft-hreflang-v1"
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private[pipeline] def d(key: String, i: Int): Int = md5Hex(key + Salt).charAt(i).toInt
 

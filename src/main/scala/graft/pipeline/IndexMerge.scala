@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -29,10 +30,6 @@ object IndexMerge {
   private[pipeline] val EditSalt = ":graft-idx-v1"
   private[pipeline] val NewUrl = "plant://idx/new"
   private[pipeline] val NewText = "fresh plant page rev2 tokens never seen before"
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   /** day-7 edit class for a url: 0 = update, 1 = delete, 2 = unchanged. */
   private[pipeline] def editClass(url: String): Int = {

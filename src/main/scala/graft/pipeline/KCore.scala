@@ -76,7 +76,8 @@ object KCore {
       peeled = peeled.union(drop.select(col("host"), lit(r.toLong).as("peel_round")))
       val (prevAlive, prevUnd) = (alive, und)
       alive = alive.join(drop, Seq("host"), "left_anti").localCheckpoint()
-      und = und
+      // the last round's edge set is never read, so it is never built
+      if (r < PeelRounds) und = und
         .join(drop.withColumnRenamed("host", "a"), Seq("a"), "left_anti")
         .join(drop.withColumnRenamed("host", "b"), Seq("b"), "left_anti")
         .select("a", "b").localCheckpoint()

@@ -48,11 +48,15 @@ object Opic {
     val init = nodes.select(col("url"),
       lit(CashUnitMicro).as("cash"), lit(0L).as("hist"), lit(0L).as("n_crawled"))
       .localCheckpoint()
-    val last = Rounds.iterate(init, Waves) { (state, _) =>
+    // each wave's selection is read only by its own round, so all are
+    // released once the last round has materialized (or a round failed)
+    val sels = Vector.newBuilder[DataFrame]
+    val last = try Rounds.iterate(init, Waves) { (state, _) =>
       // bounded-heap top-k: TakeOrderedAndProject, never a global sort
       val sel = state.orderBy(desc("cash"), asc("url")).limit(WaveK)
         .select(col("url").as("src"), col("cash").as("sel_cash"))
         .localCheckpoint()
+      sels += sel
       val recv = edges.join(sel, "src")
         .join(outDeg, "src")
         .select(col("dst").as("url"), expr("sel_cash div out_deg").as("c"))
@@ -66,7 +70,7 @@ object Opic {
             + coalesce(col("recv"), lit(0L))).as("cash"),
           (col("hist") + when(col("s"), col("cash")).otherwise(lit(0L))).as("hist"),
           (col("n_crawled") + when(col("s"), 1L).otherwise(0L)).as("n_crawled"))
-    }
+    } finally sels.result().foreach(Rounds.releaseBlocks)
     last.select("url", "hist", "cash", "n_crawled").orderBy("url")
   }
 

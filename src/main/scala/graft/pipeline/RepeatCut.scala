@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,11 +52,6 @@ object RepeatCut {
     }
     out.toSeq
   }
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
 
   /** Slice by 1-based code-point interval [from, until). */
   private def sliceCp(s: String, fromCp: Long, untilCp: Long): String = {

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,10 +35,6 @@ object RevisitQueries {
 
   /** Salt for the deterministic changed-subset of the second capture. */
   private val ChangeSalt = ":graft-warc-chg-v1"
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(UTF_8)).map("%02x".format(_)).mkString
 
   /** Temp dir whose named files are reclaimed at JVM exit (the returned
     * DataFrames read lazily, so deletion can't happen earlier; register

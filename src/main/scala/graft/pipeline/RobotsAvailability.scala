@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.politeness.Robots
@@ -31,10 +32,6 @@ import graft.politeness.Robots
 object RobotsAvailability {
 
   private[pipeline] val Salt = ":graft-robotsavail-v2"
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   private def hv(c: Char): Int = Character.digit(c, 16)
 

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import org.apache.commons.codec.digest.DigestUtils.md5Hex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.extract.HtmlKit
@@ -38,11 +39,6 @@ object RobotsMeta {
 
   private[pipeline] val MetaSalt = ":graft-robotsmeta-v1"
   private[pipeline] val LinkSalt = ":graft-relnofollow-v1:"
-
-  private def md5Hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
 
   /** The 8 planted meta-robots shapes. Digit → (html fragment, the
     * directives a CORRECT parser must report as (noindex, nofollow)). */

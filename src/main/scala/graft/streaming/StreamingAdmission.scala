@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.pipeline.Dedup
 
@@ -37,16 +36,16 @@ object StreamingAdmission {
 
   final case class Doc(doc_id: Long, text: String)
 
+  /** An admitted doc, partitioned by the micro-batch that admitted it. */
+  final case class Admitted(doc_id: Long, text: String, batch_id: Long)
+
+  /** One admission decision; a new doc has no match. */
+  final case class Decision(doc_id: Long, admitted: Int, reason: String,
+                            match_doc_id: Option[Long], jaccard_milli: Option[Long],
+                            batch_id: Long)
+
   /** Jaccard admission threshold — same contract as the batch operator. */
   val Threshold = 0.5
-
-  private val docSchema: StructType = Encoders.product[Doc].schema
-  private val admittedSchema: StructType = docSchema.add("batch_id", LongType)
-  private[streaming] val decisionSchema: StructType = new StructType()
-    .add("doc_id", LongType).add("admitted", org.apache.spark.sql.types.IntegerType)
-    .add("reason", org.apache.spark.sql.types.StringType)
-    .add("match_doc_id", LongType).add("jaccard_milli", LongType)
-    .add("batch_id", LongType)
 
   /** Drain all currently-available document files, exactly once: one
     * decision row per incoming doc into `decisionsDir`, admitted docs
@@ -61,17 +60,14 @@ object StreamingAdmission {
       decisionsDir: String,
       checkpointDir: String
   ): Unit = {
-    val corpus = spark.read.parquet(corpusPath).select(col("doc_id"), col("text"))
-    val stream = spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", "1") // one crawl wave per micro-batch
-      .parquet(inputDir)
-    val query = stream.writeStream
+    val corpus = SinkIO.input[Doc](spark, corpusPath)
+    val query = SinkIO.source[Doc](spark, inputDir, 1) // one crawl wave per micro-batch
+      .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         // the index this batch admits against: seed corpus + every EARLIER
         // batch's admissions (strictly earlier — a failure-retry must not
         // see its own half-committed partition)
-        val admittedSoFar = SinkIO.readSink(spark, admittedDir, admittedSchema)
+        val admittedSoFar = SinkIO.read[Admitted](spark, admittedDir)
           .filter(col("batch_id") < batchId)
           .select("doc_id", "text")
         val index = corpus.union(admittedSoFar)
@@ -102,12 +98,12 @@ object StreamingAdmission {
 
   /** All decisions so far, ordered; empty-with-schema before first commit. */
   def decisions(spark: SparkSession, decisionsDir: String): DataFrame =
-    SinkIO.readSink(spark, decisionsDir, decisionSchema)
+    SinkIO.read[Decision](spark, decisionsDir)
       .orderBy("batch_id", "doc_id")
 
   /** The admitted corpus extension so far (what a deployment would build
     * its incremental `lshBuckets` index over). */
   def admitted(spark: SparkSession, admittedDir: String): DataFrame =
-    SinkIO.readSink(spark, admittedDir, admittedSchema)
+    SinkIO.read[Admitted](spark, admittedDir)
       .orderBy("batch_id", "doc_id")
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.extract.HtmlKit
 import graft.model.PageRow
@@ -42,30 +41,14 @@ object StreamingAnchors {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[PageRow].schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "8") // bounded micro-batches
-      .parquet(inputDir)
-      .as[PageRow]
-      .flatMap(sightingsOf _)
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // bounded micro-batches
+    SinkIO.drain[PageRow](spark, inputDir, 8, outputDir, checkpointDir)(
+      _.as[PageRow].flatMap(sightingsOf _))
   }
 
   /** The consensus view over the accumulated sightings log — the SAME
     * aggregation as the batch `q_anchor_text` (shared definition, so the
-    * two can never disagree), over the shared sink-resume read
-    * ([[SinkIO.readSink]]: explicit schema, Hadoop-FS probe,
-    * empty-before-first-commit). */
+    * two can never disagree), over the shared sink read ([[SinkIO.read]]). */
   def consensus(spark: SparkSession, outputDir: String): DataFrame =
-    graft.pipeline.CrawlQueries.anchorAgg(
-      SinkIO.readSink(spark, outputDir,
-        org.apache.spark.sql.Encoders.product[Sighting].schema))
+    graft.pipeline.CrawlQueries.anchorAgg(SinkIO.read[Sighting](spark, outputDir))
 }

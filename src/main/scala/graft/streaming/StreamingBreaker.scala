@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.pipeline.CircuitBreaker
 
@@ -35,37 +35,27 @@ object StreamingBreaker {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[Intent].schema
-    val decisions = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one wave per micro-batch
-      .parquet(inputDir)
-      .as[Intent]
-      .groupByKey(_.host)
-      .flatMapGroupsWithState[CircuitBreaker.BreakerState, Decision](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (host: String, rows: Iterator[Intent],
-         state: GroupState[CircuitBreaker.BreakerState]) =>
-          var s = if (state.exists) state.get else CircuitBreaker.Initial
-          val out = rows.toSeq.sortBy(_.tick).map { in =>
-            val (next, stateBefore, action) = CircuitBreaker.step(s, in.ok)
-            s = next
-            Decision(host, in.tick, in.ok, stateBefore, action)
-          }
-          state.update(s)
-          out.iterator
-      }
-    val q = decisions.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // one wave per micro-batch
+    SinkIO.drain[Intent](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source.as[Intent]
+        .groupByKey(_.host)
+        .flatMapGroupsWithState[CircuitBreaker.BreakerState, Decision](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (host: String, rows: Iterator[Intent],
+           state: GroupState[CircuitBreaker.BreakerState]) =>
+            var s = if (state.exists) state.get else CircuitBreaker.Initial
+            val out = rows.toSeq.sortBy(_.tick).map { in =>
+              val (next, stateBefore, action) = CircuitBreaker.step(s, in.ok)
+              s = next
+              Decision(host, in.tick, in.ok, stateBefore, action)
+            }
+            state.update(s)
+            out.iterator
+        }
+    }
   }
 
-  /** Committed decisions (explicit schema: an empty sink reads empty). */
+  /** Committed decisions ([[SinkIO.read]]: empty before the first commit). */
   def readOutput(spark: SparkSession, outputDir: String): DataFrame =
-    spark.read.schema(Encoders.product[Decision].schema).parquet(outputDir)
+    SinkIO.read[Decision](spark, outputDir)
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.pipeline.Cardinality
 
@@ -52,43 +52,33 @@ object StreamingCardinality {
   ): Unit = {
     import spark.implicits._
     val agg = new Cardinality.KmvAgg(Cardinality.K)
-    val schema = Encoders.product[Sighting].schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one discovery wave per micro-batch
-      .parquet(inputDir)
-      .filter(col("url").startsWith("http"))
-      .select(Cardinality.hostCol(col("url")).as("host"),
-        Cardinality.urlHashCol(col("url")).as("h"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KmvState, HostEstimate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (host: String, rows: Iterator[(String, Long)], state: GroupState[KmvState]) =>
-          val prev = state.getOption.getOrElse(KmvState(Array.empty[Long], 0L))
-          var mins = prev.mins
-          var n = prev.sightings
-          rows.foreach { case (_, h) => mins = agg.reduce(mins, h); n += 1L }
-          state.update(KmvState(mins, n))
-          Iterator.single(HostEstimate(host, n, mins.length,
-            Cardinality.estimate(mins, Cardinality.K)))
-      }
-    val query = events.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // one discovery wave per micro-batch
+    SinkIO.drain[Sighting](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source
+        .filter(col("url").startsWith("http"))
+        .select(Cardinality.hostCol(col("url")).as("host"),
+          Cardinality.urlHashCol(col("url")).as("h"))
+        .as[(String, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[KmvState, HostEstimate](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (host: String, rows: Iterator[(String, Long)], state: GroupState[KmvState]) =>
+            val prev = state.getOption.getOrElse(KmvState(Array.empty[Long], 0L))
+            var mins = prev.mins
+            var n = prev.sightings
+            rows.foreach { case (_, h) => mins = agg.reduce(mins, h); n += 1L }
+            state.update(KmvState(mins, n))
+            Iterator.single(HostEstimate(host, n, mins.length,
+              Cardinality.estimate(mins, Cardinality.K)))
+        }
+    }
   }
 
   /** The current estimate per host from the accumulated event log: the
-    * last (max cumulative sightings) event per host. Reads an uncommitted
-    * sink as empty-with-schema via the shared [[SinkIO.readSink]]
-    * discipline (explicit schema, Hadoop-FS probe — never a broad catch). */
+    * last (max cumulative sightings) event per host; an uncommitted sink
+    * reads as empty ([[SinkIO.read]]). */
   def current(spark: SparkSession, outputDir: String): org.apache.spark.sql.DataFrame = {
-    val log = SinkIO.readSink(spark, outputDir, Encoders.product[HostEstimate].schema)
+    val log = SinkIO.read[HostEstimate](spark, outputDir)
     log.groupBy("host")
       .agg(max(struct(col("sightings"), col("sketch_size"), col("kmv_estimate"))).as("last"))
       .select(col("host"), col("last.sightings").as("sightings"),

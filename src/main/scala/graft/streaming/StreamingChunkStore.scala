@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming chunk-store admission — the exactly-once streaming twin of
   * [[graft.pipeline.Cdc.cdcChunks]]'s batch anti-join: captures arrive
@@ -30,7 +30,26 @@ object StreamingChunkStore {
 
   final case class Admitted(hash: Long, len: Int, url: String, offset: Int)
 
-  /** Drain all available input waves through the first-seen filter. */
+  /** Keyed first-seen admission, shared with [[StreamingGramStore]]: the
+    * first micro-batch that carries a key emits one row, built from that
+    * batch's `less`-minimal sighting; every later sighting of the key is
+    * dropped. State is one boolean per admitted key. */
+  private[streaming] def firstSeen[S, K: Encoder, O: Encoder](sightings: Dataset[S])(
+      key: S => K)(less: (S, S) => Boolean)(admit: (K, S) => O): Dataset[O] = {
+    import sightings.sparkSession.implicits.newBooleanEncoder
+    sightings.groupByKey(key)
+      .flatMapGroupsWithState[Boolean, O](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (k: K, rows: Iterator[S], state: GroupState[Boolean]) =>
+          if (state.exists) Iterator.empty // already stored — drop every sighting
+          else {
+            state.update(true)
+            Iterator.single(admit(k, rows.reduceLeft((a, b) => if (less(b, a)) b else a)))
+          }
+      }
+  }
+
+  /** Drain all available input waves through the first-seen filter; the
+    * representative is the (url, offset)-minimal sighting. */
   def runAvailableNow(
       spark: SparkSession,
       inputDir: String,
@@ -38,40 +57,15 @@ object StreamingChunkStore {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[ChunkSighting].schema
-    val admitted = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one capture wave per micro-batch
-      .parquet(inputDir)
-      .as[ChunkSighting]
-      .groupByKey(c => (c.hash, c.len))
-      .flatMapGroupsWithState[Boolean, Admitted](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (Long, Int), rows: Iterator[ChunkSighting], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty // already stored — drop every sighting
-          else {
-            // deterministic representative of this batch's sightings
-            var best: ChunkSighting = null
-            rows.foreach { c =>
-              if (best == null || c.url < best.url ||
-                  (c.url == best.url && c.offset < best.offset)) best = c
-            }
-            state.update(true)
-            Iterator.single(Admitted(key._1, key._2, best.url, best.offset))
-          }
-      }
-    val q = admitted.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // one capture wave per micro-batch
+    SinkIO.drain[ChunkSighting](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      firstSeen(source.as[ChunkSighting])(c => (c.hash, c.len))(
+        (a, b) => a.url < b.url || (a.url == b.url && a.offset < b.offset))(
+        (k, c) => Admitted(k._1, k._2, c.url, c.offset))
+    }
   }
 
-  /** The store so far (empty-safe before the first commit). */
+  /** The store so far ([[SinkIO.read]]: empty before the first commit). */
   def stored(spark: SparkSession, outputDir: String): DataFrame =
-    SinkIO.readSink(spark, outputDir,
-      org.apache.spark.sql.Encoders.product[Admitted].schema)
+    SinkIO.read[Admitted](spark, outputDir)
 }

@@ -116,12 +116,8 @@ object StreamingCrawl {
     // resume: continue at the last wave that released anything (its fetch is
     // re-derived — pure recompute — and later writes are absent-guarded)
     val priorMax: Option[Long] = {
-      val sd = new java.io.File(schedDir)
-      if (!sd.exists()) None
-      else {
-        val m = StreamingScheduler.readOutput(spark, schedDir).agg(max(col("emittedAtMs"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      }
+      val m = StreamingScheduler.readOutput(spark, schedDir).agg(max(col("emittedAtMs"))).head()
+      if (m.isNullAt(0)) None else Some(m.getLong(0))
     }
     if (priorMax.isEmpty) {
       val seedEntries = Frontier.dedupeWave(spark,

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured Streaming twin of the snapshot-delta family
   * ([[graft.pipeline.Freshness.crawlDelta]]): continuous change detection.
@@ -67,55 +67,45 @@ object StreamingDelta {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[Capture].schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one capture wave per micro-batch
-      .parquet(inputDir)
-      .as[Capture]
-      .groupByKey(_.url_id)
-      .flatMapGroupsWithState[LastSeen, ChangeEvent](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[Capture], state: GroupState[LastSeen]) =>
-          // captures per (url, micro-batch) are bounded by waves-per-file ×
-          // maxFilesPerTrigger — a handful, so the sort is O(1) per key
-          val ordered = rows.toArray.sortBy(c =>
-            (c.capture_ts.getTime, Option(c.content_hash).getOrElse("")))
-          val out = Vector.newBuilder[ChangeEvent]
-          var last = state.getOption.orNull
-          ordered.foreach { c =>
-            val h = Option(c.content_hash).getOrElse("")
-            val t = c.capture_ts.getTime
-            if (last != null && t < last.ts) {
-              // cross-batch straggler: older than what's already classified
-              out += ChangeEvent(c.url_id, c.capture_ts, h, "", "late")
-            } else {
-              val status =
-                if (last == null) "added"
-                else if (last.hash == h) "unchanged"
-                else "changed"
-              out += ChangeEvent(c.url_id, c.capture_ts, h,
-                if (last == null) "" else last.hash, status)
-              last = LastSeen(t, h)
+    // one capture wave per micro-batch
+    SinkIO.drain[Capture](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source.as[Capture]
+        .groupByKey(_.url_id)
+        .flatMapGroupsWithState[LastSeen, ChangeEvent](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (_: Long, rows: Iterator[Capture], state: GroupState[LastSeen]) =>
+            // captures per (url, micro-batch) are bounded by waves-per-file ×
+            // maxFilesPerTrigger — a handful, so the sort is O(1) per key
+            val ordered = rows.toArray.sortBy(c =>
+              (c.capture_ts.getTime, Option(c.content_hash).getOrElse("")))
+            val out = Vector.newBuilder[ChangeEvent]
+            var last = state.getOption.orNull
+            ordered.foreach { c =>
+              val h = Option(c.content_hash).getOrElse("")
+              val t = c.capture_ts.getTime
+              if (last != null && t < last.ts) {
+                // cross-batch straggler: older than what's already classified
+                out += ChangeEvent(c.url_id, c.capture_ts, h, "", "late")
+              } else {
+                val status =
+                  if (last == null) "added"
+                  else if (last.hash == h) "unchanged"
+                  else "changed"
+                out += ChangeEvent(c.url_id, c.capture_ts, h,
+                  if (last == null) "" else last.hash, status)
+                last = LastSeen(t, h)
+              }
             }
-          }
-          if (last != null) state.update(last)
-          out.result().iterator
-      }
-    val q = events.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+            if (last != null) state.update(last)
+            out.result().iterator
+        }
+    }
   }
 
-  /** The shared sink-resume discipline ([[SinkIO.readSink]]): explicit
-    * schema, Hadoop-FS existence probe, empty-before-first-commit. */
+  /** The committed event log ([[SinkIO.read]]: empty before the first
+    * commit). */
   def readEvents(spark: SparkSession, outputDir: String): DataFrame =
-    SinkIO.readSink(spark, outputDir, Encoders.product[ChangeEvent].schema)
+    SinkIO.read[ChangeEvent](spark, outputDir)
 
   /** Recrawl schedule over the OBSERVED event log: n_caps = classified
     * captures (`late` stragglers carry no transition and are excluded),

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.extract.{HtmlKit, TextKit}
 import graft.model.PageRow
@@ -46,24 +45,14 @@ object StreamingExtract {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = org.apache.spark.sql.Encoders.product[PageRow].schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "8") // bounded micro-batches (channel capacity analogue)
-      .parquet(inputDir)
-      .as[PageRow]
-      .map(extractRow)
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // bounded micro-batches (channel capacity analogue)
+    SinkIO.drain[PageRow](spark, inputDir, 8, outputDir, checkpointDir) { source =>
+      source.as[PageRow].map(extractRow)
+    }
   }
 
-  /** Read back the streamed output. */
+  /** Read back the streamed output ([[SinkIO.read]]: empty before the
+    * first commit). */
   def readOutput(spark: SparkSession, outputDir: String): DataFrame =
-    spark.read.parquet(outputDir)
+    SinkIO.read[StreamedPage](spark, outputDir)
 }

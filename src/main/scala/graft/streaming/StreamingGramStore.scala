@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Streaming gram-store admission — the streaming twin of
   * [[graft.pipeline.GramNovelty]]'s corpus-wide repeated-span ledger,
@@ -42,7 +41,8 @@ object StreamingGramStore {
       .distinct.map(GramSighting(docId, _))
   }
 
-  /** Drain all available input waves through the first-seen filter. */
+  /** Drain all available input waves through the shared first-seen
+    * filter ([[StreamingChunkStore.firstSeen]]). */
   def runAvailableNow(
       spark: SparkSession,
       inputDir: String,
@@ -50,38 +50,17 @@ object StreamingGramStore {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[GramSighting].schema
-    val admitted = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one capture wave per micro-batch
-      .parquet(inputDir)
-      .as[GramSighting]
-      .groupByKey(_.g)
-      .flatMapGroupsWithState[Boolean, AdmittedGram](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[GramSighting], state: GroupState[Boolean]) =>
-          if (state.exists) Iterator.empty
-          else {
-            var best = Long.MaxValue
-            rows.foreach(s => if (s.doc_id < best) best = s.doc_id)
-            state.update(true)
-            Iterator.single(AdmittedGram(g, best))
-          }
-      }
-    val q = admitted.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // one capture wave per micro-batch
+    SinkIO.drain[GramSighting](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      StreamingChunkStore.firstSeen(source.as[GramSighting])(_.g)(_.doc_id < _.doc_id)(
+        (g, s) => AdmittedGram(g, s.doc_id))
+    }
   }
 
-  /** The admitted store so far (empty-safe before the first commit). */
+  /** The admitted store so far ([[SinkIO.read]]: empty before the first
+    * commit). */
   def stored(spark: SparkSession, outputDir: String): DataFrame =
-    SinkIO.readSink(spark, outputDir,
-      org.apache.spark.sql.Encoders.product[AdmittedGram].schema)
+    SinkIO.read[AdmittedGram](spark, outputDir)
 
   /** Per-document live novelty ledger: grams this doc admitted first. */
   def noveltyLedger(spark: SparkSession, outputDir: String): DataFrame = {

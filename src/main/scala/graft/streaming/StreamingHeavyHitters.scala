@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.pipeline.{Cardinality, HeavyHitters}
 
@@ -58,39 +58,30 @@ object StreamingHeavyHitters {
       checkpointDir: String
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[Sighting].schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one discovery wave per micro-batch
-      .parquet(inputDir)
-      .filter(col("url").startsWith("http"))
-      .select(Cardinality.hostCol(col("url")).as("host"))
-      .filter(col("host") =!= "")
-      .select(col("host"), pmod(hash(col("host")), lit(Buckets)).as("bucket"))
-      .as[(String, Int)]
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[MgState, HotCandidate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (bucket: Int, rows: Iterator[(String, Int)], state: GroupState[MgState]) =>
-          val prev = state.getOption.getOrElse(MgState(Array.empty, Array.empty, 0L))
-          val m = scala.collection.mutable.HashMap.empty[String, Long]
-          prev.hosts.indices.foreach(i => m.update(prev.hosts(i), prev.cnts(i)))
-          var n = prev.n
-          rows.foreach { case (h, _) =>
-            HeavyHitters.mgUpdate(m, h, HeavyHitters.Capacity); n += 1L
-          }
-          val entries = m.toArray.sortBy(_._1)
-          state.update(MgState(entries.map(_._1), entries.map(_._2), n))
-          entries.iterator.map { case (h, c) => HotCandidate(bucket, n, h, c) }
-      }
-    val query = events.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // one discovery wave per micro-batch
+    SinkIO.drain[Sighting](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source
+        .filter(col("url").startsWith("http"))
+        .select(Cardinality.hostCol(col("url")).as("host"))
+        .filter(col("host") =!= "")
+        .select(col("host"), pmod(hash(col("host")), lit(Buckets)).as("bucket"))
+        .as[(String, Int)]
+        .groupByKey(_._2)
+        .flatMapGroupsWithState[MgState, HotCandidate](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (bucket: Int, rows: Iterator[(String, Int)], state: GroupState[MgState]) =>
+            val prev = state.getOption.getOrElse(MgState(Array.empty, Array.empty, 0L))
+            val m = scala.collection.mutable.HashMap.empty[String, Long]
+            prev.hosts.indices.foreach(i => m.update(prev.hosts(i), prev.cnts(i)))
+            var n = prev.n
+            rows.foreach { case (h, _) =>
+              HeavyHitters.mgUpdate(m, h, HeavyHitters.Capacity); n += 1L
+            }
+            val entries = m.toArray.sortBy(_._1)
+            state.update(MgState(entries.map(_._1), entries.map(_._2), n))
+            entries.iterator.map { case (h, c) => HotCandidate(bucket, n, h, c) }
+        }
+    }
   }
 
   /** Current candidate set from the accumulated event log: the latest
@@ -98,7 +89,7 @@ object StreamingHeavyHitters {
     * superset of every host holding ≥ 1/(Capacity+1) of its bucket —
     * in particular every ≥1%-global-share host. */
   def currentCandidates(spark: SparkSession, outputDir: String): org.apache.spark.sql.DataFrame = {
-    val log = SinkIO.readSink(spark, outputDir, Encoders.product[HotCandidate].schema)
+    val log = SinkIO.read[HotCandidate](spark, outputDir)
     val latest = log.groupBy("bucket").agg(max("n_bucket").as("n_bucket"))
     log.join(latest, Seq("bucket", "n_bucket"))
       .select("bucket", "n_bucket", "host", "cnt")

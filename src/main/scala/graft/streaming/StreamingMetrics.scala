@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Event-time streaming over the crawl/event stream: watermarked windowed
   * aggregation and stateful sessionization — the beyond-reference streaming
@@ -20,6 +20,10 @@ object StreamingMetrics {
   final case class StreamEvent(event_id: Long, ts: java.sql.Timestamp,
                                user_id: Long, event_type: String, value: Double)
 
+  /** One closed event-time window of one event type. */
+  final case class WindowCount(win_start: java.sql.Timestamp, event_type: String,
+                               n_events: Long, total_value: Double)
+
   /** Per-type 1-minute event-time windows: append mode emits each window
     * exactly once, when the watermark passes its end. */
   def windowedCounts(
@@ -30,24 +34,14 @@ object StreamingMetrics {
       watermarkDelay: String = "2 minutes",
       windowLength: String = "1 minute"
   ): Unit = {
-    val schema = Encoders.product[StreamEvent].schema
-    val q = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one file per micro-batch: the watermark advances file-by-file
-      .parquet(inputDir)
-      .withWatermark("ts", watermarkDelay)
-      .groupBy(window(col("ts"), windowLength), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum("value").as("total_value"))
-      .select(col("window.start").as("win_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // one file per micro-batch: the watermark advances file-by-file
+    SinkIO.drain[StreamEvent](spark, inputDir, 1, outputDir, checkpointDir) {
+      _.withWatermark("ts", watermarkDelay)
+        .groupBy(window(col("ts"), windowLength), col("event_type"))
+        .agg(count(lit(1)).as("n_events"), sum("value").as("total_value"))
+        .select(col("window.start").as("win_start"), col("event_type"),
+          col("n_events"), col("total_value"))
+    }
   }
 
   // ------------------------------------------------------- sessionization --
@@ -100,43 +94,39 @@ object StreamingMetrics {
       watermarkDelay: String = "2 minutes"
   ): Unit = {
     import spark.implicits._
-    val schema = Encoders.product[StreamEvent].schema
-    val sessions = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inputDir)
-      .withWatermark("ts", watermarkDelay)
-      .as[StreamEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionState, ClosedSession](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (userId: Long, events: Iterator[StreamEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator.single(ClosedSession(userId, s.nEvents, s.firstEvent, s.lastEvent,
-              new java.sql.Timestamp(s.firstTs), new java.sql.Timestamp(s.lastTs)))
-          } else {
-            val sorted = events.map(e => (e.ts.getTime, e.event_id)).toSeq
-              .sortBy(identity) // deterministic within-batch order
-            val (closed, open) = foldEvents(userId, sorted, state.getOption)
-            open.foreach { s =>
-              state.update(s)
-              state.setTimeoutTimestamp(s.lastTs + SessionGapMs)
+    SinkIO.drain[StreamEvent](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source.withWatermark("ts", watermarkDelay)
+        .as[StreamEvent]
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState[SessionState, ClosedSession](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (userId: Long, events: Iterator[StreamEvent], state: GroupState[SessionState]) =>
+            if (state.hasTimedOut) {
+              val s = state.get
+              state.remove()
+              Iterator.single(ClosedSession(userId, s.nEvents, s.firstEvent, s.lastEvent,
+                new java.sql.Timestamp(s.firstTs), new java.sql.Timestamp(s.lastTs)))
+            } else {
+              val sorted = events.map(e => (e.ts.getTime, e.event_id)).toSeq
+                .sortBy(identity) // deterministic within-batch order
+              val (closed, open) = foldEvents(userId, sorted, state.getOption)
+              open.foreach { s =>
+                state.update(s)
+                state.setTimeoutTimestamp(s.lastTs + SessionGapMs)
+              }
+              closed.iterator
             }
-            closed.iterator
-          }
-      }
-    val q = sessions.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        }
+    }
   }
 
-  def readOutput(spark: SparkSession, outputDir: String): DataFrame =
-    spark.read.parquet(outputDir)
+  /** Either query's committed rows, with that query's schema
+    * ([[SinkIO.read]]): every closed session has a `start_ts`, which a
+    * window sink's files lack; any other sink, an uncommitted one
+    * included, reads as windows. */
+  def readOutput(spark: SparkSession, outputDir: String): DataFrame = {
+    val sessions = SinkIO.read[ClosedSession](spark, outputDir)
+    if (sessions.filter(col("start_ts").isNotNull).isEmpty) SinkIO.read[WindowCount](spark, outputDir)
+    else sessions
+  }
 }

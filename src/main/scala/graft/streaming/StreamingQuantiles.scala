@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.pipeline.QuantileSketch
 
@@ -51,43 +51,34 @@ object StreamingQuantiles {
   ): Unit = {
     import spark.implicits._
     val agg = new QuantileSketch.BottomKAgg(QuantileSketch.K)
-    val schema = Encoders.product[Measurement].schema
-    val events = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one measurement wave per micro-batch
-      .parquet(inputDir)
-      .select(col("grp"),
-        conv(substring(md5(col("id").cast("string")), 1, 11), 16, 10).cast("long").as("h"),
-        col("id"), col("v"))
-      .as[(String, Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[SketchState, QuantileEstimate](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (grp: String, rows: Iterator[(String, Long, Long, Long)], state: GroupState[SketchState]) =>
-          val prev = state.getOption.getOrElse(SketchState(Array.empty[Long], 0L))
-          var sk = prev.sketch
-          var n = prev.n
-          rows.foreach { case (_, h, id, v) => sk = agg.reduce(sk, (h, id, v)); n += 1L }
-          state.update(SketchState(sk, n))
-          Iterator.single(QuantileEstimate(grp, n, sk.length / 3,
-            QuantileSketch.quantileOf(sk, 50),
-            QuantileSketch.quantileOf(sk, 95),
-            QuantileSketch.quantileOf(sk, 99)))
-      }
-    val query = events.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+    // one measurement wave per micro-batch
+    SinkIO.drain[Measurement](spark, inputDir, 1, outputDir, checkpointDir) { source =>
+      source
+        .select(col("grp"),
+          conv(substring(md5(col("id").cast("string")), 1, 11), 16, 10).cast("long").as("h"),
+          col("id"), col("v"))
+        .as[(String, Long, Long, Long)]
+        .groupByKey(_._1)
+        .flatMapGroupsWithState[SketchState, QuantileEstimate](
+          OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+          (grp: String, rows: Iterator[(String, Long, Long, Long)], state: GroupState[SketchState]) =>
+            val prev = state.getOption.getOrElse(SketchState(Array.empty[Long], 0L))
+            var sk = prev.sketch
+            var n = prev.n
+            rows.foreach { case (_, h, id, v) => sk = agg.reduce(sk, (h, id, v)); n += 1L }
+            state.update(SketchState(sk, n))
+            Iterator.single(QuantileEstimate(grp, n, sk.length / 3,
+              QuantileSketch.quantileOf(sk, 50),
+              QuantileSketch.quantileOf(sk, 95),
+              QuantileSketch.quantileOf(sk, 99)))
+        }
+    }
   }
 
   /** The current estimate per group from the accumulated event log: the
     * last (max cumulative n) event per group. */
   def current(spark: SparkSession, outputDir: String): org.apache.spark.sql.DataFrame = {
-    val log = SinkIO.readSink(spark, outputDir, Encoders.product[QuantileEstimate].schema)
+    val log = SinkIO.read[QuantileEstimate](spark, outputDir)
     log.groupBy("grp")
       .agg(max(struct(col("n"), col("sample_k"), col("p50_est"), col("p95_est"),
         col("p99_est"))).as("last"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.util.LongAccumulator
 
 /** Streaming per-host frontier scheduler — the streaming twin of the batch
@@ -119,87 +119,76 @@ object StreamingScheduler {
     import spark.implicits._
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit}
     require(budget > 0, s"budget must be positive, got $budget")
-    val schema = Encoders.product[Candidate].schema
-    val raw = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1") // one wave per micro-batch
-      .parquet(inputDir)
-    // per-host budget caps (robots Crawl-delay) ride in on a STREAM-STATIC
-    // broadcast join — the cap table never collects to the driver and each
-    // candidate carries its own cap into the keyed state (tick rows and
-    // capless hosts coalesce to no-override). Column ops only, and the
-    // watermark is applied AFTER enrichment: a typed map would strip the
-    // event-time tag the EventTimeTimeout needs.
-    val enriched = (hostCaps match {
-      case Some(caps) => raw.join(
-          broadcast(caps.select(col("host"), col("budget").as("hostcap"))),
-          Seq("host"), "left")
-        .withColumn("cap", coalesce(col("hostcap"), lit(Int.MaxValue)))
-      case scala.None => raw.withColumn("cap", lit(Int.MaxValue))
-    })
-      .select(col("canonicalUrl"), col("url"), col("depth"), col("parentUrl"),
-        col("host"), col("pathDepth"), col("urlHash"), col("discoveredAt"), col("cap"))
-      .withWatermark("discoveredAt", "0 seconds")
-      .as[CandidateCap]
-    val scheduled = enriched
-      .groupByKey(_.host)
-      .flatMapGroupsWithState[HostState, Scheduled](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (host: String, rows: Iterator[CandidateCap], state: GroupState[HostState]) =>
-          if (host == TickHost) {
-            Iterator.empty // wave-clock rows carry no work
-          } else {
-            // backlog ∪ this wave's arrivals (empty on a timeout wake-up),
-            // one entry per canonical URL under the batch merge rule, minus
-            // everything this host already released
-            val arrivalsCap = rows.toSeq
-            val arrivals = arrivalsCap.map(_.candidate)
-            val prior = if (state.exists) state.get else HostState(Nil, Nil)
-            // the cap is a static property of the host: rows all carry the
-            // same value; remember it for row-less timeout wake-ups
-            val cap = arrivalsCap.headOption.map(_.cap).getOrElse(prior.cap)
-            val fetched = prior.fetched.toSet
-            val all = (prior.backlog ++ arrivals)
-              .groupBy(_.canonicalUrl).valuesIterator.map(_.reduceLeft(merge))
-              .filter(c => !fetched.contains(c.canonicalUrl))
-              .toSeq.sorted(priority)
-            val kept = if (all.size > maxBacklogPerHost) {
-              droppedAcc.foreach(_.add(all.size - maxBacklogPerHost))
-              all.take(maxBacklogPerHost)
-            } else all
-            val (emit, rest) = kept.splitAt(math.min(budget, cap))
-            // this wave's clock: the max of the current watermark (timeout
-            // wake-up) and this wave's row timestamps (data batch, where the
-            // watermark still lags one batch behind)
-            val rowMax = if (arrivals.isEmpty) Long.MinValue
-                         else arrivals.iterator.map(_.discoveredAt.getTime).max
-            val waveClock = math.max(state.getCurrentWatermarkMs(), rowMax)
-            if (emit.nonEmpty || rest.nonEmpty) {
-              state.update(HostState(rest, prior.fetched ++ emit.map(_.canonicalUrl), cap))
-              // wake on the NEXT wave's tick — arming any lower than
-              // waveClock+1 would re-fire THIS drain's forced batch and
-              // double the tranche. (No timeout when the backlog is empty:
-              // the fetched set stays, new data re-invokes.)
-              if (rest.nonEmpty) state.setTimeoutTimestamp(waveClock + 1)
+    // one wave per micro-batch
+    SinkIO.drain[Candidate](spark, inputDir, 1, outputDir, checkpointDir) { raw =>
+      // per-host budget caps (robots Crawl-delay) ride in on a STREAM-STATIC
+      // broadcast join — the cap table never collects to the driver and each
+      // candidate carries its own cap into the keyed state (tick rows and
+      // capless hosts coalesce to no-override). Column ops only, and the
+      // watermark is applied AFTER enrichment: a typed map would strip the
+      // event-time tag the EventTimeTimeout needs.
+      (hostCaps match {
+        case Some(caps) => raw.join(
+            broadcast(caps.select(col("host"), col("budget").as("hostcap"))),
+            Seq("host"), "left")
+          .withColumn("cap", coalesce(col("hostcap"), lit(Int.MaxValue)))
+        case scala.None => raw.withColumn("cap", lit(Int.MaxValue))
+      })
+        .select(col("canonicalUrl"), col("url"), col("depth"), col("parentUrl"),
+          col("host"), col("pathDepth"), col("urlHash"), col("discoveredAt"), col("cap"))
+        .withWatermark("discoveredAt", "0 seconds")
+        .as[CandidateCap]
+        .groupByKey(_.host)
+        .flatMapGroupsWithState[HostState, Scheduled](
+          OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+          (host: String, rows: Iterator[CandidateCap], state: GroupState[HostState]) =>
+            if (host == TickHost) {
+              Iterator.empty // wave-clock rows carry no work
+            } else {
+              // backlog ∪ this wave's arrivals (empty on a timeout wake-up),
+              // one entry per canonical URL under the batch merge rule, minus
+              // everything this host already released
+              val arrivalsCap = rows.toSeq
+              val arrivals = arrivalsCap.map(_.candidate)
+              val prior = if (state.exists) state.get else HostState(Nil, Nil)
+              // the cap is a static property of the host: rows all carry the
+              // same value; remember it for row-less timeout wake-ups
+              val cap = arrivalsCap.headOption.map(_.cap).getOrElse(prior.cap)
+              val fetched = prior.fetched.toSet
+              val all = (prior.backlog ++ arrivals)
+                .groupBy(_.canonicalUrl).valuesIterator.map(_.reduceLeft(merge))
+                .filter(c => !fetched.contains(c.canonicalUrl))
+                .toSeq.sorted(priority)
+              val kept = if (all.size > maxBacklogPerHost) {
+                droppedAcc.foreach(_.add(all.size - maxBacklogPerHost))
+                all.take(maxBacklogPerHost)
+              } else all
+              val (emit, rest) = kept.splitAt(math.min(budget, cap))
+              // this wave's clock: the max of the current watermark (timeout
+              // wake-up) and this wave's row timestamps (data batch, where the
+              // watermark still lags one batch behind)
+              val rowMax = if (arrivals.isEmpty) Long.MinValue
+                           else arrivals.iterator.map(_.discoveredAt.getTime).max
+              val waveClock = math.max(state.getCurrentWatermarkMs(), rowMax)
+              if (emit.nonEmpty || rest.nonEmpty) {
+                state.update(HostState(rest, prior.fetched ++ emit.map(_.canonicalUrl), cap))
+                // wake on the NEXT wave's tick — arming any lower than
+                // waveClock+1 would re-fire THIS drain's forced batch and
+                // double the tranche. (No timeout when the backlog is empty:
+                // the fetched set stays, new data re-invokes.)
+                if (rest.nonEmpty) state.setTimeoutTimestamp(waveClock + 1)
+              }
+              emit.iterator.map(c => Scheduled(c.canonicalUrl, c.url, c.depth,
+                c.parentUrl, c.host, c.pathDepth, c.urlHash, waveClock))
             }
-            emit.iterator.map(c => Scheduled(c.canonicalUrl, c.url, c.depth,
-              c.parentUrl, c.host, c.pathDepth, c.urlHash, waveClock))
-          }
-      }
-    val q = scheduled.writeStream
-      .format("parquet")
-      .option("path", outputDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        }
+    }
   }
 
-  /** Explicit schema: a sink dir that exists but holds no committed data
-    * files yet (killed before the first batch commit) must read as empty,
-    * not throw schema-inference AnalysisException — StreamingCrawl's resume
-    * reads this to find the prior wave clock. */
+  /** The released URLs so far ([[SinkIO.read]]: a sink dir that does not
+    * exist yet, or holds no committed data files (killed before the first
+    * batch commit), reads as empty) — StreamingCrawl's resume reads this to
+    * find the prior wave clock. */
   def readOutput(spark: SparkSession, outputDir: String): DataFrame =
-    spark.read.schema(Encoders.product[Scheduled].schema).parquet(outputDir)
+    SinkIO.read[Scheduled](spark, outputDir)
 }

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.LeakProbe
 import graft.gen.CorpusGen
 import graft.model.CrawlConfig
 import graft.tools.GoldenGen
@@ -15,8 +16,9 @@ import graft.tools.GoldenGen
 class CrawlEngineSpec extends AnyFunSuite {
 
   private def withSpark[T](master: String, partitions: Int = 4)(f: SparkSession => T): T = {
-    // a fresh SparkContext: the leak assertions below must see only this
-    // crawl's RDDs, not what an earlier suite's session left persisted
+    // a fresh SparkContext without the ContextCleaner: the leak assertions
+    // below must see only this crawl's RDDs, and an RDD leaves the registry
+    // only when the engine releases it, never because a GC collected it
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.getDefaultSession.foreach(_.stop())
     val spark = SparkSession.builder()
@@ -25,6 +27,7 @@ class CrawlEngineSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", partitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try f(spark)
@@ -419,15 +422,14 @@ class CrawlEngineSpec extends AnyFunSuite {
 
   test("no persisted/checkpointed RDD blocks survive a completed crawl") {
     withSpark("local[4]") { spark =>
-      val (summary, _) = runCrawl(spark)
-      assert(summary.waves > 1, "multi-wave crawl exercises the per-wave checkpoint path")
+      var waves = 0
       // Dataset.unpersist is a no-op on localCheckpoint()ed frames — the
       // engine must release the backing RDDs itself (releaseBlocks), or
-      // every wave's frontier checkpoint leaks until periodic GC. An empty
-      // persistent-RDD registry proves the eager per-wave release is real.
-      val live = spark.sparkContext.getPersistentRDDs
-      assert(live.isEmpty,
-        s"leaked persisted/checkpointed RDDs after run: ${live.values.take(5).mkString("; ")}")
+      // every wave's frontier checkpoint leaks until periodic GC. No
+      // persisted RDD left unreleased proves the eager per-wave release is real.
+      val leaked = LeakProbe.leakedBy(spark) { waves = runCrawl(spark)._1.waves }
+      assert(waves > 1, "multi-wave crawl exercises the per-wave checkpoint path")
+      assert(leaked.isEmpty, s"leaked persisted/checkpointed RDDs after run: $leaked")
     }
   }
 
@@ -439,14 +441,15 @@ class CrawlEngineSpec extends AnyFunSuite {
       Seq("wave=0 sink barrier done", "wave=1 fetch+extract done").foreach { marker =>
         val pages = CorpusGen.dataset(spark, CorpusGen.Spec(GoldenGen.Hosts, GoldenGen.PagesPerHost))
         val dir = Files.createTempDirectory("graft-fail").toString
-        val e = intercept[IllegalStateException] {
-          CrawlEngine.run(spark, pages, GoldenGen.config(GoldenGen.Hosts), dir,
-            log = m => if (m.startsWith(marker)) throw new IllegalStateException(s"planted at $marker"))
+        var e: IllegalStateException = null
+        val leaked = LeakProbe.leakedBy(spark) {
+          e = intercept[IllegalStateException] {
+            CrawlEngine.run(spark, pages, GoldenGen.config(GoldenGen.Hosts), dir,
+              log = m => if (m.startsWith(marker)) throw new IllegalStateException(s"planted at $marker"))
+          }
         }
         assert(e.getMessage == s"planted at $marker")
-        val live = spark.sparkContext.getPersistentRDDs
-        assert(live.isEmpty,
-          s"$marker: leaked persisted/checkpointed RDDs: ${live.values.take(5).mkString("; ")}")
+        assert(leaked.isEmpty, s"$marker: leaked persisted/checkpointed RDDs: $leaked")
         assertNoLiveThreads("graft-exec-")
       }
     }

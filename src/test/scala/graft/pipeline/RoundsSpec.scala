@@ -31,42 +31,7 @@ class RoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
   // later suites must not inherit a context that never cleans up
   override def afterAll(): Unit = spark.stop()
 
-  /** RDDs that `f` persists and does not release, read from listener
-    * events: every stage that computes or reads a persisted RDD reports its
-    * storage level, and every release posts an unpersist event. The
-    * registry (`getPersistentRDDs`) cannot tell this alone: it holds RDDs
-    * weakly, so a GC drops a leaked round from it as if it were released.
-    * Counted as a delta against the registry taken before the call. */
-  private def leakedBy(f: => Unit): Set[Int] = {
-    import org.apache.spark.scheduler._
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet.toSet
-    val persisted, released = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val barrier = new java.util.concurrent.CountDownLatch(1)
-    @volatile var barrierJob = -1
-    val listener = new SparkListener {
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        e.stageInfo.rddInfos.filter(_.storageLevel.isValid).foreach(i => persisted.add(i.id))
-      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = released.add(e.rddId)
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == "barrier")
-          barrierJob = e.jobId
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == barrierJob) barrier.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      // the bus delivers in order: once the barrier job's end arrives,
-      // every event the call posted has been seen
-      sc.setJobGroup("barrier", "listener barrier")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      assert(barrier.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener barrier")
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    persisted.asScala.toSet -- before -- released.asScala
-  }
+  private def leakedBy(f: => Unit): Set[Int] = graft.LeakProbe.leakedBy(spark)(f)
 
   private def rddId(df: DataFrame): Int = df.queryExecution.logical match {
     case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
@@ -149,5 +114,15 @@ class RoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // round is released as its successor materializes
     assert(kept.size < CrawlQueries.PageRankIters,
       s"${kept.size} persisted RDDs added for ${CrawlQueries.PageRankIters} rounds")
+  }
+
+  test("opicKernel releases every wave's selection once the loop is done") {
+    import spark.implicits._
+    val edges = (1 to 120).map(i => (s"u${i % 23}", s"u${(i * 7 + 3) % 23}"))
+      .toDF("src", "dst")
+    val kept = leakedBy(Opic.opicKernel(edges).collect())
+    // the edges, the out-degrees, init and the last wave: none of the
+    // per-wave top-k selections
+    assert(kept.size == 4, s"${kept.size} persisted RDDs added for ${Opic.Waves} waves")
   }
 }

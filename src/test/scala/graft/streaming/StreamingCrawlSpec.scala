@@ -4,8 +4,10 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.LeakProbe
 import graft.crawl.CrawlEngine
 import graft.gen.CorpusGen
 import graft.tools.GoldenGen
@@ -14,11 +16,12 @@ import graft.tools.GoldenGen
   * same per-wave release sets under a binding politeness budget + robots
   * gating, same totals, byte parity on every fetched page — and exactly-once
   * release across a mid-crawl kill/restart. */
-class StreamingCrawlSpec extends AnyFunSuite {
+class StreamingCrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark: SparkSession = {
-    // a fresh SparkContext: the leak assertions below must see only this
-    // suite's RDDs, not what an earlier suite's session left persisted
+    // a fresh SparkContext without the ContextCleaner: the leak assertions
+    // below must see only this suite's RDDs, and an RDD leaves the registry
+    // only when the crawl releases it, never because a GC collected it
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.getDefaultSession.foreach(_.stop())
     val s = SparkSession.builder()
@@ -27,10 +30,14 @@ class StreamingCrawlSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  // later suites must not inherit a context that never cleans up
+  override def afterAll(): Unit = spark.stop()
 
   // budget 3 binds (30 pages/host); maxPages must NOT bind — the streaming
   // twin keeps the static-budget north-rule semantics, not the results-cap
@@ -48,13 +55,18 @@ class StreamingCrawlSpec extends AnyFunSuite {
   test("wave-for-wave release parity with the batch engine") {
     val pages = corpus
     val batchDir = Files.createTempDirectory("graft-scrawl-batch").toString
-    val batch = CrawlEngine.run(spark, pages, cfg, batchDir)
+    val sDir = Files.createTempDirectory("graft-scrawl-stream").toString
+    var batch: CrawlEngine.CrawlSummary = null
+    var s: StreamingCrawl.StreamCrawlSummary = null
+    // both twins run in this session — neither may leak persisted or
+    // checkpointed RDD blocks (the releaseBlocks discipline, twin-side)
+    val leaked = LeakProbe.leakedBy(spark) {
+      batch = CrawlEngine.run(spark, pages, cfg, batchDir)
+      s = StreamingCrawl.run(spark, pages, cfg, sDir)
+    }
     val batchWaves: Vector[Set[String]] = CrawlEngine.readOrder(spark, batchDir).collect()
       .groupBy(_.wave).toVector.sortBy(_._1)
       .map(_._2.map(_.canonicalUrl).toSet)
-
-    val sDir = Files.createTempDirectory("graft-scrawl-stream").toString
-    val s = StreamingCrawl.run(spark, pages, cfg, sDir)
 
     assert(s.parityFailures == 0, "extracted text byte-identical on every row")
     assert(s.waves == batch.waves, s"wave count: streaming ${s.waves} vs batch ${batch.waves}")
@@ -70,11 +82,7 @@ class StreamingCrawlSpec extends AnyFunSuite {
       .filter(_.getName.startsWith("wave-tmp"))
     assert(leftoverTmp.isEmpty,
       s"wave write temp dirs must be cleaned up: ${leftoverTmp.map(_.getName).toSeq}")
-    // both twins ran in this session — neither may leak persisted or
-    // checkpointed RDD blocks (the releaseBlocks discipline, twin-side)
-    val live = spark.sparkContext.getPersistentRDDs
-    assert(live.isEmpty,
-      s"leaked persisted/checkpointed RDDs after both crawls: ${live.values.take(5).mkString("; ")}")
+    assert(leaked.isEmpty, s"leaked persisted/checkpointed RDDs after both crawls: $leaked")
   }
 
   test("a failure mid-crawl releases every cache on the way out") {
@@ -86,12 +94,13 @@ class StreamingCrawlSpec extends AnyFunSuite {
       when(col("url") === "https://site1.com/", raise_error(lit("planted page failure")))
         .otherwise(col("html"))).as[graft.model.PageRow]
     val sDir = Files.createTempDirectory("graft-scrawl-fail").toString
-    val e = intercept[Exception](StreamingCrawl.run(spark, pages, cfg, sDir))
+    var e: Exception = null
+    val leaked = LeakProbe.leakedBy(spark) {
+      e = intercept[Exception](StreamingCrawl.run(spark, pages, cfg, sDir))
+    }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("planted page failure")), e.toString)
-    val live = spark.sparkContext.getPersistentRDDs
-    assert(live.isEmpty,
-      s"leaked persisted/checkpointed RDDs after the failed crawl: ${live.values.take(5).mkString("; ")}")
+    assert(leaked.isEmpty, s"leaked persisted/checkpointed RDDs after the failed crawl: $leaked")
     assertNoLiveThreads("graft-exec-")
   }
 
