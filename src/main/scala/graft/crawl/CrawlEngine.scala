@@ -234,9 +234,18 @@ object CrawlEngine {
     false
   }
 
-  /** Seed-list canonicalization (depth-0 entries). */
-  private[graft] def seedEntry(seed: String): Option[FrontierEntry] =
-    UrlKernel.canonicalize(seed).map(c => entryFor(c, seed, 0, ""))
+  /** The seed frontier of both runs: canonicalized depth-0 entries, one per
+    * canonical under the [[Frontier.merge]] rule, sorted by canonical.
+    * Deduped on the driver, where the seed list already lives: no shuffle
+    * job for a list held in memory. */
+  private[graft] def seedFrontier(spark: SparkSession, seeds: Seq[String]): Dataset[FrontierEntry] = {
+    import spark.implicits._
+    spark.createDataset(seeds.iterator
+      .flatMap(s => UrlKernel.canonicalize(s).map(c => entryFor(c, s, 0, ""))).toVector
+      .groupBy(_.canonicalUrl).valuesIterator
+      .map(_.reduce(Frontier.merge[FrontierEntry] _))
+      .toVector.sortBy(_.canonicalUrl))
+  }
 
   /** One row of the fetch-join output (wave side + page side). */
   final case class FetchedRow(
@@ -514,22 +523,6 @@ object CrawlEngine {
     val robots = Await.result(robotsFuture, Duration.Inf)
     log(s"prep done (pages cached + robots rules table) $elapsed")
 
-    // ---- seed frontier (canonicalized on executors — seed lists can be
-    // sitemap-scale, SURVEY §2.1) --------------------------------------------
-    // Seed lists up to ~1M entries dedupe ON THE DRIVER (they already live
-    // there as config.seeds — pure canonicalize + the same Frontier.merge
-    // rule, deterministic layout): no shuffle job to dedupe a list we hold
-    // in memory. Sitemap-scale lists beyond that go through the
-    // distributed dedupe as before.
-    val seedDs =
-      if (config.seeds.size <= 1000000) {
-        val entries = config.seeds.iterator.flatMap(s => seedEntry(s)).toVector
-          .groupBy(_.canonicalUrl).valuesIterator
-          .map(_.reduce(Frontier.merge[FrontierEntry] _))
-          .toVector.sortBy(_.canonicalUrl)
-        spark.createDataset(entries)
-      } else Frontier.dedupeWave(spark,
-        spark.createDataset(config.seeds).flatMap(s => seedEntry(s)))
     val linkGenActive = config.maxDepth > 0
     val discover = linkGen(spark, config, robots.gate)
 
@@ -547,7 +540,7 @@ object CrawlEngine {
           (w + 1, store.loadSeen(spark, w), store.loadFrontier(spark, w).as[FrontierEntry],
             m.fetchedTotal, m.errorsTotal, m.parityFailures)
         case _ =>
-          (0, emptySeen, seedDs, 0L, 0L, 0L)
+          (0, emptySeen, seedFrontier(spark, config.seeds), 0L, 0L, 0L)
       }
     var seenCount = if (resume) seen.count() else 0L
     var errorsTotal = errorsTotal0
@@ -971,10 +964,7 @@ object CrawlEngine {
           // without that job (identical summary: the empty-wave path never
           // committed anything either)
           if (frontierRows == 0L) done = true
-          else {
-            seen = store.loadSeen(spark, wave)
-            frontier = store.loadFrontier(spark, wave).as[FrontierEntry]
-          }
+          else seen = store.loadSeen(spark, wave)
           wave += 1
         }
       }

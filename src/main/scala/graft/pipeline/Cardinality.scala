@@ -89,9 +89,11 @@ object Cardinality {
     if (mins.length < k) mins.length.toLong
     else (k - 1).toLong * HashSpace / mins(k - 1)
 
-  /** The sketch's 44-bit hash as a Column — ONE definition shared by the
-    * batch query and [[graft.streaming.StreamingCardinality]], so their
-    * sketches are mergeable/comparable by construction. */
+  /** The project's one 44-bit hash (`hash44`: the first 11 hex digits of
+    * md5) as a Column. The sketch, its streaming twin
+    * [[graft.streaming.StreamingCardinality]] and every salted or
+    * sampling hash in the pipeline call it, so their values agree by
+    * construction. Callers cast a non-string input to string. */
   def urlHashCol(url: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     conv(substring(md5(url), 1, 11), 16, 10).cast("long")
 

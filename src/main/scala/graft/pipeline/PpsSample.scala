@@ -46,11 +46,6 @@ object PpsSample {
     * `hash44("graft-pps") mod step` — no RNG, replayable anywhere. */
   val OffsetSalt = "graft-pps"
 
-  /** 44-bit md5 hash of a column rendered as string — the project-wide
-    * portable hash ([[Cardinality.urlHashCol]] shape). */
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c.cast("string")), 1, 11), 16, 10).cast("long")
-
   /** Normalized word-count weight, ≥ 1 — same normalize discipline as
     * [[ShingleJaccard]] so both engines count identically. */
   private def weightCol(text: Column): Column =
@@ -63,7 +58,7 @@ object PpsSample {
     val weighted = docs.select(
       col("doc_id"),
       weightCol(col("text")).as("w"),
-      hash44(col("doc_id")).as("h"))
+      Cardinality.urlHashCol(col("doc_id").cast("string")).as("h"))
       .withColumn("bucket", expr(s"h div ${1L << (44 - BucketBits)}"))
 
     // phase 1: per-bucket inclusive cumsum — parallel across buckets

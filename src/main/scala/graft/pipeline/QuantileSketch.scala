@@ -113,7 +113,7 @@ object QuantileSketch {
     import spark.implicits._
     val hashed = rows
       .select(col("grp"),
-        conv(substring(md5(col("id").cast("string")), 1, 11), 16, 10).cast("long").as("h"),
+        Cardinality.urlHashCol(col("id").cast("string")).as("h"),
         col("id"), col("v"))
       .as[(String, Long, Long, Long)]
     val agg = new BottomKAgg(K)

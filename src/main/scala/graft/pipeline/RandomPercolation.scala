@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Random-failure tolerance of the host graph (`q_random_percolation`) —
@@ -41,16 +41,13 @@ object RandomPercolation {
   /** Removal threshold for level p: hash44(host) < p·2⁴⁴/1000. */
   def threshold(p: Int): Long = p.toLong * (1L << 44) / 1000L
 
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   /** The error-tolerance curve over any (a, b) host-pair frame. */
   def randomPercolation(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
     import spark.implicits._
     val und = Communities.undirected(pairsIn)
     val hosts = und.select(col("a").as("host")).distinct()
-      .withColumn("h", hash44(col("host"))).localCheckpoint()
+      .withColumn("h", Cardinality.urlHashCol(col("host"))).localCheckpoint()
     // one conditional aggregate yields n0 and every level's removal count
     val cnt = hosts.agg(
       count(lit(1)).as("n0"),
@@ -70,7 +67,8 @@ object RandomPercolation {
       val thr = threshold(p)
       val kept =
         if (p == 0) und
-        else und.filter(hash44(col("a")) >= thr && hash44(col("b")) >= thr)
+        else und.filter(Cardinality.urlHashCol(col("a")) >= thr &&
+          Cardinality.urlHashCol(col("b")) >= thr)
       val labels = WebIndex.componentLabels(kept, prepared = true)
       val giant = labels.groupBy("label").agg(count(lit(1)).as("n"))
         .agg(max("n")).head().getLong(0)

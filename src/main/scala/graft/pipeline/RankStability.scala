@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Rank stability under link noise (`q_rank_stability`) — how robust is
@@ -40,9 +40,6 @@ object RankStability {
   val NoiseSalt = ":graft-rankstab-v1"
   val NoiseThr: Long = (1L << 44) / 4
 
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   private def hostEdges(pages: DataFrame): DataFrame =
     pages.select(Cardinality.hostCol(col("src")).as("src"),
       Cardinality.hostCol(col("dst")).as("dst"))
@@ -52,7 +49,7 @@ object RankStability {
   def rankStability(pagesIn: DataFrame, thr: Long = NoiseThr): DataFrame = {
     val pages = pagesIn.filter(col("dst").startsWith("http")).localCheckpoint()
     val kept = pages.filter(
-      hash44(concat(col("src"), lit(">"), col("dst"), lit(NoiseSalt))) >= thr)
+      Cardinality.urlHashCol(concat(col("src"), lit(">"), col("dst"), lit(NoiseSalt))) >= thr)
       .localCheckpoint()
     val nA = pages.count(); val nB = kept.count()
     // the intact and noise-dropped ranks are INDEPENDENT recurrences over

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -45,9 +45,6 @@ object RevisitPolicy {
   val UniformK = 8
   val PeriodSalt = ":graft-chg-period-v1"
 
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   /** Simulate both policies over an (id: long, p: long) page frame. */
   def revisitKernel(pagesIn: DataFrame): DataFrame = {
     val grid = pagesIn.select(col("id").cast("long"), col("p").cast("long"))
@@ -88,7 +85,7 @@ object RevisitPolicy {
   def revisitPolicy(spark: SparkSession, dir: String): DataFrame =
     revisitKernel(spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").cast("long").as("id"))
-      .withColumn("p", pmod(hash44(concat(col("id"), lit(PeriodSalt))), lit(16L)) + 1))
+      .withColumn("p", pmod(Cardinality.urlHashCol(concat(col("id"), lit(PeriodSalt))), lit(16L)) + 1))
 
   /** DuckDB twin: the identical grid, windows, and rollups — a full
     * policy + environment replay. */

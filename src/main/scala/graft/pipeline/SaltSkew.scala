@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Salted-sharding skew audit (`q_salt_skew`) — the north rule names the
@@ -36,9 +36,6 @@ object SaltSkew {
   /** Simulated shard count (matches the bench parallelism). */
   val Shards = 32
 
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   /** Skew audit over any (v, d) host-mass frame. */
   def saltSkew(masses: DataFrame, shards: Int = Shards): DataFrame = {
     val spark = masses.sparkSession
@@ -46,7 +43,7 @@ object SaltSkew {
     val withT = masses.crossJoin(broadcast(total))
 
     val plain = withT.select(
-      pmod(hash44(col("v")), lit(shards.toLong)).as("shard"),
+      pmod(Cardinality.urlHashCol(col("v")), lit(shards.toLong)).as("shard"),
       col("d").cast("long").as("m"), lit(0L).as("salted"))
 
     val salted = withT
@@ -57,8 +54,8 @@ object SaltSkew {
       .withColumn("i", explode(expr("sequence(0, cast(k - 1 as int))")))
       .select(
         // unsalted hosts keep their PLAIN placement — only heavy keys move
-        pmod(when(col("k") === 1, hash44(col("v")))
-          .otherwise(hash44(concat(col("v"), lit("#"), col("i")))),
+        pmod(when(col("k") === 1, Cardinality.urlHashCol(col("v")))
+          .otherwise(Cardinality.urlHashCol(concat(col("v"), lit("#"), col("i")))),
           lit(shards.toLong)).as("shard"),
         (expr("d div k") + when(col("i") < col("d") % col("k"), 1L).otherwise(0L)).as("m"),
         when(col("k") > 1 && col("i") === 0, 1L).otherwise(0L).as("salted"))

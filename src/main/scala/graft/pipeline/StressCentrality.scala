@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Source-sampled stress centrality (`q_stress_centrality`) — Shimbel's
@@ -46,15 +46,11 @@ object StressCentrality {
   /** Shortest-path horizon (BFS levels counted from each source). */
   val Horizon = 6
 
-  /** 44-bit md5 hash — the project-wide portable hash. */
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   /** Stress ledger over any directed (src, dst) host-pair frame. */
   def stressKernel(edgesIn: DataFrame): DataFrame = {
     val edges = edgesIn.select("src", "dst").distinct().localCheckpoint()
     val sources = edges.select(col("src").as("s")).distinct()
-      .orderBy(hash44(col("s")), col("s")).limit(NumSources)
+      .orderBy(Cardinality.urlHashCol(col("s")), col("s")).limit(NumSources)
 
     // forward: (s, v, sigma, d) level sets; sigma finalized per level
     var frontier = sources

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Weisfeiler-Leman color refinement (`q_wl_colors`) — 1-WL iterated
@@ -35,9 +35,6 @@ object WlColors {
   /** Refinement rounds after the degree coloring. */
   val Rounds = 3
 
-  private def hash44(c: Column): Column =
-    conv(substring(md5(c), 1, 11), 16, 10).cast("long")
-
   /** Round censuses over any (a, b) host-pair frame. */
   def wlColors(pairsIn: DataFrame): DataFrame = {
     val spark = pairsIn.sparkSession
@@ -65,7 +62,7 @@ object WlColors {
         .agg(array_join(sort_array(collect_list(col("cb"))), ",").as("nbrs"))
       colors.join(nbr, "host")
         .select(col("host"),
-          hash44(concat(col("color"), lit("|"), col("nbrs"))).cast("string").as("color"))
+          Cardinality.urlHashCol(concat(col("color"), lit("|"), col("nbrs"))).cast("string").as("color"))
     }
     census(last, Rounds)
     rows.result()

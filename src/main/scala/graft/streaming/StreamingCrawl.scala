@@ -120,9 +120,8 @@ object StreamingCrawl {
       if (m.isNullAt(0)) None else Some(m.getLong(0))
     }
     if (priorMax.isEmpty) {
-      val seedEntries = Frontier.dedupeWave(spark,
-        spark.createDataset(config.seeds).flatMap(s => CrawlEngine.seedEntry(s)))
-      writeWaveFileIfAbsent(toCandidates(seedEntries, waveClock(0)), 0)
+      val seeds = CrawlEngine.seedFrontier(spark, config.seeds)
+      writeWaveFileIfAbsent(toCandidates(seeds, waveClock(0)), 0)
     }
 
     var wave = priorMax.map(m => ((m - WaveClock0) / 60000L).toInt).getOrElse(0)

@@ -120,13 +120,11 @@ object StreamingMetrics {
     }
   }
 
-  /** Either query's committed rows, with that query's schema
-    * ([[SinkIO.read]]): every closed session has a `start_ts`, which a
-    * window sink's files lack; any other sink, an uncommitted one
-    * included, reads as windows. */
-  def readOutput(spark: SparkSession, outputDir: String): DataFrame = {
-    val sessions = SinkIO.read[ClosedSession](spark, outputDir)
-    if (sessions.filter(col("start_ts").isNotNull).isEmpty) SinkIO.read[WindowCount](spark, outputDir)
-    else sessions
-  }
+  /** [[windowedCounts]]' committed rows ([[SinkIO.read]]). */
+  def windows(spark: SparkSession, outputDir: String): DataFrame =
+    SinkIO.read[WindowCount](spark, outputDir)
+
+  /** [[sessionize]]'s committed rows ([[SinkIO.read]]). */
+  def sessions(spark: SparkSession, outputDir: String): DataFrame =
+    SinkIO.read[ClosedSession](spark, outputDir)
 }

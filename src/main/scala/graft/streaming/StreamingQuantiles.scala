@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.pipeline.QuantileSketch
+import graft.pipeline.{Cardinality, QuantileSketch}
 
 /** Structured Streaming twin of [[graft.pipeline.QuantileSketch]]:
   * continuous per-group percentile tracking over a measurement stream —
@@ -55,7 +55,7 @@ object StreamingQuantiles {
     SinkIO.drain[Measurement](spark, inputDir, 1, outputDir, checkpointDir) { source =>
       source
         .select(col("grp"),
-          conv(substring(md5(col("id").cast("string")), 1, 11), 16, 10).cast("long").as("h"),
+          Cardinality.urlHashCol(col("id").cast("string")).as("h"),
           col("id"), col("v"))
         .as[(String, Long, Long, Long)]
         .groupByKey(_._1)

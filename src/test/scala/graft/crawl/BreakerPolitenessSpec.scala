@@ -6,6 +6,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.isolated
 import graft.extract.HtmlKit
 import graft.model.{CrawlConfig, PageRow}
 
@@ -20,19 +21,6 @@ import graft.model.{CrawlConfig, PageRow}
   * and on a corpus where nothing trips, the breaker-on crawl is
   * byte-identical to the static crawl. */
 class BreakerPolitenessSpec extends AnyFunSuite {
-
-  private def withSpark[T](f: SparkSession => T): T = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-breaker-politeness-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try f(spark)
-    finally spark.stop()
-  }
 
   private val ts = new java.sql.Timestamp(1767225600000L)
 
@@ -77,7 +65,7 @@ class BreakerPolitenessSpec extends AnyFunSuite {
     breakerPoliteness = true)
 
   test("planted failing host: trip, wave-clock suppression, probe, recovery — and AIMD sawtooth") {
-    withSpark { spark =>
+    isolated() { spark =>
       // planted.com: a0 links five MISSING deep urls (priority pathDepth
       // beats /a1, so every pre-trip wave serves errors) plus the real /a1;
       // a1→a2→a3 is the post-recovery chain.
@@ -136,7 +124,7 @@ class BreakerPolitenessSpec extends AnyFunSuite {
   }
 
   test("Retry-After honored: a 60s server demand cools down in 2 waves, no hint in 4") {
-    withSpark { spark =>
+    isolated() { spark =>
       def blockedHost(host: String, hintSecs: Long): Seq[PageRow] =
         Seq(mkPage(s"https://$host/c0",
           (1 to 5).map(i => s"https://$host/deep/x/w$i") :+ s"https://$host/c1",
@@ -171,7 +159,7 @@ class BreakerPolitenessSpec extends AnyFunSuite {
   }
 
   test("no trips, no penalties: breaker-on crawl is byte-identical to the static crawl") {
-    withSpark { spark =>
+    isolated() { spark =>
       val pages = spark.createDataFrame(
         healthyChain(6) ++
           (0 to 6).map { i =>

@@ -5,8 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.LeakProbe
+import graft.TestSpark.isolated
 import graft.gen.CorpusGen
-import graft.model.CrawlConfig
+import graft.model.{CrawlConfig, CrawlOrderRow}
 import graft.tools.GoldenGen
 
 /** End-to-end crawl engine invariants (SURVEY.md §5 plan items 2-4):
@@ -15,23 +16,23 @@ import graft.tools.GoldenGen
   */
 class CrawlEngineSpec extends AnyFunSuite {
 
-  private def withSpark[T](master: String, partitions: Int = 4)(f: SparkSession => T): T = {
-    // a fresh SparkContext without the ContextCleaner: the leak assertions
-    // below must see only this crawl's RDDs, and an RDD leaves the registry
-    // only when the engine releases it, never because a GC collected it
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", partitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try f(spark)
-    finally spark.stop()
+  /** The golden crawl at local[4], run once on a context of its own under
+    * the leak probe. The golden, robots-gating, resume and leak tests assert
+    * on this run; its order and seen set are read before the context stops. */
+  private case class Golden(summary: CrawlEngine.CrawlSummary, dir: String, leaked: Set[Int],
+                            order: Vector[CrawlOrderRow], seen: Vector[String],
+                            texts: String)
+
+  private lazy val golden: Golden = isolated() { spark =>
+    var run: (CrawlEngine.CrawlSummary, String) = null
+    val leaked = LeakProbe.leakedBy(spark) { run = runCrawl(spark) }
+    val (summary, dir) = run
+    val texts = CrawlEngine.readPages(spark, dir)
+      .select("canonicalUrl", "text").collect()
+      .map(r => s"${r.getString(0)}|${CrawlEngine.sha256Hex(r.getString(1))}")
+      .sorted.mkString("\n")
+    Golden(summary, dir, leaked, CrawlEngine.readOrder(spark, dir).collect().toVector,
+      seenSet(spark, dir, summary.waves - 1), texts)
   }
 
   private def resource(name: String): String = {
@@ -51,29 +52,24 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   private def orderLines(spark: SparkSession, dir: String): Vector[String] =
-    CrawlEngine.readOrder(spark, dir).collect()
-      .map(o => s"${o.wave}|${o.rank}|${o.canonicalUrl}|${o.depth}|${o.host}").toVector
+    lines(CrawlEngine.readOrder(spark, dir).collect().toVector)
+
+  private def lines(order: Vector[CrawlOrderRow]): Vector[String] =
+    order.map(o => s"${o.wave}|${o.rank}|${o.canonicalUrl}|${o.depth}|${o.host}")
 
   private def seenSet(spark: SparkSession, dir: String, lastWave: Int): Vector[String] =
     new graft.state.SnapshotStore(dir).loadSeen(spark, lastWave)
       .collect().map(_.getString(0)).sorted.toVector
 
   test("golden: crawl order, seen set, and per-url text bytes match frozen spec") {
-    withSpark("local[4]") { spark =>
-      val (summary, dir) = runCrawl(spark)
-      assert(summary.parityFailures == 0, "extracted text must be byte-identical to stored text")
-      assert(orderLines(spark, dir).mkString("\n") == resource("crawl_order.txt").trim)
-      assert(seenSet(spark, dir, summary.waves - 1).mkString("\n") == resource("seen.txt").trim)
-      val texts = CrawlEngine.readPages(spark, dir)
-        .select("canonicalUrl", "text").collect()
-        .map(r => s"${r.getString(0)}|${CrawlEngine.sha256Hex(r.getString(1))}")
-        .sorted.mkString("\n")
-      assert(texts == resource("text_sha256.txt").trim)
-    }
+    assert(golden.summary.parityFailures == 0, "extracted text must be byte-identical to stored text")
+    assert(lines(golden.order).mkString("\n") == resource("crawl_order.txt").trim)
+    assert(golden.seen.mkString("\n") == resource("seen.txt").trim)
+    assert(golden.texts == resource("text_sha256.txt").trim)
   }
 
   test("shuffle-hash fetch fallback (broadcast cap 0) reproduces the golden crawl") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       // the join-strategy selection must be a pure plan choice: forcing the
       // above-cap SHUFFLE_HASH path (what a 10^10-row wave takes) must give
       // the exact golden order, parity, and seen set
@@ -89,7 +85,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("perHostBudget <= 0 (unlimited) equals a budget at/above every host's count") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       // saturated single wave: an explicit budget >= per-host page count and
       // the unlimited fast path (no politeness shuffle) must produce the
       // same fetched set, order file, and parity
@@ -116,7 +112,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("spillIntermediates: the durable winners-table path reproduces the golden crawl") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       val spec = CorpusGen.Spec(GoldenGen.Hosts, GoldenGen.PagesPerHost)
       val pages = CorpusGen.dataset(spark, spec)
       val dir = Files.createTempDirectory("graft-spill-run").toString
@@ -131,20 +127,17 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("robots gating: /private/ pages are never fetched; politeness budget holds; cap holds") {
-    withSpark("local[4]") { spark =>
-      val (summary, dir) = runCrawl(spark)
-      val order = CrawlEngine.readOrder(spark, dir).collect()
-      assert(!order.exists(_.canonicalUrl.contains("/private/")), "robots Disallow must gate fetches")
-      // per-host-per-wave budget (token bucket equivalence, SURVEY §2.9)
-      val budget = GoldenGen.config(GoldenGen.Hosts).perHostBudget
-      val perWaveHost = order.groupBy(o => (o.wave, o.host)).values.map(_.length)
-      assert(perWaveHost.forall(_ <= budget), "politeness budget exceeded")
-      assert(summary.fetchedTotal <= GoldenGen.MaxPages)
-    }
+    val order = golden.order
+    assert(!order.exists(_.canonicalUrl.contains("/private/")), "robots Disallow must gate fetches")
+    // per-host-per-wave budget (token bucket equivalence, SURVEY §2.9)
+    val budget = GoldenGen.config(GoldenGen.Hosts).perHostBudget
+    val perWaveHost = order.groupBy(o => (o.wave, o.host)).values.map(_.length)
+    assert(perWaveHost.forall(_ <= budget), "politeness budget exceeded")
+    assert(golden.summary.fetchedTotal <= GoldenGen.MaxPages)
   }
 
   test("robots at scale: a 10^5-host rules table gates links with no driver-side map") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val ts = java.sql.Timestamp.valueOf("2025-01-01 00:00:00")
       val robotsBody = "User-agent: *\nDisallow: /private/".getBytes(UTF_8)
@@ -176,7 +169,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("max_pages cap truncates deterministically") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       val (summary, dir) = runCrawl(spark, maxPages = 10)
       assert(summary.fetchedTotal == 10)
       val order = orderLines(spark, dir)
@@ -191,20 +184,22 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("resume from a truncated snapshot reproduces the uninterrupted run exactly") {
-    withSpark("local[4]") { spark =>
-      val (full, fullDir) = runCrawl(spark)
-      // simulate a crash after wave 1: flip CURRENT back, wipe later snapshots
-      val (_, dir2) = runCrawl(spark)
-      Files.write(Paths.get(dir2, "CURRENT"), "1".getBytes(UTF_8))
+    val full = golden
+    // simulate a crash after wave 1: a byte copy of the golden run with
+    // CURRENT flipped back, so the resume rewrites every later wave
+    val dir2 = Files.createTempDirectory("graft-resume").toString
+    copyTree(Paths.get(full.dir), Paths.get(dir2))
+    Files.write(Paths.get(dir2, "CURRENT"), "1".getBytes(UTF_8))
+    isolated() { spark =>
       val (resumed, _) = runCrawl(spark, resumeDir = Some(dir2))
-      assert(resumed.fetchedTotal == full.fetchedTotal)
-      assert(orderLines(spark, dir2) == orderLines(spark, fullDir))
-      assert(seenSet(spark, dir2, resumed.waves - 1) == seenSet(spark, fullDir, full.waves - 1))
+      assert(resumed.fetchedTotal == full.summary.fetchedTotal)
+      assert(orderLines(spark, dir2) == lines(full.order))
+      assert(seenSet(spark, dir2, resumed.waves - 1) == full.seen)
     }
   }
 
   test("robots crawl-delay: a binding delay caps the host's per-wave budget; others unaffected") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val spec = CorpusGen.Spec(3, 12)
       val base = CorpusGen.localPages(spec)
@@ -244,7 +239,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("duplicate captures in the pages table: latest warc_ts wins, no row multiplication") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val spec = CorpusGen.Spec(1, 10)
       val base = CorpusGen.localPages(spec)
@@ -273,7 +268,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("exact (canonical, warc_ts, url) tie: deep tie-break by payload bytes, one row, deterministic") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val ts = new java.sql.Timestamp(1700000000000L)
       def row(html: String, text: String) = graft.model.PageRow(
@@ -311,7 +306,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("adaptive politeness: error-serving host is throttled next wave, then recovers") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val spec = CorpusGen.Spec(2, 20)
       val base = CorpusGen.localPages(spec)
@@ -361,7 +356,7 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("adaptive politeness: single error halves once, then budget recovers to max") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val ts = new java.sql.Timestamp(1700000000000L)
       val filler = "This paragraph pads the page body well past the one-hundred-byte " +
@@ -408,33 +403,28 @@ class CrawlEngineSpec extends AnyFunSuite {
   }
 
   test("parallelism invariance: local[2] and local[8] produce identical order and seen set") {
-    val (o2, s2) = withSpark("local[2]", partitions = 2) { spark =>
+    def leg(master: String, partitions: Int) = isolated(master, partitions) { spark =>
+      assert(spark.sparkContext.master == master, "each leg runs on its own context")
       val (summary, dir) = runCrawl(spark)
       (orderLines(spark, dir), seenSet(spark, dir, summary.waves - 1))
     }
-    val (o8, s8) = withSpark("local[8]", partitions = 8) { spark =>
-      val (summary, dir) = runCrawl(spark)
-      (orderLines(spark, dir), seenSet(spark, dir, summary.waves - 1))
-    }
+    val (o2, s2) = leg("local[2]", 2)
+    val (o8, s8) = leg("local[8]", 8)
     assert(o2 == o8, "crawl order must not depend on parallelism")
     assert(s2 == s8, "seen set must not depend on parallelism")
   }
 
   test("no persisted/checkpointed RDD blocks survive a completed crawl") {
-    withSpark("local[4]") { spark =>
-      var waves = 0
-      // Dataset.unpersist is a no-op on localCheckpoint()ed frames — the
-      // engine must release the backing RDDs itself (releaseBlocks), or
-      // every wave's frontier checkpoint leaks until periodic GC. No
-      // persisted RDD left unreleased proves the eager per-wave release is real.
-      val leaked = LeakProbe.leakedBy(spark) { waves = runCrawl(spark)._1.waves }
-      assert(waves > 1, "multi-wave crawl exercises the per-wave checkpoint path")
-      assert(leaked.isEmpty, s"leaked persisted/checkpointed RDDs after run: $leaked")
-    }
+    // Dataset.unpersist is a no-op on localCheckpoint()ed frames — the
+    // engine must release the backing RDDs itself (releaseBlocks), or
+    // every wave's frontier checkpoint leaks until periodic GC. No
+    // persisted RDD left unreleased proves the eager per-wave release is real.
+    assert(golden.summary.waves > 1, "multi-wave crawl exercises the per-wave checkpoint path")
+    assert(golden.leaked.isEmpty, s"leaked persisted/checkpointed RDDs after run: ${golden.leaked}")
   }
 
   test("a failure mid-crawl releases every cache and stops the sink pool") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       // the log callback throws at a wave marker, after prep and the robots
       // tables materialized: once while wave 1's selection prefetch is in
       // flight, once after wave 1 consumed it
@@ -453,6 +443,12 @@ class CrawlEngineSpec extends AnyFunSuite {
         assertNoLiveThreads("graft-exec-")
       }
     }
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.forEach(p => if (p != from) Files.copy(p, to.resolve(from.relativize(p))))
+    finally walk.close()
   }
 
   /** Pool threads exit asynchronously after shutdown; a leaked pool keeps

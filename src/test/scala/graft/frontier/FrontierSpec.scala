@@ -1,22 +1,11 @@
 package graft.frontier
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.model.FrontierEntry
 import graft.crawl.CrawlEngine
 
-class FrontierSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-frontier-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class FrontierSpec extends AnyFunSuite with SharedSpark {
 
   private def entry(i: Long, host: String = "site0.com", depth: Int = 1): FrontierEntry = {
     val c = s"https://$host/p$i"

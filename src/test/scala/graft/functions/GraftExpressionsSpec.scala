@@ -1,26 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.pipeline.Dedup
 import graft.urls.UrlKernel
 
 /** The native Catalyst expressions must agree byte-for-byte with the Scala
   * kernels (interpreted AND codegen paths), handle nulls/invalids, be
   * callable from SQL, and stay inside whole-stage codegen (no ScalaUDF). */
-class GraftExpressionsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-expr-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class GraftExpressionsSpec extends AnyFunSuite with SharedSpark {
 
   private val urls = Seq(
     "https://Example.COM:443/a/../b/?utm_source=x&id=2&a=1#frag",

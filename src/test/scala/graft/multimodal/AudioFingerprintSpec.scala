@@ -1,23 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the audio fingerprint: gain invariance, the
   * one-sample-edit bit bound, unrelated-take separation, and planted-copy
   * recovery through the contract query. */
-class AudioFingerprintSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-audiofp-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AudioFingerprintSpec extends AnyFunSuite with SharedSpark {
 
   private def tone(n: Int, period: Int, amp: Int): Array[Int] =
     Array.tabulate(n)(i => if ((i / period) % 2 == 0) amp else -amp)

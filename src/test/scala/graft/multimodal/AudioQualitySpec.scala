@@ -1,23 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the audio quality audit: exact integer metrics on
   * constructed takes, isqrt exactness at boundaries, quarantine on corrupt
   * containers, and the planted classes materializing in the contract. */
-class AudioQualitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-audioq-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AudioQualitySpec extends AnyFunSuite with SharedSpark {
 
   test("isqrt is exact on perfect squares and their neighbors, up to int64 scale") {
     for (r <- Seq(0L, 1L, 2L, 255L, 32768L, 1000000L, 3037000498L)) {

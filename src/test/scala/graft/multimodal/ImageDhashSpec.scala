@@ -1,24 +1,14 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for perceptual image hashing: exact invariance to uniform
   * brightness shifts, tolerance of a one-pixel retouch, separation of
   * unrelated images, and the contract plants landing as near-dup pairs that
   * byte-level dedup provably misses. */
-class ImageDhashSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dhash-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ImageDhashSpec extends AnyFunSuite with SharedSpark {
 
   private def img(w: Int, h: Int)(f: (Int, Int) => Int): java.awt.image.BufferedImage = {
     val im = new java.awt.image.BufferedImage(w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)

@@ -1,23 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the image quality audit: exact integer metrics on
   * constructed frames, the variance identity against a direct two-pass
   * computation, and the planted defect classes materializing. */
-class ImageQualitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-imageq-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ImageQualitySpec extends AnyFunSuite with SharedSpark {
 
   private def rgb(pixels: Seq[Int]): Array[Byte] =
     pixels.flatMap(g => Seq(g.toByte, g.toByte, g.toByte)).toArray

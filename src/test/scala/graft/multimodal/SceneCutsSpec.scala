@@ -1,23 +1,13 @@
 package graft.multimodal
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for scene-cut detection: hand-built payloads with known
   * energy profiles (hard cut, gradual ramp, noise floor, warmup), and
   * contract determinism over the synthetic media table. */
-class SceneCutsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-scenecuts-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SceneCutsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** AIMD gates: the transition matches Chiu-Jain AIMD exactly (cap,
   * floor, integer halving), a hand-traced sawtooth is reproduced, and
   * the Spark query replays an independent driver fold for every host. */
-class AimdSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-aimd-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AimdSpec extends AnyFunSuite with SharedSpark {
 
   test("transition: additive to the cap, halving to the floor") {
     assert(Aimd.step(1, 100) === 2)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.extract.HtmlKit
 
 /** Gates for the anchor-text operators: extraction semantics (sightings,
@@ -10,18 +10,7 @@ import graft.extract.HtmlKit
   * the real corpus sightings (same discipline as PageRankSpec — three
   * implementations must agree, the third being the DuckDB oracle), the
   * consensus tie-break total order, and parallelism invariance. */
-class AnchorTextSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-anchor-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AnchorTextSpec extends AnyFunSuite with SharedSpark {
 
   test("extractLinkAnchors: sightings with nested markup, entities, whitespace") {
     val html =

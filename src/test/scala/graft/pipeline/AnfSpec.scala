@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the neighborhood function: exact BFS pair counts on
   * sub-K graphs, the KMV estimator branch within its error band on a
   * super-K clique, partitioning invariance (the sketch is a pure function
   * of the edge set), and the planted chain stretching the contract curve. */
-class AnfSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-anf-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AnfSpec extends AnyFunSuite with SharedSpark {
 
   test("path graph: exact ball counts per radius, effective diameter by the 900‰ rule") {
     import spark.implicits._

@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
+import graft.SharedSpark
 import graft.extract.Mime
 import graft.model.PageRow
 
 /** MIME detection (mime.rs parity) + the asset download/dedup pipeline. */
-class AssetsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-assets-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AssetsSpec extends AnyFunSuite with SharedSpark {
 
   test("mime from extension: reference static-mapping cases (mime.rs:12-40)") {
     assert(Mime.mimeFromUrl("https://x/a.jpg").contains("image/jpeg"))

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for degree mixing: a pure star is exactly −1000, a
   * degree-regular graph reports 0 (undefined mixing), a two-block graph
   * matches the hand-computed rational, and the contract plant drives the
   * corpus r negative with exact k_nn rows. */
-class AssortativitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-assort-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class AssortativitySpec extends AnyFunSuite with SharedSpark {
 
   test("pure star: r = -1000 exactly; k_nn rows are the hub/leaf mirror") {
     import spark.implicits._

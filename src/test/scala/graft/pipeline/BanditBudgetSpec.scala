@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for bandit budget allocation: the distributed policy
   * equals a sequential integer replay exactly, every arm is tried
   * (cold-start coverage), the best arm dominates by the horizon, and
   * suboptimal arms are only revisited logarithmically often. */
-class BanditBudgetSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bandit-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BanditBudgetSpec extends AnyFunSuite with SharedSpark {
 
   /** Sequential replay of the identical policy + environment. */
   private def replay(): Seq[(Long, String, Long, Long, Long)] = {

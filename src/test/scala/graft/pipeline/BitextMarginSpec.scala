@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for margin-based bitext mining: a hand universe where a
   * hub vector defeats absolute cosine but not the margin, the mutual-NN
   * intersection gate, and contract coherence over the embeddings table. */
-class BitextMarginSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bitext-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BitextMarginSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

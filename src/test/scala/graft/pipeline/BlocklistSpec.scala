@@ -1,26 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Blocklist gates: the suffix-join engine replays the closed-form digit
   * ladder row-for-row, the dot boundary and both precedence rules
   * (exact > domain, longest domain wins) provably occur, the general
   * kernel handles a hand-built list correctly, and the plan is
   * product-free. */
-class BlocklistSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-blocklist-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BlocklistSpec extends AnyFunSuite with SharedSpark {
 
   /** Closed-form replay — the oracle's ladder in Scala, no joins. */
   private def expect(i: Int): (String, String, Boolean, Option[String], Option[String]) = {

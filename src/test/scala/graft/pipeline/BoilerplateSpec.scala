@@ -2,9 +2,9 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 import graft.gen.CorpusGen
 import graft.urls.UrlKernel
@@ -14,19 +14,7 @@ import graft.urls.UrlKernel
   * recurring lines and article content are NOT, the mined set is
   * line-disjoint from what the DOM-rule cleaner keeps, and the strip
   * replays row-for-row against an independent driver-side implementation. */
-class BoilerplateSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-boilerplate-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BoilerplateSpec extends AnyFunSuite with SharedSpark {
 
   private val spec = CorpusGen.Spec(3, 16)
   private def localCorpus = CorpusGen.localPages(spec)

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the bootstrap ledger: determinism, the coverage
   * sanity (point inside [p05, p95]), order-statistic coherence, and an
   * independent driver-side replay of one replica's resample. */
-class BootstrapCiSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-boot-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BootstrapCiSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val rows =
     BootstrapCi.bootstrapCiQuery(spark, "/root/testdata/sf0.001").collect()

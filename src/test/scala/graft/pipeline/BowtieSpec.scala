@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the bow-tie decomposition: every Broder class lands
   * exactly where the textbook picture puts it on a planted full bow-tie
@@ -9,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * distances are exact BFS depths, the pivot rule is the deterministic
   * max-degree argmax, and the pinned horizon IS the fixpoint on the
   * contract graph. */
-class BowtieSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-bowtie-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BowtieSpec extends AnyFunSuite with SharedSpark {
 
   test("planted full bow-tie: all five classes, exact BFS distances") {
     import spark.implicits._

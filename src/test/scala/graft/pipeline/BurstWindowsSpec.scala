@@ -2,24 +2,13 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for burst detection: the exact threshold boundary, the
   * consecutive-history (gap-restart) rule, and contract shape. */
-class BurstWindowsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-burst-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class BurstWindowsSpec extends AnyFunSuite with SharedSpark {
 
   /** n events of `typ` inside hour h (h hours after epoch day 19000). */
   private def hour(typ: String, h: Int, n: Int): Seq[(String, Timestamp)] = {

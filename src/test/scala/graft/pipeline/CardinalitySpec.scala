@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the KMV cardinality sketch: the aggregator's bounded
   * buffer is exact under permutation/duplication, the estimator's two
   * branches behave, and accuracy is within KMV's theoretical band on a
   * corpus far larger than the sketch. */
-class CardinalitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cardinality-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CardinalitySpec extends AnyFunSuite with SharedSpark {
 
   test("KmvAgg reduce/merge: sorted distinct k-minima under any arrival order") {
     val agg = new Cardinality.KmvAgg(4)

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** CDC gates: chunk bounds/contiguity invariants, the shift-resistance
   * property fixed-size blocking lacks (an insertion perturbs only chunks
   * up to the next boundary), and a full driver replay of the dedup query
   * — changed pages must demonstrate sub-page dedup. */
-class CdcSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cdc-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CdcSpec extends AnyFunSuite with SharedSpark {
 
   /** Deterministic pseudo-random bytes (chunk boundaries need entropy). */
   private def noise(n: Int, seed: Long): Array[Byte] = {

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Harmonic-centrality gates: the exact MS-BFS kernel reproduces
   * hand-derived values on shaped graphs (including one that crosses the
@@ -9,19 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * replays the corpus-graph output row-for-row, and the HyperBall sketch
   * tracks the exact kernel within its published error regime while staying
   * bit-deterministic (the fixture-oracle requirement). */
-class CentralitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-centrality-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CentralitySpec extends AnyFunSuite with SharedSpark {
 
   private def df(edges: Seq[(String, String)]) = {
     import spark.implicits._

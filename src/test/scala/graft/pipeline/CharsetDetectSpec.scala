@@ -2,27 +2,15 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.CharsetKit
 
 /** Charset sniffing: precedence (BOM > meta > heuristic > default), label
   * normalization, the 1024-byte prescan window, scoped attribute matching,
   * BOM consumption on decode, and the digit-replay of the contract query. */
-class CharsetDetectSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-charset-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CharsetDetectSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

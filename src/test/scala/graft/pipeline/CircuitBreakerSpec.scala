@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Breaker gates: the fold implements Nygard's machine exactly on
   * hand-traced sequences (trip point, cooldown length, probe semantics,
   * re-trip), sub-threshold flapping never trips, and the Spark query
   * replays the per-class ladders row-for-row. */
-class CircuitBreakerSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-breaker-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CircuitBreakerSpec extends AnyFunSuite with SharedSpark {
 
   test("hand-traced machine: trip, cooldown, failed probe, recovery") {
     // errors from t=0: trips after the 3rd (t=2), suppresses 4, probes

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for co-citation: edge-free pairs surface through shared
   * sources, stop-hubs are excluded before pairing, and the Jaccard
   * denominator counts surviving in-link sets. */
-class CocitationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cocitation-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CocitationSpec extends AnyFunSuite with SharedSpark {
 
   test("shared sources surface an edge-free pair; partial overlap scores the exact Jaccard") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the code census: hand blocks with exact dedup and
   * share ledgers, untagged folding, and the contract tie to the
   * extractor (planted rust duplicate must surface). */
-class CodeCensusSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-codecensus-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CodeCensusSpec extends AnyFunSuite with SharedSpark {
 
   test("hand blocks: exact dedup ledger, untagged folding, char shares") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for LPA communities: plurality adoption with min-label
   * ties, the bridged-cliques separation that distinguishes LPA from
   * connected components, and partitioning invariance. */
-class CommunitiesSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-communities-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CommunitiesSpec extends AnyFunSuite with SharedSpark {
 
   private def cliquePairs(p: String, n: Int): Seq[(String, String)] =
     for { i <- 0 until n; j <- i + 1 until n } yield (s"$p$i.com", s"$p$j.com")

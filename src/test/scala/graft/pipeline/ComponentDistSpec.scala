@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the component census: hand-built multi-component
   * graph with exact octave rollups, giant flagging, and contract shape. */
-class ComponentDistSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-compdist-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ComponentDistSpec extends AnyFunSuite with SharedSpark {
 
   test("hand graph: pair + two triangles + 9-path — exact octave census") {
     import spark.implicits._

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the Deflate-ratio quality signal: the distributed
   * kernel equals a local replay of the same pinned-level Deflater, the
   * physics orders template spam < prose < incompressible junk, bands cut
   * at the documented thresholds, and degenerate inputs stay defined. */
-class CompressRatioSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-compress-ratio-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CompressRatioSpec extends AnyFunSuite with SharedSpark {
 
   private def run(docsSeq: Seq[(String, String)]) = {
     import spark.implicits._

@@ -1,25 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the windowed co-occurrence matrix: the distributed
   * kernel equals a sequential replay of the same windowed integer
   * weighting, direction collapses, the window cuts off exactly at
   * [[Cooccurrence.Window]], the hapax floor fires, and lift ranks a
   * planted exclusive collocation above a frequency-inflated pair. */
-class CooccurrenceSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-cooccurrence-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CooccurrenceSpec extends AnyFunSuite with SharedSpark {
 
   /** Sequential replay over (doc_id, text) rows with MinPairs = 1 replaced
     * by the real floor at comparison time. */

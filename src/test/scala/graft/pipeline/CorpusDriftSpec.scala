@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for corpus drift: identical snapshots drift zero, the
   * integer TVD ledger matches an independent in-memory recompute, and the
   * top-contributor cut is the deterministic (contrib desc, term asc) one. */
-class CorpusDriftSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-corpus-drift-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class CorpusDriftSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus = {
     import spark.implicits._

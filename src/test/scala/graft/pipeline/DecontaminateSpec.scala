@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for benchmark decontamination: the donor collides with
   * itself (GPT-3 semantics), a full-span copier and a single-gram copier
   * score exactly, short donors are excluded, clean plants inflate the
   * ledger but never collide, and untouched docs never appear. */
-class DecontaminateSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-decon-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class DecontaminateSpec extends AnyFunSuite with SharedSpark {
 
   private def tokens(from: Int, to: Int): String =
     (from to to).map(i => s"t$i").mkString(" ")

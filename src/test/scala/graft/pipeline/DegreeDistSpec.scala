@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the degree-distribution audit: exact octave
   * bucketing at the power-of-two boundaries (the floor(log2) trap), exact
   * survival permilles on a hand-built graph, and contract-query shape. */
-class DegreeDistSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-degdist-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class DegreeDistSpec extends AnyFunSuite with SharedSpark {
 
   test("hand graph: star-8 + path — exact buckets, los, and survival permilles") {
     import spark.implicits._

@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the depth census: hand-built URL set with exact
   * depths/query counts, trailing-slash handling, and contract shape. */
-class DepthProfileSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-depth-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class DepthProfileSpec extends AnyFunSuite with SharedSpark {
 
   test("hand set: exact depths, query counts, and survival permilles") {
     import spark.implicits._

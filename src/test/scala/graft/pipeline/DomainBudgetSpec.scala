@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Domain-budget gates: the engine replays the closed-form ladder
   * row-for-row through the REAL PSL kernel, and the subdomain-spray
   * bypass is pinned — host budgets admit all 160 spray urls, domain
   * budgets admit exactly Budget. */
-class DomainBudgetSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-domainbudget-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class DomainBudgetSpec extends AnyFunSuite with SharedSpark {
 
   test("replays the ladder; the spray bypass is pinned") {
     val got = DomainBudget.domainBudget(spark, "").collect()

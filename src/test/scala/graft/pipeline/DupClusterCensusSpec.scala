@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the dup-cluster census: hand-built keep-list with
   * exact octave/removal ledgers and the contract tie to q_dedup_keep. */
-class DupClusterCensusSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-dupcensus-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class DupClusterCensusSpec extends AnyFunSuite with SharedSpark {
 
   test("hand keep-list: singletons, a pair, and a 5-cluster — exact ledger") {
     import spark.implicits._

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 import graft.sources.FeedKit
 
@@ -10,19 +10,7 @@ import graft.sources.FeedKit
   * parsers behave per convention on hostile inputs, and the full query
   * replays the closed-form digit ladder row-for-row (no parser on the
   * replay side). */
-class FeedsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-feeds-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class FeedsSpec extends AnyFunSuite with SharedSpark {
 
   test("extractFeedLinks: decoys rejected, relative resolved, rel multi-token, dedup") {
     val html =

@@ -1,25 +1,14 @@
 package graft.pipeline
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
+
+import graft.SharedSpark
 
 /** Front-coding gates: kernel round trips on adversarial lists (empty
   * prefix, full-prefix duplicate-free runs, varint boundary lengths),
   * the accounting replays an independent driver recompute on the real
   * corpus, and the codec actually compresses crawl URL lists. */
-class FrontCodingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-frontcoding-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class FrontCodingSpec extends AnyFunSuite with SharedSpark {
 
   test("lcp kernel") {
     assert(FrontCoding.lcp("", "abc") === 0)

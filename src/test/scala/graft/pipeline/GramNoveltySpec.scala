@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for gram novelty: exact ledgers on planted echo /
   * extension / short docs, and contract shape. */
-class GramNoveltySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-novelty-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class GramNoveltySpec extends AnyFunSuite with SharedSpark {
 
   private def rows(docs: Seq[(Long, String)]): Map[Long, (Long, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the h-index ladder: star (degree loud, h tiny),
   * clique (ladder pinned at coreness), the farmed-hub spam gap, and the
   * theorem sandwich on the corpus graph. */
-class HIndexSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hindex-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HIndexSpec extends AnyFunSuite with SharedSpark {
 
   private def ladder(edges: Seq[(String, String)]): Map[String, (Long, Long, Long)] = {
     import spark.implicits._

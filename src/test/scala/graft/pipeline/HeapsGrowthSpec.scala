@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the vocabulary-growth curve: hand-computed first
   * positions across doc boundaries (the prefix-sum seam), checkpoint
   * capping at the corpus total, and contract shape. */
-class HeapsGrowthSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-heaps-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HeapsGrowthSpec extends AnyFunSuite with SharedSpark {
 
   private def curve(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, Long, Long)] = {
     import spark.implicits._

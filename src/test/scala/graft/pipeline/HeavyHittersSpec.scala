@@ -1,26 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Heavy-hitter gates: the MG sketch's no-false-negative guarantee on an
   * adversarial stream, the candidate-superset property under hostile
   * partitioning, and bit-equality of the two-pass dataflow against the
   * direct full GROUP BY ... HAVING it claims to equal. */
-class HeavyHittersSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hh-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HeavyHittersSpec extends AnyFunSuite with SharedSpark {
 
   test("mgSketch never evicts an item with count > n/(K+1)") {
     // adversarial stream: K distinct decoys between every pair of hot hits

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** HITS gates: the Spark dataflow replays exactly against an independent
   * driver-side Map implementation of the same integer recurrence, mass
   * conservation holds modulo integer-division loss, structural zeros are
   * exact, and the plan stays product-free. */
-class HitsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hits-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HitsSpec extends AnyFunSuite with SharedSpark {
 
   private def edgeList(): Seq[(String, String)] = {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for homoglyph spoof detection: hand universes (spoof
   * cluster, squatting twin, clean corpus), skeleton-map coverage, and
   * contract plant accounting. */
-class HomoglyphSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-homoglyph-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HomoglyphSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,27 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 
 /** hreflang gates: extractor semantics on hostile html, a full digit
   * replay of the pipeline (closed form, no joins, no parser), scenario
   * coverage including the no-return error, and the general join
   * machinery agreeing with the closed form. */
-class HreflangSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hreflang-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HreflangSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

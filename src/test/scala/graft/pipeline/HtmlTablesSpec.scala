@@ -1,22 +1,12 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Contract gates for the table harvest: organic silence over the whole
   * corpus, exact plant accounting, and determinism. */
-class HtmlTablesSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-htmltables-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class HtmlTablesSpec extends AnyFunSuite with SharedSpark {
 
   test("contract: only the plants carry tables; shapes match their design") {
     val rows = HtmlTables.htmlTablesQuery(spark, "/root/testdata/sf0.001").collect()

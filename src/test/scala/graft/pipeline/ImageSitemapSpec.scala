@@ -1,26 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.sources.SitemapSeeder
 
 /** Image-sitemap gates: the extension parser handles CDATA/relative/
   * absolute locs, scheme decoys, caption presence, loc-less entries, and
   * (page, image) dedup; the contract query replays the ladder. */
-class ImageSitemapSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-imagesitemap-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ImageSitemapSpec extends AnyFunSuite with SharedSpark {
 
   test("parser: CDATA, resolution, decoys, loc-less drop, dedup keep-first") {
     val body =

@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Index-maintenance gates: the merge theorem (old⊖tombstones ∪ delta ==
   * direct rebuild, posting-for-posting), all three edit classes occur and
   * flow correctly, and the contract query's term stats replay. */
-class IndexMergeSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-idxmerge-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class IndexMergeSpec extends AnyFunSuite with SharedSpark {
 
   test("merge theorem: maintained index equals the direct rebuild") {
     val direct = IndexMerge.postings(spark, IndexMerge.capture2)

@@ -1,27 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 
 /** JSON-LD gates: the script-tag extractor matches the profile (MIME
   * params, case, decoys), entity explosion covers all four top-level
   * shapes + malformed blocks, both author spellings parse, and the full
   * query replays the closed-form ladder row-for-row. */
-class JsonLdSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-jsonld-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class JsonLdSpec extends AnyFunSuite with SharedSpark {
 
   test("extractJsonLd: MIME params + case match, decoys never do") {
     val html =

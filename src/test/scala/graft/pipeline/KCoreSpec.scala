@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for 2-core peeling: chains peel outside-in with exact
   * rounds, cycles survive, cascade-to-zero-degree nodes are caught, and the
   * pinned horizon IS the fixpoint on the contract graph. */
-class KCoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-kcore-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class KCoreSpec extends AnyFunSuite with SharedSpark {
 
   test("cycle survives; hanging chain peels outside-in at exact rounds") {
     import spark.implicits._

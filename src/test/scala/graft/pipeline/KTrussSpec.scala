@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for 4-truss peeling: hand graphs with known peel
   * trajectories (clique survives, wedge-closure fabric cascades away),
   * the cascade-demotion property that makes peeling iterative, and
   * contract ledger identities. */
-class KTrussSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ktruss-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class KTrussSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for farthest-first k-center selection: a hand universe
   * with a known greedy trajectory, the Gonzalez non-increasing-radius
   * invariant, cluster-representative behavior (one pick per planted
   * cluster before any second pick), and contract coherence. */
-class KcenterCoresetSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-kcenter-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class KcenterCoresetSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the language-diversity ledger: hand-computed
   * Simpson/Hill numbers, deterministic top-lang tie-break, the N=1
   * degenerate guard, and contract shape. */
-class LangDiversitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-langdiv-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class LangDiversitySpec extends AnyFunSuite with SharedSpark {
 
   private def rows(docs: Seq[(String, String)]): Map[String, (Long, Long, String, Long, Long, Long)] = {
     import spark.implicits._

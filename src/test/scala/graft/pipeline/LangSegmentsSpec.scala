@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Segment-profile gates: a hand-built mixed document yields the exact
   * expected segment classes, switch count, dominant class and minority
   * mass; single-class documents profile as switch-free; corpus run is
   * non-degenerate (mixed docs exist and invariants hold). */
-class LangSegmentsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-langseg-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class LangSegmentsSpec extends AnyFunSuite with SharedSpark {
 
   /** Build a documents.parquet with controlled texts, return its dir. */
   private def corpus(texts: Seq[String]): String = {

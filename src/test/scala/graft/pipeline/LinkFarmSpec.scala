@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Triangle gates: the oriented-wedge dataflow matches a brute-force
   * all-triples reference on a planted farm + organic backbone graph, and
   * the clustering signal separates the farm from the backbone. */
-class LinkFarmSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-linkfarm-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class LinkFarmSpec extends AnyFunSuite with SharedSpark {
 
   /** Planted graph: a 6-host spam clique (farm0..farm5, all 15 edges),
     * a 12-host organic chain with sporadic skips, and a single bridge.

@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Locality gates: corpus invariants (counts partition, permille bounds,
   * distinct-host accounting vs an independent recompute) and the
   * locality signal being non-degenerate in both directions. */
-class LinkLocalitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-locality-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class LinkLocalitySpec extends AnyFunSuite with SharedSpark {
 
   test("corpus locality replays an independent driver-side recompute") {
     import spark.implicits._

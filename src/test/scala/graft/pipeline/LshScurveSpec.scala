@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the S-curve audit: the fixed-point prediction
   * against closed-form doubles at grid points, monotonicity, and the
   * theory-practice agreement of the real banding on the planted pairs. */
-class LshScurveSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-scurve-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class LshScurveSpec extends AnyFunSuite with SharedSpark {
 
   test("fixed-point prediction tracks the closed form within 3 milli on a grid") {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the makespan bound: both regimes (capacity-bound and
   * host-bound) with exact ceils, the critical set, and the planted trap
   * host binding the contract corpus. */
-class MakespanSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-makespan-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class MakespanSpec extends AnyFunSuite with SharedSpark {
 
   test("capacity regime: many small hosts — work bound binds, no critical host") {
     import spark.implicits._

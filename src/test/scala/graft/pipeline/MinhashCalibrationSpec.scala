@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for MinHash calibration: the identical-doc zero-error
   * fixpoint, disjoint docs at both zeros, the Broder error bound on the
   * contract population, and determinism (fixture precondition). */
-class MinhashCalibrationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-mhcal-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class MinhashCalibrationSpec extends AnyFunSuite with SharedSpark {
 
   test("identical docs: est 1000, exact 1000, err 0; disjoint docs: all zero") {
     import spark.implicits._

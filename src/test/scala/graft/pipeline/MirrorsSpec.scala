@@ -2,28 +2,16 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.urls.UrlKernel
 
 /** Mirror-host detection: the planted full mirror binds at containment
   * 1000‰, the planted partial mirror binds with its exact Jaccard, organic
   * host pairs never pair, the Spark result replays driver-side, and the
   * per-digest cap provably bounds a viral-page explosion. */
-class MirrorsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-mirrors-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class MirrorsSpec extends AnyFunSuite with SharedSpark {
 
   private def md5Hex(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString

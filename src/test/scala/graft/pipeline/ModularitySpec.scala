@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for modularity: the textbook anchors are exact — two
   * disjoint triangles 0.5, one clique 0, the planted bridged 4-cliques
   * 423076 micro with hand-computed per-community ledgers. */
-class ModularitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-modularity-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ModularitySpec extends AnyFunSuite with SharedSpark {
 
   test("two disjoint triangles: Q = 1/2 exactly") {
     import spark.implicits._

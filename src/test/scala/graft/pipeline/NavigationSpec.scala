@@ -1,27 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 
 /** Navigation gates: the meta-refresh and rel-nav extractors handle the
   * wild's spellings and decoys, the generic chain kernel resolves
   * terminals and hop counts exactly, and both contract queries replay
   * their closed-form ladders row-for-row. */
-class NavigationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-navigation-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class NavigationSpec extends AnyFunSuite with SharedSpark {
 
   test("extractMetaRefresh: spellings, quotes, self-reload, decoys") {
     def p(h: String) = HtmlKit.extractMetaRefresh(

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** N-gram LM gates: the distributed count hierarchy matches hand-counted
   * values on a planted corpus; stupid backoff scores the present-trigram,
   * backed-off-bigram and backed-off-unigram cases exactly; the corpus
   * model obeys the count/denominator identities. */
-class NgramLmSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ngram-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class NgramLmSpec extends AnyFunSuite with SharedSpark {
 
   // 15 tokens total; "the cat" ×3, "the cat sat" ×2, "cat" ×4, "the" ×4
   private val planted = Seq(

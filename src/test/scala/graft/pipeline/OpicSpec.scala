@@ -1,26 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** OPIC gates: the Spark wave loop replays exactly against an independent
   * driver-side Map implementation of the same integer cash/history
   * recurrence, cash conservation holds modulo division loss, the crawl
   * adapts (a page can be crawled more than once), and the per-wave
   * selection is a bounded TakeOrdered, never a global sort. */
-class OpicSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-opic-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class OpicSpec extends AnyFunSuite with SharedSpark {
 
   private def edgeList(): Seq[(String, String)] = {
     import spark.implicits._

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Gates for the link-graph PageRank operator: an independent driver-side
   * replay of the integer recurrence (the same discipline as the DuckDB
   * oracle, but in plain Scala collections — three implementations must
   * agree), plus structural sanity and parallelism invariance. */
-class PageRankSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pagerank-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PageRankSpec extends AnyFunSuite with SharedSpark {
 
   test("pageRank matches an independent driver-side replay of the integer recurrence") {
     val edges = CrawlQueries.extractLinkEdges(spark, "")

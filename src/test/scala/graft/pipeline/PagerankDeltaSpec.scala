@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for incremental PageRank: the warm-start dominance
   * claim at every budget, ledger coherence, and the closed-form sanity
   * that more rounds bring every variant closer to the reference. */
-class PagerankDeltaSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-prdelta-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PagerankDeltaSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val rows =
     PagerankDelta.pagerankDelta(spark, "/root/testdata/sf0.001").collect()

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the attack curve: the dumbbell shatters at k=1 with
   * exact sizes, the ranking is static original-degree, the curve is
   * monotone non-increasing, and the contract plant is the designed first
   * casualty. */
-class PercolationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-perc-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PercolationSpec extends AnyFunSuite with SharedSpark {
 
   test("dumbbell + triangle: bridge removal shatters the giant, exact sizes and permille") {
     import spark.implicits._

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Codec gates: LEB128 boundary values roundtrip bit-exactly, corruption
   * is detected loudly (truncation AND trailing bytes), encoded length
   * equals the arithmetic ladder the oracle uses, and the contract query
   * replays a driver-side derivation on the real corpus. */
-class PostingsCodecSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-postings-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PostingsCodecSpec extends AnyFunSuite with SharedSpark {
 
   private def varintLen(g: Long): Int =
     if (g < 128) 1 else if (g < 16384) 2 else if (g < 2097152) 3

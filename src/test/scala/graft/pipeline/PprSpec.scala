@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for personalized PageRank: zero ⟺ seed-unreachable, mass
   * decays with seed distance, the seeded recurrence matches a sequential
   * integer replay exactly, and the contract query genuinely contrasts with
   * global PageRank (a globally-popular but seed-unreachable page scores 0). */
-class PprSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ppr-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PprSpec extends AnyFunSuite with SharedSpark {
 
   /** Sequential integer replay of the identical recurrence. */
   private def replay(edges: Seq[(String, String)], seeds: Seq[String]): Map[String, Long] = {

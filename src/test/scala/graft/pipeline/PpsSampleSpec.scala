@@ -1,27 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for systematic PPS sampling: the partition-of-the-line
   * identity (per-interval grid hits sum to the global grid count), guaranteed
   * selection of over-stride documents, partitioning invariance, and the
   * two-phase bucketed prefix sum reproducing the direct global-window
   * formulation exactly. */
-class PpsSampleSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-pps-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PpsSampleSpec extends AnyFunSuite with SharedSpark {
 
   /** Deterministic synthetic corpus: 400 docs, word counts spanning 1..~60
     * via a quadratic residue — plus one giant doc that must out-stride the

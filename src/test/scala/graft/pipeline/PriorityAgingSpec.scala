@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Aging gates: the Spark dataflow replays an independent sequential
   * simulation of both policies wave-for-wave; the static policy provably
   * starves the bottom band while the aged policy schedules every item
   * within the band × AgeEvery + drain bound. */
-class PriorityAgingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-aging-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class PriorityAgingSpec extends AnyFunSuite with SharedSpark {
 
   /** Independent sequential sim: plain collections, no Spark. */
   private def replay(aged: Boolean): Map[Long, Int] = {

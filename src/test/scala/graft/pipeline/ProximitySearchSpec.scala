@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for NEAR/W search: exact min gaps on hand documents
   * (incl. the merge-scan adjacency argument with interleaved repeats),
   * one-sided docs excluded, zero-hit pairs preserved, contract shape. */
-class ProximitySearchSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-proximity-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ProximitySearchSpec extends AnyFunSuite with SharedSpark {
 
   private def run(docs: Seq[(Long, String)], pairs: Seq[(String, String)]): Map[String, (Long, Long, Long, Long)] = {
     import spark.implicits._

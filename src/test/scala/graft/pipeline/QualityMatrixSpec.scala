@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the joint length×quality census: hand-computed cell
   * placement (octave boundaries, stopword deciles), exact permille ledger,
   * and contract shape over the corpus. */
-class QualityMatrixSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-qualmatrix-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class QualityMatrixSpec extends AnyFunSuite with SharedSpark {
 
   test("hand corpus: exact cell placement and permille ledger") {
     import spark.implicits._

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the bottom-k hash-sample quantile sketch: the packed
   * aggregator obeys the map-side-combine laws (permutation/slicing
@@ -9,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exact percentiles, and a group far larger than the sketch estimates
   * within the sample-quantile error band on a deliberately skewed
   * distribution. */
-class QuantileSketchSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-quantile-sketch-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class QuantileSketchSpec extends AnyFunSuite with SharedSpark {
 
   private def unpack(a: Array[Long]): Seq[(Long, Long, Long)] =
     a.grouped(3).map(t => (t(0), t(1), t(2))).toSeq

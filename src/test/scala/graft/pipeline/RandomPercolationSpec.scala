@@ -1,24 +1,14 @@
 package graft.pipeline
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for Bernoulli site percolation: exact removal replay on
   * a clique (survivors stay complete), an independent union-find replay on
   * the dumbbell, and the error-vs-attack contrast. */
-class RandomPercolationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-randperc-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RandomPercolationSpec extends AnyFunSuite with SharedSpark {
 
   /** Test-local replica of the engine's removal rule. */
   private def removed(host: String, p: Int): Boolean =

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the deterministic walk sampler: every consecutive
   * pair is a real edge, the hop choice equals a sequential replay of the
   * same md5 argmin draw, dead ends truncate (never teleport), forced
   * paths are followed exactly, and duplicate edge rows cannot bias a hop. */
-class RandomWalksSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-random-walks-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RandomWalksSpec extends AnyFunSuite with SharedSpark {
 
   private def md5hex(s: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5")

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the rank-correlation audit: exact tau on constructed
   * rankings (perfect agreement, perfect reversal, ties ledgered apart),
   * and the in-degree-beats-out-degree ordering on the contract graph. */
-class RankCorrelationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tau-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RankCorrelationSpec extends AnyFunSuite with SharedSpark {
 
   test("exact tau on constructed rankings: +1000, −1000, and a ledgered tie") {
     import spark.implicits._

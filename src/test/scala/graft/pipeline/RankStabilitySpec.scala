@@ -1,23 +1,13 @@
 package graft.pipeline
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for rank stability: the zero-noise fixpoint, a
   * test-local replay of the noise filter, and contract ledger gates. */
-class RankStabilitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rankstab-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RankStabilitySpec extends AnyFunSuite with SharedSpark {
 
   private val pages = Seq(
     ("https://a.example/1", "https://b.example/x"),

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the readability scores: the column math equals a
   * sequential integer replay of the same formulae, simple short-sentence
   * prose out-scores polysyllabic run-ons, bands cut at FRE 70/50, and
   * degenerate inputs hit the floors instead of dividing by zero. */
-class ReadabilitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-readability-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ReadabilitySpec extends AnyFunSuite with SharedSpark {
 
   private def replay(text: String): (Long, Long, Long, Long, Long) = {
     val w = math.max(text.split(" ", -1).length.toLong, 1L)

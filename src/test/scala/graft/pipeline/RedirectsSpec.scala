@@ -1,25 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Gates for redirect-chain resolution: row-for-row agreement with an
   * independent driver-side chain WALKER (sequential pointer following — a
   * structurally different algorithm from the engine's pointer doubling),
   * the planted decision matrix pinned case by case, and the plan asserted
   * hash-joins-only. */
-class RedirectsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-redirects-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RedirectsSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

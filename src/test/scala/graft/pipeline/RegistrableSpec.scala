@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Registrable-domain contract gates: the engine (real PSL kernel over
   * the digit universe) replays the closed-form ladder row-for-row, and
   * every exercised branch genuinely occurs in the universe. */
-class RegistrableSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-registrable-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RegistrableSpec extends AnyFunSuite with SharedSpark {
 
   /** The oracle ladder in Scala — no PSL matching, no punycoding. */
   private def expect(i: Int): (Long, String, String, String, Option[String]) = {

@@ -2,27 +2,15 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 
 /** rel=canonical collapse: declared groups form exactly as planted, the
   * one-hop / mutual-cycle / dangling rules fire on their plants, extraction
   * is first-hit-in-document-order, and a full driver replay matches. */
-class RelCanonicalSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-canonical-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RelCanonicalSpec extends AnyFunSuite with SharedSpark {
 
   test("extractCanonical: first declaration wins; absent/empty handled") {
     assert(HtmlKit.extractCanonical(

@@ -1,26 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** HRW gates: the column implementation replays an independent
   * MessageDigest-based driver derivation host-for-host, the minimal-
   * movement THEOREM holds exactly (a moved host lands only on a NEW
   * shard; survivors' assignments are untouched), the movement fraction
   * is the theoretical (M−N)/M up to sampling noise, and load spreads. */
-class RendezvousSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rendezvous-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RendezvousSpec extends AnyFunSuite with SharedSpark {
 
   /** Independent replay: Java MessageDigest md5, no Spark expressions. */
   private def weight(host: String, s: Int): Long = {

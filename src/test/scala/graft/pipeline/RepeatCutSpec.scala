@@ -1,25 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the repeated-span cutter: value-for-value equality
   * with a plain-Scala per-code-point replay (brute-force rep + coverage
   * union — the DuckDB twin's method, re-derived independently here), the
   * planted-boilerplate removal story, and ledger coherence with the
   * detector. */
-class RepeatCutSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-repeatcut-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RepeatCutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Gates for the reshard-plan operator: the structural claims the operator
   * exists to demonstrate, verified on a population large enough to fill
   * every shard, plus a driver-side replay of the corpus query. */
-class ReshardingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-resharding-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ReshardingSpec extends AnyFunSuite with SharedSpark {
 
   test("exact-multiple growth is fan-in 1 for both; coprime growth: mod all-to-all, prefix <= 2") {
     import spark.implicits._

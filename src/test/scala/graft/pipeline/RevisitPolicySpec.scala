@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the revisit-policy simulator: a hand-traced
   * single-page universe (both policies exact), the matched-policy
   * perfect-freshness theorem for phase-0 pages, and contract shape. */
-class RevisitPolicySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-revisit-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RevisitPolicySpec extends AnyFunSuite with SharedSpark {
 
   private def run(pages: Seq[(Long, Long)]): Map[String, (Long, Long, Long, Long, Long, Long, Long, Long)] = {
     import spark.implicits._

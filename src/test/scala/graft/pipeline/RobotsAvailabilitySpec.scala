@@ -1,27 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.politeness.Robots
 
 /** Availability-policy gates: RFC 9309 §2.3.1 kernel boundaries, the
   * cache rule, a full digit replay of the contract query (policy arms
   * re-derived without the parser), scenario coverage, and the planted
   * rules scenario actually flowing through the real parser. */
-class RobotsAvailabilitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-robots-avail-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RobotsAvailabilitySpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

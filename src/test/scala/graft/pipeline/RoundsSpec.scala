@@ -1,35 +1,16 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.IsolatedSpark
 
 /** The round loop: every round checkpointed, each superseded round
   * released as soon as its successor materialized, the caller's `init`
   * never. Persisted RDDs are counted as a delta against the registry taken
   * before each call. */
-class RoundsSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  // a fresh SparkContext without the ContextCleaner: an RDD leaves the
-  // registry only when the code under test releases it, never because a
-  // GC happened to collect its Dataset first
-  private lazy val spark: SparkSession = {
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rounds-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  // later suites must not inherit a context that never cleans up
-  override def afterAll(): Unit = spark.stop()
+class RoundsSpec extends AnyFunSuite with IsolatedSpark {
 
   private def leakedBy(f: => Unit): Set[Int] = graft.LeakProbe.leakedBy(spark)(f)
 

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for reciprocal-rank fusion: the integer RRF identity
   * re-derived per row, component-ranking parity with the standalone BM25
   * operator (no drift), genuine inter-system disagreement on the real
   * corpus, and the both-lists-agree dominance check. */
-class RrfFusionSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-rrf-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class RrfFusionSpec extends AnyFunSuite with SharedSpark {
 
   private lazy val rows =
     RrfFusion.rrfFusionQuery(spark, "/root/testdata/sf0.001").collect()

@@ -1,26 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** SALSA gates: the Spark dataflow replays exactly against an
   * independent driver-side Map implementation of the same
   * degree-normalized integer walk, the TKC contrast vs HITS is pinned
   * on a planted clique-vs-popularity graph, and the in-degree
   * stationarity shows within a component. */
-class SalsaSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-salsa-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SalsaSpec extends AnyFunSuite with SharedSpark {
 
   /** Independent sequential replay: Maps and loops, no Spark. */
   private def replay(edges: Seq[(String, String)]): Map[String, (Long, Long)] = {

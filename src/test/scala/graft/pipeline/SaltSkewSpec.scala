@@ -1,24 +1,14 @@
 package graft.pipeline
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the salting audit: both strategies replayed
   * test-locally (same hash, same salt rule), exact mass conservation,
   * and the imbalance win on a planted mega-host. */
-class SaltSkewSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-saltskew-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SaltSkewSpec extends AnyFunSuite with SharedSpark {
 
   private def h44(s: String): Long =
     java.lang.Long.parseLong(DigestUtils.md5Hex(s).substring(0, 11), 16)

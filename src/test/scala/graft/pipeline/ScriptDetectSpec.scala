@@ -1,24 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Script-detection gates: the kernel classifies by codepoint (surrogate
   * pairs, COMMON/INHERITED conventions), dominance excludes COMMON, and
   * the contract query replays the closed-form ladder. */
-class ScriptDetectSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-script-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ScriptDetectSpec extends AnyFunSuite with SharedSpark {
 
   test("kernel: scripts, COMMON, surrogate pairs, dominance") {
     val c = ScriptDetect.scriptCounts("ab вг 中 ع हि 한 12!")

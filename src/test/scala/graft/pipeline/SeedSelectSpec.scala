@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for greedy seed selection: marginal gain beats absolute
   * ball size on overlapping stars (the submodularity point), radius-2
   * reachability is exact, saturation stops the rounds early, and the
   * contract plants land exactly where the arithmetic says. */
-class SeedSelectSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-seedsel-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SeedSelectSpec extends AnyFunSuite with SharedSpark {
 
   test("overlapping stars: greedy picks by MARGINAL gain, not ball size") {
     import spark.implicits._

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.pipeline.Similarity.{cosine, nearestCentroid, Embedded}
 
 /** SemDeDup gates: a planted corpus with known semantic-duplicate groups
@@ -10,19 +10,7 @@ import graft.pipeline.Similarity.{cosine, nearestCentroid, Embedded}
   * from centroid survives); the real-corpus run agrees with an
   * independent driver replay of assignment/grouping/keep; the capped
   * branch bounds pair work and flags rows. */
-class SemDeDupSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-semdedup-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SemDeDupSpec extends AnyFunSuite with SharedSpark {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Exact shingle-Jaccard gates: hand-checkable Jaccard arithmetic on a tiny
   * corpus, independent Scala-set replay on a planted mutation, the
   * stop-shingle cap provably suppressing boilerplate pairs, and the
   * sub-shingle-length edge (docs under 3 words pair with nothing). */
-class ShingleJaccardSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-shingle-jaccard-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ShingleJaccardSpec extends AnyFunSuite with SharedSpark {
 
   /** Independent replay: normalized word-3-gram sets via plain Scala. */
   private def shingleSet(text: String): Set[String] = {

@@ -1,8 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.sources.SitemapSeeder
 import graft.urls.UrlKernel
 
@@ -10,19 +10,7 @@ import graft.urls.UrlKernel
   * lastmod priority made real: field parsing (ISO, date-only, CDATA,
   * missing), param filter, canonical collapse, and the per-host priority
   * ranking all replayed driver-side. */
-class SitemapBudgetSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sitemap-budget-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SitemapBudgetSpec extends AnyFunSuite with SharedSpark {
 
   test("parseEntries: metadata fields, CDATA, non-http drop, first-dup-wins") {
     val body =

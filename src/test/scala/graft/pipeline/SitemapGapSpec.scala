@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Gates for the sitemap-coverage gap monitor: arithmetic invariants, both
   * join branches demonstrably exercised, and row-level agreement with an
   * independent driver-side membership replay. */
-class SitemapGapSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sitemapgap-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SitemapGapSpec extends AnyFunSuite with SharedSpark {
 
   test("sitemapGap matches a driver-side membership replay; both branches fire") {
     val norm = (u: String) => u.replaceAll("/+$", "")

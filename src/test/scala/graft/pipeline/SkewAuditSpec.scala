@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the skew/fairness ledger: hand-computed exact
   * permilles on planted mass vectors, the uniform fixed point, and
   * contract-query shape + range sanity. */
-class SkewAuditSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-skew-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SkewAuditSpec extends AnyFunSuite with SharedSpark {
 
   private def row(masses: Seq[Long]): (Long, Long, Long, Long, Long, Long, Long) = {
     import spark.implicits._

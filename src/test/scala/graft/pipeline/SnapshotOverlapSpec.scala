@@ -1,24 +1,14 @@
 package graft.pipeline
 
 import org.apache.commons.codec.digest.DigestUtils
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for snapshot overlap: the exact ledger against a
   * test-local replay, sub-k exactness of the sketch path, estimator
   * accuracy at scale, and contract shape. */
-class SnapshotOverlapSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-snapover-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SnapshotOverlapSpec extends AnyFunSuite with SharedSpark {
 
   private def inSnap(url: String, salt: String): Boolean =
     DigestUtils.md5Hex(url + salt).charAt(0) < 'c'

@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Snippet gates: the two-pointer best-window kernel replays a brute-force
   * driver derivation row-for-row on the real corpus, the partial-miss and
   * full-miss queries behave as specified, md5 reconstruction matches a
   * direct slice, and the plan broadcasts the query vocabulary. */
-class SnippetsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-snippets-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SnippetsSpec extends AnyFunSuite with SharedSpark {
 
   private val Dir = "/root/testdata/sf0.001"
 

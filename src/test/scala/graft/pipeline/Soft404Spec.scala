@@ -2,25 +2,14 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Soft-404 probe semantics: misconfigured hosts flag exactly the planted
   * dead paths, honest-404 and unprobed hosts flag nothing, organic content
   * never matches the probe digest, and the probe table broadcasts. */
-class Soft404Spec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-soft404-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class Soft404Spec extends AnyFunSuite with SharedSpark {
 
   test("planted audit: misconfigured hosts flag exactly their dead paths") {
     val rows = Soft404.soft404(spark, "unused").collect()

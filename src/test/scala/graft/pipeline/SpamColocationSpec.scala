@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for IP-pooled spam mass: exact weighted pooling on a
   * hand frame, the dilution theorem (PageRank weighting), and contract
   * coherence against the ip-budget topology. */
-class SpamColocationSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-spamco-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SpamColocationSpec extends AnyFunSuite with SharedSpark {
 
   private def ipOf(host: String): Long = {
     val h = java.lang.Long.parseLong(

@@ -1,25 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the split-leakage audit: hand keep-lists with known
   * split assignments (derived through the SAME shared rule, then asserted
   * against expectations), the cluster-promotion fix theorem, and contract
   * coherence against the live keep-list and sample split. */
-class SplitLeakageSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-leak-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SplitLeakageSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

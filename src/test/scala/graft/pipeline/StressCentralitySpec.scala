@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for stress centrality: hand-computed path-count ledgers
   * on a path and a diamond (σ multiplicity), endpoint exclusion, and
   * contract shape. */
-class StressCentralitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-stress-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StressCentralitySpec extends AnyFunSuite with SharedSpark {
 
   private def stress(edges: Seq[(String, String)]): Map[String, (Long, Long, Long)] = {
     import spark.implicits._

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the suffix-window repeat profile: value-for-value
   * equality with a brute-force longest-repeat replay on hand corpora, the
   * planted-boilerplate detection story, cap saturation, and contract
   * coherence. */
-class SuffixRepeatsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sufrep-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SuffixRepeatsSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for TextTiling: a hand document with two vocabulary
   * regimes (the valley must land exactly at the topic turn), cohesive and
   * tiny documents cut nothing, and contract identities. */
-class TextTilingSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tiling-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class TextTilingSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for tokenizer fertility: per-language ledger coherence
   * against an independent driver-side BPE recount, invariants of the
   * fertility arithmetic, and determinism across parallelism. */
-class TokenizerFertilitySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-fertility-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class TokenizerFertilitySpec extends AnyFunSuite with SharedSpark {
 
   test("ledger matches an independent single-threaded BPE recount per lang") {
     val rows = TokenizerFertility.tokenizerFertility(spark, "/root/testdata/sf0.001")

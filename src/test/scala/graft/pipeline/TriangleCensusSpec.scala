@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the triangle census: hand-counted graphs (clique,
   * star, wedge-only chain), the once-per-triangle orientation guarantee,
   * duplicate/direction insensitivity, and contract-shape identities. */
-class TriangleCensusSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tri-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class TriangleCensusSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

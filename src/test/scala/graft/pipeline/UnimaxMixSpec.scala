@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for UniMax waterfilling: hand universes with known
   * levels (saturation, remainder distribution, budget-exceeds-caps), the
   * exact-budget conservation identity, and contract coherence. */
-class UnimaxMixSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-unimax-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class UnimaxMixSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

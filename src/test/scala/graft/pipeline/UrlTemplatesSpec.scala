@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for URL-template mining / crawler-trap detection: the
   * template rule collapses id/date/session variance, the planted calendar
   * trap MUST be flagged, organic corpus hosts must NOT be. */
-class UrlTemplatesSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-urltemplates-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class UrlTemplatesSpec extends AnyFunSuite with SharedSpark {
 
   test("template rule: hex runs collapse before digit runs; root path; non-http dropped") {
     import spark.implicits._

@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the walk co-visit matrix: exact pair counts against
   * a sequential window count over the (already replay-gated) walk corpus,
   * symmetric collapse, self-pairs from cycles kept, and the no-edge
   * structural-closeness property the direct link signals cannot see. */
-class WalkCovisitSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-walk-covisit-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WalkCovisitSpec extends AnyFunSuite with SharedSpark {
 
   private def covisits(edges: Seq[(String, String)]) = {
     import spark.implicits._

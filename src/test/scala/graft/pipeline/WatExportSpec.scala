@@ -2,9 +2,9 @@ package graft.pipeline
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.extract.HtmlKit
 import graft.gen.CorpusGen
 import graft.sources.WarcKit
@@ -14,19 +14,7 @@ import graft.sources.WarcKit
   * independently), JSON escaping survives hostile titles and urls through
   * the full write→parse→from_json path, and the corpus genuinely
   * exercises multi-link pages. */
-class WatExportSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-wat-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WatExportSpec extends AnyFunSuite with SharedSpark {
 
   private def md5Hex(b: Array[Byte]): String =
     java.security.MessageDigest.getInstance("MD5")

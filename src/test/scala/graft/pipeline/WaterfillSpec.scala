@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for max-min fair water-filling: exact equality with a
   * sequential progressive-fill replay, conservation (Σ alloc = min(cap,
@@ -9,18 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * never sits more than the +1 remainder below another's allocation), and
   * the three structural branches (binding segment, all-equal demands =
   * empty segment, saturated capacity). */
-class WaterfillSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-waterfill-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WaterfillSpec extends AnyFunSuite with SharedSpark {
 
   /** Sequential replay: integer progressive fill at capacity
     * total div CapacityDiv, remainder to the host-ascending first. */

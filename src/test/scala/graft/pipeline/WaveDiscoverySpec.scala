@@ -1,25 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Expansion-curve gates: the curve replays an independent driver-side
   * recompute from the same crawl order, and the structural invariants
   * (wave-0 seeds are all new, cum_hosts is monotone and ends at the
   * distinct-host total, new ≤ touched) hold. */
-class WaveDiscoverySpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-wavedisc-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WaveDiscoverySpec extends AnyFunSuite with SharedSpark {
 
   test("curve replays the sequential recompute and holds its invariants") {
     val order = CrawlQueries.crawlOrder(spark, "/root/testdata/sf0.001")

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for WL refinement: the star (two roles forever), the
   * path-5 round-1 split, a structure-twin farm collapsing to one class,
   * and contract convergence shape. */
-class WlColorsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-wl-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WlColorsSpec extends AnyFunSuite with SharedSpark {
 
   private def run(edges: Seq[(String, String)]): Map[Long, (Long, Long, Long, Long, Long)] = {
     import spark.implicits._

@@ -1,23 +1,13 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the Zipf octave curve: hand-computed exact octave
   * rollups (incl. the deterministic tie rank), boundary bucketing, and
   * contract shape over the corpus. */
-class ZipfCurveSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-zipf-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ZipfCurveSpec extends AnyFunSuite with SharedSpark {
 
   test("hand corpus 8a/4b/2c/1d/1e: exact octave masses and boundary freqs") {
     import spark.implicits._

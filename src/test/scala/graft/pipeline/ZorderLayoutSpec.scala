@@ -1,24 +1,14 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Semantic gates for the z-order skipping ledger: the full 16×16 grid
   * where every scan count is known in closed form (the textbook
   * one-dim-sorted vs interleaved trade, exact), and contract coherence
   * on the corpus. */
-class ZorderLayoutSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-zorder-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ZorderLayoutSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
 

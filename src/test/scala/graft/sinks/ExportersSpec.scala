@@ -1,21 +1,10 @@
 package graft.sinks
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.sources.Compression
 
-class ExportersSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-export-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class ExportersSpec extends AnyFunSuite with SharedSpark {
 
   test("validateVectors: dims mismatch, NaN, Inf, null rejected with reasons") {
     import spark.implicits._

@@ -3,9 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TestSpark.isolated
 import graft.gen.CorpusGen
 
 /** The distributed archive writer (WarcKit.writeArchivePartitioned) — the
@@ -18,19 +18,6 @@ import graft.gen.CorpusGen
   * partitions emit nothing), both gzip and zstd member layouts, and the
   * per-attempt segment commit on the local FS. */
 class ArchiveWriterSpec extends AnyFunSuite {
-
-  private def withSpark[T](master: String, partitions: Int = 4)(f: SparkSession => T): T = {
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-archive-writer-test")
-      .config("spark.sql.shuffle.partitions", partitions.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    try f(spark)
-    finally spark.stop()
-  }
 
   /** Mixed-type record fixture: responses (with digests), a revisit, a WET
     * conversion and a WAT metadata record — every branch of the codec. */
@@ -63,8 +50,9 @@ class ArchiveWriterSpec extends AnyFunSuite {
     WarcKit.writeArchive(recs, s"$refDir/ref.warc.gz", gzip = true)
 
     val results = Seq(("local[2]", 2), ("local[8]", 8)).map { case (master, par) =>
-      withSpark(master, partitions = par) { spark =>
+      isolated(master, partitions = par) { spark =>
         import spark.implicits._
+        assert(spark.sparkContext.master == master, "each leg runs on its own context")
         val dir = Files.createTempDirectory(s"graft-aw-$par").toString
         WarcKit.writeArchivePartitioned(
           spark.createDataset(recs).repartition(par), dir, codec = "gz")
@@ -83,7 +71,7 @@ class ArchiveWriterSpec extends AnyFunSuite {
   }
 
   test("segment hygiene: deterministic names, no tmp survivors, empty partitions emit nothing") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val recs = mixedRecords.take(3)
       val dir = Files.createTempDirectory("graft-aw-hygiene").toString
@@ -103,7 +91,7 @@ class ArchiveWriterSpec extends AnyFunSuite {
   }
 
   test("zstd member-per-record segments round-trip") {
-    withSpark("local[4]") { spark =>
+    isolated() { spark =>
       import spark.implicits._
       val recs = mixedRecords
       val dir = Files.createTempDirectory("graft-aw-zst").toString

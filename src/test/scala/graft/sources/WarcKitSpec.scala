@@ -1,26 +1,15 @@
 package graft.sources
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.gen.CorpusGen
 import graft.model.CrawlConfig
 
 /** WARC source semantics: byte-exact record round-trips (plain and
   * member-per-record gzip), non-response records skipped, and a raw WARC
   * archive ingesting straight into the crawl engine with parity. */
-class WarcKitSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-warc-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WarcKitSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus = CorpusGen.localPages(CorpusGen.Spec(2, 12))
 

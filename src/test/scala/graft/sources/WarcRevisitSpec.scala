@@ -3,9 +3,9 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.gen.CorpusGen
 import graft.pipeline.RevisitQueries
 
@@ -13,19 +13,7 @@ import graft.pipeline.RevisitQueries
   * round-trip of mixed response/revisit archives, the Seq and distributed
   * dedup twins agreeing, and the storage saving actually materializing in
   * the written bytes. */
-class WarcRevisitSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-warc-revisit-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class WarcRevisitSpec extends AnyFunSuite with SharedSpark {
 
   private def corpus = CorpusGen.localPages(CorpusGen.Spec(2, 12))
 

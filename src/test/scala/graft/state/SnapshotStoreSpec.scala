@@ -1,26 +1,15 @@
 package graft.state
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.crawl.CrawlEngine
 import graft.model.FrontierEntry
 
 /** Manifest-list + file-pruning semantics of the Iceberg-style snapshot
   * store: footer stats must be exact, range loads must prune files AND
   * return exactly the filter-equivalent rows. */
-class SnapshotStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-state-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SnapshotStoreSpec extends AnyFunSuite with SharedSpark {
 
   private def entries(n: Int): Seq[FrontierEntry] =
     (0 until n).map { i =>

@@ -2,29 +2,18 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.gen.CorpusGen
 import graft.tools.GoldenGen
 
 /** Every twin reads its sink back through [[SinkIO.read]]: a sink dir that
   * was never created reads as empty with the twin's output schema, never a
   * path error — including the streaming crawl's resume probe. */
-class SinkIOSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-sinkio-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class SinkIOSpec extends AnyFunSuite with SharedSpark {
 
   private def schemaOf[T <: Product: scala.reflect.runtime.universe.TypeTag]: StructType =
     Encoders.product[T].schema
@@ -42,8 +31,10 @@ class SinkIOSpec extends AnyFunSuite {
         schemaOf[StreamingScheduler.Scheduled]),
       ("StreamingExtract.readOutput", StreamingExtract.readOutput(spark, missing),
         schemaOf[StreamingExtract.StreamedPage]),
-      ("StreamingMetrics.readOutput", StreamingMetrics.readOutput(spark, missing),
+      ("StreamingMetrics.windows", StreamingMetrics.windows(spark, missing),
         schemaOf[StreamingMetrics.WindowCount]),
+      ("StreamingMetrics.sessions", StreamingMetrics.sessions(spark, missing),
+        schemaOf[StreamingMetrics.ClosedSession]),
       ("StreamingFrontier.readOutput", StreamingFrontier.readOutput(spark, missing),
         schemaOf[StreamingFrontier.Discovered]),
       ("StreamingDelta.readEvents", StreamingDelta.readEvents(spark, missing),

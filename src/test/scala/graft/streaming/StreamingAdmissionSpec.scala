@@ -1,28 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.pipeline.Dedup
 
 /** Gates for the streaming admission twin: the growing-index property (a
   * near-dup of a doc admitted by an EARLIER micro-batch must reject), exact
   * parity with the sequential batch-mode composition, and the
   * exactly-once/resume discipline shared by all twins. */
-class StreamingAdmissionSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-admission-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingAdmissionSpec extends AnyFunSuite with SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val corpusPath = s"$sfDir/documents.parquet"

@@ -1,27 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.pipeline.CircuitBreaker
 
 /** Streaming-breaker gates: wave-sliced decisions equal the batch fold
   * over the concatenation (slicing invariance), a kill/restart resumes a
   * breaker MID-COOLDOWN exactly, and a re-run over the same checkpoint
   * emits nothing twice. */
-class StreamingBreakerSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-breaker-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingBreakerSpec extends AnyFunSuite with SharedSpark {
 
   private def writeWave(in: String, rows: Seq[StreamingBreaker.Intent]): Unit = {
     import spark.implicits._

@@ -1,27 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.pipeline.{Cdc, RevisitQueries}
 
 /** Chunk-store twin gates: wave-2 admissions equal the batch anti-join's
   * fresh-key set; re-delivered waves admit nothing (exactly-once); the
   * final store is slicing-invariant; every runAvailableNow call is a
   * restart from checkpoint, so resume is exercised by construction. */
-class StreamingChunkStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-chunkstore-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingChunkStoreSpec extends AnyFunSuite with SharedSpark {
 
   private def sightings(pages: Seq[graft.model.PageRow]): Seq[StreamingChunkStore.ChunkSighting] =
     pages.flatMap(p => Cdc.chunks(p.html).map(c =>

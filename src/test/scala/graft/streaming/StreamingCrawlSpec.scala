@@ -2,12 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.LeakProbe
+import graft.{IsolatedSpark, LeakProbe}
 import graft.crawl.CrawlEngine
 import graft.gen.CorpusGen
 import graft.tools.GoldenGen
@@ -16,28 +14,7 @@ import graft.tools.GoldenGen
   * same per-wave release sets under a binding politeness budget + robots
   * gating, same totals, byte parity on every fetched page — and exactly-once
   * release across a mid-crawl kill/restart. */
-class StreamingCrawlSpec extends AnyFunSuite with BeforeAndAfterAll {
-
-  private lazy val spark: SparkSession = {
-    // a fresh SparkContext without the ContextCleaner: the leak assertions
-    // below must see only this suite's RDDs, and an RDD leaves the registry
-    // only when the crawl releases it, never because a GC collected it
-    SparkSession.getActiveSession.foreach(_.stop())
-    SparkSession.getDefaultSession.foreach(_.stop())
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-crawl-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  // later suites must not inherit a context that never cleans up
-  override def afterAll(): Unit = spark.stop()
+class StreamingCrawlSpec extends AnyFunSuite with IsolatedSpark {
 
   // budget 3 binds (30 pages/host); maxPages must NOT bind — the streaming
   // twin keeps the static-budget north-rule semantics, not the results-cap

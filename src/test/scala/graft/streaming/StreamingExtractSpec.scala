@@ -1,22 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.SharedSpark
 import graft.gen.CorpusGen
 
-class StreamingExtractSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingExtractSpec extends AnyFunSuite with SharedSpark {
 
   test("streaming extract: exactly-once over arriving files, parity with batch kernels") {
     import spark.implicits._

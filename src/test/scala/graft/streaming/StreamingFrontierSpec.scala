@@ -1,25 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Streaming seen-set semantics: first occurrence emits, duplicates drop —
   * within a batch, across batches, and across query RESTARTS (state
   * checkpointed); deterministic representative under within-batch dups;
   * event-time TTL expiry re-admits URLs (re-crawl policy). */
-class StreamingFrontierSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-frontier-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingFrontierSpec extends AnyFunSuite with SharedSpark {
 
   private val T0 = 1700000000000L // fixed epoch base for event time
 

@@ -1,25 +1,14 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Gram-store twin gates: the admitted universe equals the batch distinct
   * gram set, per-doc admissions dominate batch novelty, re-delivery
   * admits nothing, the key set is slicing-invariant, and every
   * runAvailableNow call is a restart from checkpoint by construction. */
-class StreamingGramStoreSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-gramstore-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingGramStoreSpec extends AnyFunSuite with SharedSpark {
 
   private def drain(waves: Seq[Seq[StreamingGramStore.GramSighting]], root: String): Unit = {
     import spark.implicits._

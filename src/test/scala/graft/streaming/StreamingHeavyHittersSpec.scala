@@ -1,28 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SharedSpark
 import graft.pipeline.HeavyHitters
 
 /** Streaming heavy-hitter gates: the candidate set covers the exact
   * batch heavy hitters over the union of inputs under any file slicing,
   * state stays bounded at Buckets × Capacity, the drain is exactly-once,
   * and a restart resumes (not restarts) the summaries. */
-class StreamingHeavyHittersSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-hh-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingHeavyHittersSpec extends AnyFunSuite with SharedSpark {
 
   // skewed sighting stream: hot hosts far above 1%, plus a wide tail
   private def allUrls: Seq[String] =

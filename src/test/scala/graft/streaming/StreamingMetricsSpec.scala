@@ -1,27 +1,16 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import StreamingMetrics._
+
+import graft.SharedSpark
 
 /** Event-time semantics of the streaming metrics/sessionization queries:
   * windows emit exactly once when the watermark passes, later-than-watermark
   * rows are dropped, sessions close via event-time timeout, and the
   * fold logic is exact. */
-class StreamingMetricsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-metrics-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingMetricsSpec extends AnyFunSuite with SharedSpark {
 
   private val Base = 1767261600000L // 2026-01-01 10:00:00 UTC
   private def ts(minutes: Double): java.sql.Timestamp =
@@ -62,7 +51,7 @@ class StreamingMetricsSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-stream-win-out").toString
     val ckpt = Files.createTempDirectory("graft-stream-win-ckpt").toString
     StreamingMetrics.windowedCounts(spark, in.toString, out, ckpt)
-    val rows = StreamingMetrics.readOutput(spark, out)
+    val rows = StreamingMetrics.windows(spark, out)
       .filter(org.apache.spark.sql.functions.col("event_type") =!= "sentinel")
       .collect()
       .map(r => (r.getTimestamp(0).getTime, r.getString(1), r.getLong(2), r.getDouble(3)))
@@ -83,7 +72,7 @@ class StreamingMetricsSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-stream-sess-out").toString
     val ckpt = Files.createTempDirectory("graft-stream-sess-ckpt").toString
     StreamingMetrics.sessionize(spark, in.toString, out, ckpt)
-    val rows = StreamingMetrics.readOutput(spark, out)
+    val rows = StreamingMetrics.sessions(spark, out)
       .filter(org.apache.spark.sql.functions.col("user_id") < 900)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))

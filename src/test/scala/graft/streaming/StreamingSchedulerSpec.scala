@@ -1,26 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SharedSpark
 
 /** Streaming politeness-scheduler semantics: at most `budget` URLs per host
   * per wave, released in the engine's deterministic priority order; backlog
   * survives restarts (keyed state); hosts with backlog but no new
   * discoveries are woken by the wave tick; a late higher-priority discovery
   * preempts the backlog; `maxBacklogPerHost` drops counted overflow. */
-class StreamingSchedulerSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-streaming-scheduler-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+class StreamingSchedulerSpec extends AnyFunSuite with SharedSpark {
 
   private val T0 = 1700000000000L
   private def wave(n: Int): Long = T0 + n * 60000L
