@@ -3,8 +3,10 @@ package graft.crawl
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.concurrent.{Await, Future}
 import scala.concurrent.duration.Duration
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.extract.{HtmlKit, TextKit}
@@ -22,7 +24,8 @@ import graft.urls.UrlKernel
   * Design (SURVEY.md §3.2 "Spark shape", §4):
   *  - the tokio task pool + mpsc channel + DashSet seen-set collapse into a
   *    driver loop of Dataset waves: politeness-select → fetch-join →
-  *    fused extract → link-gen → anti-join(seen) → snapshot commit;
+  *    fused extract (with link admission) → robots gate → dedupe + seen
+  *    filter in one exchange → snapshot commit;
   *  - "fetch" is an equi-join of the frontier wave against the pages table
   *    pre-partitioned by canonical URL (only the small wave side shuffles);
   *  - the global token-bucket rate limiter (rate_limiter.rs:26-70) becomes a
@@ -253,8 +256,12 @@ object CrawlEngine {
       servedUrl: String, warcTs: java.sql.Timestamp,
       html: Array[Byte], storedText: String, storedLang: String)
 
+  /** One extracted page: its `page` row, the wave row's `host`, its
+    * admitted next-wave `links` (empty at `maxDepth`), its `chunks` (empty
+    * unless asked for) and its text-parity flag. */
   final case class ExtractOut(
-      page: ExtractedPage, links: Seq[String], chunks: Seq[ChunkRow], parityOk: Boolean,
+      page: ExtractedPage, host: String, links: Seq[FrontierEntry], chunks: Seq[ChunkRow],
+      parityOk: Boolean,
       // server-directed wait parsed from a WAF/rate-limit page body
       // (TextKit.retryHintSeconds); populated only under breakerPoliteness,
       // engine-internal — never written to a sink
@@ -287,7 +294,7 @@ object CrawlEngine {
     * at Common-Crawl scale there are 10^7+ hosts and a driver map would
     * OOM. Only hosts that Disallow something keep a gate row (most
     * robots.txt files gate nothing for `*`), and only BINDING delay caps
-    * emit budget rows (both host spellings — the budget cogroup keys on
+    * emit budget rows (both host spellings — the selection's budget join keys on
     * the frontier's literal host), so both tables are small minorities of
     * hosts. The directives frame is cached while both tables materialize,
     * then released; the tables register their own release. */
@@ -300,9 +307,9 @@ object CrawlEngine {
       val dirs = Robots.directivesTable(pages.sparkSession, pages.toDF())
         .persist(StorageLevel.MEMORY_AND_DISK)
       def materialized[T](ds: Dataset[T]): (Dataset[T], Long) = {
-        val t = ds.persist(StorageLevel.MEMORY_AND_DISK)
-        registerRelease(() => t.unpersist())
-        (t, t.count())
+        val t = ds.localCheckpoint()
+        registerRelease(() => releaseBlocks(t))
+        (t, rowCount(t))
       }
       try {
         val gate = if (!gateOn) scala.None else {
@@ -344,12 +351,14 @@ object CrawlEngine {
   /** The fused extract stage: clean → text → links → lang → WAF → chunks
     * in ONE mapPartitions — one codegen-opaque stage, no row-format churn
     * (SURVEY §4 design #4). The html is parsed once; text and links share
-    * the tree. Links are kept for every page that is not a WAF page (the
-    * depth limit applies at link-gen); `retryHints` reads the
-    * server-directed wait off WAF pages, which only breaker politeness
-    * consumes. */
-  private[graft] def fusedExtract(fetched: Dataset[FetchedRow], wave: Int,
-                                  retryHints: Boolean): Dataset[ExtractOut] = {
+    * the tree. Links are extracted from every page that is not a WAF page
+    * and go through the crawl's `admission` here, so `links` holds the
+    * page's next-wave candidates. Chunk rows (one sha256 each) are built
+    * only when `chunks` is set — when a chunks sink reads them;
+    * `retryHints` reads the server-directed wait off WAF pages, which only
+    * breaker politeness consumes. */
+  private[graft] def fusedExtract(fetched: Dataset[FetchedRow], wave: Int, retryHints: Boolean,
+                                  chunks: Boolean, admission: LinkAdmission): Dataset[ExtractOut] = {
     val spark = fetched.sparkSession
     import spark.implicits._
     fetched.mapPartitions { it =>
@@ -361,8 +370,8 @@ object CrawlEngine {
         val spa = HtmlKit.isSpa(html, ex.text)
         val lang = TextKit.detectLanguage(ex.text).getOrElse("")
         val links = if (waf.isEmpty) HtmlKit.extractLinks(dom, r.servedUrl) else Vector.empty[String]
-        val chunks =
-          if (waf.isEmpty && !ex.failed)
+        val chunkRows =
+          if (chunks && waf.isEmpty && !ex.failed)
             TextKit.chunkText(ex.text).zipWithIndex.map { case (c, i) =>
               ChunkRow(sha256Hex(r.canonicalUrl + "#" + i), r.canonicalUrl, ex.title, c, i,
                 lang, TextKit.wordCount(c), r.warcTs)
@@ -372,35 +381,45 @@ object CrawlEngine {
           ex.usedFallback, ex.failed, spa, waf,
           r.html.length.toLong, ex.text.getBytes(UTF_8).length.toLong, wave, r.depth)
         val hint = if (retryHints && waf.nonEmpty) TextKit.retryHintSeconds(html) else 0L
-        ExtractOut(page, links, chunks, ex.text == r.storedText, hint)
+        ExtractOut(page, r.host, admission(links.iterator, r.url, r.depth).toVector, chunkRows,
+          ex.text == r.storedText, hint)
       }
     }
   }
 
-  /** A crawl's link generation: returns the per-wave function from a
-    * wave's extract to its next-wave candidates — the links of pages above
-    * `maxDepth`, through the admission chain ([[linkCandidates]]) and then
-    * the robots gate when one is given. The seed hosts and the
-    * include/exclude lists are broadcast once per crawl, here. */
-  private[graft] def linkGen(spark: SparkSession, config: CrawlConfig,
-                             robotsGate: Option[DataFrame]): Dataset[ExtractOut] => Dataset[FrontierEntry] = {
-    import spark.implicits._
-    val seedHosts = spark.sparkContext.broadcast(config.seeds
-      .flatMap(s => UrlKernel.canonicalize(s).flatMap(UrlKernel.extractDomain)).toSet)
-    val includes = spark.sparkContext.broadcast(config.includePatterns)
-    val excludes = spark.sparkContext.broadcast(config.excludePatterns)
-    val maxDepth = config.maxDepth
-    val internalOnly = config.internalOnly
-    val maxQueryParams = config.maxQueryParams
-    extracted => {
-      val links = extracted
-        .filter(e => e.page.depth < maxDepth)
-        .flatMap { e =>
-          linkCandidates(e.links.iterator, e.page.url, e.page.depth + 1,
-            includes.value, excludes.value, internalOnly, seedHosts.value, maxQueryParams)
-        }
+  /** A crawl's link admission, applied per page inside [[fusedExtract]]:
+    * the links of a page above `maxDepth` through the admission chain
+    * ([[linkCandidates]]). The seed hosts and the include/exclude lists are
+    * broadcast once per crawl. */
+  private[graft] final case class LinkAdmission(
+      maxDepth: Int, internalOnly: Boolean, maxQueryParams: Int,
+      seedHosts: Broadcast[Set[String]], includes: Broadcast[Seq[String]],
+      excludes: Broadcast[Seq[String]]) {
+    def apply(links: Iterator[String], parentUrl: String, depth: Int): Iterator[FrontierEntry] =
+      if (depth >= maxDepth) Iterator.empty
+      else linkCandidates(links, parentUrl, depth + 1, includes.value, excludes.value,
+        internalOnly, seedHosts.value, maxQueryParams)
+  }
+
+  /** A crawl's link generation: the `admission` [[fusedExtract]] applies,
+    * and the per-wave step from an extract's `links` column to its
+    * next-wave candidates, through the robots gate when one is given. */
+  private[graft] final class LinkGen(val admission: LinkAdmission, robotsGate: Option[DataFrame]) {
+    def apply(extracted: DataFrame): Dataset[FrontierEntry] = {
+      val spark = extracted.sparkSession
+      import spark.implicits._
+      val links = extracted.select(explode(col("links")).as("e")).select("e.*").as[FrontierEntry]
       robotsGate.fold(links)(Robots.gate(spark, links, _))
     }
+  }
+
+  private[graft] def linkGen(spark: SparkSession, config: CrawlConfig,
+                             robotsGate: Option[DataFrame]): LinkGen = {
+    val sc = spark.sparkContext
+    val seedHosts = config.seeds.flatMap(s => UrlKernel.canonicalize(s).flatMap(UrlKernel.extractDomain)).toSet
+    new LinkGen(LinkAdmission(config.maxDepth, config.internalOnly, config.maxQueryParams,
+      sc.broadcast(seedHosts), sc.broadcast(config.includePatterns), sc.broadcast(config.excludePatterns)),
+      robotsGate)
   }
 
   /** Retry-After → breaker cooldown, in waves: a server-directed hint
@@ -416,6 +435,61 @@ object CrawlEngine {
       val wait = RetryAfter.waitSeconds(Some(hintSecs.toString), 0, 0L)
       math.max(1, math.min(64, ((wait + waveModelSeconds - 1) / waveModelSeconds).toInt))
     }
+
+  /** A frame materialized for its several readers: checkpointed blocks
+    * (the lineage cut), whose release is registered in `releases`. A
+    * checkpoint's readers scan its rows inside their own codegen stage,
+    * where a cached relation adds a generated column iterator per column
+    * subset read. */
+  private[graft] def materialize[T](ds: Dataset[T], releases: Releases): Dataset[T] = {
+    val m = ds.localCheckpoint()
+    releases.add(releaseBlocks(m))
+    m
+  }
+
+  /** A materialized frame with its row count ([[rowCount]]). */
+  private[graft] def materializeCounted[T](ds: Dataset[T], releases: Releases): (Dataset[T], Long) = {
+    val m = materialize(ds, releases)
+    (m, rowCount(m))
+  }
+
+  /** The rows of a frame, counted over its internal rows ([[internalRows]]):
+    * a checkpoint's count reads its blocks with no plan, so counting takes
+    * no codegen-cache entries. */
+  private[graft] def rowCount(ds: Dataset[_]): Long = internalRows(ds).count()
+
+  /** The internal rows of a frame: a checkpoint's blocks as they are
+    * stored, any other frame through its executed plan. */
+  private def internalRows(ds: Dataset[_]): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    ds.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case _ => ds.queryExecution.toRdd
+    }
+
+  /** A frame of frontier-entry columns as entry objects, read off its
+    * internal rows by field name: no deserializer is generated. */
+  private def entries(ds: Dataset[FrontierEntry]): org.apache.spark.rdd.RDD[FrontierEntry] = {
+    val at = Frontier.EntryColumns.map(ds.schema.fieldIndex)
+    internalRows(ds).map { r =>
+      def str(i: Int) = if (r.isNullAt(at(i))) null else r.getUTF8String(at(i)).toString
+      FrontierEntry(str(0), str(1), r.getInt(at(2)), str(3), str(4), r.getInt(at(5)), r.getLong(at(6)))
+    }
+  }
+
+  /** A struct's fields read back nullable; the engine never writes a null
+    * page or chunk, so filling the numeric and boolean columns changes no
+    * row and keeps them required in the sink's parquet schema, as the
+    * case class encodes them. */
+  private def requiredPrimitives(df: DataFrame): DataFrame = df.na.fill(0L).na.fill(false)
+
+  /** The rows of a frame and how many of them have the boolean column
+    * `flag` false, in one pass over its internal rows. */
+  private[graft] def countAndFailures(df: DataFrame, flag: String): (Long, Long) = {
+    val i = df.schema.fieldIndex(flag)
+    internalRows(df).aggregate((0L, 0L))(
+      (acc, r) => (acc._1 + 1L, if (r.getBoolean(i)) acc._2 else acc._2 + 1L),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+  }
 
   final case class CrawlSummary(
       runId: String, waves: Int, fetchedTotal: Long, errorsTotal: Long,
@@ -514,11 +588,7 @@ object CrawlEngine {
         if (config.spillIntermediates) Some(s"$stateDir/intermediates/pages-winners") else scala.None,
         effectiveBroadcastCap(config.broadcastWaveMaxRows, spark),
         registerRelease = f => crawlCaches.add(f()))
-      if (prePartitionPages) {
-        base.persist(StorageLevel.MEMORY_AND_DISK)
-        crawlCaches.add(base.unpersist())
-      }
-      base
+      if (prePartitionPages) materialize(base, crawlCaches) else base
     } finally Await.ready(robotsFuture, Duration.Inf)
     val robots = Await.result(robotsFuture, Duration.Inf)
     log(s"prep done (pages cached + robots rules table) $elapsed")
@@ -526,23 +596,20 @@ object CrawlEngine {
     val linkGenActive = config.maxDepth > 0
     val discover = linkGen(spark, config, robots.gate)
 
-    def emptySeen: DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("canonicalUrl", org.apache.spark.sql.types.StringType))))
-
     // ---- resume or cold start --------------------------------------------
-    var (wave, seen, frontier, fetchedTotal, errorsTotal0, parityFailures0) =
+    // (the seen set itself is read from the store each wave, after the
+    // wave's delta is written)
+    var (wave, frontier, fetchedTotal, errorsTotal0, parityFailures0, seenCount0) =
       (resume, store.current()) match {
         case (true, Some(w)) =>
           val m = store.manifest(w)
           log(s"resuming from snapshot wave=$w fetched=${m.fetchedTotal} errors=${m.errorsTotal}")
-          (w + 1, store.loadSeen(spark, w), store.loadFrontier(spark, w).as[FrontierEntry],
-            m.fetchedTotal, m.errorsTotal, m.parityFailures)
+          (w + 1, store.loadFrontier(spark, w).as[FrontierEntry],
+            m.fetchedTotal, m.errorsTotal, m.parityFailures, store.loadSeen(spark, w).count())
         case _ =>
-          (0, emptySeen, seedFrontier(spark, config.seeds), 0L, 0L, 0L)
+          (0, seedFrontier(spark, config.seeds), 0L, 0L, 0L, 0L)
       }
-    var seenCount = if (resume) seen.count() else 0L
+    var seenCount = seenCount0
     var errorsTotal = errorsTotal0
     var parityFailures = parityFailures0
 
@@ -584,11 +651,9 @@ object CrawlEngine {
     // whole host suppressed — a dying server must not absorb wave budget),
     // cooldown-expired → 1 (exactly one probe fetch decides recovery)
     def breakerBudgets: Dataset[HostBudget] =
-      breakerStates.select("host", "state", "cooldownLeft")
-        .as[(String, String, Int)]
-        .flatMap { case (h, st, cd) =>
-          if (st == "open") Some(HostBudget(h, if (cd > 0) 0 else 1)) else scala.None
-        }
+      breakerStates.filter(col("state") === "open")
+        .select(col("host"), when(col("cooldownLeft") > 0, 0).otherwise(1).as("budget"))
+        .as[HostBudget]
 
     // Wave-sized output files: a politeness-bound wave of a few thousand
     // KB-scale rows must not pay #partitions task-setup + commit-rename
@@ -602,35 +667,30 @@ object CrawlEngine {
       spark.sparkContext.defaultParallelism.toLong).toInt
 
     // -- politeness selection builder (shared by the in-wave path and the
-    // next-wave prefetch below): deterministic per-host top-k (salted
-    // two-phase). An empty frontier yields selCount == 0 below — no
-    // separate count job. perHostBudget <= 0 = UNLIMITED: politeness off,
-    // the whole frontier is the wave and the top-k cogroup shuffle is
-    // skipped entirely — the saturated-frontier regime (a budget set at or
-    // above every host's count selects the same rows; this takes that path
-    // without paying the shuffle to discover it).
-    // Crawl-delay caps merge most-restrictive-wins with adaptive budgets;
-    // the budget cogroup reads ONE row per host, so the union must reduce
-    // to the per-host minimum before selection.
-    // (breaker overrides join the same most-restrictive merge: suppress=0
-    // beats everything, probe=1 beats any wider budget; no active source
-    // leaves the table empty — every host at the default budget)
-    def effectiveBudgets: Dataset[HostBudget] = {
-      val parts = Seq(
+    // next-wave prefetch below): deterministic per-host top-k
+    // (Frontier.politenessSelectBudgets). An empty frontier yields
+    // selCount == 0 below — no separate count job. perHostBudget <= 0 =
+    // UNLIMITED: politeness off, the whole frontier is the wave and the
+    // top-k shuffle is skipped entirely — the saturated-frontier regime (a
+    // budget set at or above every host's count selects the same rows; this
+    // takes that path without paying the shuffle to discover it).
+    // Crawl-delay caps, adaptive budgets and breaker overrides (suppress=0,
+    // probe=1) merge most-restrictive-wins: the selection takes each host's
+    // smallest budget over the union; no active source leaves the table
+    // empty — every host at the default budget.
+    def effectiveBudgets: Dataset[HostBudget] =
+      Seq(
         if (adaptiveActive) Some(hostBudgets) else scala.None,
         robots.delayBudgets,
         if (breakerActive) Some(breakerBudgets) else scala.None).flatten
-      parts match {
-        case Seq() => spark.emptyDataset[HostBudget]
-        case Seq(one) => one
-        case many => many.reduce(_ union _).groupByKey(_.host)
-          .reduceGroups((a, b) => if (a.budget <= b.budget) a else b).map(_._2)
-      }
-    }
-    def buildSelection(fr: Dataset[FrontierEntry]): Dataset[FrontierEntry] =
-      if (config.perHostBudget <= 0) fr
-      else Frontier.politenessSelectBudgets(
-        spark, fr, effectiveBudgets, config.perHostBudget, config.saltBuckets)
+        .reduceOption(_ union _).getOrElse(spark.emptyDataset[HostBudget])
+    // The selection is materialized (its release registered in `releases`)
+    // with its row count; the unlimited path selects the frontier, which
+    // is already materialized.
+    def selectFrom(fr: Dataset[FrontierEntry], releases: Releases): (Dataset[FrontierEntry], Long) =
+      if (config.perHostBudget <= 0) (fr, rowCount(fr))
+      else materializeCounted(Frontier.politenessSelectBudgets(
+        spark, fr, effectiveBudgets, config.perHostBudget, config.saltBuckets), releases)
 
     // Carried seen-set sketch (per-run; a resume rebuilds on first use)
     val seenBloom = new Frontier.SeenBloom()
@@ -653,9 +713,8 @@ object CrawlEngine {
         case scala.None =>
           val fp = frontier.persist(StorageLevel.MEMORY_AND_DISK)
           waveCaches.add(releaseBlocks(fp))
-          val s = buildSelection(fp).persist(StorageLevel.MEMORY_AND_DISK)
-          waveCaches.add(s.unpersist())
-          (fp, s, s.count())
+          val (s, n) = selectFrom(fp, waveCaches)
+          (fp, s, n)
       }
       log(s"wave=$wave politeness-select done ($rawCount rows) $elapsed")
       val remaining = (config.maxPages - fetchedTotal).min(Int.MaxValue.toLong).toInt
@@ -663,14 +722,9 @@ object CrawlEngine {
       // GlobalLimit funnel only runs when the cap actually binds — i.e. on
       // the final, already-small remainder — never on a full-size wave.
       val (selected, selCount) =
-        if (rawCount > remaining) {
-          val s = selectedAll
-            .orderBy(Frontier.priorityCols: _*)
-            .limit(remaining)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          waveCaches.add(s.unpersist())
-          (s, s.count())
-        } else (selectedAll, rawCount)
+        if (rawCount > remaining)
+          materializeCounted(selectedAll.orderBy(Frontier.priorityCols: _*).limit(remaining), waveCaches)
+        else (selectedAll, rawCount)
       if (selCount == 0) {
         done = true
         // the empty final wave must still release its cached frames — crawls
@@ -679,22 +733,20 @@ object CrawlEngine {
       }
       else {
         {
-          // -- simulated fetch (fetchJoin) + fused extract (fusedExtract)
+          // -- simulated fetch (fetchJoin) + fused extract (fusedExtract);
+          // chunk rows only when the chunks sink writes them
           val fetchedDs = fetchJoin(prepared, selected.toDF(), selCount, config.broadcastWaveMaxRows)
-          val extracted = fusedExtract(fetchedDs, wave, retryHints = breakerActive)
-          // cache only when a second consumer exists (output sinks, the
-          // link-generation pass, or the adaptive-politeness health agg);
+          val extractPlan = fusedExtract(fetchedDs, wave, retryHints = breakerActive,
+            chunks = writeOutputs, discover.admission).toDF()
+          // materialized only when a second consumer exists (output sinks,
+          // the link-generation pass, or the adaptive-politeness health agg);
           // a single-consumer wave streams it once
-          if (writeOutputs || linkGenActive || adaptiveActive) {
-            extracted.persist(StorageLevel.MEMORY_AND_DISK)
-            waveCaches.add(extracted.unpersist())
-          }
+          val extracted =
+            if (writeOutputs || linkGenActive || adaptiveActive) materialize(extractPlan, waveCaches)
+            else extractPlan
 
-          // one action for count + parity (avoids a second pass)
-          val stats = extracted.toDF()
-            .agg(count(lit(1)), sum(when(col("parityOk"), 0L).otherwise(1L))).head()
-          val fetchCount = stats.getLong(0)
-          val parityFailWave = if (stats.isNullAt(1)) 0L else stats.getLong(1)
+          // one pass for count + parity
+          val (fetchCount, parityFailWave) = countAndFailures(extracted, "parityOk")
           parityFailures += parityFailWave
           log(s"wave=$wave fetch+extract done ($fetchCount rows) $elapsed")
 
@@ -702,58 +754,37 @@ object CrawlEngine {
           val errCount = selCount - fetchCount
           errorsTotal += errCount
 
-          // -- per-host health aggregates, shared by the metrics sink and the
-          // adaptive-politeness update (tiny per-host tables; persisted so
-          // the two sinks don't re-run the anti-join / extract agg) ---------
+          // -- per-host health, shared by the metrics sink and the
+          // politeness updates: ONE aggregation over the wave's selected rows
+          // and its fetched pages. The fetch join yields at most one page
+          // per selected row, so a host's errors (selected rows with no
+          // page) are its selected count minus its fetched count — no join
+          // against the pages table. Persisted only when more than one
+          // consumer reads it (metrics sink + budget update + breaker
+          // update); a single consumer streams it once.
           val needHealth = writeOutputs || adaptiveActive
-          // persist only when MULTIPLE consumers run (metrics sink + budget
-          // update + breaker update); single-consumer waves stream the
-          // aggregates once
           val twoConsumers = (writeOutputs && adaptiveActive) || breakerActive
-          val (missByHost, hostAgg) = if (needHealth) {
-            val miss = selected
-              .join(prepared.select("canonicalUrl"), Seq("canonicalUrl"), "left_anti")
-              .groupBy("host").agg(count(lit(1)).as("errors"))
-            val agg = extracted.map(e => (
-                UrlKernel.extractDomain(e.page.canonicalUrl).getOrElse(""),
-                e.page.htmlBytes, e.page.textBytes,
-                if (e.page.extractionFailed) 1L else 0L,
-                if (e.page.wafProvider.nonEmpty) 1L else 0L))
-              .toDF("host", "htmlBytes", "textBytes", "exFail", "waf")
+          val health = if (!needHealth) null else {
+            val zero = lit(0L)
+            val h = selected.toDF()
+              .select(col("host"), lit(1L).as("selected"), zero.as("fetched"), zero.as("htmlBytes"),
+                zero.as("textBytes"), zero.as("exFail"), zero.as("waf"))
+              .union(extracted.select(col("host"), zero, lit(1L), col("page.htmlBytes"),
+                col("page.textBytes"), col("page.extractionFailed").cast("long"),
+                (col("page.wafProvider") =!= "").cast("long")))
               .groupBy("host")
-              .agg(count("*").as("fetched"), sum("htmlBytes").as("htmlBytes"),
+              .agg(sum("fetched").as("fetched"), sum("htmlBytes").as("htmlBytes"),
                 sum("textBytes").as("textBytes"), sum("exFail").as("extractionFailures"),
-                sum("waf").as("wafBlocked"))
+                sum("waf").as("wafBlocked"), (sum("selected") - sum("fetched")).as("errors"))
             if (twoConsumers) {
-              miss.persist(StorageLevel.MEMORY_AND_DISK)
-              agg.persist(StorageLevel.MEMORY_AND_DISK)
-              waveCaches.add { miss.unpersist(); agg.unpersist() }
+              h.persist(StorageLevel.MEMORY_AND_DISK)
+              waveCaches.add(h.unpersist())
             }
-            (miss, agg)
-          } else (null, null)
+            h
+          }
 
-          // -- seen += selected --------------------------------------------
-          val newSeen = seen.union(selected.select("canonicalUrl"))
           fetchedTotal += selCount
           seenCount += selCount
-
-          // -- link generation + robots gate → next frontier (lazy plan) ----
-          val gatedLinkEntries: Dataset[FrontierEntry] =
-            if (linkGenActive) discover(extracted) else spark.emptyDataset[FrontierEntry]
-
-          val leftovers = frontierPersisted
-            .join(selected.select("canonicalUrl"), Seq("canonicalUrl"), "left_anti")
-            .as[FrontierEntry]
-          // frontier entries are unique per canonical (invariant below), so
-          // the dedupe shuffle only runs when new links joined the pool
-          val combined =
-            if (linkGenActive) Frontier.dedupeWave(spark, leftovers.union(gatedLinkEntries))
-            else leftovers
-          // the carried sketch absorbs this wave's selected urls as a delta
-          // built from the wave-sized cache — O(wave) sketch maintenance
-          // instead of newOnly's per-wave full-seen rebuild
-          val nextFrontier = Frontier.newOnlyWithSketch(combined, newSeen,
-            seenBloom.update(selected.toDF(), selCount, seenCount, newSeen))
 
           // -- parallel wave writes ----------------------------------------
           // The output sinks (crawl_order / pages / chunks / metrics) and
@@ -768,21 +799,22 @@ object CrawlEngine {
           val sinkFutures: Seq[Future[Unit]] = if (!writeOutputs) Seq.empty else {
             val fOrder = Future {
               // wave-local ranks; wave is the major sort key. Distributed
-              // total-order rank: range-partitioned sort + zipWithIndex
-              // (partition-offset pass) — no single-partition window funnel,
-              // scales to arbitrarily wide waves. wave=N dir naming = Spark
-              // partition discovery supplies the wave column on read; data
-              // files must not repeat it.
-              val sortedSel = selected
-                .orderBy(Frontier.priorityCols: _*)
-                .select(col("canonicalUrl"), col("url"), col("parentUrl"), col("depth"), col("host"))
-              val orderSchema = org.apache.spark.sql.types.StructType(
-                org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType) +:
-                  sortedSel.schema.fields)
-              val rankedRdd = sortedSel.rdd.zipWithIndex().map { case (r, idx) =>
-                org.apache.spark.sql.Row.fromSeq(idx +: r.toSeq)
+              // total-order rank: range-partitioned sort of the selection's
+              // blocks under Frontier.priorityOrdering (the order
+              // priorityCols sorts by) + zipWithIndex (partition-offset
+              // pass) — no single-partition window funnel, scales to
+              // arbitrarily wide waves, and no plan is generated until the
+              // write. wave=N dir naming = Spark partition discovery
+              // supplies the wave column on read; data files must not
+              // repeat it.
+              implicit val byPriority: Ordering[FrontierEntry] = Frontier.priorityOrdering
+              val ranked = entries(selected).sortBy(identity).zipWithIndex().map { case (e, rank) =>
+                Row(rank, e.canonicalUrl, e.url, e.parentUrl, e.depth, e.host)
               }
-              spark.createDataFrame(rankedRdd, orderSchema)
+              val entry = Encoders.product[FrontierEntry].schema
+              val orderSchema = StructType(StructField("rank", LongType) +:
+                Seq("canonicalUrl", "url", "parentUrl", "depth", "host").map(entry(_)))
+              spark.createDataFrame(ranked, orderSchema)
                 .coalesce(outFiles(selCount)) // wave-sized files, like the other sinks
                 .write.mode("overwrite").parquet(s"$stateDir/out/crawl_order/wave=$wave")
             }
@@ -790,7 +822,7 @@ object CrawlEngine {
               // partitionId = the WRITER task's partition (per-partition
               // lineage: row → data file); under the wave-sized coalesce
               // that is the coalesced id, deterministic for a fixed layout
-              extracted.map(_.page)
+              requiredPrimitives(extracted.select("page.*"))
                 .withColumn("runId", lit(rid))
                 .withColumn("partitionId", spark_partition_id())
                 .drop("wave")
@@ -798,34 +830,45 @@ object CrawlEngine {
                 .write.mode("overwrite").parquet(s"$stateDir/out/pages/wave=$wave")
             }
             val fChunks = Future {
-              extracted.flatMap(_.chunks)
+              requiredPrimitives(extracted.select(explode(col("chunks")).as("c")).select("c.*"))
                 .coalesce(outFiles(selCount))
                 .write.mode("overwrite").parquet(s"$stateDir/out/chunks/wave=$wave")
             }
             val fMetrics = Future {
               // per-host metrics (metrics.rs:15-100 equivalents)
-              hostAgg.join(missByHost, Seq("host"), "full_outer")
-                .na.fill(0L)
+              health.na.fill(0L)
                 .withColumn("runId", lit(rid))
                 .write.mode("overwrite").parquet(s"$stateDir/out/metrics/wave=$wave")
             }
             Seq(fOrder, fPages, fChunks, fMetrics)
           }
-          // seen-delta rides the wave-sized coalesce too: loadSeen re-lists
+          // -- seen += selected: the wave's seen delta is written (on this
+          // thread, concurrent with the sink futures above), and the seen
+          // set is read back from the store as one scan of its deltas. The
+          // delta rides the wave-sized coalesce too: loadSeen re-lists
           // every wave's delta dir on each subsequent wave, so tiny-file
           // growth there is quadratic in crawl length
-          val fSeenDelta = Future {
-            store.writeSeenDelta(spark, wave,
-              selected.select("canonicalUrl").coalesce(outFiles(selCount)))
-          }
-          // the next frontier materializes ONCE, on this thread, concurrent
-          // with the sink futures above: the heavy dedupe + seen-filter
-          // chain runs exactly one time, its blocks are the lineage cut
-          // (the localCheckpoint discipline), and THREE consumers read the
+          store.writeSeenDelta(spark, wave, selected.select("canonicalUrl").coalesce(outFiles(selCount)))
+          val newSeen = store.loadSeen(spark, wave)
+
+          // -- next frontier: the frontier plus the wave's gated links, one
+          // entry per canonical under Frontier.merge, minus the seen set —
+          // the selected rows left the frontier by joining it. The carried
+          // sketch absorbs this wave's selected urls as a delta built from
+          // the wave-sized blocks — O(wave) sketch maintenance instead of
+          // newOnly's per-wave full-seen rebuild.
+          val candidates =
+            if (linkGenActive) frontierPersisted.union(discover(extracted)) else frontierPersisted
+          val nextFrontier = Frontier.nextFrontier(candidates, newSeen,
+            seenBloom.update(selected.toDF(), selCount, seenCount, newSeen))
+          // It materializes ONCE, on this thread, concurrent with the sink
+          // futures above: the heavy dedupe + seen-filter chain runs
+          // exactly one time, its blocks are the lineage cut (the
+          // localCheckpoint discipline), and THREE consumers read the
           // materialized copy — the snapshot write, the next-wave politeness
-          // prefetch, and the next wave's leftover anti-join. Its release
-          // belongs to the next wave (releaseBlocks: the plain unpersist is
-          // a no-op on checkpoint blocks).
+          // prefetch, and the next wave's frontier. Its release belongs to
+          // the next wave (releaseBlocks: the plain unpersist is a no-op on
+          // checkpoint blocks).
           val nextFrontierC = nextFrontier.localCheckpoint()
           nextWaveCaches.add(releaseBlocks(nextFrontierC))
           log(s"wave=$wave frontier-checkpoint done $elapsed")
@@ -833,10 +876,9 @@ object CrawlEngine {
             store.writeFrontier(spark, wave, nextFrontierC.toDF(), config.snapshotFileTarget)
           }
 
-          // the one per-host health frame both politeness updates read
-          val health = if (!adaptiveActive) null else missByHost
-            .join(hostAgg.select(col("host"), col("wafBlocked").as("waf")), Seq("host"), "full_outer")
-            .na.fill(0L)
+          // the per-host penalties both politeness updates read
+          val penalties = if (!adaptiveActive) null
+            else health.select(col("host"), col("errors"), col("wafBlocked").as("waf"))
 
           // -- adaptive politeness: next wave's per-host budgets -------------
           // (main thread, overlapping the write group above)
@@ -856,7 +898,7 @@ object CrawlEngine {
                 // geometrically; hosts NOT crawled this wave keep their
                 // window (no acks → no growth, the TCP discipline)
                 hostBudgets.toDF()
-                  .join(health.withColumn("inWave", lit(true)), Seq("host"), "full_outer")
+                  .join(penalties.withColumn("inWave", lit(true)), Seq("host"), "full_outer")
                   .select(col("host"), col("budget"),
                     (coalesce(col("errors"), lit(0L)) + coalesce(col("waf"), lit(0L))).as("penalty"),
                     col("inWave"))
@@ -873,7 +915,7 @@ object CrawlEngine {
                   }.toDF()
               } else {
                 val recover = math.max(1, maxB / 4)
-                hostBudgets.toDF().join(health, Seq("host"), "full_outer")
+                hostBudgets.toDF().join(penalties, Seq("host"), "full_outer")
                   .select(col("host"),
                     coalesce(col("budget"), lit(maxB)).as("cur"),
                     (coalesce(col("errors"), lit(0L)) + coalesce(col("waf"), lit(0L))).as("penalty"))
@@ -901,12 +943,10 @@ object CrawlEngine {
           if (breakerActive) {
             val wms = config.waveModelSeconds
             val retryHints = extracted
-              .filter(e => e.retryHintSecs > 0L)
-              .map(e => (UrlKernel.extractDomain(e.page.canonicalUrl).getOrElse(""), e.retryHintSecs))
-              .toDF("host", "hint")
-              .groupBy("host").agg(max("hint").as("retryHintSecs"))
+              .filter(col("retryHintSecs") > 0L)
+              .groupBy("host").agg(max("retryHintSecs").as("retryHintSecs"))
             val updatedBreaker = breakerStates
-              .join(health.join(retryHints, Seq("host"), "left").withColumn("inWave", lit(true)),
+              .join(penalties.join(retryHints, Seq("host"), "left").withColumn("inWave", lit(true)),
                 Seq("host"), "full_outer")
               .select(col("host"), col("state"), col("consec"), col("cooldownLeft"),
                 col("errors"), col("waf"), col("retryHintSecs"), col("inWave"))
@@ -937,20 +977,16 @@ object CrawlEngine {
           // already-materialized next-frontier blocks (no lineage race —
           // the checkpoint above finished on this thread) and launched
           // strictly AFTER the adaptive budget update above, so wave+1's
-          // budgets are final. The kernel is the shared buildSelection —
-          // rows identical to the inline path.
+          // budgets are final. The kernel is the shared selectFrom — rows
+          // identical to the inline path.
           val carried = nextWaveCaches
           prefetch = Some(Future {
-            val s = buildSelection(nextFrontierC)
-            if (!(s eq nextFrontierC)) {
-              s.persist(StorageLevel.MEMORY_AND_DISK)
-              carried.add(s.unpersist())
-            }
-            (nextFrontierC, s, s.count())
+            val (s, n) = selectFrom(nextFrontierC, carried)
+            (nextFrontierC, s, n)
           })
 
           // -- barrier, then the commit point -------------------------------
-          (sinkFutures :+ fSeenDelta).foreach(f => Await.result(f, Duration.Inf))
+          sinkFutures.foreach(f => Await.result(f, Duration.Inf))
           log(s"wave=$wave sink barrier done $elapsed")
           val frontierRows = Await.result(fFrontier, Duration.Inf)
           log(s"wave=$wave frontier-write done ($frontierRows rows) $elapsed")
@@ -964,7 +1000,6 @@ object CrawlEngine {
           // without that job (identical summary: the empty-wave path never
           // committed anything either)
           if (frontierRows == 0L) done = true
-          else seen = store.loadSeen(spark, wave)
           wave += 1
         }
       }

@@ -1,6 +1,7 @@
 package graft.frontier
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import graft.model.{FrontierEntry, HostBudget}
@@ -172,15 +173,46 @@ object Frontier extends Serializable {
     * per-wave hot path; round-6 optimization). */
   def dedupeWave(spark: SparkSession, links: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
     import spark.implicits._
-    links.toDF()
-      .groupBy("canonicalUrl")
-      .agg(min(struct(col("depth"), col("url"), col("parentUrl"),
-        col("host"), col("pathDepth"), col("urlHash"))).as("m"))
-      .select(col("canonicalUrl"), col("m.url").as("url"),
-        col("m.depth").as("depth"), col("m.parentUrl").as("parentUrl"),
-        col("m.host").as("host"), col("m.pathDepth").as("pathDepth"),
-        col("m.urlHash").as("urlHash"))
-      .as[FrontierEntry]
+    entries(links.toDF().groupBy("canonicalUrl").agg(min(mergeKey).as("m"))).as[FrontierEntry]
+  }
+
+  /** [[FrontierEntry]]'s columns, in its field order. */
+  val EntryColumns: Seq[String] =
+    Seq("canonicalUrl", "url", "depth", "parentUrl", "host", "pathDepth", "urlHash")
+
+  /** A frontier entry as the struct whose minimum is the [[merge]] winner. */
+  private def mergeKey = struct(col("depth"), col("url"), col("parentUrl"),
+    col("host"), col("pathDepth"), col("urlHash"))
+
+  /** Frontier-entry columns from a `canonicalUrl` column and a [[mergeKey]] struct `m`. */
+  private def entries(byCanonical: DataFrame): DataFrame =
+    byCanonical.select(col("canonicalUrl"), col("m.url").as("url"),
+      col("m.depth").as("depth"), col("m.parentUrl").as("parentUrl"),
+      col("m.host").as("host"), col("m.pathDepth").as("pathDepth"),
+      col("m.urlHash").as("urlHash"))
+
+  /** The next frontier: one entry per canonical URL of `candidates` under
+    * [[merge]], minus every canonical URL in `seen` — equal to
+    * `newOnlyWithSketch(dedupeWave(candidates), seen, sketch)`. Without a
+    * sketch the dedupe and the seen filter share ONE exchange keyed by
+    * canonical URL: seen rows join the group as markers (a null entry),
+    * and a group with a marker is dropped, so every seen row is shuffled
+    * once, as the exact anti-join shuffles it. With a sketch the
+    * [[newOnlyWithSketch]] split stands: sketch-negative rows skip the seen
+    * side entirely. */
+  def nextFrontier(candidates: Dataset[FrontierEntry], seen: DataFrame,
+                   sketch: Option[BloomFilter]): Dataset[FrontierEntry] = {
+    val spark = candidates.sparkSession
+    import spark.implicits._
+    if (sketch.isDefined) newOnlyWithSketch(dedupeWave(spark, candidates), seen, sketch)
+    else {
+      val marker = lit(null).cast(candidates.toDF().select(mergeKey).schema.head.dataType)
+      val grouped = candidates.toDF().select(col("canonicalUrl"), mergeKey.as("m"))
+        .union(seen.select(col("canonicalUrl"), marker.as("m")))
+        .groupBy("canonicalUrl")
+        .agg(min(col("m")).as("m"), max(col("m").isNull).as("seen"))
+      entries(grouped.filter(!col("seen"))).as[FrontierEntry]
+    }
   }
 
   /** The documented deterministic priority: (depth asc, pathDepth desc,
@@ -198,12 +230,9 @@ object Frontier extends Serializable {
   def priorityCols = Seq(col("depth").asc, col("pathDepth").desc, col("urlHash").asc, col("canonicalUrl").asc)
 
   /** Per-host politeness budget: deterministic top-k within each host by the
-    * priority order. Two-phase (salted pre-top-k, then exact per-host top-k)
-    * so one giant host cannot blow a single task's memory — phase 1 bounds
-    * any group to the salt bucket, phase 2 sees ≤ salts×k rows per host
-    * (SURVEY.md §4 skew design #2). Result is EXACTLY the global per-host
-    * top-k, independent of partitioning.
-    */
+    * priority order — EXACTLY the global per-host top-k, independent of
+    * partitioning. `salts` is not read: the partial per-partition group
+    * limit below bounds every host group (see [[politenessSelectBudgets]]). */
   def politenessSelect(
       spark: SparkSession,
       frontier: Dataset[FrontierEntry],
@@ -216,38 +245,21 @@ object Frontier extends Serializable {
 
   /** [[politenessSelect]] with ADAPTIVE per-host budgets: each host's cap
     * comes from `budgets` (hosts absent from the table use `defaultBudget`;
-    * the engine keeps the table sparse by dropping hosts back at the max).
-    * Budgets are THROTTLES: values above `defaultBudget` are clamped to it —
-    * phase 1 keeps only `defaultBudget` rows per salt bucket, so a larger
-    * phase-2 take could silently return a non-top-k set.
+    * a host listed twice takes its smallest budget; the engine keeps the
+    * table sparse by dropping hosts back at the max). Budgets are
+    * THROTTLES: values above `defaultBudget` are clamped to it.
     *
-    * Scale shape: phase 1 salts with the default budget — the maximum, so
-    * task memory stays bounded and phase 1's output is a superset of any
-    * adaptive selection. Phase 2 cogroups the ≤ salts×default survivors per
-    * host against the budget table (a shuffle of the tiny budget table,
-    * never of the frontier beyond what the static path already shuffles)
-    * and takes the exact per-host top-k. Deterministic for the same budgets
-    * table. */
-  /** Streaming exact top-k under the total priority order: bounded heap of
-    * the k best seen (worst at the head), O(group) time, O(k) MEMORY — a
-    * 10^10-URL frontier can put millions of entries in one (host, salt)
-    * bucket, and materializing the bucket to sort it would OOM the task;
-    * the heap never holds more than k entries. Total ordering makes the
-    * result identical to sort-then-take. */
-  private[frontier] def topK(it: Iterator[FrontierEntry], k: Int): Iterator[FrontierEntry] = {
-    if (k <= 0) return Iterator.empty
-    val worstFirst = priorityOrdering.reverse
-    val heap = new java.util.PriorityQueue[FrontierEntry](math.max(k, 1), worstFirst)
-    it.foreach { e =>
-      if (heap.size < k) heap.add(e)
-      else if (priorityOrdering.lt(e, heap.peek())) { heap.poll(); heap.add(e) }
-    }
-    val out = new Array[FrontierEntry](heap.size)
-    var i = out.length - 1
-    while (i >= 0) { out(i) = heap.poll(); i -= 1 } // drain worst-first → fill back-to-front
-    out.iterator
-  }
-
+    * Scale shape: one codegen window ranks each host's entries by
+    * [[priorityCols]], and the literal bound `rank <= defaultBudget` lets
+    * Spark plan it as a two-phase group limit: every map partition keeps
+    * only its top `defaultBudget` rows per host before the exchange, so a
+    * giant host reaches its one task as at most partitions × default rows.
+    * Spark plans that partial limit only while `defaultBudget` is at most
+    * `spark.sql.optimizer.windowGroupLimitThreshold` (1000 by default);
+    * above it a host's whole frontier reaches its task, sorted with
+    * spills. The budget table joins only the survivors; an empty table is
+    * pruned from the plan. No typed (de)serializer runs. `salts` is not
+    * read. */
   def politenessSelectBudgets(
       spark: SparkSession,
       frontier: Dataset[FrontierEntry],
@@ -256,15 +268,15 @@ object Frontier extends Serializable {
       salts: Int
   ): Dataset[FrontierEntry] = {
     import spark.implicits._
-    val phase1 =
-      if (salts <= 1) frontier
-      else frontier
-        .groupByKey(e => (e.host, java.lang.Long.remainderUnsigned(e.urlHash, salts.toLong)))
-        .flatMapGroups((_, it) => topK(it, defaultBudget))
-    phase1.groupByKey(_.host)
-      .cogroup(budgets.groupByKey(_.host)) { (_, entries, bs) =>
-        val k = bs.nextOption().map(b => math.min(b.budget, defaultBudget)).getOrElse(defaultBudget)
-        topK(entries, math.max(0, k))
-      }
+    val byPriority = Window.partitionBy("host").orderBy(priorityCols: _*)
+    val top = frontier.toDF()
+      .withColumn("hostRank", row_number().over(byPriority))
+      .filter(col("hostRank") <= defaultBudget)
+    val perHost = budgets.toDF().groupBy("host").agg(min("budget").as("budget"))
+    val k = least(coalesce(col("budget"), lit(defaultBudget)), lit(defaultBudget))
+    top.join(perHost, Seq("host"), "left")
+      .filter(col("hostRank") <= k)
+      .select(EntryColumns.map(col): _*)
+      .as[FrontierEntry]
   }
 }

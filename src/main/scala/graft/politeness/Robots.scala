@@ -1,6 +1,6 @@
 package graft.politeness
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.FrontierEntry
 import graft.urls.UrlKernel
@@ -297,22 +297,31 @@ object Robots {
     * hosts with non-empty Disallow lines (`CrawlEngine.robotsTables`) — the gate is
     * a left join on the www-stripped host plus the same RFC 9309 [[decision]]
     * as [[isBlocked]]. No driver-side map: at 10^7+ crawled hosts the rules stay
-    * a table and the join planner picks broadcast vs shuffle. */
+    * a table and the join planner picks broadcast vs shuffle. The decision is
+    * a filter in the join's own codegen stage: no row leaves the unsafe
+    * format for a typed object and back. */
   def gate(spark: SparkSession, entries: Dataset[FrontierEntry], rules: DataFrame): Dataset[FrontierEntry] = {
     import spark.implicits._
     entries.toDF()
       .withColumn("rhost",
         when(col("host").startsWith("www."), expr("substring(host, 5)")).otherwise(col("host")))
       .join(rules, Seq("rhost"), "left_outer")
-      .select(col("canonicalUrl"), col("url"), col("depth"), col("parentUrl"),
-        col("host"), col("pathDepth"), col("urlHash"), col("disallow"), col("allow"))
-      .as[(String, String, Int, String, String, Int, Long, Seq[String], Seq[String])]
-      .flatMap { case (canonicalUrl, url, depth, parentUrl, host, pathDepth, urlHash, disallow, allow) =>
-        val blocked = disallow != null &&
-          UrlKernel.parse(canonicalUrl).exists(p =>
-            decision(if (allow == null) Seq.empty else allow, disallow, p.path))
-        if (blocked) scala.None
-        else Some(FrontierEntry(canonicalUrl, url, depth, parentUrl, host, pathDepth, urlHash))
-      }
+      .filter(!blockedPath(col("canonicalUrl"), lines(col("disallow")), lines(col("allow"))))
+      .select(entries.columns.map(col): _*)
+      .as[FrontierEntry]
+  }
+
+  /** A rule list as one newline-joined string (null stays null). A robots
+    * rule is one line, so the join is lossless up to empty patterns, which
+    * [[decision]] ignores; string arguments reach the decision without a
+    * generated array converter. */
+  private def lines(rules: Column): Column = array_join(rules, "\n")
+
+  /** Whether the path of a canonical URL is blocked by its host's
+    * newline-joined rules (no rules row, or an unparseable URL, is not
+    * blocked). */
+  private val blockedPath = udf { (canonicalUrl: String, disallow: String, allow: String) =>
+    disallow != null && UrlKernel.parse(canonicalUrl).exists(p =>
+      decision(if (allow == null) Seq.empty else allow.split('\n').toSeq, disallow.split('\n').toSeq, p.path))
   }
 }

@@ -150,14 +150,16 @@ object StreamingCrawl {
         // -- fetch + fused extract: the batch kernels, byte parity checked
         // on every row
         val fetched = CrawlEngine.fetchJoin(prepared, released, relCount, config.broadcastWaveMaxRows)
-        val extracted = CrawlEngine.fusedExtract(fetched, wave, retryHints = false)
+        // no chunks sink here: no chunk rows; the cache holds only the two
+        // columns the twin reads
+        val extracted = CrawlEngine.fusedExtract(fetched, wave, retryHints = false, chunks = false,
+            discover.admission)
+          .select("parityOk", "links")
           .persist(StorageLevel.MEMORY_AND_DISK)
         waveCaches.add(releaseBlocks(extracted))
 
-        val stats = extracted.toDF()
-          .agg(count(lit(1)), sum(when(col("parityOk"), 0L).otherwise(1L))).head()
-        val fetchCount = stats.getLong(0)
-        parityFailures += (if (stats.isNullAt(1)) 0L else stats.getLong(1))
+        val (fetchCount, parityFailWave) = CrawlEngine.countAndFailures(extracted, "parityOk")
+        parityFailures += parityFailWave
         // the batch engine's convention: fetchedTotal counts RELEASED URLs
         // (errors tracked separately; both mark the URL seen)
         fetchedTotal += relCount

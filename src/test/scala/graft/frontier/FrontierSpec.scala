@@ -1,8 +1,10 @@
 package graft.frontier
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SharedSpark
-import graft.model.FrontierEntry
+import graft.model.{FrontierEntry, HostBudget}
 import graft.crawl.CrawlEngine
 
 class FrontierSpec extends AnyFunSuite with SharedSpark {
@@ -204,16 +206,108 @@ class FrontierSpec extends AnyFunSuite with SharedSpark {
     assert(out.map(_.canonicalUrl).sorted.toSeq == unsalted)
   }
 
-  test("bounded-heap topK is exactly sort-then-take under the total order") {
-    // adversarial mix: duplicate priorities across depth/pathDepth, hash ties
-    val entries = (0 until 5000).map { i =>
-      val c = s"https://h.com/${"x/" * (i % 7)}p${i % 997}"
-      FrontierEntry(c, c, i % 4, "", "h.com", i % 7, CrawlEngine.urlHash(c) % 50)
+  /** Seed-fixed ScalaCheck sampling: `n` cases of `g`. */
+  private def forAll[A](n: Int, g: Gen[A])(f: A => Unit): Unit = {
+    var seed = Seed(42L)
+    (1 to n).foreach { _ =>
+      g.apply(Gen.Parameters.default, seed).foreach(f)
+      seed = seed.next
     }
-    for (k <- Seq(0, 1, 7, 100, 5000, 9999)) {
-      val heap = Frontier.topK(entries.iterator, k).toVector
-      val sorted = entries.sorted(Frontier.priorityOrdering).take(k).toVector
-      assert(heap == sorted, s"k=$k mismatch")
+  }
+
+  /** Bounded-heap top-k under the total priority order: the selection's
+    * per-group kernel as it read before the codegen window. */
+  private def heapTopK(it: Iterator[FrontierEntry], k: Int): Vector[FrontierEntry] = {
+    if (k <= 0) return Vector.empty
+    val heap = new java.util.PriorityQueue[FrontierEntry](k, Frontier.priorityOrdering.reverse)
+    it.foreach { e =>
+      if (heap.size < k) heap.add(e)
+      else if (Frontier.priorityOrdering.lt(e, heap.peek())) { heap.poll(); heap.add(e) }
+    }
+    Vector.fill(heap.size)(heap.poll()).reverse
+  }
+
+  /** The selection as it read before the codegen window: a salted
+    * per-(host, salt) heap top-k at the default budget, then each host's
+    * heap top-k under its smallest listed budget clamped to the default
+    * (the engine's min-merge of budget sources, then the typed cogroup). */
+  private def referenceSelect(entries: Seq[FrontierEntry], budgets: Seq[HostBudget],
+                              default: Int, salts: Int): Set[FrontierEntry] = {
+    val phase1 =
+      if (salts <= 1) entries
+      else entries.groupBy(e => (e.host, java.lang.Long.remainderUnsigned(e.urlHash, salts.toLong)))
+        .values.flatMap(g => heapTopK(g.iterator, default)).toSeq
+    val budgetOf = budgets.groupBy(_.host).view.mapValues(_.map(_.budget).min).toMap
+    phase1.groupBy(_.host).flatMap { case (h, es) =>
+      heapTopK(es.iterator, math.max(0, math.min(budgetOf.getOrElse(h, default), default)))
+    }.toSet
+  }
+
+  /** A frontier (one entry per canonical URL) over skewed hosts: one giant
+    * host holds most entries; paths mix supplementary-plane characters, and
+    * hashes collide often so the tie-breaks decide. */
+  private val frontierGen: Gen[Seq[FrontierEntry]] = for {
+    n <- Gen.choose(1, 400)
+    hostIx <- Gen.listOfN(n, Gen.frequency(6 -> Gen.const(0), 4 -> Gen.choose(1, 6)))
+    depths <- Gen.listOfN(n, Gen.choose(0, 3))
+    pathDepths <- Gen.listOfN(n, Gen.choose(0, 5))
+    hashes <- Gen.listOfN(n, Gen.oneOf(Gen.choose(0L, 5L), Gen.choose(Long.MinValue, Long.MaxValue)))
+    salt <- Gen.choose(0, 1000)
+  } yield {
+    val g = new scala.util.Random(salt)
+    hostIx.indices.map { i =>
+      val host = s"site${hostIx(i)}.com"
+      val c = orderString(g, s"https://$host/$i/")
+      FrontierEntry(c, c, depths(i), "", host, pathDepths(i), hashes(i))
+    }
+  }
+
+  private val budgetsGen: Gen[Seq[HostBudget]] =
+    Gen.listOf(Gen.zip(Gen.choose(0, 7), Gen.choose(0, 12))).map(_.map { case (h, b) =>
+      HostBudget(s"site$h.com", b)
+    })
+
+  test("property: politenessSelectBudgets equals the salted heap top-k + budget cogroup") {
+    import spark.implicits._
+    val gen = for {
+      es <- frontierGen
+      bs <- budgetsGen
+      default <- Gen.choose(1, 9)
+      salts <- Gen.oneOf(1, 4, 8)
+    } yield (es, bs, default, salts)
+    forAll(12, gen) { case (es, bs, default, salts) =>
+      val got = Frontier.politenessSelectBudgets(spark, spark.createDataset(es).repartition(3),
+        spark.createDataset(bs), default, salts).collect().toSet
+      assert(got == referenceSelect(es, bs, default, salts),
+        s"${es.size} entries, budgets $bs, default $default, salts $salts")
+    }
+  }
+
+  test("property: nextFrontier equals dedupeWave then the seen filter, with and without a sketch") {
+    import spark.implicits._
+    val gen = for {
+      es <- frontierGen
+      dupes <- Gen.choose(0, 3)
+      seenShare <- Gen.choose(0, 10)
+      salt <- Gen.choose(0, 1000)
+    } yield (es, dupes, seenShare, salt)
+    forAll(10, gen) { case (es, dupes, seenShare, salt) =>
+      val g = new scala.util.Random(salt)
+      // rediscoveries of the same canonical under other spellings and parents
+      val candidates = es ++ es.flatMap(e => Seq.fill(g.nextInt(dupes + 1))(
+        e.copy(url = orderString(g, e.canonicalUrl), depth = g.nextInt(4),
+          parentUrl = orderString(g, "https://p/"))))
+      val seenUrls = es.filter(_ => g.nextInt(10) < seenShare).map(_.canonicalUrl)
+      val seen = seenUrls.toDF("canonicalUrl")
+      val cands = spark.createDataset(g.shuffle(candidates)).repartition(3)
+      val reference = Frontier.newOnlyWithSketch(Frontier.dedupeWave(spark, cands), seen, scala.None)
+        .collect().toSet
+      // a loose sketch, so false positives take the exact path too
+      val sketch = org.apache.spark.util.sketch.BloomFilter.create(1000L, 0.3)
+      seenUrls.foreach(sketch.putString)
+      for (s <- Seq(scala.None, Some(sketch)))
+        assert(Frontier.nextFrontier(cands, seen, s).collect().toSet == reference,
+          s"${candidates.size} candidates, sketch=${s.isDefined}")
     }
   }
 

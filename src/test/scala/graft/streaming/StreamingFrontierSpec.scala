@@ -1,5 +1,7 @@
 package graft.streaming
 
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SharedSpark
@@ -56,6 +58,46 @@ class StreamingFrontierSpec extends AnyFunSuite with SharedSpark {
     // idle re-run: no new input → no output growth
     StreamingFrontier.firstSeenOnly(spark, in, out, cp)
     assert(StreamingFrontier.readOutput(spark, out).count() == 3)
+  }
+
+  test("property: the streaming representative is the batch merge winner on supplementary-plane URLs") {
+    import spark.implicits._
+    // the batch engine's dedupeWave and fold(merge) agree on these inputs
+    // (FrontierSpec); the streaming first-seen filter must pick the same
+    // entry, its url and parent compared as UTF-8 bytes, not UTF-16 units
+    val pieces = Seq("a", "/", "\uE000", "\uFF21", "\u00E9", "\uD83D\uDE00", "\uD800\uDC00")
+    def str(g: scala.util.Random, prefix: String) =
+      prefix + Seq.fill(1 + g.nextInt(3))(pieces(g.nextInt(pieces.length))).mkString
+    val gen = for {
+      groups <- Gen.choose(1, 40)
+      salt <- Gen.choose(0, 1000)
+    } yield {
+      val g = new scala.util.Random(salt)
+      g.shuffle((0 until groups).flatMap { k =>
+        val c = s"https://s.com/c$k"
+        Seq.fill(1 + g.nextInt(4))(d(c, depth = 1 + g.nextInt(2), url = str(g, c), parent = str(g, "https://p/")))
+      })
+    }
+    var seed = Seed(7L)
+    (1 to 3).foreach { _ =>
+      gen(Gen.Parameters.default, seed).foreach { rows =>
+        val root = java.nio.file.Files.createTempDirectory("graft-sfrontier-order").toString
+        writeWave(s"$root/in", rows)
+        StreamingFrontier.firstSeenOnly(spark, s"$root/in", s"$root/out", s"$root/cp")
+        val streamed = StreamingFrontier.readOutput(spark, s"$root/out").collect()
+          .map(r => (r.getAs[String]("canonicalUrl"), r.getAs[String]("url"), r.getAs[Int]("depth"),
+            r.getAs[String]("parentUrl"))).toSet
+        val folded = rows.groupBy(_.canonicalUrl).values
+          .map(_.reduce(graft.frontier.Frontier.merge[StreamingFrontier.Discovered] _))
+          .map(e => (e.canonicalUrl, e.url, e.depth, e.parentUrl)).toSet
+        val waved = graft.frontier.Frontier.dedupeWave(spark, spark.createDataset(rows.map(e =>
+            graft.model.FrontierEntry(e.canonicalUrl, e.url, e.depth, e.parentUrl, e.host, 0, 0L))))
+          .collect().map(e => (e.canonicalUrl, e.url, e.depth, e.parentUrl)).toSet
+        assert(streamed == folded, s"${rows.size} discoveries: streaming and fold(merge) disagree")
+        assert(streamed == waved, s"${rows.size} discoveries: streaming and dedupeWave disagree")
+      }
+      seed = seed.next
+    }
   }
 
   test("seen TTL config: dedup still exact within the TTL window") {
